@@ -5,11 +5,23 @@ reference registers custom nodes with codecs and an extension planner
 (src/codec/extension.rs:39-198, src/planner/extension_planner.rs:31-52),
 we register named plan-constructor functions; Spark handles planning,
 serialization and execution.
+
+``get_queries()`` lists the registry in grading order, derived from
+committed artifacts and code fingerprints (``grading_order``).
 """
 
 from __future__ import annotations
 
+import ast
+import functools
+import glob
+import hashlib
+import importlib.util
+import json
+import os
+import re
 from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -17,112 +29,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Names the driver's CORRECTNESS gate has already hash-verified in a
-# prior round. The driver grades a bounded prefix (~50) of ``queries()``,
-# and ``get_queries`` orders never-graded entries FIRST, so across rounds
-# every query gets a driver-green row instead of the same prefix being
-# re-graded forever.
-#
-# Round-16 rotation (VERDICT r15 directive #2): union of latest green
-# grades r02..r15 (the r15 window's 50 greens folded in), EXCLUDING
-# the ROTATION_ORDER cohort below. The cohort is age-driven this
-# round: 1 restated oracle (sequence_packing_manifest — ADVICE r15
-# added the zero-cost WHERE twin to packing_ctes_duckdb, bit-changing
-# the oracle text) + the full 21-name r09-latest cohort (the rotation
-# floor the directive demands) + the 41-name r10-latest cohort
-# (rows-only names last — hash-graded evidence first). The ~50-slot
-# window = new round-16 queries + the restated name + all 21 r09
-# names + as much r10 head as fits; the r10 tail carries to r17.
-PRIOR_DRIVER_GRADED: frozenset[str] = frozenset({
-    "ab_test_value_by_type", "acctbal_zscore_outliers", "agg_argmax_customer",
-    "agg_orders_by_priority", "ann_contract_audit", "ann_cosine_topk",
-    "ann_hamming_sign_topk", "ann_ivf_topk", "ann_lsh_topk",
-    "ann_recall_report", "array_functions", "asof_join_forward_views",
-    "asof_join_purchases", "audio_near_dup_energy", "audio_resample_checksum",
-    "av_demux_meta", "bigram_lm_counts", "bitwise_agg_keys",
-    "bloom_prejoin_revenue", "bpe_byte_pretokenize_counts",
-    "bpe_contract_audit", "bpe_merge_candidates", "bpe_tokenize_4k_vocab",
-    "bpe_tokenize_counts", "bpe_tokenize_large_vocab", "brand_year_revenue",
-    "cdc_merge_orders", "cdc_two_batch_merge", "chunk_documents",
-    "compression_contract_audit", "compression_quality_stats",
-    "concurrent_open_orders", "contamination_check", "contrastive_pairs",
-    "corpus_shift_by_source", "corpus_snapshot_diff", "corpus_stats_by_lang",
-    "corpus_vocabulary", "crawl_curation_pipeline",
-    "crawl_curation_pipeline_classified", "cube_orders", "cumulative_revenue_scalable", "curation_pipeline_dsir",
-    "curriculum_shard_schedule",
-    "custkey_overlap_sketch", "customer_order_gap_stats",
-    "customer_percent_rank_scalable", "customer_rank_change",
-    "customer_rank_scalable", "customer_repeat_rate_by_nation",
-    "customer_rfm_segments_demo", "customer_rfm_segments_scalable",
-    "dataset_split", "date_functions", "dedup_components", "dedup_exact",
-    "dedup_exact_normalized", "dedup_keep_best", "dedup_near_minhash",
-    "dedup_shrinkage_by_source", "dedup_simhash",
-    "deterministic_mode_priority", "distinct_segments_by_nation",
-    "doc_char_class_profile", "doc_fingerprint", "doc_length_histogram",
-    "docs_quality_quartiles", "domain_mix_resample", "dsir_gumbel_audit",
-    "dsir_importance_weights", "dsir_resample_gumbel", "dsir_select_topk",
-    "dsir_selection_shift", "dsir_token_budget_selection",
-    "dup_cluster_size_histogram", "edit_distance_neighbors",
-    "embedding_centroids", "embedding_drift_report", "embedding_dup_clusters",
-    "embedding_near_dup", "embedding_norms", "embedding_quantize_int8",
-    "event_transition_matrix", "events_gapfill_hourly",
-    "events_hourly_rollup", "events_json_extract",
-    "events_out_of_order_stats", "events_top_hour_per_user",
-    "events_user_p95_value", "exact_span_scrub",
-    "fk_integrity_audit", "group_sample_customers", "heavy_hitter_tokens",
-    "html_extract_quality", "image_contamination_check",
-    "image_near_dup_phash", "image_signature_store_incremental",
-    "incremental_near_dup_lsh", "join_cross", "join_left_mark",
-    "join_right_anti", "join_right_semi", "key_skew_report",
-    "lang_diversity_by_source", "lang_id_heuristic",
-    "lineitem_price_equidepth_hist", "lm_ce_quality_buckets",
-    "media_mixed_decode", "multimodal_binary_meta",
-    "multimodal_decode_real",
-    "near_dup_char_ngram", "near_dup_pairs_exact",
-    "ngram_novelty_scores",
-    "ntile_customer_quartiles", "orderkey_islands",
-    "orders_interarrival_median", "orders_priority_scd2",
-    "orders_rolling_7d_revenue", "orders_running_share",
-    "orders_seasonality_index", "pack_token_bins", "packing_contract_audit",
-    "part_price_size_skyline", "pii_density_by_source",
-    "pit_priority_revenue", "posexplode_tokens", "pretrain_mixture_pipeline",
-    "pretrain_pipeline_shards", "price_percentiles_scalable",
-    "price_quantile_sketch_rollup", "proportional_token_allocation",
-    "pyudf_text_metrics", "q10_returned_items", "q11_important_stock",
-    "q12_shipping_horizon", "q13_customer_order_distribution",
-    "q14_promo_revenue_share", "q15_top_supplier", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q1_pricing_summary", "q20_excess_suppliers",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "q2_cheapest_supplier", "q3_shipping_priority",
-    "q4_order_priority_exists", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
-    "q9_product_profit", "quality_classifier_scores", "range_join_bursts",
-    "revenue_gini_customers", "revenue_trend_by_segment",
-    "sample_contract_audit", "set_except_all_lineitems", "set_except_nations",
-    "set_intersect_all_keys", "set_intersect_nations", "set_union_nations",
-    "shard_contract_audit", "shard_replay_audit",
-    "shipping_delay_deciles_by_priority", "sketch_contract_audit",
-    "sketch_rollup_custkeys", "sort_limit_expensive_orders",
-    "source_lang_crosstab", "span_dedup_report", "split_leakage_audit",
-    "streaming_dedup_replay", "streaming_gapfill_replay",
-    "streaming_heavy_hitters_replay", "streaming_phash_store_replay",
-    "streaming_semdedup_replay", "streaming_sigstore_replay",
-    "string_agg_segments", "supplier_pareto_8020",
-    "temperature_sampling_weights", "text_nfc_normalize_stats",
-    "text_stats_quality", "text_token_count", "text_token_count_bpe",
-    "tfidf_top_terms", "token_budget_selection_demo",
-    "token_budget_selection_scalable", "token_cooccurrence_topk",
-    "token_len_quartiles_by_lang", "token_length_histogram",
-    "tokenizer_fertility_by_lang", "top_decile_docs",
-    "training_shard_manifest", "training_shard_manifest_bpe",
-    "training_shards_incremental", "url_frontier_dedup", "video_decode_meta",
-    "video_frame_sample", "video_near_dup_keyframe", "weighted_median_price",
-    "weighted_sample_parts", "window_top3_orders_per_customer",
-    "window_value_functions", "winsorized_mean_price",
-    "year_over_year_revenue",
-})
-
+_PKG = __name__.split(".")[0]
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+#: name -> code fingerprint at its last green grade, under a root dir
+RECORDED = os.path.join("tools", "graded_fingerprints.json")
 
 # Bench cost-tier classification (VERDICT r12 directive #6): these
 # queries pay a FIXED multi-job evidence cost by construction — the
@@ -171,183 +81,156 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Every name the driver's gate has graded in ANY round (r02-r15 union,
-# registered names only). Fresh-window priority: queries NOT in this
-# set have never been driver-validated at all and outrank
-# rotated-for-regrade names (formerly green, re-queued by age or plan
-# drift) — a bounded grading window must spend itself on never-graded
-# surface first.
-EVER_DRIVER_GRADED: frozenset[str] = frozenset({
-    "ab_test_value_by_type", "acctbal_zscore_outliers", "agg_argmax_customer",
-    "agg_orders_by_priority", "ann_contract_audit", "ann_cosine_topk",
-    "ann_hamming_sign_topk", "ann_index_incremental", "ann_ivf_topk",
-    "ann_lsh_topk", "ann_recall_report", "array_functions",
-    "asof_join_forward_views", "asof_join_purchases", "audio_decode_meta",
-    "audio_energy_fingerprints", "audio_near_dup_energy",
-    "audio_resample_checksum", "av_demux_meta", "bigram_lm_counts",
-    "bitwise_agg_keys", "bloom_prejoin_revenue",
-    "bpe_byte_pretokenize_counts", "bpe_contract_audit",
-    "bpe_merge_candidates", "bpe_tokenize_4k_vocab", "bpe_tokenize_counts",
-    "bpe_tokenize_large_vocab", "brand_year_revenue", "cdc_merge_orders",
-    "cdc_two_batch_merge", "chunk_documents", "compression_contract_audit",
-    "compression_quality_stats", "concurrent_open_orders",
-    "contamination_check", "contrastive_pairs", "corpus_shift_by_source",
-    "corpus_snapshot_diff", "corpus_stats_by_lang", "corpus_vocabulary",
-    "crawl_curation_pipeline", "crawl_curation_pipeline_classified",
-    "cross_source_dup_matrix", "cube_orders", "cumulative_revenue_scalable",
-    "curation_pipeline_dsir", "curation_pipeline_lsh",
-    "curation_pipeline_summary", "curriculum_shard_schedule",
-    "custkey_overlap_sketch", "customer_order_gap_stats",
-    "customer_percent_rank_scalable", "customer_rank_change",
-    "customer_rank_scalable", "customer_repeat_rate_by_nation",
-    "customer_rfm_segments_demo", "customer_rfm_segments_scalable",
-    "dataset_split", "date_functions", "dedup_components", "dedup_exact",
-    "dedup_exact_normalized", "dedup_keep_best", "dedup_near_minhash",
-    "dedup_probabilistic_audit", "dedup_shrinkage_by_source", "dedup_simhash",
-    "deterministic_mode_priority", "distinct_segments_by_nation",
-    "doc_char_class_profile", "doc_fingerprint", "doc_length_histogram",
-    "docs_quality_quartiles", "domain_mix_resample", "dsir_gumbel_audit",
-    "dsir_importance_weights", "dsir_resample_gumbel", "dsir_select_topk",
-    "dsir_selection_shift", "dsir_token_budget_selection",
-    "dup_cluster_size_histogram", "edit_distance_neighbors",
-    "embedding_centroids", "embedding_drift_report", "embedding_dup_clusters",
-    "embedding_near_dup", "embedding_norms", "embedding_quantize_int8",
-    "event_funnel", "event_transition_matrix", "events_gapfill_hourly",
-    "events_hourly_rollup", "events_json_extract", "events_lag_lead",
-    "events_out_of_order_stats", "events_sessionize",
-    "events_top_hour_per_user", "events_user_p95_value",
-    "events_value_mad_anomalies", "exact_span_scrub", "explode_outer_tokens",
-    "explode_unnest", "filtered_agg_orders", "fk_integrity_audit",
-    "group_sample_customers", "grouping_sets_revenue", "heavy_hitter_tokens",
-    "hourly_anomaly_flags", "html_extract_quality",
-    "image_contamination_check", "image_dhash_fingerprints",
-    "image_dup_clusters", "image_near_dup_phash",
-    "image_signature_store_incremental", "incremental_dedup",
-    "incremental_near_dup_lsh", "join_cross", "join_full_outer", "join_inner",
-    "join_left_agg", "join_left_anti", "join_left_mark", "join_left_semi",
-    "join_right", "join_right_anti", "join_right_semi", "key_skew_report",
-    "knn_label_accuracy", "lang_diversity_by_source", "lang_id_heuristic",
-    "lateral_top_customers", "latest_event_per_user",
-    "lineitem_price_equidepth_hist", "lm_ce_quality_buckets",
-    "mad_order_prices", "media_kind_routing", "media_mixed_decode",
-    "median_order_price", "multimodal_binary_meta",
-    "multimodal_curation_funnel", "multimodal_decode_jpeg",
-    "multimodal_decode_meta", "multimodal_decode_png",
-    "multimodal_decode_real", "near_dup_char_ngram", "near_dup_lsh_verified",
-    "near_dup_pairs_exact", "near_dup_threshold_sweep",
-    "ngram_novelty_scores", "ntile_customer_quartiles",
-    "null_and_regex_functions", "null_safe_arithmetic",
-    "null_safe_join_segments", "orderkey_islands",
-    "orders_interarrival_median", "orders_priority_scd2",
-    "orders_rolling_7d_revenue", "orders_running_share",
-    "orders_seasonality_index", "pack_token_bins", "packing_contract_audit",
-    "pagerank_trade_graph", "part_price_size_skyline",
-    "percentile_disc_prices", "phrase_locate_spans", "pii_density_by_source",
-    "pii_scrub", "pit_priority_revenue", "pivot_segment_revenue",
-    "posexplode_tokens", "pretrain_mixture_pipeline",
-    "pretrain_pipeline_shards", "price_buckets", "price_percentiles_scalable",
-    "price_quantile_sketch_rollup", "profile_documents",
-    "proportional_token_allocation", "pyudf_text_metrics",
-    "q10_returned_items", "q11_important_stock", "q12_shipping_horizon",
-    "q13_customer_order_distribution", "q14_promo_revenue_share",
-    "q15_top_supplier", "q16_supplier_part_counts",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q1_pricing_summary", "q20_excess_suppliers",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "q2_cheapest_supplier", "q3_shipping_priority",
-    "q4_order_priority_exists", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
-    "q9_product_profit", "quality_classifier_scores", "quality_filter_chain",
-    "range_join_bursts", "rare_token_fraction", "repetition_stats",
-    "retention_cohorts", "revenue_gini_customers", "revenue_trend_by_segment",
-    "rollup_revenue", "salted_join_revenue", "sample_by_segment",
-    "sample_contract_audit", "sample_lineitem", "scan_project_alias",
-    "semantic_dedup_cells", "sequence_packing_manifest", "session_funnel",
-    "set_except_all_lineitems", "set_except_nations",
-    "set_intersect_all_keys", "set_intersect_nations", "set_union_nations",
-    "shard_contract_audit", "shard_replay_audit",
-    "shipping_delay_deciles_by_priority", "signature_store_incremental",
-    "sketch_contract_audit", "sketch_distinct_users",
-    "sketch_rollup_custkeys", "sliding_hour_value_sums",
-    "sort_limit_expensive_orders", "source_lang_crosstab",
-    "source_quality_stats", "span_dedup_report", "split_leakage_audit",
-    "stats_corr_covar", "streaming_dedup_replay", "streaming_gapfill_replay",
-    "streaming_heavy_hitters_replay", "streaming_media_dedup_replay",
-    "streaming_phash_store_replay", "streaming_semdedup_replay",
-    "streaming_sigstore_replay", "string_agg_segments", "string_functions",
-    "supplier_pareto_8020", "temperature_sampling_weights",
-    "text_nfc_normalize_stats", "text_stats_quality", "text_token_count",
-    "text_token_count_bpe", "tfidf_top_terms", "token_budget_selection_demo",
-    "token_budget_selection_scalable", "token_cooccurrence_topk",
-    "token_len_quartiles_by_lang", "token_length_histogram",
-    "tokenizer_fertility_by_lang", "top_decile_docs",
-    "training_shard_manifest", "training_shard_manifest_bpe",
-    "training_shards_incremental", "unpivot_balances", "url_frontier_dedup",
-    "video_decode_meta", "video_frame_sample", "video_keyframe_fingerprints",
-    "video_near_dup_keyframe", "weighted_median_price",
-    "weighted_sample_parts", "window_rank_family", "window_running_totals",
-    "window_top3_orders_per_customer", "window_value_functions",
-    "winsorized_mean_price", "year_over_year_revenue",
-    "year_spine_order_counts",
-})
+def grade(row: dict) -> str | None:
+    """``"hash"`` for a CORRECTNESS row matched against its oracle,
+    ``"rows"`` for the rows-only check of a query without one, else None."""
+    if row.get("err") is None and all(
+        row.get(k) is True for k in ("hash_match", "rows_match", "schema_match")
+    ):
+        return "hash"
+    if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
+        return "rows"
+    return None
 
 
-# Explicit re-grade priority within the fresh (not-in-PRIOR) group
-# (VERDICT r15 directive #2). Order: (a) sequence_packing_manifest
-# (oracle text restated by the ADVICE r15 zero-cost WHERE twin —
-# re-attestation before age), then (b) the full r09-latest cohort
-# alphabetical (the rotation floor), then (c) the r10-latest cohort
-# with its three rows-only names last (hash-graded evidence first);
-# the window grades as many as fit behind the never-graded round-16
-# queries, and the r10 tail carries to r17.
-ROTATION_ORDER: tuple[str, ...] = (
-    "sequence_packing_manifest", "events_sessionize", "filtered_agg_orders",
-    "grouping_sets_revenue", "median_order_price", "multimodal_decode_meta",
-    "multimodal_decode_png", "null_and_regex_functions",
-    "null_safe_arithmetic", "percentile_disc_prices", "pii_scrub",
-    "pivot_segment_revenue", "price_buckets", "quality_filter_chain",
-    "rollup_revenue", "salted_join_revenue", "signature_store_incremental",
-    "stats_corr_covar", "string_functions", "unpivot_balances",
-    "window_rank_family", "window_running_totals", "ann_index_incremental",
-    "audio_decode_meta", "audio_energy_fingerprints",
-    "curation_pipeline_summary", "event_funnel", "events_lag_lead",
-    "explode_outer_tokens", "explode_unnest", "hourly_anomaly_flags",
-    "image_dhash_fingerprints", "image_dup_clusters", "incremental_dedup",
-    "join_full_outer", "join_inner", "join_left_agg", "join_left_anti",
-    "join_left_semi", "join_right", "knn_label_accuracy",
-    "lateral_top_customers", "latest_event_per_user", "mad_order_prices",
-    "media_kind_routing", "multimodal_decode_jpeg", "null_safe_join_segments",
-    "pagerank_trade_graph", "phrase_locate_spans", "profile_documents",
-    "rare_token_fraction", "repetition_stats", "retention_cohorts",
-    "scan_project_alias", "session_funnel", "sliding_hour_value_sums",
-    "source_quality_stats", "streaming_media_dedup_replay",
-    "video_keyframe_fingerprints", "year_spine_order_counts",
-    "sample_by_segment", "sample_lineitem", "sketch_distinct_users",
-)
+def latest_greens(root: str) -> dict[str, tuple[int, bool]]:
+    """name -> (round, rows_only) of its latest green row in the
+    ``CORRECTNESS_r<round>.json`` files under ``root``."""
+    paths = glob.glob(os.path.join(root, "CORRECTNESS_r[0-9]*.json"))
+    out: dict[str, tuple[int, bool]] = {}
+    for rnd, path in sorted((int(re.sub(r"\D", "", os.path.basename(p))), p) for p in paths):
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                if grade(row):
+                    out[name] = (rnd, grade(row) == "rows")
+    return out
 
 
-def _graded_last_order() -> list[str]:
-    """Registry names with never-driver-graded entries first (stable
-    within each group); see ``PRIOR_DRIVER_GRADED``. Within the fresh
-    group: never-graded queries lead (a bounded grading window must
-    spend itself on never-graded surface first), then ``ROTATION_ORDER``
-    (changed/oldest-evidence regrades, explicitly prioritized), then
-    any remaining fresh names with oracle-backed entries before
-    rows-only ones (a hash-exact row is stronger evidence, so overflow
-    defers the rows-only ones to the next round's rotation)."""
-    names = list(QUERIES)
-    fresh = [n for n in names if n not in PRIOR_DRIVER_GRADED]
-    prio = {n: i for i, n in enumerate(ROTATION_ORDER)}
-    fresh.sort(key=lambda n: n not in ORACLES)  # stable: oracles first
-    fresh.sort(key=lambda n: prio.get(n, len(prio)))  # rotation priority
-    fresh.sort(key=lambda n: n in EVER_DRIVER_GRADED)  # never-graded first
-    seen = [n for n in names if n in PRIOR_DRIVER_GRADED]
-    return fresh + seen
+def load_recorded(root: str = REPO_ROOT) -> dict[str, str]:
+    try:
+        with open(os.path.join(root, RECORDED)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def grading_order(root: str = REPO_ROOT) -> list[str]:
+    """Registered names sorted by (attested, latest green round,
+    rows-only, registration index). Attested means the recorded
+    fingerprint equals the current one, so never-graded, changed and
+    unrecorded names come first, and each group rotates oldest evidence
+    first. Registration order when ``root`` holds no artifacts."""
+    greens = latest_greens(root)
+    if not greens:
+        return list(QUERIES)
+    recorded = load_recorded(root)
+    index = {n: i for i, n in enumerate(QUERIES)}
+
+    def key(name: str) -> tuple:
+        attested = name in recorded and recorded[name] == code_fingerprint(name)
+        return (attested, *greens.get(name, (0, False)), index[name])
+
+    return sorted(QUERIES, key=key)
 
 
 def get_queries() -> dict[str, QueryFn]:
-    return {n: QUERIES[n] for n in _graded_last_order()}
+    return {n: QUERIES[n] for n in grading_order()}
 
 
 def get_oracles() -> dict[str, str]:
-    return {n: ORACLES[n] for n in _graded_last_order() if n in ORACLES}
+    return {n: ORACLES[n] for n in grading_order() if n in ORACLES}
+
+
+@functools.cache
+def code_fingerprint(name: str) -> str:
+    """Hash of the normalized AST (``ast.dump``, so comments and layout
+    do not count) of every package definition the query reaches, of its
+    oracle text and of ``session.py``."""
+    parts = [f"{key}\n{_definition(*key)[0]}" for key in sorted(reach(QUERIES[name]))]
+    parts += [str(ORACLES.get(name)), ast.dump(_module(f"{_PKG}.session")[0])]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def reach(fn: QueryFn) -> set[tuple[str, str]]:
+    """(module, name) of each top-level package function, class or
+    constant ``fn`` reaches through module globals, ``module.attr``
+    chains and imports, function-local ones included."""
+    todo = [_target((fn.__module__, fn.__qualname__.split(".")[0]))]
+    seen: set[tuple[str, str]] = set()
+    while todo:
+        key = todo.pop()
+        if isinstance(key, tuple) and key not in seen:
+            seen.add(key)
+            todo.extend(_definition(*key)[1])
+    return seen
+
+
+@functools.cache
+def _module(mod: str) -> tuple[ast.Module, bool, dict[str, list[ast.stmt]]]:
+    """A package module's AST, whether it is a package, and its
+    top-level statements by the names they bind. Finding the spec
+    imports the parent packages, as an import statement would."""
+    spec = importlib.util.find_spec(mod)
+    with open(spec.origin) as f:
+        tree = ast.parse(f.read())
+    bindings: dict[str, list[ast.stmt]] = {}
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [stmt.name]
+        elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            names = [a.asname or a.name.split(".")[0] for a in stmt.names]
+        else:
+            names = [n.id for n in ast.walk(stmt) if isinstance(n, ast.Name)
+                     and isinstance(n.ctx, ast.Store)]
+        for name in names:
+            bindings.setdefault(name, []).append(stmt)
+    return tree, spec.submodule_search_locations is not None, bindings
+
+
+def _imports(stmt: ast.Import | ast.ImportFrom, mod: str) -> dict[str, tuple]:
+    """Names an import in module ``mod`` binds -> (module, attribute);
+    attribute None binds the module itself."""
+    if isinstance(stmt, ast.Import):
+        return {a.asname or a.name.split(".")[0]:
+                (a.name if a.asname else a.name.split(".")[0], None) for a in stmt.names}
+    package = mod if _module(mod)[1] else mod.rpartition(".")[0]
+    base = importlib.util.resolve_name("." * stmt.level + (stmt.module or ""), package)
+    return {a.asname or a.name: (base, a.name) for a in stmt.names}
+
+
+def _target(ref: tuple):
+    """What ``module.attribute`` names: a module (str), a package
+    definition (the tuple), or None outside the package."""
+    mod, name = ref
+    if name is None or mod.split(".")[0] != _PKG:
+        return mod if name is None else None
+    if _module(mod)[1] and importlib.util.find_spec(f"{mod}.{name}"):
+        return f"{mod}.{name}"
+    stmts = _module(mod)[2].get(name, [])
+    for stmt in stmts:
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            return _target(_imports(stmt, mod)[name])
+    return ref if stmts else None
+
+
+@functools.cache
+def _definition(mod: str, name: str) -> tuple[str, list]:
+    """A definition's normalized AST and the targets it references;
+    names bound by imports inside it resolve first."""
+    body = ast.Module(body=_module(mod)[2][name], type_ignores=[])
+    local: dict[str, tuple] = {}
+    for node in ast.walk(body):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            local.update(_imports(node, mod))
+    refs = [_target(ref) for ref in local.values()]
+    for node in ast.walk(body):
+        chain = []
+        while isinstance(node, ast.Attribute):
+            chain.insert(0, node.attr)
+            node = node.value
+        if isinstance(node, ast.Name):
+            target = _target(local.get(node.id, (mod, node.id)))
+            for attr in chain:
+                target = _target((target, attr)) if isinstance(target, str) else target
+            refs.append(target)
+    return ast.dump(body), refs

@@ -105,6 +105,26 @@ def _committed_before(path: str, before_batch: int) -> bool:
     return False
 
 
+def _commit_pairs(
+    pairs: DataFrame, pairs_dir: str, batch_id: int, id_col: str
+) -> DataFrame:
+    """Write a batch's duplicate pairs, tagged with ``phase``, to
+    ``pairs/batch=k`` FIRST, then derive the batch's rejects (distinct
+    ``new_id`` as ``id_col``) from the committed files: one job instead
+    of localCheckpoint + write (r17), and on an at-least-once
+    redelivery the read-back sees exactly this batch's own (just
+    rewritten) pairs."""
+    path = os.path.join(pairs_dir, f"batch={batch_id}")
+    tagged = pairs.withColumn("phase", F.lit(batch_id).cast("long"))
+    tagged.write.mode("overwrite").parquet(path)
+    return (
+        pairs.sparkSession.read.schema(tagged.schema)
+        .parquet(path)
+        .select(F.col("new_id").alias(id_col))
+        .distinct()
+    )
+
+
 def sigstore_dedup_sink(
     store_dir: str,
     *,
@@ -244,10 +264,6 @@ def sigstore_dedup_sink(
         )
         cands = store_cands.unionByName(intra_cands).distinct()
         all_sets = store.sets.unionByName(bsets)
-        # write pairs FIRST, then derive rejects from the committed
-        # files: one job instead of localCheckpoint + write, and on an
-        # at-least-once redelivery the read-back sees exactly this
-        # batch's own (just rewritten) pairs
         pairs = _verify_capped_jaccard(
             cands, all_sets, threshold, spark
         ).select(
@@ -255,19 +271,7 @@ def sigstore_dedup_sink(
             F.col("doc_b").alias("new_id"),
             "jaccard",
         )
-        pairs.withColumn(
-            "phase", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch={batch_id}")
-        )
-        rejects = (
-            spark.read.schema(
-                "stored_id long, new_id long, jaccard double, phase long"
-            )
-            .parquet(os.path.join(pairs_dir, f"batch={batch_id}"))
-            .select(F.col("new_id").alias("doc"))
-            .distinct()
-        )
+        rejects = _commit_pairs(pairs, pairs_dir, batch_id, "doc")
         # first-wins id guard (the phashstore compaction contract,
         # code-review r12): a doc id the store already holds signatures
         # for must not be compacted a second time — duplicate shset
@@ -396,8 +400,6 @@ def semdedup_store_sink(
         probe = s.withColumn("__st", F.lit(True)).unionByName(
             a2.withColumn("__st", F.lit(False))
         )
-        # write pairs FIRST, then derive rejects from the committed
-        # files (r17): one job instead of localCheckpoint + write, and
         # the accepted write reads only the assigned checkpoint, the
         # just-committed pairs and store partitions batch < batch_id —
         # the batch=k overwrite can never delete a file its plan reads
@@ -414,19 +416,7 @@ def semdedup_store_sink(
                 cos.alias("cosine"),
             )
         )
-        pairs.withColumn(
-            "phase", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch={batch_id}")
-        )
-        rejects = (
-            spark.read.schema(
-                "stored_id long, new_id long, cosine double, phase long"
-            )
-            .parquet(os.path.join(pairs_dir, f"batch={batch_id}"))
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
+        rejects = _commit_pairs(pairs, pairs_dir, batch_id, id_col)
         accepted = assigned.join(rejects, id_col, "left_anti")
         accepted.write.mode("overwrite").partitionBy("cell").parquet(
             os.path.join(members_dir, f"batch={batch_id}")
@@ -487,26 +477,11 @@ def phash_store_dedup_sink(
             F.col("id_b").alias("new_id"),
             "hamming",
         )
-        # write pairs FIRST, then derive rejects from the committed
-        # files: one job instead of localCheckpoint + write (r17) —
-        # idempotent under redelivery because the read-back sees
-        # exactly this batch's own (just rewritten) pairs
-        pairs = store_pairs.unionByName(intra_pairs)
-        pairs.withColumn(
-            "phase", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch={batch_id}")
-        )
         # dedup-at-ingest: any item that matched stored content or an
         # earlier batch item is REJECTED; the increments are computed
         # directly (∝ batch), never by subtracting the grown store.
-        rejects = (
-            spark.read.schema(
-                "stored_id long, new_id long, hamming long, phase long"
-            )
-            .parquet(os.path.join(pairs_dir, f"batch={batch_id}"))
-            .select(F.col("new_id").alias("id"))
-            .distinct()
+        rejects = _commit_pairs(
+            store_pairs.unionByName(intra_pairs), pairs_dir, batch_id, "id"
         )
         # members first, banded second, both straight to disk: each
         # plan reads only the batch checkpoint, the just-committed
