@@ -38,9 +38,10 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 #: Runtime SQL confs the engine requires regardless of who built the
 #: SparkSession (the driver's correctness harness builds its own, without
 #: our session factory): ns-parquet reads for events, non-ANSI wrapping
-#: long arithmetic for the MinHash affine rehash family, and a stable
-#: timezone for cross-engine timestamp parity. All three are
-#: runtime-settable SQL confs, applied idempotently on first table load.
+#: long arithmetic for the MinHash affine rehash family, a stable
+#: timezone for cross-engine timestamp parity, Arrow transfer and the
+#: streaming checkpoint manager. All are runtime-settable SQL confs,
+#: applied idempotently on first table load.
 _REQUIRED_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.ansi.enabled": "false",
@@ -50,6 +51,18 @@ _REQUIRED_CONFS = {
     # Arrow buffers, not Row objects) and assumed by every mapInPandas
     # operator. Runtime-settable, so safe on a foreign driver session.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Streaming checkpoint writes (offsets, commits, source logs, state
+    # deltas) rename a temp file into place. The default FileContext
+    # manager's rename asks RawLocalFileSystem for both paths' link
+    # status, which without Hadoop's native library forks a ``readlink``
+    # process per path. The FileSystem manager renames with
+    # ``File.renameTo`` (POSIX rename(2), atomic on local disk and HDFS)
+    # and writes the same files. Runtime-settable: read from the
+    # session's Hadoop conf when a stream starts.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

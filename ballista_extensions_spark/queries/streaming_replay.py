@@ -28,6 +28,14 @@ shard), offset-replay sources, exactly-once sink idempotent per batch
 id. The temp-dir staging here exists only to give the driver a
 deterministic bounded stream; a real deployment points the same code
 at a live source.
+
+Fixed cost: a replay should pay for its micro-batches and little else.
+Each one stages its slices in ONE scan of its input (rows tagged with
+their slice, ``_write_ordered_slices``), runs the stream through one
+helper (``_drain``), and reads a parquet sink back with a named schema
+(no footer-inference job). Checkpoint files are renamed into place by
+the FileSystem-based checkpoint manager (``io._REQUIRED_CONFS``), which
+forks no process per rename.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 from ballista_extensions_spark.io import default_parallelism, load_table
 from ballista_extensions_spark.queries.analytics7 import _DHASH_CTE
@@ -119,65 +128,102 @@ def _stage_dir(name: str, sf_dir: str) -> str:
     return d
 
 
-def _write_ordered_slices(slices: list[DataFrame], in_dir: str) -> None:
-    """Write each slice as one parquet file with strictly increasing
-    mtimes: FileStreamSource orders files oldest-first, so with
+def _thirds(df: DataFrame, key: str, redeliver: bool = False) -> DataFrame:
+    """Tag each row with its slice ``__k = pmod(key, 3)``. With
+    ``redeliver`` the rows of slices 0 and 1 ALSO go out with the next
+    slice (one exploded row per delivery), so slice 1 re-ships slice 0
+    and slice 2 re-ships slice 1: cross-batch duplicates for the dedup
+    replays."""
+    k = F.pmod(F.col(key), F.lit(3))
+    if redeliver:
+        k = F.explode(F.when(k < 2, F.array(k, k + 1)).otherwise(F.array(k)))
+    return df.withColumn("__k", k)
+
+
+def _write_ordered_slices(tagged: DataFrame, n: int, in_dir: str) -> None:
+    """Stage slices ``0..n-1`` of ``tagged`` (its ``__k`` column names
+    each row's slice; a null tag belongs to no slice) as one parquet
+    file each, ``__k`` dropped, with strictly increasing mtimes:
+    FileStreamSource orders files oldest-first, so with
     maxFilesPerTrigger=1 micro-batch k replays slice k exactly.
 
-    r17: ONE Spark job stages every slice — the slices union with a
-    literal slice index and hash-repartition on it (all rows of a
-    slice land in one reduce task, so ``partitionBy`` emits exactly
-    one parquet file per slice), then the files move into ``in_dir``
-    with the ordered mtimes. The pre-r17 shape was k sequential
-    ``coalesce(1)`` writes, and coalesce collapses the WHOLE plan
-    into the single write task — k single-threaded scan+filter+write
-    jobs (~0.7 s each at sf0.1) where one parallel job suffices
-    (guide §2.6: idle capacity; §1.2: fix the job shape first)."""
-    import shutil as _shutil
-
+    One scan, one Spark job: ``tagged`` is read once and
+    hash-repartitioned on ``__k``, so all rows of a slice land in one
+    reduce task and ``partitionBy`` emits exactly one parquet file per
+    slice; the files then move into ``in_dir`` with the ordered mtimes.
+    Callers tag rows with expressions (``_thirds``) rather than passing
+    one filtered DataFrame per slice, whose union would scan the input
+    once per slice. An empty slice is staged as a schema-only file so
+    batch k still exists."""
     base = os.path.getmtime(in_dir)
     stage = in_dir + ".stage"
-    tagged: DataFrame | None = None
-    for k, s in enumerate(slices):
-        t = s.withColumn("__k", F.lit(k))
-        tagged = t if tagged is None else tagged.unionAll(t)
-    assert tagged is not None
     tagged.repartition(F.col("__k")).write.mode("overwrite").partitionBy(
         "__k"
     ).parquet(stage)
-    for k, s in enumerate(slices):
+    for k in range(n):
         d = os.path.join(stage, f"__k={k}")
-        files = (
-            [f for f in os.listdir(d) if f.endswith(".parquet")]
-            if os.path.isdir(d)
-            else []
-        )
-        if files:
-            if len(files) != 1:
-                # hash partitioning sends every row of a key to one
-                # reduce task -> one file; anything else means the
-                # staging write no longer guarantees slice = file
-                raise RuntimeError(
-                    f"slice {k} staged as {len(files)} files; "
-                    "micro-batch replay needs exactly one"
-                )
-            p = os.path.join(in_dir, f"slice{k:05d}.parquet")
-            _shutil.move(os.path.join(d, files[0]), p)
-        else:
-            # empty slice: stage a schema-only file so batch k still
-            # exists (degenerate corpora only; never at tested SFs)
-            p = os.path.join(in_dir, f"slice{k:05d}.parquet")
-            s.limit(0).coalesce(1).write.mode("overwrite").parquet(
-                d + ".empty"
+        p = os.path.join(in_dir, f"slice{k:05d}.parquet")
+        if not os.path.isdir(d):
+            # empty slice (degenerate corpora only; never at tested SFs)
+            d = d + ".empty"
+            tagged.drop("__k").limit(0).coalesce(1).write.parquet(d)
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        if len(files) != 1:
+            # hash partitioning sends every row of a key to one reduce
+            # task -> one file; anything else means the staging write no
+            # longer guarantees slice = file
+            raise RuntimeError(
+                f"slice {k} staged as {len(files)} files; "
+                "micro-batch replay needs exactly one"
             )
-            one = [
-                f
-                for f in os.listdir(d + ".empty")
-                if f.endswith(".parquet")
-            ][0]
-            _shutil.move(os.path.join(d + ".empty", one), p)
+        shutil.move(os.path.join(d, files[0]), p)
         os.utime(p, (base + 100 * k, base + 100 * k))
-    _shutil.rmtree(stage, ignore_errors=True)
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+def _drain(
+    spark: SparkSession,
+    in_dir: str,
+    schema: str,
+    sink,
+    transform=None,
+    output_mode: str = "append",
+    shuffle_parts: int | None = None,
+) -> StructType:
+    """Replay the staged slices in ``in_dir`` one file per micro-batch
+    through ``transform`` (if given) into the foreachBatch ``sink``
+    until every slice is committed, checkpointing beside ``in_dir``;
+    return the schema of the stream the sink received. Every replay
+    starts and finishes its stream here."""
+    with _stream_shuffle_parts(spark, shuffle_parts):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        if transform is not None:
+            stream = transform(stream)
+        q = (
+            stream.writeStream.outputMode(output_mode)
+            .foreachBatch(sink)
+            .option(
+                "checkpointLocation",
+                os.path.join(os.path.dirname(in_dir), "ckpt"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        finished = q.awaitTermination(300)
+        q.stop()
+    if not finished:
+        # A timed-out replay has committed only SOME micro-batches; its
+        # sink or store would read as a silently-partial (wrong) result.
+        # Fail loudly instead.
+        raise TimeoutError(
+            "streaming replay did not finish within 300s; output under "
+            f"{os.path.dirname(in_dir)} is partial and must not be graded"
+        )
+    return stream.schema
 
 
 def _replay(
@@ -189,33 +235,21 @@ def _replay(
     output_mode: str = "append",
     shuffle_parts: int | None = None,
 ) -> DataFrame:
-    with _stream_shuffle_parts(spark, shuffle_parts):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = (
-            transform(stream)
-            .writeStream.outputMode(output_mode)
-            .foreachBatch(idempotent_parquet_sink(out_dir))
-            .option(
-                "checkpointLocation", os.path.join(in_dir, "..", "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        q.stop()
-    if not finished:
-        # A timed-out replay has committed only SOME micro-batches; the
-        # sink would read as a silently-partial (wrong) result. Fail
-        # loudly instead.
-        raise TimeoutError(
-            "streaming replay did not finish within 300s; sink at "
-            f"{out_dir} is partial and must not be graded"
-        )
-    return spark.read.parquet(out_dir)
+    """``_drain`` into the idempotent parquet sink at ``out_dir`` and
+    read it back. The read names its schema (the stream's plus the
+    int ``__batch_id`` partition column that discovery would infer), so
+    no footer-inference job runs."""
+    got = _drain(
+        spark,
+        in_dir,
+        schema,
+        idempotent_parquet_sink(out_dir),
+        transform,
+        output_mode,
+        shuffle_parts,
+    )
+    got.add("__batch_id", IntegerType())
+    return spark.read.schema(got).parquet(out_dir)
 
 
 @register(
@@ -273,8 +307,8 @@ def streaming_gapfill_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
     # materialize the per-bucket aggregate ONCE: the boundary probe and
-    # the three staged slices below otherwise each re-instantiate the
-    # whole events aggregation (4 passes for 1, guide §2.4)
+    # the staging write below otherwise each re-instantiate the whole
+    # events aggregation (guide §2.4)
     per = per.localCheckpoint()
     # three contiguous time slices -> in-order buckets per series across
     # batches (the operator's input contract); boundaries from the
@@ -287,12 +321,12 @@ def streaming_gapfill_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
+    b = F.col("bucket")
     _write_ordered_slices(
-        [
-            per.filter(F.col("bucket") <= cut1),
-            per.filter((F.col("bucket") > cut1) & (F.col("bucket") <= cut2)),
-            per.filter(F.col("bucket") > cut2),
-        ],
+        per.withColumn(
+            "__k", F.when(b <= cut1, 0).when(b <= cut2, 1).otherwise(2)
+        ),
+        3,
         in_dir,
     )
     sink = _replay(
@@ -332,16 +366,11 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    s0 = e.filter(F.pmod(F.col("event_id"), F.lit(3)) == 0)
-    s1 = e.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1)
-    s2 = e.filter(F.pmod(F.col("event_id"), F.lit(3)) == 2)
     stage = _stage_dir("dedup", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(
-        [s0, s1.unionAll(s0), s2.unionAll(s1)],  # dupes cross batches
-        in_dir,
-    )
+    # dupes cross batches: slices [s0, s1 + s0, s2 + s1]
+    _write_ordered_slices(_thirds(e, "event_id", redeliver=True), 3, in_dir)
     # dedup state keys = event_ids seen, ∝ batch rows (biggest batch =
     # 2/3 of the corpus after the duplicate injection) — derive the
     # pinned state-partition count from rows (the operator is a JVM
@@ -390,10 +419,7 @@ def streaming_heavy_hitters_replay(
     stage = _stage_dir("heavy", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(
-        [e.filter(F.pmod(F.col("event_id"), F.lit(3)) == k) for k in range(3)],
-        in_dir,
-    )
+    _write_ordered_slices(_thirds(e, "event_id"), 3, in_dir)
     sink = _replay(
         spark,
         in_dir,
@@ -476,16 +502,11 @@ def streaming_media_dedup_replay(
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    s0 = d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    s1 = d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1)
-    s2 = d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2)
     stage = _stage_dir("media_dedup", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(
-        [s0, s1.unionAll(s0), s2.unionAll(s1)],  # dupes cross batches
-        in_dir,
-    )
+    # dupes cross batches: slices [s0, s1 + s0, s2 + s1]
+    _write_ordered_slices(_thirds(d, "doc_id", redeliver=True), 3, in_dir)
 
     # state keys = distinct fingerprints ∝ batch rows (biggest batch =
     # 2/3 of the docs after the duplicate injection); the CODEC pass
@@ -593,39 +614,22 @@ def streaming_phash_store_replay(
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    slices = [
-        d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == k) for k in range(3)
-    ]
     stage = _stage_dir("phash_store_dedup", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(slices, in_dir)
+    _write_ordered_slices(_thirds(d, "doc_id"), 3, in_dir)
     store_dir = os.path.join(stage, "store")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     # fused PNG encode -> decode -> dHash (r17, guide §4.1): one
     # Python pass; the encoded payload never re-crosses the boundary.
     # repartition first: one file per trigger = one partition, so the
     # codec pass would otherwise run single-task per batch (guide §2)
-    hashed = docs_png_dhash(stream.repartition("doc_id"))
-    q = (
-        hashed.writeStream.outputMode("append")
-        .foreachBatch(phash_store_dedup_sink(store_dir, threshold=6))
-        .option("checkpointLocation", os.path.join(stage, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        in_dir,
+        "doc_id long, text string",
+        phash_store_dedup_sink(store_dir, threshold=6),
+        lambda s: docs_png_dhash(s.repartition("doc_id")),
     )
-    finished = q.awaitTermination(300)
-    q.stop()
-    if not finished:
-        raise TimeoutError(
-            "phash-store replay did not finish within 300s; store at "
-            f"{store_dir} is partial and must not be graded"
-        )
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema("stored_id long, new_id long, hamming long, phase long")
@@ -718,34 +722,17 @@ def streaming_sigstore_replay(
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    slices = [
-        d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == k) for k in range(3)
-    ]
     stage = _stage_dir("sigstore_dedup", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(slices, in_dir)
+    _write_ordered_slices(_thirds(d, "doc_id"), 3, in_dir)
     store_dir = os.path.join(stage, "store")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    _drain(
+        spark,
+        in_dir,
+        "doc_id long, text string",
+        sigstore_dedup_sink(store_dir, threshold=0.35),
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sigstore_dedup_sink(store_dir, threshold=0.35))
-        .option("checkpointLocation", os.path.join(stage, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(300)
-    q.stop()
-    if not finished:
-        raise TimeoutError(
-            "sigstore replay did not finish within 300s; store at "
-            f"{store_dir} is partial and must not be graded"
-        )
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema(
@@ -873,40 +860,19 @@ def streaming_semdedup_replay(
             "embedding"
         ),
     )
-    slices = [
-        e.filter(F.pmod(F.col("vec_id"), F.lit(3)) == k) for k in range(3)
-    ]
     stage = _stage_dir("semdedup_store", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(slices, in_dir)
+    _write_ordered_slices(_thirds(e, "vec_id"), 3, in_dir)
     store_dir = os.path.join(stage, "store")
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    _drain(
+        spark,
+        in_dir,
+        "vec_id long, embedding array<double>",
+        semdedup_store_sink(
+            store_dir, lattice_centroids(_SEM_LISTS, _SEM_DIM), tau=_SEM_TAU
+        ),
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
-            semdedup_store_sink(
-                store_dir,
-                lattice_centroids(_SEM_LISTS, _SEM_DIM),
-                tau=_SEM_TAU,
-            )
-        )
-        .option("checkpointLocation", os.path.join(stage, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(300)
-    q.stop()
-    if not finished:
-        raise TimeoutError(
-            "semdedup-store replay did not finish within 300s; store at "
-            f"{store_dir} is partial and must not be graded"
-        )
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema("stored_id long, new_id long, cosine double, phase long")

@@ -37,3 +37,33 @@ def test_entry_under_foreign_session(foreign_session):
     import __spark_entry__ as m
 
     assert len(m.entry(foreign_session).collect()) > 0
+
+
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager(session, path) -> str:
+    jvm = session._jvm
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return cfm.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        session._jsparkSession.sessionState().newHadoopConf(),
+    ).getClass().getName()
+
+
+def test_checkpoint_manager_is_filesystem_based(
+    spark, foreign_session, sf_dir, tmp_path
+):
+    """Streams checkpoint through the FileSystem-based manager on the
+    engine's session and on a foreign one after one load_table (the
+    default FileContext manager forks ``readlink`` per rename without
+    libhadoop). A class name Spark cannot load fails here rather than at
+    every replay's stream start."""
+    from ballista_extensions_spark.io import load_table
+
+    for session in (spark, foreign_session):
+        load_table(session, sf_dir, "events")
+        assert _checkpoint_manager(session, tmp_path) == _FS_MANAGER
