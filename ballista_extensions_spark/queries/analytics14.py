@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ballista_extensions_spark.io import ensure_parallelism, load_table
 from ballista_extensions_spark.operators.shards import (
@@ -220,111 +221,65 @@ def multimodal_curation_funnel(
     Routing is binary here (png signature 0x89 'PNG' cannot occur in
     utf-8 text's first byte, so text never mis-routes; any non-png
     payload IS the text modality by construction) — the 6-way sniffer
-    is separately graded by media_kind_routing. Scale: two
-    Arrow-batched narrow passes (PNG encode, decode+hash) + per-
-    modality hash groupBys + keeper equi-joins — no cartesian, no
-    driver state; the final per-source frames are tiny aggregates."""
+    is separately graded by media_kind_routing. Routing is applied on
+    each branch before the union, so the text side never pays the PNG
+    encode pass.
+
+    Scale: one pipeline, one SQL execution, no driver state. Each
+    Arrow-batched pass (PNG encode, decode+dHash) runs once per
+    document; both modalities meet as ``(modality, media_id, source,
+    key)`` rows under a single window exchange on ``(modality, key)``
+    that marks each key's keeper (``media_id == min(media_id)``), and
+    one map-side-combined per-(source, modality) aggregate counts docs
+    and keepers. Exact because a keeper's own source is the source its
+    survivor is attributed to; a NULL dHash (undecodable payload)
+    groups as one key, as in the oracle's GROUP BY."""
     from ballista_extensions_spark.operators.imagedup import image_dhash
     from ballista_extensions_spark.operators.multimodal import (
         detect_media_kind,
         docs_as_png_media,
     )
 
-    d = (
-        ensure_parallelism(load_table(spark, sf_dir, "documents"))
-        .filter(F.col("text").isNotNull())
-        .localCheckpoint(eager=False)
+    d = ensure_parallelism(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull()
     )
-    text_part = d.filter(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("media_id"),
-        "source",
-        F.col("text").cast("binary").alias("payload"),
-    )
-    png_part = docs_as_png_media(d.filter(F.col("doc_id") % 2 == 1)).join(
-        d.select(F.col("doc_id").alias("media_id"), "source"), "media_id"
-    )
-    # Routing stays per-payload magic-byte sniffing, but applied on
-    # each union branch BEFORE the union instead of on the mixed frame
-    # (r17): filtering the mixed union by `kind` cannot prune the
-    # other branch, so every text-side consumer also paid the PNG
-    # encode pass. Per-branch sniff + filter is row-for-row identical
-    # routing — the PNG signature byte 0x89 is an invalid first byte
-    # of utf-8, so a text payload can never sniff 'png' (and the
-    # encoder always emits the signature, so a png payload can never
-    # sniff text); the docstring's invariant, now load-bearing.
-    text_routed = text_part.withColumn(
-        "kind", detect_media_kind("payload")
-    ).filter(F.col("kind") != "png")
-    png_routed = (
-        png_part.select("media_id", "source", "payload")
-        .withColumn("kind", detect_media_kind("payload"))
-        .filter(F.col("kind") == "png")
-    )
-
-    def _funnel(frame: DataFrame, key_col: str, modality: str) -> DataFrame:
-        groups = frame.groupBy(key_col).agg(
-            F.min("media_id").alias("keep_id")
-        )
-        surv = (
-            groups.join(
-                frame.select("media_id", "source"),
-                groups["keep_id"] == F.col("media_id"),
-            )
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_survivors"))
-        )
-        docs_per_src = frame.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs")
-        )
-        return (
-            docs_per_src.join(surv, "source", "left")
-            .select(
-                "source",
-                F.lit(modality).alias("modality"),
-                "n_docs",
-                F.coalesce(F.col("n_survivors"), F.lit(0))
-                .cast("long")
-                .alias("n_survivors"),
-            )
-        )
-
-    # Per-modality SIGNATURE frames, each materialized under one
-    # exchange (r17, guide §8 decide-on-small-rows / §2.4): the funnel
-    # consumes each modality three ways (key groups, keeper join,
-    # per-source counts) and previously re-instantiated `routed` per
-    # consumer — and `routed` is the union whose png branch ENCODES
-    # every image, so the Python encode(+decode+hash) pass ran ~6x
-    # (job-profiled: 33s of task time for a 9s query, two 6-7s
-    # broadcast builds). Now each modality pays its payload pass once:
-    # the repartition-on-key exchange is stage-deduplicated across
-    # concurrent consumer jobs, carries only (media_id, source, key)
-    # proxies, and its clustering is exactly what the key groupBy
-    # needs. The image side takes `source` from the checkpointed scan
-    # instead of a third instantiation of the union (media_id == the
-    # routed doc_id by construction, so the attribution is identical).
-    from ballista_extensions_spark.io import default_parallelism
-
-    npart = default_parallelism(spark)
     text_sigs = (
-        text_routed
-        .select("media_id", "source", F.md5("payload").alias("h"))
-        .repartition(npart, "h")
-        .localCheckpoint(eager=False)
-    )
-    img_sigs = (
-        image_dhash(png_routed)
-        .withColumnRenamed("id", "media_id")
-        .join(
-            d.select(F.col("doc_id").alias("mid2"), "source"),
-            F.col("media_id") == F.col("mid2"),
+        d.filter(F.col("doc_id") % 2 == 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            "source",
+            F.col("text").cast("binary").alias("payload"),
         )
-        .drop("mid2")
-        .repartition(npart, "dhash")
-        .localCheckpoint(eager=False)
+        .filter(detect_media_kind("payload") != "png")
+        .select(
+            F.lit("text").alias("modality"),
+            "media_id",
+            "source",
+            F.md5("payload").alias("key"),
+        )
     )
+    png = docs_as_png_media(d.filter(F.col("doc_id") % 2 == 1))
+    img_sigs = (
+        image_dhash(png.filter(detect_media_kind("payload") == "png"))
+        .join(d.select(F.col("doc_id").alias("id"), "source"), "id")
+        .select(
+            F.lit("image").alias("modality"),
+            F.col("id").alias("media_id"),
+            "source",
+            F.col("dhash").cast("string").alias("key"),
+        )
+    )
+    keeper = F.min("media_id").over(Window.partitionBy("modality", "key"))
     return (
-        _funnel(text_sigs, "h", "text")
-        .unionByName(_funnel(img_sigs, "dhash", "image"))
+        text_sigs.unionByName(img_sigs)
+        .withColumn("keep", (F.col("media_id") == keeper).cast("long"))
+        .groupBy("source", "modality")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.coalesce(F.sum("keep"), F.lit(0))
+            .cast("long")
+            .alias("n_survivors"),
+        )
         .orderBy("source", "modality")
     )
 

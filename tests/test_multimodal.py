@@ -590,3 +590,29 @@ def test_topdown_bmp_decodes_unflipped():
     rows = [body[y * row : (y + 1) * row] for y in range(h)]
     up[off:] = b"".join(reversed(rows))
     assert np.array_equal(decode_to_array(bytes(up)), px)
+
+
+def test_curation_funnel_is_one_lazy_pipeline(spark, sf_dir, documents):
+    """The funnel is one SQL execution: building it submits no job, no
+    frame is checkpointed, and each codec pass appears once."""
+    from ballista_extensions_spark.queries.analytics14 import (
+        multimodal_curation_funnel,
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("funnel-shape", "multimodal_curation_funnel plan shape")
+    try:
+        df = multimodal_curation_funnel(spark, sf_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts post async
+        assert list(sc.statusTracker().getJobIdsForGroup("funnel-shape")) == []
+        assert df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    qe = df._jdf.queryExecution()
+    logical = qe.optimizedPlan().toString()
+    final = qe.executedPlan().executedPlan().toString()  # AQE's final plan
+    assert "isFinalPlan=true" in qe.executedPlan().toString()
+    for plan in (logical, final):
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+    assert final.count("MapInPandas") == 2
