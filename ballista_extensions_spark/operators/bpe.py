@@ -36,6 +36,7 @@ between engines because no non-ASCII byte survives to the lower().
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,19 +53,21 @@ _FRAME_DUCK = (
 )
 
 
-def _merge_word(syms: tuple[str, ...], x: str, y: str) -> tuple[str, ...]:
+def _merge_word(syms: Sequence[str], x: str, y: str) -> list[str]:
     """Leftmost-first greedy merge of adjacent (x, y) — the
-    str.replace / SQL-replace scan semantic the apply side uses."""
+    str.replace / SQL-replace scan semantic the apply side uses, and
+    the merge step of both trainers (this module's word trainer and
+    operators/bpe_stream.py's chunk trainer)."""
     out: list[str] = []
-    i = 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == x and syms[i + 1] == y:
+    i, n = 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == x and syms[i + 1] == y:
             out.append(x + y)
             i += 2
         else:
             out.append(syms[i])
             i += 1
-    return tuple(out)
+    return out
 
 
 def train_bpe_merges(
@@ -107,7 +110,7 @@ def train_bpe_merges(
         merges.append(best)
         new_reps: dict[tuple[str, ...], int] = {}
         for syms, c in reps.items():
-            m = _merge_word(syms, *best)
+            m = tuple(_merge_word(syms, *best))
             new_reps[m] = new_reps.get(m, 0) + c
         reps = new_reps
     return tuple(merges)

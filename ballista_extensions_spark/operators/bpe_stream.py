@@ -6,9 +6,10 @@ bounded: one plan-tree ``replace`` per merge means a real vocabulary
 (thousands of merges) cannot ever fit the chain. This module is the
 production-shaped applier: an Arrow-batched ``mapInPandas`` stage with
 a BROADCAST merge-rank dict implementing true rank-priority merging —
-apply cost per document is O(stream length x applied merges) however
-many merges the vocabulary holds, so the same code runs a 32-merge toy
-list and a 32k-merge production vocabulary identically.
+a heap over each chunk's adjacent pairs makes the apply cost per chunk
+O((length + applied merges) x log length) however many merges the
+vocabulary holds, so the same code runs a 32-merge toy list and a
+32k-merge production vocabulary identically.
 
 Vocabulary model — why merges cross word boundaries here: the driver
 corpus has only 31 distinct words, so word-internal BPE provably
@@ -39,9 +40,11 @@ is what keeps BOTH sides scalable:
   of rescanning the table (the loop stays ∝ driver state, never
   corpus). Deterministic: ties break to the lexicographically
   smallest pair, exactly the bpe.py contract.
-- **Application** memoizes per distinct chunk inside each Arrow batch
-  task (chunks repeat Zipf-style in real corpora), and the merge-rank
-  dict rides the closure once per executor — the broadcast pattern.
+- **Application** runs the heap applier once per distinct chunk inside
+  each Arrow batch task (a per-task memo; on the driver corpus only
+  ~5% of chunks repeat, so the applier's own cost is what matters),
+  and the merge-rank dict rides the closure once per executor — the
+  broadcast pattern.
 
 Cross-engine verifiability: the framed-chain form of bpe.py
 generalizes — frame every symbol char ``[a-z0-9#]`` as `` c `` with
@@ -67,6 +70,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ballista_extensions_spark.operators.bpe import _merge_word
 
 Merges = tuple[tuple[str, str], ...]
 
@@ -241,21 +247,6 @@ def _pair_bag(syms: list[str], w: int) -> Counter:
     return c
 
 
-def _merge_syms(syms: list[str], x: str, y: str) -> list[str]:
-    """Leftmost-first greedy merge of adjacent (x, y) — the scan-left
-    semantic shared by the SQL chain and the applier."""
-    out: list[str] = []
-    i, n = 0, len(syms)
-    while i < n:
-        if i + 1 < n and syms[i] == x and syms[i + 1] == y:
-            out.append(x + y)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
-
-
 def train_stream_bpe(
     docs: DataFrame,
     n_merges: int,
@@ -343,7 +334,7 @@ def greedy_merge_loop(
                 continue
             w = weights[u]
             before = _pair_bag(syms, w)
-            units[u] = _merge_syms(syms, x, y)
+            units[u] = _merge_word(syms, x, y)
             after = _pair_bag(units[u], w)
             for p, c in before.items():
                 touched[p] -= c
@@ -369,19 +360,51 @@ def _rank_priority_tokens(
     """True rank-priority BPE over one chunk: repeatedly merge the
     lowest-rank adjacent pair present (all its occurrences, scan-left)
     until no trained pair remains — the GPT-2/SentencePiece apply
-    loop, O(len x applied merges) regardless of vocabulary size."""
-    toks = list(chunk)
-    while len(toks) > 1:
-        best_rank = None
-        best = None
-        for p in zip(toks, toks[1:]):
-            r = ranks.get(p)
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best = r, p
-        if best is None:
-            break
-        toks = _merge_syms(toks, *best)
-    return toks
+    loop, O((len + applied merges) x log len) regardless of vocabulary
+    size.
+
+    Symbols live in a doubly linked list over their start positions,
+    with a min-heap of ``(rank, left position)`` for every ranked
+    adjacent pair. Each round pops every entry of the current minimum
+    rank in position order (so ``a a a`` under ``(a, a)`` becomes
+    ``aa a``, the scan-left rule), skips stale entries and merges the
+    rest in place; only after the round are the merged nodes' new
+    pairs pushed. A merge can create a pair of LOWER rank in a list
+    the trainer did not produce, and pushing it mid-round would merge
+    it before the remaining occurrences of the current pair."""
+    syms: list[str | None] = list(chunk)
+    n = len(syms)
+    nxt = list(range(1, n + 1))  # n = no right neighbour
+    prv = list(range(-1, n - 1))  # -1 = no left neighbour
+    get = ranks.get
+    heap = [
+        (r, i)
+        for i, pair in enumerate(zip(syms, syms[1:]))
+        if (r := get(pair)) is not None
+    ]
+    heapq.heapify(heap)
+    while heap:
+        rank = heap[0][0]
+        merged: list[int] = []
+        while heap and heap[0][0] == rank:
+            i = heapq.heappop(heap)[1]
+            j = nxt[i]
+            if syms[i] is None or j == n or get((syms[i], syms[j])) != rank:
+                continue  # stale: node absorbed or pair changed
+            syms[i] += syms[j]
+            syms[j] = None
+            k = nxt[j]
+            nxt[i] = k
+            if k < n:
+                prv[k] = i
+            merged.append(i)
+        for i in merged:
+            p, k = prv[i], nxt[i]
+            if p >= 0 and (r := get((syms[p], syms[i]))) is not None:
+                heapq.heappush(heap, (r, p))
+            if k < n and (r := get((syms[i], syms[k]))) is not None:
+                heapq.heappush(heap, (r, i))
+    return [s for s in syms if s is not None]
 
 
 _NORM_RE = re.compile(r"[^a-zA-Z0-9]+")
@@ -423,15 +446,23 @@ def bpe_stream_token_counts(
     id_col: str = "doc_id",
     nfc: bool = False,
     pretokenize: bool = False,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Tokenize the corpus with the rank-priority applier: per document
-    ``(doc_id, n_symbols, n_tokens)`` where n_symbols is the base
-    symbol count (chunk chars incl. ``#`` joints) and n_tokens the BPE
-    token count. ONE Arrow-batched mapInPandas stage — no shuffle, no
-    driver state; the merge-rank dict (O(vocab) small) rides the task
-    closure once per executor, and distinct chunks memoize within each
-    task. This is the plan shape that survives a 32k-merge production
-    vocabulary, unlike the literal-replace chain (module docstring).
+    ``(doc_id, n_symbols, n_tokens, *carry)`` where n_symbols is the
+    base symbol count (chunk chars incl. ``#`` joints) and n_tokens the
+    BPE token count. ONE Arrow-batched mapInPandas stage — no shuffle,
+    no driver state; the merge-rank dict (O(vocab) small) rides the
+    task closure once per executor, and distinct chunks memoize within
+    each task. Apply cost is O((symbols + applied merges) x log chunk
+    length) per distinct chunk (:func:`_rank_priority_tokens`),
+    independent of vocabulary size. This is the plan shape that
+    survives a 32k-merge production vocabulary, unlike the
+    literal-replace chain (module docstring).
+
+    ``carry`` names ``docs`` columns passed through the same Arrow pass
+    and returned with their input types, so a caller that groups by
+    them needs no second scan of ``docs`` and no join back on the id.
 
     ``nfc=True`` canonicalizes the text (Unicode NFC,
     functions/udf.py:py_nfc_normalize) before chunking — real crawls
@@ -447,7 +478,14 @@ def bpe_stream_token_counts(
         docs = docs.withColumn(text_col, py_nfc_normalize(F.col(text_col)))
     chunker = _py_pretok_chunks if pretokenize else _py_chunks
     ranks = {p: i for i, p in enumerate(merges)}
-    out_schema = f"{id_col} long, n_symbols long, n_tokens long"
+    out_schema = StructType(
+        [
+            StructField(id_col, LongType()),
+            StructField("n_symbols", LongType()),
+            StructField("n_tokens", LongType()),
+        ]
+        + [StructField(c, docs.schema[c].dataType) for c in carry]
+    )
 
     def apply_batches(
         it: Iterator[pd.DataFrame],
@@ -475,10 +513,11 @@ def bpe_stream_token_counts(
                     id_col: pdf[id_col].astype("int64"),
                     "n_symbols": [a for a, _ in counted],
                     "n_tokens": [b for _, b in counted],
+                    **{c: pdf[c] for c in carry},
                 }
             )
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select(id_col, text_col, *carry).mapInPandas(
         apply_batches, schema=out_schema
     )
 

@@ -213,8 +213,10 @@ def tokenizer_fertility_by_lang(
     slice. The oracle replays the staged sequential chain and the word
     count, aggregating exact BIGINTs before ONE double division per
     group — no cross-row float accumulation, so the hash is stable.
-    Scale: applier pass + one map-side-combined groupBy on lang (25ish
-    groups)."""
+    Scale: one scan of ``documents``; ``n_words`` is computed before the
+    applier, which carries it and ``lang`` through its Arrow pass (no
+    join back on ``doc_id``), then one map-side-combined groupBy on
+    lang (25ish groups)."""
     from ballista_extensions_spark.operators.bpe_stream import (
         bpe_stream_token_counts,
     )
@@ -224,13 +226,10 @@ def tokenizer_fertility_by_lang(
         "size(filter(split(lower(regexp_replace(coalesce(text, ''), "
         "'[^a-zA-Z0-9]+', '#')), '#'), w -> w != ''))"
     )
-    per = d.select(
-        "doc_id", "lang", F.expr(words).cast("long").alias("n_words")
-    ).join(
-        bpe_stream_token_counts(d, FROZEN_STREAM_MERGES).select(
-            "doc_id", "n_tokens"
-        ),
-        "doc_id",
+    per = bpe_stream_token_counts(
+        d.withColumn("n_words", F.expr(words).cast("long")),
+        FROZEN_STREAM_MERGES,
+        carry=("lang", "n_words"),
     )
     return per.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -126,9 +126,11 @@ def bpe_tokenize_4k_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline of the classifier/DSIR models). Per-source doc count,
     symbol count, token count and compression ratio through the SAME
     Arrow-batched rank-priority applier as the 384-merge query — the
-    plan is one mapInPandas projection + one equi-join + a 20-group
-    aggregate, identical shape at any vocab size (the merge-rank dict
-    is a broadcast closure constant; 4096 ranks ~= 100 KB). Rows-only
+    plan is one scan of ``documents``, one mapInPandas projection that
+    carries ``source`` through the Arrow pass (no join back on
+    ``doc_id``) and a 20-group aggregate, identical shape at any vocab
+    size (the merge-rank dict is a broadcast closure constant; 4096
+    ranks ~= 100 KB). Rows-only
     by design: DuckDB cannot replay 4096 sequential merges (the
     binder's 128-deep recursion cap — pinned by
     test_single_expression_chain_depth_failures); the applier's
@@ -142,10 +144,11 @@ def bpe_tokenize_4k_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    counts = bpe_stream_token_counts(d, FROZEN_STREAM_MERGES_4K)
+    counts = bpe_stream_token_counts(
+        d, FROZEN_STREAM_MERGES_4K, carry=("source",)
+    )
     return (
-        counts.join(d.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
+        counts.groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_symbols").cast("long").alias("n_symbols"),

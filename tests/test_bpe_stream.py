@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ballista_extensions_spark.operators import bpe_stream as BS
+from ballista_extensions_spark.operators.bpe import _merge_word
 
 
 def _naive_train(chunks_weighted, n_merges):
@@ -36,7 +37,7 @@ def _naive_train(chunks_weighted, n_merges):
         merges.append(best)
         new = {}
         for syms, c in reps.items():
-            m = tuple(BS._merge_syms(list(syms), *best))
+            m = tuple(_merge_word(syms, *best))
             new[m] = new.get(m, 0) + c
         reps = new
     return tuple(merges)
@@ -46,7 +47,25 @@ def _seq_apply(chunk, merges):
     """Sequential chain semantics: merge k everywhere before k+1."""
     toks = list(chunk)
     for x, y in merges:
-        toks = BS._merge_syms(toks, x, y)
+        toks = _merge_word(toks, x, y)
+    return toks
+
+
+def _loop_rank_priority(chunk, ranks):
+    """Reference applier: rescan every adjacent pair for the lowest
+    rank, merge all its occurrences scan-left, repeat. The heap applier
+    (BS._rank_priority_tokens) must equal it for ANY rank order."""
+    toks = list(chunk)
+    while len(toks) > 1:
+        best_rank = None
+        best = None
+        for p in zip(toks, toks[1:]):
+            r = ranks.get(p)
+            if r is not None and (best_rank is None or r < best_rank):
+                best_rank, best = r, p
+        if best is None:
+            break
+        toks = _merge_word(toks, *best)
     return toks
 
 
@@ -314,3 +333,103 @@ def test_trainer_driver_state_bounded(spark):
     # table (or exhausts honestly)
     merges = BS.greedy_merge_loop(units, weights, 64)
     assert len(merges) == 64
+
+
+def test_heap_applier_equals_loop_reference(sf_dir):
+    """The heap applier equals the rescan loop on every distinct chunk
+    of the corpus under both frozen vocabularies, on seeded random
+    merge lists whose ranks are shuffled (so a merge can create a pair
+    of LOWER rank, which only round-by-round processing gets right),
+    and on the edge cases."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from ballista_extensions_spark.operators.bpe_vocab4k import (
+        FROZEN_STREAM_MERGES_4K,
+    )
+
+    def check(chunk, ranks):
+        assert BS._rank_priority_tokens(chunk, ranks) == _loop_rank_priority(
+            chunk, ranks
+        ), (chunk, ranks)
+
+    path = os.path.join(sf_dir, "documents.parquet")
+    if not os.path.exists(path):
+        pytest.skip("testdata absent")
+    texts = pq.read_table(path, columns=["text"]).column("text").to_pylist()
+    chunks = {c for t in texts for c in BS._py_chunks(t or "")}
+    assert len(chunks) > 1000
+    for merges in (BS.FROZEN_STREAM_MERGES, FROZEN_STREAM_MERGES_4K):
+        ranks = {p: i for i, p in enumerate(merges)}
+        for c in chunks:
+            check(c, ranks)
+
+    rng = random.Random(2024)
+    for _ in range(2000):
+        alphabet = "abcd"[: rng.randint(1, 4)]
+        toks = list(alphabet)
+        merges = []
+        for _ in range(rng.randint(1, 12)):
+            x, y = rng.choice(toks), rng.choice(toks)
+            merges.append((x, y))
+            if x + y not in toks:
+                toks.append(x + y)
+        rng.shuffle(merges)
+        ranks = {p: i for i, p in enumerate(merges)}
+        for _ in range(4):
+            n = rng.randint(0, 24)
+            check("".join(rng.choice(alphabet) for _ in range(n)), ranks)
+
+    aa = {("a", "a"): 0, ("aa", "aa"): 1}
+    assert BS._rank_priority_tokens("", aa) == []
+    assert BS._rank_priority_tokens("a", aa) == ["a"]
+    assert BS._rank_priority_tokens("aaa", {("a", "a"): 0}) == ["aa", "a"]
+    for n in range(10):
+        check("a" * n, aa)
+        check("a" * n, {("a", "a"): 0})
+    assert BS._rank_priority_tokens("xyz#", aa) == list("xyz#")
+    check("xaayaaaz", aa)
+
+
+@pytest.mark.parametrize(
+    "query,carried",
+    [
+        ("bpe_tokenize_4k_vocab", ("source",)),
+        ("tokenizer_fertility_by_lang", ("lang",)),
+    ],
+)
+def test_grouped_applier_queries_scan_documents_once(
+    spark, sf_dir, documents, query, carried
+):
+    """The grouping columns ride the applier's Arrow pass: the executed
+    plan scans ``documents`` once, has no join and one MapInPandas, and
+    the grouping keys keep their input types."""
+    from ballista_extensions_spark.queries import get_queries
+
+    df = get_queries()[query](spark, sf_dir)
+    assert df.collect()
+    qe = df._jdf.queryExecution()
+    assert "isFinalPlan=true" in qe.executedPlan().toString()
+    final = qe.executedPlan().executedPlan().toString()  # AQE's final plan
+    assert final.count("FileScan parquet") == 1
+    assert "documents.parquet" in final
+    assert "Join" not in final
+    assert final.count("MapInPandas") == 1
+    for c in carried:
+        assert df.schema[c].dataType == documents.schema[c].dataType
+
+
+def test_carried_columns_keep_types_and_values(spark, documents):
+    """``carry`` returns the named columns unchanged: same types, and
+    the same rows as joining the counts back to ``documents``."""
+    d = documents.withColumn("n_words", F.size(F.split("text", " ")))
+    carry = ("lang", "source", "n_chars", "n_words")
+    got = BS.bpe_stream_token_counts(d, BS.FROZEN_STREAM_MERGES, carry=carry)
+    assert got.columns == ["doc_id", "n_symbols", "n_tokens", *carry]
+    for c in carry:
+        assert got.schema[c].dataType == d.schema[c].dataType
+    plain = BS.bpe_stream_token_counts(d, BS.FROZEN_STREAM_MERGES)
+    assert plain.columns == ["doc_id", "n_symbols", "n_tokens"]
+    want = plain.join(d.select("doc_id", *carry), "doc_id")
+    assert sorted(got.collect()) == sorted(want.select(*got.columns).collect())
