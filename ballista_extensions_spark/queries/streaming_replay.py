@@ -30,10 +30,13 @@ deterministic bounded stream; a real deployment points the same code
 at a live source.
 
 Fixed cost: a replay should pay for its micro-batches and little else.
-Each one stages its slices in ONE scan of its input (rows tagged with
-their slice, ``_write_ordered_slices``), runs the stream through one
-helper (``_drain``), and reads a parquet sink back with a named schema
-(no footer-inference job). Checkpoint files are renamed into place by
+Each one stages its slices in ONE single-task job over its input (rows
+tagged with their slice, ``_write_ordered_slices``: no exchange), sizes
+its state partitions from the staged files' parquet footers rather than
+a ``count()`` job, runs the stream through one helper (``_drain``), and
+reads a parquet sink back with a named schema (no footer-inference
+job). The sink writes each batch straight into its own directory
+(``streaming/sinks.py``). Checkpoint files are renamed into place by
 the FileSystem-based checkpoint manager (``io._REQUIRED_CONFS``), which
 forks no process per rename.
 """
@@ -45,6 +48,7 @@ import os
 import shutil
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
@@ -69,13 +73,9 @@ _STAGE_ROOT = "/tmp/bx_stream_replay"
 #: the ~1-2 ms per-group kernel-call overhead of the Python state
 #: runner, and enough ROWS that huge batches still fan out to the full
 #: cluster. Production-sized batches clamp both terms to the session's
-#: parallelism; the env overrides exist for cluster re-tuning.
-_STATE_GROUPS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_STATE_GROUPS_PER_TASK", "512")
-)
-_STATE_ROWS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_STATE_ROWS_PER_TASK", "65536")
-)
+#: parallelism.
+_STATE_GROUPS_PER_TASK = 512
+_STATE_ROWS_PER_TASK = 65536
 
 
 def _state_parts(
@@ -140,26 +140,37 @@ def _thirds(df: DataFrame, key: str, redeliver: bool = False) -> DataFrame:
     return df.withColumn("__k", k)
 
 
-def _write_ordered_slices(tagged: DataFrame, n: int, in_dir: str) -> None:
+def _write_ordered_slices(
+    tagged: DataFrame, n: int, in_dir: str
+) -> list[int]:
     """Stage slices ``0..n-1`` of ``tagged`` (its ``__k`` column names
     each row's slice; a null tag belongs to no slice) as one parquet
     file each, ``__k`` dropped, with strictly increasing mtimes:
     FileStreamSource orders files oldest-first, so with
-    maxFilesPerTrigger=1 micro-batch k replays slice k exactly.
+    maxFilesPerTrigger=1 micro-batch k replays slice k exactly. Return
+    each slice's row count, read from its file's parquet footer on the
+    driver, so callers size their state without a ``count()`` job.
 
-    One scan, one Spark job: ``tagged`` is read once and
-    hash-repartitioned on ``__k``, so all rows of a slice land in one
-    reduce task and ``partitionBy`` emits exactly one parquet file per
-    slice; the files then move into ``in_dir`` with the ordered mtimes.
-    Callers tag rows with expressions (``_thirds``) rather than passing
-    one filtered DataFrame per slice, whose union would scan the input
-    once per slice. An empty slice is staged as a schema-only file so
-    batch k still exists."""
+    One job, one stage, one task, no exchange: ``tagged`` is read once
+    and coalesced to a single writer, which sorts its rows by ``__k``
+    and so emits exactly one parquet file per ``partitionBy`` value; the
+    files then move into ``in_dir`` with the ordered mtimes. Callers tag
+    rows with expressions (``_thirds``) rather than passing one filtered
+    DataFrame per slice, whose union would scan the input once per
+    slice. An empty slice is staged as a schema-only file so batch k
+    still exists.
+
+    Scale posture: this staging is test scaffolding that turns a table
+    into a deterministic bounded stream. Every staged input is one scan
+    split at the tested scales, so the single writer loses no scan
+    parallelism; a real deployment points the replayed operator chain
+    at a live source instead."""
     base = os.path.getmtime(in_dir)
     stage = in_dir + ".stage"
-    tagged.repartition(F.col("__k")).write.mode("overwrite").partitionBy(
-        "__k"
-    ).parquet(stage)
+    tagged.coalesce(1).write.mode("overwrite").partitionBy("__k").parquet(
+        stage
+    )
+    rows = []
     for k in range(n):
         d = os.path.join(stage, f"__k={k}")
         p = os.path.join(in_dir, f"slice{k:05d}.parquet")
@@ -169,16 +180,18 @@ def _write_ordered_slices(tagged: DataFrame, n: int, in_dir: str) -> None:
             tagged.drop("__k").limit(0).coalesce(1).write.parquet(d)
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         if len(files) != 1:
-            # hash partitioning sends every row of a key to one reduce
-            # task -> one file; anything else means the staging write no
-            # longer guarantees slice = file
+            # one writer task sorted by __k opens one file per slice;
+            # anything else means the staging write no longer
+            # guarantees slice = file
             raise RuntimeError(
                 f"slice {k} staged as {len(files)} files; "
                 "micro-batch replay needs exactly one"
             )
         shutil.move(os.path.join(d, files[0]), p)
         os.utime(p, (base + 100 * k, base + 100 * k))
+        rows.append(pq.read_metadata(p).num_rows)
     shutil.rmtree(stage, ignore_errors=True)
+    return rows
 
 
 def _drain(
@@ -370,20 +383,25 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
     # dupes cross batches: slices [s0, s1 + s0, s2 + s1]
-    _write_ordered_slices(_thirds(e, "event_id", redeliver=True), 3, in_dir)
-    # dedup state keys = event_ids seen, ∝ batch rows (biggest batch =
-    # 2/3 of the corpus after the duplicate injection) — derive the
-    # pinned state-partition count from rows (the operator is a JVM
-    # stateful op: no per-group Python call, so the rows budget alone
-    # sizes it — guide §2)
-    n_batch = math.ceil(2 * e.count() / 3)
+    rows = _write_ordered_slices(
+        _thirds(e, "event_id", redeliver=True), 3, in_dir
+    )
+    # dedup state keys = event_ids seen, ∝ batch rows — derive the
+    # pinned state-partition count from the biggest batch's rows (the
+    # operator is a JVM stateful op: no per-group Python call, so the
+    # rows budget alone sizes it — guide §2)
+    n_batch = max(rows)
     parts = _state_parts(spark, n_batch, rows=n_batch, python_op=False)
+    # the sink stores only the returned columns: ts only feeds the
+    # watermark
     sink = _replay(
         spark,
         in_dir,
         "event_id long, ts timestamp, user_id long, event_type string",
         os.path.join(stage, "out"),
-        lambda s: dedup_stream(s, watermark="3650 days"),
+        lambda s: dedup_stream(s, watermark="3650 days").select(
+            "event_id", "user_id", "event_type"
+        ),
         shuffle_parts=parts,
     )
     return sink.select("event_id", "user_id", "event_type")
@@ -415,11 +433,10 @@ def streaming_heavy_hitters_replay(
     )
 
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    n_ev = e.count()
     stage = _stage_dir("heavy", sf_dir)
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(_thirds(e, "event_id"), 3, in_dir)
+    rows = _write_ordered_slices(_thirds(e, "event_id"), 3, in_dir)
     sink = _replay(
         spark,
         in_dir,
@@ -431,7 +448,7 @@ def streaming_heavy_hitters_replay(
         # partitions than shards is pure fixed-cost tasks); batch rows
         # re-fan it out toward the full cluster at production batch
         # sizes (guide §2)
-        shuffle_parts=_state_parts(spark, 16, rows=math.ceil(n_ev / 3)),
+        shuffle_parts=_state_parts(spark, 16, rows=max(rows)),
     )
     # update-mode emissions: the LAST batch that touched a shard carries
     # its current full summary; earlier emissions for that shard are
@@ -506,14 +523,16 @@ def streaming_media_dedup_replay(
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
     # dupes cross batches: slices [s0, s1 + s0, s2 + s1]
-    _write_ordered_slices(_thirds(d, "doc_id", redeliver=True), 3, in_dir)
+    rows = _write_ordered_slices(
+        _thirds(d, "doc_id", redeliver=True), 3, in_dir
+    )
 
-    # state keys = distinct fingerprints ∝ batch rows (biggest batch =
-    # 2/3 of the docs after the duplicate injection); the CODEC pass
-    # keeps the session's full parallelism via an explicit repartition
-    # count below — only the fixed-cost stateful stage shrinks
+    # state keys = distinct fingerprints ∝ batch rows (sized by the
+    # biggest batch); the CODEC pass keeps the session's full
+    # parallelism via an explicit repartition count below — only the
+    # fixed-cost stateful stage shrinks
     dp = default_parallelism(spark)
-    n_batch = math.ceil(2 * d.count() / 3)
+    n_batch = max(rows)
     parts = _state_parts(spark, n_batch, rows=n_batch)
 
     def transform(stream: DataFrame) -> DataFrame:

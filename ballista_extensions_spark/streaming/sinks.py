@@ -3,9 +3,12 @@
 Structured Streaming guarantees at-least-once foreachBatch invocation;
 exactly-once END-TO-END requires the sink write to be idempotent per
 (batchId) — on retry after a failure the same batch must overwrite, not
-append. The standard pattern: partition the output by batch id and use
-dynamic partition overwrite, so replaying batch N replaces exactly batch
-N's partition and nothing else.
+append. The pattern here: each batch owns the directory
+``path/__batch_id=N`` and overwrites it, so replaying batch N replaces
+exactly batch N's output and nothing else, and readers of ``path``
+discover ``__batch_id`` as a partition column. Writing straight into
+that directory needs no dynamic-partition staging pass and no
+``partitionBy``.
 """
 
 from __future__ import annotations
@@ -13,13 +16,13 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def idempotent_parquet_sink(path: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch function writing each micro-batch to
-    ``path/__batch_id=N`` with dynamic partition overwrite — replaying a
-    batch id is a no-op-equivalent overwrite (exactly-once effect).
+    ``path/__batch_id=N`` in overwrite mode — replaying a batch id
+    overwrites only that batch's directory (exactly-once effect). An
+    empty batch leaves a schema-only file.
 
     Usage::
 
@@ -29,17 +32,8 @@ def idempotent_parquet_sink(path: str) -> Callable[[DataFrame, int], None]:
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Writer-scoped option, NOT a session conf mutation: a set/
-        # restore of spark.sql.sources.partitionOverwriteMode races with
-        # concurrent foreachBatch sinks on the same session — another
-        # sink's overwrite caught between restore and execution would run
-        # STATIC and wipe its entire output directory.
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
+        batch_df.write.mode("overwrite").parquet(
+            f"{path}/__batch_id={batch_id}"
         )
 
     return write_batch

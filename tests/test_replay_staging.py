@@ -1,12 +1,14 @@
 """The streaming replays' fixed cost (queries/streaming_replay.py): the
-slices are staged in one scan of the input, and checkpoint renames fork
-no ``readlink`` (io._REQUIRED_CONFS names the FileSystem-based
-checkpoint manager). A restart from a checkpoint that manager wrote
-reads its state back."""
+slices are staged by one single-task job over the input, state
+partitions are sized from the staged files' footers, and checkpoint
+renames fork no ``readlink`` (io._REQUIRED_CONFS names the
+FileSystem-based checkpoint manager). A restart from a checkpoint that
+manager wrote reads its state back."""
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import subprocess
@@ -15,8 +17,10 @@ from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ballista_extensions_spark.io import load_table
+from ballista_extensions_spark.queries import registry, streaming_replay
 from ballista_extensions_spark.queries.streaming_replay import (
     _replay,
     _thirds,
@@ -40,12 +44,15 @@ def _events(spark, sf_dir):
 def test_ordered_slices_one_scan(spark, sf_dir, tmp_path):
     """One file per slice, strictly increasing mtimes, the dedup
     replays' redelivery tagging equal to the union-of-filters slices
-    ``[s0, s1 + s0, s2 + s1]``, and a schema-only file for an empty
-    slice (slice 3 here: no row is tagged 3)."""
+    ``[s0, s1 + s0, s2 + s1]``, a schema-only file for an empty slice
+    (slice 3 here: no row is tagged 3), and footer row counts equal to
+    the slices' read-back counts."""
     e = _events(spark, sf_dir)
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
-    _write_ordered_slices(_thirds(e, "event_id", redeliver=True), 4, in_dir)
+    rows = _write_ordered_slices(
+        _thirds(e, "event_id", redeliver=True), 4, in_dir
+    )
 
     names = sorted(os.listdir(in_dir))
     assert names == [f"slice{k:05d}.parquet" for k in range(4)]
@@ -63,6 +70,8 @@ def test_ordered_slices_one_scan(spark, sf_dir, tmp_path):
         assert _rows(got) == _rows(w)
     empty = spark.read.parquet(paths[3])
     assert empty.columns == e.columns and empty.count() == 0
+    assert rows == [spark.read.parquet(p).count() for p in paths]
+    assert rows[3] == 0
 
 
 def test_ordered_slices_reject_split_slice(spark, sf_dir, tmp_path):
@@ -111,6 +120,107 @@ def test_dedup_restart_reads_checkpointed_state(spark, sf_dir, tmp_path):
     state = os.path.join(restarted, "ckpt", "state")
     deltas = {f for _, _, fs in os.walk(state) for f in fs if f.endswith(".delta")}
     assert {"2.delta", "3.delta"} <= deltas
+
+
+class _RunIds(StreamingQueryListener):
+    """Records the run id of every streaming query started while it is
+    attached; a micro-batch's jobs carry that run id as their group."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+def test_dedup_replay_job_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """Calling streaming_dedup_replay submits four jobs: one staging job
+    of one single-task stage (no exchange), then one job per
+    micro-batch. No job counts the events to size the state."""
+    monkeypatch.setattr(streaming_replay, "_STAGE_ROOT", str(tmp_path))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    runs = _RunIds()
+    spark.streams.addListener(runs)
+    sc.setJobGroup("dedup-replay-jobs", "streaming_dedup_replay job budget")
+    try:
+        registry.QUERIES["streaming_dedup_replay"](spark, sf_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # jobs post async
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.streams.removeListener(runs)
+
+    def stages(job):
+        return [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+
+    staging = list(tracker.getJobIdsForGroup("dedup-replay-jobs"))
+    assert len(staging) == 1, staging
+    [stage] = stages(staging[0])
+    assert stage.numTasks == 1, stage
+    assert len(runs.run_ids) == 1, runs.run_ids
+    batches = list(tracker.getJobIdsForGroup(runs.run_ids[0]))
+    assert len(batches) == 3, batches
+    names = [s.name for j in staging + batches for s in stages(j)]
+    assert not [n for n in names if n.startswith("count")], names
+
+
+class _Staged(Exception):
+    """Stops a replay once its slices are staged."""
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_state_parts_from_footers(spark, sf_dir, sf, tmp_path, monkeypatch):
+    """The dedup, heavy_hitters and media_dedup replays size their state
+    from the staged slices' footer counts; at parallelism 2, 4 and 32
+    that gives the partition counts the former count()-derived sizing
+    gave (its formulas are the reference here)."""
+    d = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), sf)
+    if not os.path.isdir(d):
+        pytest.skip(f"no {sf} test data beside {sf_dir}")
+    n_ev = load_table(spark, d, "events").count()
+    n_docs = load_table(spark, d, "documents").count()
+    batch_ev, batch_docs = math.ceil(2 * n_ev / 3), math.ceil(2 * n_docs / 3)
+    # (keys, rows, python_op) as sized from count() before footer sizing
+    reference = {
+        "streaming_dedup_replay": (batch_ev, batch_ev, False),
+        "streaming_heavy_hitters_replay": (16, math.ceil(n_ev / 3), True),
+        "streaming_media_dedup_replay": (batch_docs, batch_docs, True),
+    }
+    state_parts = streaming_replay._state_parts
+    calls = []
+
+    def record(*args, **kwargs):
+        calls.append((args[1:], kwargs))
+        return state_parts(*args, **kwargs)
+
+    def stop(*args, **kwargs):
+        raise _Staged
+
+    monkeypatch.setattr(streaming_replay, "_STAGE_ROOT", str(tmp_path))
+    monkeypatch.setattr(streaming_replay, "_state_parts", record)
+    monkeypatch.setattr(streaming_replay, "_replay", stop)
+    for name, (keys, rows, python_op) in reference.items():
+        calls.clear()
+        with pytest.raises(_Staged):
+            registry.QUERIES[name](spark, d)
+        [(args, kwargs)] = calls
+        for dp in (2, 4, 32):
+            monkeypatch.setattr(
+                streaming_replay, "default_parallelism", lambda _s, dp=dp: dp
+            )
+            got = state_parts(spark, *args, **kwargs)
+            want = state_parts(spark, keys, rows=rows, python_op=python_op)
+            assert got == want, (name, sf, dp, args, kwargs)
 
 
 _FORKS = r"""

@@ -199,6 +199,48 @@ def test_idempotent_sink_engine_replay(spark, events_dir, tmp_path_factory):
     assert {tuple(r) for r in replayed.drop("__batch_id").collect()} == content
 
 
+def test_idempotent_sink_replaces_only_its_batch(
+    spark, events_dir, tmp_path_factory
+):
+    """A repeated batch id with different rows replaces exactly that
+    batch's directory: the other batches' files stay byte-identical,
+    and no dynamic-partition staging directory is left behind."""
+    import os
+
+    from ballista_extensions_spark.streaming.sinks import (
+        idempotent_parquet_sink,
+    )
+
+    out = str(tmp_path_factory.mktemp("sink_batches") / "out")
+    events = spark.read.parquet(events_dir).select("event_id", "event_type")
+    k = F.pmod(F.col("event_id"), F.lit(3))
+    thirds = [events.filter(k == b) for b in range(3)]
+    sink = idempotent_parquet_sink(out)
+    for b, batch in enumerate(thirds):
+        sink(batch, b)
+
+    def files(batch_id):
+        d = os.path.join(out, f"__batch_id={batch_id}")
+        return {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    kept = {b: files(b) for b in (0, 2)}
+    redo = events.filter(F.col("event_id") % 7 == 0)
+    sink(redo, 1)
+
+    assert {b: files(b) for b in (0, 2)} == kept
+    got = spark.read.parquet(out)
+    for b, want in enumerate([thirds[0], redo, thirds[2]]):
+        batch = got.filter(F.col("__batch_id") == b).drop("__batch_id")
+        assert rows(batch) == rows(want), b
+    staging = [
+        d for _, ds, _ in os.walk(out) for d in ds if d.startswith(".spark-staging")
+    ]
+    assert staging == []
+
+
 def test_dedup_stream_drops_dupes(spark, events_dir):
     schema = spark.read.parquet(events_dir).schema
     base = spark.read.parquet(events_dir).limit(100)
