@@ -37,6 +37,7 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def image_dhash(
@@ -44,11 +45,17 @@ def image_dhash(
     hasher: Callable[[bytes], int] | None = None,
     id_col: str = "media_id",
     payload_col: str = "payload",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, dhash): decode each payload with the real codec and hash
-    it — Arrow-batched mapInPandas, no shuffle, bounded batch memory.
-    Undecodable payloads surface as NULL dhash (kept, so corrupt
-    images are visible downstream rather than silently dropped)."""
+    """(id, dhash, *carry): decode each payload with the real codec and
+    hash it — Arrow-batched mapInPandas, no shuffle, bounded batch
+    memory. Undecodable payloads surface as NULL dhash (kept, so
+    corrupt images are visible downstream rather than silently
+    dropped, with their carried columns).
+
+    ``carry`` names ``media`` columns passed through the same Arrow
+    pass and returned with their input types, so a caller that groups
+    by them needs no join back on the id."""
     import pandas as pd
 
     if hasher is None:
@@ -69,10 +76,16 @@ def image_dhash(
                     hv = None
                 ids.append(mid)
                 hashes.append(hv)
-            yield pd.DataFrame({"id": ids, "dhash": hashes})
+            yield pd.DataFrame(
+                {"id": ids, "dhash": hashes, **{c: pdf[c] for c in carry}}
+            )
 
-    return media.select(id_col, payload_col).mapInPandas(
-        _hash, schema="id long, dhash long"
+    schema = StructType(
+        [StructField("id", LongType()), StructField("dhash", LongType())]
+        + [StructField(c, media.schema[c].dataType) for c in carry]
+    )
+    return media.select(id_col, payload_col, *carry).mapInPandas(
+        _hash, schema=schema
     )
 
 
@@ -212,8 +225,22 @@ def phash_near_dup_pairs(
     band instead of m — their pairs come from (a) a plain dhash
     equi-join for hamming-0 members and (b) expansion of the verified
     distinct-hash near-pair table (small → AQE broadcasts it)."""
+    _validate_banding(threshold, bands)
+    return _member_near_dup_pairs(
+        _members(hashes, id_col, hash_col), threshold, bands
+    )
+
+
+def _member_near_dup_pairs(
+    members: DataFrame, threshold: int, bands: int
+) -> DataFrame:
+    """:func:`phash_near_dup_pairs` over a ``members`` frame as
+    :func:`_members` returns it: (id, h), no NULL hash. A caller that
+    already holds such a frame materialized passes it here instead of
+    wrapping it in a second lazy checkpoint, which the concurrent jobs
+    of one write would race (the first to finish truncates the lineage
+    the others still read)."""
     width, mask = _validate_banding(threshold, bands)
-    members = _members(hashes, id_col, hash_col)
     hp = _near_hash_pairs(
         members.select("h").distinct(), threshold, width, mask, bands
     )

@@ -112,11 +112,15 @@ def _doc_pixels(text: str):
     return np.frombuffer(tiled, dtype=np.uint8).reshape(h, w, 3)
 
 
-def _docs_as_encoded_media(documents: DataFrame, encoder) -> DataFrame:
+def _docs_as_encoded_media(
+    documents: DataFrame, encoder, carry: tuple[str, ...] = ()
+) -> DataFrame:
     """Shared mapInPandas body of the BMP/PNG media adapters
     (:func:`_doc_pixels` tiling). ``encoder`` maps the pixel array to
     container bytes; encoding runs Arrow-batched and distributed,
-    same shape as the decode side."""
+    same shape as the decode side. ``carry`` names ``documents``
+    columns passed through the same Arrow pass and returned after
+    ``(media_id, payload)`` with their input types."""
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -124,10 +128,23 @@ def _docs_as_encoded_media(documents: DataFrame, encoder) -> DataFrame:
             for mid, text in zip(pdf["doc_id"], pdf["text"]):
                 ids.append(mid)
                 payloads.append(encoder(_doc_pixels(text)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "payload": payloads,
+                    **{c: pdf[c] for c in carry},
+                }
+            )
 
-    return documents.select("doc_id", "text").mapInPandas(
-        _encode, schema="media_id long, payload binary"
+    schema = StructType(
+        [
+            StructField("media_id", LongType()),
+            StructField("payload", BinaryType()),
+        ]
+        + [StructField(c, documents.schema[c].dataType) for c in carry]
+    )
+    return documents.select("doc_id", "text", *carry).mapInPandas(
+        _encode, schema=schema
     )
 
 
@@ -176,7 +193,9 @@ def docs_as_bmp_media(documents: DataFrame) -> DataFrame:
     return _docs_as_encoded_media(documents, encode_bmp)
 
 
-def docs_as_png_media(documents: DataFrame) -> DataFrame:
+def docs_as_png_media(
+    documents: DataFrame, carry: tuple[str, ...] = ()
+) -> DataFrame:
     """Adapter producing REAL PNG payloads from driver data — the PNG
     sibling of ``docs_as_bmp_media`` (same shared body): genuine 8-bit
     color-type-2 PNGs (operators/imagecodec.py:encode_png — zlib
@@ -185,10 +204,11 @@ def docs_as_png_media(documents: DataFrame) -> DataFrame:
     arithmetic (png_file_size), so a SQL oracle can predict the
     decoded metadata byte-for-byte while the payload is a spec-correct
     PNG the real decoder must parse (signature, IHDR, inflate,
-    unfilter)."""
+    unfilter). ``carry`` passes ``documents`` columns through the
+    encode pass (:func:`_docs_as_encoded_media`)."""
     from ballista_extensions_spark.operators.imagecodec import encode_png
 
-    return _docs_as_encoded_media(documents, encode_png)
+    return _docs_as_encoded_media(documents, encode_png, carry)
 
 
 def docs_as_jpeg_media(documents: DataFrame) -> DataFrame:
@@ -427,26 +447,25 @@ def docs_as_mixed_media(documents: DataFrame) -> DataFrame:
 
 def detect_media_kind(payload_col: str = "payload"):
     """Column expression classifying a binary payload's container
-    format by MAGIC BYTES — entirely JVM-side built-ins
-    (substring-on-binary + hex inside whole-stage codegen), so a
-    100 TB mixed corpus is routed to per-format decoders WITHOUT a
-    byte of Python in the detection path. Recognizes the in-repo codec
-    family (png / jpeg / wav / avi / bmp / ppm); anything else is
-    'unknown' — quarantine, don't guess."""
+    format by MAGIC BYTES — one SQL ``CASE`` comparing binary prefixes
+    (``substring`` on binary against binary literals) inside
+    whole-stage codegen, so a 100 TB mixed corpus is routed to
+    per-format decoders WITHOUT a byte of Python in the detection path
+    and without a hex string per row. Recognizes the in-repo codec
+    family (png / jpeg / wav / avi / bmp / ppm); anything else,
+    including a NULL or too-short payload, is 'unknown' — quarantine,
+    don't guess."""
     p = payload_col
-
-    def _hex(pos: int, length: int):
-        return F.hex(F.expr(f"substring({p}, {pos}, {length})"))
-
-    riff = _hex(1, 4) == "52494646"
-    return (
-        F.when(_hex(1, 4) == "89504E47", "png")
-        .when(_hex(1, 2) == "FFD8", "jpeg")
-        .when(riff & (_hex(9, 4) == "57415645"), "wav")
-        .when(riff & (_hex(9, 4) == "41564920"), "avi")
-        .when(_hex(1, 2) == "424D", "bmp")
-        .when(_hex(1, 2) == "5036", "ppm")
-        .otherwise("unknown")
+    riff = f"substring({p}, 1, 4) = X'52494646'"
+    return F.expr(
+        f"""CASE
+        WHEN substring({p}, 1, 4) = X'89504E47' THEN 'png'
+        WHEN substring({p}, 1, 2) = X'FFD8' THEN 'jpeg'
+        WHEN {riff} AND substring({p}, 9, 4) = X'57415645' THEN 'wav'
+        WHEN {riff} AND substring({p}, 9, 4) = X'41564920' THEN 'avi'
+        WHEN substring({p}, 1, 2) = X'424D' THEN 'bmp'
+        WHEN substring({p}, 1, 2) = X'5036' THEN 'ppm'
+        ELSE 'unknown' END"""
     )
 
 

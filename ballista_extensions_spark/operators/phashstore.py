@@ -123,8 +123,19 @@ def probe_phash_store(
     IS a finding, not a self-pair (cross-corpus semantics, like
     ``phash_cross_dup_pairs``). Cost ∝ increment × bucket collisions:
     the store side of both joins is pre-bucketed when persisted."""
+    _validate_banding(threshold, store.bands)
+    return _probe_members(
+        store, _members(batch_hashes, id_col, hash_col), threshold
+    )
+
+
+def _probe_members(
+    store: PHashStore, bm: DataFrame, threshold: int
+) -> DataFrame:
+    """:func:`probe_phash_store` for an increment already in
+    ``imagedup._members`` form (id, h), passed materialized by the
+    caller (see ``imagedup._member_near_dup_pairs``)."""
     width, mask = _validate_banding(threshold, store.bands)
-    bm = _members(batch_hashes, id_col, hash_col)
     bsliced = _band_slices(bm.select("h").distinct(), width, mask,
                            store.bands)
     hp = _verified_hash_pairs(store.banded, bsliced, threshold,

@@ -128,9 +128,13 @@ def bpe_tokenize_4k_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched rank-priority applier as the 384-merge query — the
     plan is one scan of ``documents``, one mapInPandas projection that
     carries ``source`` through the Arrow pass (no join back on
-    ``doc_id``) and a 20-group aggregate, identical shape at any vocab
-    size (the merge-rank dict is a broadcast closure constant; 4096
-    ranks ~= 100 KB). Rows-only
+    ``doc_id``) and a per-source aggregate, identical shape at any
+    vocab size (the merge-rank dict is a broadcast closure constant;
+    4096 ranks ~= 100 KB). Scale: the aggregate has one row per source
+    (20 in the test data at every scale), so it is sorted in one task
+    (``coalesce(1)`` above the aggregate's exchange, then
+    ``sortWithinPartitions``), with no range-partitioning sample job
+    or exchange: three jobs per call. Rows-only
     by design: DuckDB cannot replay 4096 sequential merges (the
     binder's 128-deep recursion cap — pinned by
     test_single_expression_chain_depth_failures); the applier's
@@ -158,7 +162,11 @@ def bpe_tokenize_4k_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.sum("n_tokens").cast("double")
             ).alias("symbols_per_token"),
         )
-        .orderBy("source")
+        # at most one row per source (20 in the test data at every
+        # scale): one task sorts them, with no range-partitioning
+        # sample job and no extra exchange
+        .coalesce(1)
+        .sortWithinPartitions("source")
     )
 
 
@@ -228,26 +236,33 @@ def multimodal_curation_funnel(
     each branch before the union, so the text side never pays the PNG
     encode pass.
 
-    Scale: one pipeline, one SQL execution, no driver state. Each
-    Arrow-batched pass (PNG encode, decode+dHash) runs once per
-    document; both modalities meet as ``(modality, media_id, source,
-    key)`` rows under a single window exchange on ``(modality, key)``
-    that marks each key's keeper (``media_id == min(media_id)``), and
-    one map-side-combined per-(source, modality) aggregate counts docs
-    and keepers. Exact because a keeper's own source is the source its
-    survivor is attributed to; a NULL dHash (undecodable payload)
-    groups as one key, as in the oracle's GROUP BY."""
+    Scale: one pipeline, one SQL execution, no driver state, no join.
+    Each Arrow-batched pass (PNG encode, decode+dHash) runs once per
+    document and carries ``source`` through (``carry=("source",)``),
+    so nothing joins back to ``documents`` on the id; only this Python
+    branch is spread over the cores (``ensure_parallelism``, one
+    round-robin exchange), while the JVM-only text branch reads the
+    scan as it comes. Both modalities meet as ``(modality, media_id,
+    source, key)`` rows under a single window exchange on
+    ``(modality, key)`` that marks each key's keeper (``media_id ==
+    min(media_id)``), and one map-side-combined per-(source, modality)
+    aggregate counts docs and keepers. Exact because a keeper's own
+    source is the source its survivor is attributed to; a NULL dHash
+    (undecodable payload) groups as one key, as in the oracle's GROUP
+    BY. The result has at most #sources x 2 rows (20 in the test data
+    at every scale), so it is sorted in one task (``coalesce(1)`` above
+    the aggregate's exchange, then ``sortWithinPartitions``) instead of
+    by a range-partitioned global sort, which costs a sampling job and
+    an exchange: four jobs per call."""
     from ballista_extensions_spark.operators.imagedup import image_dhash
     from ballista_extensions_spark.operators.multimodal import (
         detect_media_kind,
         docs_as_png_media,
     )
 
-    d = ensure_parallelism(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull()
-    )
+    docs = load_table(spark, sf_dir, "documents")
     text_sigs = (
-        d.filter(F.col("doc_id") % 2 == 0)
+        docs.filter(F.col("text").isNotNull() & (F.col("doc_id") % 2 == 0))
         .select(
             F.col("doc_id").alias("media_id"),
             "source",
@@ -261,10 +276,19 @@ def multimodal_curation_funnel(
             F.md5("payload").alias("key"),
         )
     )
-    png = docs_as_png_media(d.filter(F.col("doc_id") % 2 == 1))
+    # only the image branch runs CPU-heavy per-row Python passes, so
+    # only it is spread over the cores; the text branch is JVM-only
+    png = docs_as_png_media(
+        ensure_parallelism(docs).filter(
+            F.col("text").isNotNull() & (F.col("doc_id") % 2 == 1)
+        ),
+        carry=("source",),
+    )
     img_sigs = (
-        image_dhash(png.filter(detect_media_kind("payload") == "png"))
-        .join(d.select(F.col("doc_id").alias("id"), "source"), "id")
+        image_dhash(
+            png.filter(detect_media_kind("payload") == "png"),
+            carry=("source",),
+        )
         .select(
             F.lit("image").alias("modality"),
             F.col("id").alias("media_id"),
@@ -283,7 +307,11 @@ def multimodal_curation_funnel(
             .cast("long")
             .alias("n_survivors"),
         )
-        .orderBy("source", "modality")
+        # at most #sources x 2 modalities rows (20 in the test data at
+        # every scale): one task sorts them, with no range-partitioning
+        # sample job and no extra exchange
+        .coalesce(1)
+        .sortWithinPartitions("source", "modality")
     )
 
 

@@ -434,13 +434,13 @@ def phash_store_dedup_sink(
     Returns the callable for ``writeStream.foreachBatch``."""
     from ballista_extensions_spark.operators.imagedup import (
         _band_slices,
+        _member_near_dup_pairs,
         _members,
         _validate_banding,
-        phash_near_dup_pairs,
     )
     from ballista_extensions_spark.operators.phashstore import (
         PHashStore,
-        probe_phash_store,
+        _probe_members,
     )
 
     members_dir = os.path.join(store_dir, "members")
@@ -463,16 +463,17 @@ def phash_store_dedup_sink(
             ),
             bands=bands,
         )
+        # the batch's members, materialized once; the probe and the
+        # intra-batch pairs read them as they are, since a second lazy
+        # checkpoint over them would be raced by the write's concurrent
+        # jobs, whose late tasks then report SQL metrics of a plan the
+        # driver has already dropped
         batch = _members(batch_df, "id", "dhash").localCheckpoint()
-        store_pairs = probe_phash_store(
-            store, batch, threshold=threshold, hash_col="h"
-        )
+        store_pairs = _probe_members(store, batch, threshold)
         # within-batch duplicates: the earlier id is the survivor and
         # reports as stored_id (stream_first_occurrence's min-id
         # convention lifted to near-dups)
-        intra_pairs = phash_near_dup_pairs(
-            batch, threshold=threshold, bands=bands, hash_col="h"
-        ).select(
+        intra_pairs = _member_near_dup_pairs(batch, threshold, bands).select(
             F.col("id_a").alias("stored_id"),
             F.col("id_b").alias("new_id"),
             "hamming",

@@ -616,3 +616,163 @@ def test_curation_funnel_is_one_lazy_pipeline(spark, sf_dir, documents):
     for plan in (logical, final):
         assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
     assert final.count("MapInPandas") == 2
+
+
+@pytest.mark.parametrize(
+    "query,jobs",
+    [("multimodal_curation_funnel", 4), ("bpe_tokenize_4k_vocab", 3)],
+)
+def test_curation_job_budget(spark, sf_dir, query, jobs):
+    """Building and collecting each curation query submits a fixed
+    number of jobs: one round-robin exchange on the Python branch, the
+    map stages of its exchanges, and one result job. The bounded final
+    sort runs in one task, so no range-partitioning sample or exchange
+    is planned, and the funnel joins nothing back."""
+    from ballista_extensions_spark.queries import get_queries
+
+    sc = spark.sparkContext
+    sc.setJobGroup(f"{query}-budget", f"{query} job budget")
+    try:
+        df = get_queries()[query](spark, sf_dir)
+        assert df.collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts post async
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ids = list(sc.statusTracker().getJobIdsForGroup(f"{query}-budget"))
+    assert len(ids) == jobs, ids
+    qe = df._jdf.queryExecution()
+    assert "isFinalPlan=true" in qe.executedPlan().toString()
+    final = qe.executedPlan().executedPlan().toString()  # AQE's final plan
+    assert "rangepartitioning" not in final.lower()
+    if query == "multimodal_curation_funnel":
+        assert "Join" not in final
+        assert final.count("RoundRobinPartitioning") <= 1
+
+
+def test_png_media_and_dhash_carry_columns(spark, documents):
+    """``carry`` returns the named columns with their input types and
+    the values a join back on the id gives; without it both passes
+    keep their schemas."""
+    from pyspark.sql.types import (
+        BinaryType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from ballista_extensions_spark.operators.imagedup import image_dhash
+
+    d = documents.filter(F.col("text").isNotNull()).withColumn(
+        "n_bytes", F.length(F.encode("text", "UTF-8"))
+    )
+    carry = ("source", "n_chars", "n_bytes")
+    assert [d.schema[c].dataType.simpleString() for c in carry] == [
+        "string", "bigint", "int",
+    ]
+    plain_png = M.docs_as_png_media(d)
+    assert plain_png.schema == StructType(
+        [
+            StructField("media_id", LongType()),
+            StructField("payload", BinaryType()),
+        ]
+    )
+    png = M.docs_as_png_media(d, carry=carry)
+    assert png.columns == ["media_id", "payload", *carry]
+    plain = image_dhash(plain_png)
+    assert plain.schema == StructType(
+        [StructField("id", LongType()), StructField("dhash", LongType())]
+    )
+    got = image_dhash(png, carry=carry)
+    assert got.columns == ["id", "dhash", *carry]
+    for frame in (png, got):
+        for c in carry:
+            assert frame.schema[c].dataType == d.schema[c].dataType
+    back = d.select(F.col("doc_id").alias("media_id"), *carry)
+    want_png = plain_png.join(back, "media_id")
+    want_png = want_png.select(*png.columns)
+    assert sorted(png.collect()) == sorted(want_png.collect())
+    want = plain.join(back.withColumnRenamed("media_id", "id"), "id")
+    assert sorted(got.collect()) == sorted(want.select(*got.columns).collect())
+
+
+def test_dhash_carry_keeps_corrupt_rows(spark):
+    """An undecodable payload yields a NULL dHash and keeps its carried
+    values."""
+    import numpy as np
+
+    from ballista_extensions_spark.operators.imagecodec import encode_png
+    from ballista_extensions_spark.operators.imagedup import image_dhash
+
+    good = encode_png(np.arange(48, dtype=np.uint8).reshape(4, 4, 3))
+    bad = bytearray(good)
+    bad[40] ^= 0xFF  # bit-flip inside IDAT -> zlib.error
+    media = spark.createDataFrame(
+        [(1, bytearray(good), "a", 10, 7), (2, bad, "b", 20, None)],
+        "media_id long, payload binary, s string, n long, k int",
+    )
+    got = {
+        r["id"]: r
+        for r in image_dhash(media, carry=("s", "n", "k")).collect()
+    }
+    assert got[1]["dhash"] is not None
+    assert (got[1]["s"], got[1]["n"], got[1]["k"]) == ("a", 10, 7)
+    assert got[2]["dhash"] is None
+    assert (got[2]["s"], got[2]["n"], got[2]["k"]) == ("b", 20, None)
+
+
+def _hex_media_kind(p: str):
+    """The former form of ``detect_media_kind``: hex strings of the
+    payload's prefixes, kept as the reference of its CASE form."""
+
+    def _hex(pos: int, length: int):
+        return F.hex(F.expr(f"substring({p}, {pos}, {length})"))
+
+    riff = _hex(1, 4) == "52494646"
+    return (
+        F.when(_hex(1, 4) == "89504E47", "png")
+        .when(_hex(1, 2) == "FFD8", "jpeg")
+        .when(riff & (_hex(9, 4) == "57415645"), "wav")
+        .when(riff & (_hex(9, 4) == "41564920"), "avi")
+        .when(_hex(1, 2) == "424D", "bmp")
+        .when(_hex(1, 2) == "5036", "ppm")
+        .otherwise("unknown")
+    )
+
+
+def test_detect_media_kind_equals_hex_form(spark):
+    """The binary-prefix CASE classifies every payload as the hex form
+    did: each magic prefix, RIFF without WAVE or AVI, 0- to 3-byte
+    payloads, NULL and random bytes."""
+    import random
+
+    rng = random.Random(8)
+    magic = [
+        b"\x89PNG\r\n\x1a\n",
+        b"\xff\xd8\xff\xe0",
+        b"RIFF\x24\x00\x00\x00WAVEfmt ",
+        b"RIFF\x24\x00\x00\x00AVI LIST",
+        b"BM\x36\x00",
+        b"P6\n4 4\n255\n",
+    ]
+
+    def noise(n: int) -> bytes:
+        return bytes(rng.randrange(256) for _ in range(n))
+
+    payloads = [m + noise(8) for m in magic] + magic
+    payloads += [m[:k] for m in magic for k in range(4)]  # 0 to 3 bytes
+    payloads += [b"RIFF\0\0\0\0WAVX", b"RIFF\0\0\0\0AVI", b"RIFF"]
+    payloads += [noise(rng.randrange(12)) for _ in range(300)]
+    rows = [(i, bytearray(p)) for i, p in enumerate(payloads)] + [(-1, None)]
+    df = spark.createDataFrame(rows, "media_id long, payload binary")
+    got = df.select(
+        "media_id",
+        M.detect_media_kind("payload").alias("new"),
+        _hex_media_kind("payload").alias("old"),
+    ).collect()
+    assert [r for r in got if r["new"] != r["old"]] == []
+    kinds = {r["new"] for r in got}
+    assert kinds == {"png", "jpeg", "wav", "avi", "bmp", "ppm", "unknown"}
+    assert {r["media_id"]: r["new"] for r in got}[-1] == "unknown"
+    schema = df.select(M.detect_media_kind("payload").alias("k")).schema
+    assert schema == df.select(_hex_media_kind("payload").alias("k")).schema

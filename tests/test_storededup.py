@@ -420,3 +420,67 @@ def test_semdedup_sink_probe_is_cell_equijoin_no_cartesian(
     )
     assert "CartesianProduct" not in plan
     assert "Join" in plan
+
+
+def test_phash_replay_reports_no_dropped_accumulators(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """No task of the phash-store replay reports SQL metrics of a plan
+    the driver has already dropped. The replay's sink once wrapped its
+    materialized batch in a second lazy checkpoint inside the probe and
+    the intra-batch pairs; the concurrent jobs of one write raced it,
+    and late tasks then updated garbage-collected accumulators. A
+    thread asks the driver JVM for a full GC every 100 ms during the
+    call, so a dropped plan's metrics are collected before such tasks
+    finish; the DAGScheduler's log is read through an in-memory
+    appender."""
+    import threading
+    import time
+
+    from ballista_extensions_spark.queries import registry, streaming_replay
+
+    monkeypatch.setattr(streaming_replay, "_STAGE_ROOT", str(tmp_path))
+    jvm = spark._jvm
+    log4j = jvm.org.apache.logging.log4j
+    text = jvm.java.io.StringWriter()
+    appender = (
+        log4j.core.appender.WriterAppender.newBuilder()
+        .setName("accumulator-capture")
+        .setTarget(text)
+        .setLayout(
+            log4j.core.layout.PatternLayout.newBuilder()
+            .withPattern("%p %c %m%n")
+            .build()
+        )
+        .build()
+    )
+    appender.start()
+    logger = log4j.LogManager.getLogger(
+        "org.apache.spark.scheduler.DAGScheduler"
+    )
+    logger.addAppender(appender)
+    done = threading.Event()
+
+    def collect_garbage() -> None:
+        while not done.is_set():
+            jvm.System.gc()
+            time.sleep(0.1)
+
+    gc_thread = threading.Thread(target=collect_garbage, daemon=True)
+    gc_thread.start()
+    try:
+        pairs = registry.QUERIES["streaming_phash_store_replay"](spark, sf_dir)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        done.set()
+        gc_thread.join(timeout=30)
+        logger.removeAppender(appender)
+        appender.stop()
+    assert not gc_thread.is_alive()
+    assert pairs.count() > 0
+    lines = [
+        ln for ln in text.toString().splitlines()
+        if "non-existent accumulator" in ln
+        or "Failed to update accumulator" in ln
+    ]
+    assert lines == [], lines[:4]
