@@ -58,16 +58,3 @@ def salted_join(
     return joined.drop(salted_dim[key]).drop(salted_fact["__salt"]).drop(
         salted_dim["__salt"]
     )
-
-
-def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
-    """Skew diagnostic: per-key row counts of the heaviest keys plus
-    their share of the table — run before choosing a join strategy."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("share", F.col("n_rows") / F.lit(float(total)))
-        .orderBy(F.col("n_rows").desc(), F.col(key))
-        .limit(top)
-    )

@@ -293,30 +293,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_compacted(
-    df: DataFrame,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-    fmt: str = "parquet",
-) -> int:
-    """Small-file compaction sink: sizes the output file count from the
-    actual row count (one cheap count job), then repartitions and writes.
-
-    The 100 TB posture concern: many tiny files destroy scan parallelism
-    economics (footer reads, scheduling) while too-few giant files cap
-    parallelism — a compaction pass with an explicit row budget is the
-    standard maintenance op. Returns the file count written.
-    """
-    n = df.count()
-    files = max(1, (n + target_rows_per_file - 1) // target_rows_per_file)
-    writer = df.repartition(files).write.mode("overwrite")
-    if fmt == "parquet":
-        writer.parquet(path)
-    else:
-        writer.format(fmt).save(path)
-    return files
-
-
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Repartition iff the input is under-parallel for CPU-heavy per-row
     operators (small local files are single-row-group parquet -> 1 task

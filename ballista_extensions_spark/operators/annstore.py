@@ -9,10 +9,9 @@ State model (two artifacts, optionally persisted as tables):
 - ``centroids`` — the FROZEN coarse quantizer (n_lists × dim doubles,
   a few KB). Frozen for the same reason sigstore's stop list is: a
   true incremental system cannot re-train the quantizer per increment
-  without re-assigning the whole corpus; it drifts slowly and is
-  refreshed by the compaction path (``maybe_recluster``, triggered by
-  ``similarity.centroid_drift`` — the round-9 monitor becomes the
-  round-10 trigger metric).
+  without re-assigning the whole corpus; it drifts slowly
+  (``similarity.centroid_drift`` monitors it) and is re-trained by a
+  fresh ``train_centroids`` + ``build_ann_index``.
 - ``assignments`` — ``(vec_id, embedding, cell)``, persisted as a
   parquet table PARTITIONED BY cell: the literal inverted file. Two
   scale properties fall out of the layout:
@@ -41,7 +40,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -291,21 +290,6 @@ def build_ann_index(
     )
 
 
-def load_ann_index(spark: SparkSession, table_prefix: str) -> AnnIndex:
-    """Reopen a persisted index: centroids are a few KB (collect), the
-    inverted file stays a table scan."""
-    rows = (
-        spark.table(f"{table_prefix}_centroids")
-        .orderBy("cell")
-        .collect()
-    )
-    return AnnIndex(
-        centroids=tuple(tuple(r["centroid"]) for r in rows),
-        assignments=spark.table(f"{table_prefix}_assign"),
-        table=f"{table_prefix}_assign",
-    )
-
-
 def ingest_into_index(
     index: AnnIndex,
     batch: DataFrame,
@@ -410,82 +394,4 @@ def probe_index(
         .withColumn("rn", F.row_number().over(final_w).cast("long"))
         .filter(F.col("rn") <= k)
         .select("q_id", "c_id", "cosine", "rn")
-    )
-
-
-def drift_vs_index(
-    index: AnnIndex,
-    batch: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Re-cluster trigger metric: ``similarity.centroid_drift`` of the
-    increment against the stored corpus (store = reference batch 0,
-    increment = batch 1). Returns the increment's drift_l2 — compare
-    against a threshold to decide whether the frozen quantizer still
-    fits. Counts-only + (2 × dims) aggregation rows: cheap however
-    large both sides are."""
-    from ballista_extensions_spark.operators.similarity import centroid_drift
-
-    tagged = (
-        index.assignments.select(
-            F.lit(0).alias("__b"), F.col(id_col), F.col(vec_col)
-        )
-        .unionByName(
-            batch.select(F.lit(1).alias("__b"), F.col(id_col), F.col(vec_col))
-        )
-    )
-    report = centroid_drift(
-        tagged, "__b", ref_batch=0, vec_col=vec_col, id_col=id_col
-    )
-    row = report.filter(F.col("batch") == 1).select("drift_l2").collect()
-    return float(row[0][0]) if row else 0.0
-
-
-def maybe_recluster(
-    index: AnnIndex,
-    batch: DataFrame,
-    *,
-    drift_threshold: float,
-    n_lists: int | None = None,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    table_prefix: str | None = None,
-) -> tuple[AnnIndex, bool]:
-    """Compaction path: if the increment's centroid drift vs the stored
-    corpus exceeds the threshold, RE-TRAIN the quantizer on the merged
-    corpus and rebuild the inverted file (the one full-corpus pass an
-    IVF system ever repeats, amortized across the many cheap appends);
-    otherwise plain incremental ingest. Returns (index, reclustered)."""
-    drift = drift_vs_index(index, batch, id_col=id_col, vec_col=vec_col)
-    if drift <= drift_threshold:
-        return (
-            ingest_into_index(index, batch, id_col=id_col, vec_col=vec_col),
-            False,
-        )
-    # Materialize the merged corpus BEFORE rebuilding: on a persisted
-    # index the rebuild overwrite-saves into the same table `merged`
-    # reads from, which Spark rejects ("Cannot overwrite a path that is
-    # also being read from"); the checkpoint cuts that lineage so the
-    # write sees only materialized blocks. In-memory indexes are
-    # unaffected but harmless to checkpoint (assignment rows only).
-    merged = index.assignments.select(id_col, vec_col).unionByName(
-        batch.select(id_col, vec_col)
-    ).localCheckpoint()
-    k = n_lists if n_lists is not None else len(index.centroids)
-    cents = train_centroids(
-        merged, k, seed=seed, id_col=id_col, vec_col=vec_col
-    )
-    prefix = (
-        table_prefix
-        if table_prefix is not None
-        else (index.table[: -len("_assign")] if index.table else None)
-    )
-    return (
-        build_ann_index(
-            merged, cents, id_col=id_col, vec_col=vec_col, table_prefix=prefix
-        ),
-        True,
     )

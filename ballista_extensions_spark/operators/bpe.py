@@ -1,12 +1,13 @@
-"""Apply-side byte-pair encoding: train a frozen greedy merge list,
-then TOKENIZE the whole corpus with it — the step every real
+"""Apply-side byte-pair encoding: TOKENIZE the whole corpus with a
+frozen greedy merge list — the step every real
 pretraining pipeline runs at full corpus scale (VERDICT r11 directive
 #2; ``bpe_merge_candidates`` counts candidate pairs, this module
 applies learned merges).
 
 Design for 100 TB:
 
-- **Training** is a bounded-driver-state pass, the classic BPE-trainer
+- **Training** (the trainer that reproduces ``FROZEN_MERGES`` lives in
+  tests/test_bpe.py) is a bounded-driver-state pass, the classic BPE-trainer
   shape (Sennrich et al. 2016, arXiv:1508.07909): one distributed
   word-count aggregation (shuffle ∝ DISTINCT words, with map-side
   combine), the top ``vocab_cap`` words by (count desc, word) collected
@@ -35,7 +36,6 @@ between engines because no non-ASCII byte survives to the lower().
 
 from __future__ import annotations
 
-from collections import Counter
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -68,52 +68,6 @@ def _merge_word(syms: Sequence[str], x: str, y: str) -> list[str]:
             out.append(syms[i])
             i += 1
     return out
-
-
-def train_bpe_merges(
-    docs: DataFrame,
-    n_merges: int,
-    *,
-    text_col: str = "text",
-    vocab_cap: int = 50_000,
-) -> Merges:
-    """Greedy BPE training (see module docstring for the scale shape).
-    Returns the ordered merge list; freeze it (a constant in code or a
-    tiny artifact) and apply corpus-wide with :func:`bpe_token_counts`.
-    """
-    if n_merges < 1:
-        raise ValueError(f"bpe: n_merges must be >= 1, got {n_merges}")
-    norm = _NORM_SQL.format(col=text_col)
-    wc_rows = (
-        docs.select(
-            F.explode(F.split(F.expr(norm), "#")).alias("w")
-        )
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), F.col("w"))
-        .limit(vocab_cap)
-        .collect()
-    )
-    reps: dict[tuple[str, ...], int] = {}
-    for r in wc_rows:
-        reps[tuple(r["w"])] = reps.get(tuple(r["w"]), 0) + int(r["c"])
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs: Counter[tuple[str, str]] = Counter()
-        for syms, c in reps.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += c
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        new_reps: dict[tuple[str, ...], int] = {}
-        for syms, c in reps.items():
-            m = tuple(_merge_word(syms, *best))
-            new_reps[m] = new_reps.get(m, 0) + c
-        reps = new_reps
-    return tuple(merges)
 
 
 def _chain_replaces(seg_sql: str, merges: Merges) -> str:
@@ -162,9 +116,9 @@ def bpe_token_counts(
     )
 
 
-# Frozen merge list: train_bpe_merges(sf0.01 documents, n_merges=32,
-# vocab_cap=50000) — regenerated and asserted byte-identical by
-# tests/test_bpe.py::test_frozen_merges_reproduce, so the constant can
+# Frozen merge list: word-level BPE training on sf0.01 documents
+# (n_merges=32, vocab_cap=50000) — regenerated and asserted byte-identical
+# by tests/test_bpe.py::test_frozen_merges_reproduce, so the constant can
 # never drift from the trainer. The paired oracle replays these exact
 # merges (queries/analytics11.py:bpe_tokenize_counts).
 FROZEN_MERGES: Merges = (

@@ -32,7 +32,7 @@ GPT-2 BPE's "merges never span words", just with a wider unit. That
 is what keeps BOTH sides scalable:
 
 - **Training** stays the classic bounded-driver shape
-  (bpe.py:train_bpe_merges): ONE distributed chunk-count aggregation
+  of word-level BPE: ONE distributed chunk-count aggregation
   (map-side combine, shuffle ∝ DISTINCT chunks), the top ``vocab_cap``
   chunks collected, then a greedy merge loop over that weighted dict —
   here with a lazy max-heap + inverted pair->unit index so each
@@ -124,17 +124,6 @@ def _frame(stream_sql: str, engine: str) -> str:
     if engine == "spark":
         return f"regexp_replace({stream_sql}, '([a-z0-9#])', ' $1 ')"
     return f"regexp_replace({stream_sql}, '([a-z0-9#])', ' \\1 ', 'g')"
-
-
-def _chain(seg_sql: str, merges: Merges) -> str:
-    for x, y in merges:
-        for tok in (x, y):
-            if not tok or any(ch in tok for ch in " '|"):
-                raise ValueError(
-                    f"bpe_stream: illegal merge symbol {tok!r}"
-                )
-        seg_sql = f"replace({seg_sql}, ' {x}  {y} ', ' {x}{y} ')"
-    return seg_sql
 
 
 # How the 384-merge chain breaks every single-expression form — the
@@ -230,11 +219,6 @@ def chain_cte_duckdb(
         f"{out} AS (SELECT {id_col}, s FROM __bpe_s{k})"
     )
     return ",\n    ".join(ctes)
-
-
-def stream_segment_sql_duckdb(col: str, merges: Merges) -> str:
-    """The identical chain in DuckDB spelling — the oracle generator."""
-    return _chain(_frame(stream_string_sql_duckdb(col), "duck"), merges)
 
 
 # ---------------------------------------------------------------- train

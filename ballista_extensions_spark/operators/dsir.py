@@ -134,12 +134,6 @@ _TOK_HASH_SPARK = (
     f"aggregate(transform(split(t, ''), c -> ascii(c)), 0L, "
     f"(a2, x) -> (a2 * {BASE} + x) % {PRIME})"
 )
-_TOK_HASH_DUCK = (
-    f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    f"list_transform(generate_series(1, length(t)), "
-    f"i -> CAST(ascii(t[i]) AS BIGINT))), "
-    f"(a2, x) -> (a2 * {BASE} + x) % {PRIME})"
-)
 
 
 # bigram-text hash of the previous token carried in the accumulator

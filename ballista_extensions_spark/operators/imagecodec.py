@@ -5,11 +5,9 @@ no external media libraries.
 Both formats are fully specified public standards (Windows BMP file
 structure; Netpbm P5/P6), simple enough to implement exactly in a few
 dozen lines, and byte-deterministic — which is what the engine needs:
-``operators/multimodal.py``'s decode/resize/feature hooks stop being
-stubs the moment this module is installed
-(``set_image_decoder(decode_image)``), and the plumbing can be verified
-against fixtures of real encoded bytes rather than the deterministic
-fake. Formats outside these magics still raise, keeping the error-column
+``multimodal.decode_images(df, decoder=decode_image)`` decodes real
+bytes instead of the deterministic fake, and the plumbing can be
+verified against fixtures of real encoded bytes. Formats outside these magics still raise, keeping the error-column
 path honest.
 
 Layout notes (the parts that bite):
@@ -27,8 +25,8 @@ Layout notes (the parts that bite):
   scanline. The decoder supports the 8-bit non-interlaced color types
   (gray 0, RGB 2, gray+alpha 4, RGBA 6) and all five filters; the
   encoder emits filter-0 scanlines inside a hand-rolled STORED-block
-  zlib stream, so the emitted file size is pure arithmetic
-  (``png_file_size``) — which is what lets a DuckDB oracle predict
+  zlib stream, so the emitted file size is pure arithmetic of the
+  dimensions — which is what lets a DuckDB oracle predict
   decode metadata byte-for-byte, exactly like the BMP path.
 """
 
@@ -72,18 +70,6 @@ def encode_bmp(pixels: np.ndarray) -> bytes:
     return bytes(out)
 
 
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """Encode (h, w, 3) uint8 RGB as binary PPM (P6), or (h, w) as PGM
-    (P5)."""
-    if pixels.ndim == 2:
-        h, w = pixels.shape
-        return b"P5\n%d %d\n255\n" % (w, h) + pixels.tobytes()
-    if pixels.ndim == 3 and pixels.shape[2] == 3:
-        h, w, _ = pixels.shape
-        return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
-    raise ValueError("encode_ppm expects (h, w) or (h, w, 3)")
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # color type -> channels at bit depth 8 (interlace 0 only)
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
@@ -125,16 +111,6 @@ def _png_chunk(typ: bytes, data: bytes) -> bytes:
         + data
         + struct.pack(">I", zlib.crc32(typ + data))
     )
-
-
-def png_file_size(width: int, height: int, channels: int = 3) -> int:
-    """Exact file size of a PNG emitted by ``encode_png`` — pure
-    arithmetic, usable from SQL oracles. raw = height * (1 filter byte
-    + width*channels); file = 8 sig + 25 IHDR + 12 IDAT overhead
-    + (2 zlib hdr + raw + 5/stored-block + 4 adler) + 12 IEND."""
-    raw = height * (1 + width * channels)
-    n_blocks = max(1, (raw + _ZLIB_STORED_MAX - 1) // _ZLIB_STORED_MAX)
-    return 8 + 25 + 12 + (2 + raw + 5 * n_blocks + 4) + 12
 
 
 def encode_png(pixels: np.ndarray, *, filter_type: int | None = 0) -> bytes:
@@ -409,49 +385,6 @@ def decode_to_array(b: bytes) -> np.ndarray:
     raise ValueError("unknown image format")
 
 
-def resize_nearest(b: bytes, target_w: int, target_h: int) -> bytes:
-    """REAL resize: decode, nearest-neighbor sample to (target_h,
-    target_w), re-encode in the input's container format (BMP in -> BMP
-    out, PNG in -> PNG out, netpbm in -> P6 out). Suitable for
-    set_image_resizer."""
-    src = decode_to_array(b)
-    h, w = src.shape[:2]
-    ys = (np.arange(target_h) * h) // target_h
-    xs = (np.arange(target_w) * w) // target_w
-    dst = src[ys][:, xs]
-    if b[:2] == b"BM":
-        return encode_bmp(dst)
-    if b[: len(_PNG_SIG)] == _PNG_SIG:
-        return encode_png(dst)
-    if b[:2] == b"\xff\xd8":
-        from ballista_extensions_spark.operators.jpegcodec import (
-            encode_jpeg,
-        )
-
-        return encode_jpeg(dst, quality=90)
-    return encode_ppm(dst)
-
-
-def grid_features(b: bytes, grid: int = 4) -> list[float]:
-    """REAL feature vector from decoded pixels: mean intensity of each
-    cell of a grid x grid partition, scaled to [0, 1] — a classic tiny
-    image descriptor (grayscale grid pooling), deterministic and
-    pure-numpy. Suitable for set_feature_extractor (dim = grid*grid)."""
-    arr = decode_to_array(b).astype(np.float64)
-    gray = arr.mean(axis=2)
-    h, w = gray.shape
-    out = []
-    for gy in range(grid):
-        y0, y1 = (gy * h) // grid, max((gy + 1) * h // grid, (gy * h) // grid + 1)
-        for gx in range(grid):
-            x0, x1 = (
-                (gx * w) // grid,
-                max((gx + 1) * w // grid, (gx * w) // grid + 1),
-            )
-            out.append(float(gray[y0:y1, x0:x1].mean() / 255.0))
-    return out
-
-
 def _gray_grid(arr: np.ndarray, rows: int, cols: int) -> np.ndarray:
     """Nearest-neighbor sample an (h, w, 3) pixel array to a
     rows × cols integer grayscale grid (gray = (r+g+b)//3) — the ONE
@@ -498,30 +431,3 @@ def dhash64(b: bytes) -> int:
     tests/test_imagedup.py proves. Returned as a SIGNED 64-bit int so
     it lands in a Spark LongType column unchanged."""
     return dhash64_from_array(decode_to_array(b))
-
-
-def ahash64(b: bytes) -> int:
-    """64-bit average hash: nearest-sample to 8×8 grayscale, set bit
-    y*8+x iff the cell is strictly brighter than the integer mean of
-    the 64 samples. Same sampling/arithmetic discipline as
-    :func:`dhash64` (dHash is the near-dup default — aHash is the
-    second opinion a report can cross-check)."""
-    g = _gray_grid(decode_to_array(b), 8, 8)
-    mean = int(g.sum()) // 64
-    bits = 0
-    for y in range(8):
-        for x in range(8):
-            if g[y, x] > mean:
-                bits |= 1 << (y * 8 + x)
-    return bits - (1 << 64) if bits >= (1 << 63) else bits
-
-
-def install() -> None:
-    """Install the real codec into the multimodal hooks — after this,
-    decode_images/resize_images/extract_features run REAL decode on
-    BMP/PPM/PGM payloads (and reject others into the error column)."""
-    from ballista_extensions_spark.operators import multimodal as M
-
-    M.set_image_decoder(decode_image)
-    M.set_image_resizer(resize_nearest)
-    M.set_feature_extractor(grid_features)

@@ -106,31 +106,32 @@ def _validate_banding(threshold: int, bands: int) -> tuple[int, int]:
 def _members(
     df: DataFrame, id_col: str, hash_col: str
 ) -> DataFrame:
-    """(id, h) with NULL hashes (undecodable media) dropped; a lazy
-    localCheckpoint cuts recomputation of the upstream decode+hash —
-    the checkpointed state is 8 B of hash per item, not the payloads
-    (measured 31 s vs 12 s at sf0.1 on the self-join).
+    """(id, h) with NULL hashes (undecodable media) dropped, hash-
+    partitioned on ``h`` and materialized by an EAGER localCheckpoint
+    at call time: the upstream decode+hash runs once, in one job,
+    before any consumer plan exists. The checkpointed state is 8 B of
+    hash per item, not the payloads (measured 31 s vs 12 s at sf0.1
+    on the self-join).
 
-    The hash-repartition below the checkpoint is load-bearing (r17):
-    the consumers are the build sides of several broadcast joins, and
-    AQE submits those build jobs CONCURRENTLY — concurrent jobs racing
-    a lazy localCheckpoint each recompute its lineage (block-cache
-    get-or-compute does not dedup across jobs), so the whole Python
-    decode+hash pass ran once PER BUILD (job-profiled: three equal
-    1.6 s x 32-task jobs on audio_near_dup_energy). A shuffle map
-    stage, by contrast, IS deduplicated across concurrent jobs by the
-    DAGScheduler, so pinning one exchange on ``h`` under the racers
-    runs the decode exactly once — and the exchange carries only the
-    16 B (id, h) proxy, never payloads (guide §8), while
-    HashPartitioning(h) is exactly the clustering the downstream
-    distinct and equi-self-join on ``h`` need (guide §2.4)."""
+    The consumers are the build sides of several broadcast joins, and
+    AQE submits those build jobs CONCURRENTLY. A lazy checkpoint is
+    raced by them: each computes its lineage (r17, job-profiled: three
+    equal 1.6 s x 32-task jobs on audio_near_dup_energy before the
+    exchange below pinned the decode under one shuffle map stage), and
+    the first job to finish drops that lineage while the others' tasks
+    still report its SQL metrics, which a driver GC may already have
+    collected ("Failed to update accumulator"). Materialized here, the
+    racers only read blocks. HashPartitioning(h) is kept: it is the
+    clustering the downstream distinct and equi-self-join on ``h``
+    need (guide §2.4), and the exchange carries only the 16 B (id, h)
+    proxy, never payloads (guide §8)."""
     from ballista_extensions_spark.io import default_parallelism
 
     return (
         df.filter(F.col(hash_col).isNotNull())
         .select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
         .repartition(default_parallelism(df.sparkSession), "h")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
 

@@ -233,13 +233,6 @@ def _fdct_quant(plane_block: np.ndarray, qt: np.ndarray) -> np.ndarray:
     return np.round(F / qt).astype(np.int32)
 
 
-def _plane_blocks(plane: np.ndarray):
-    h, w = plane.shape
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            yield plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-
-
 def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
     """Edge-replicate pad to multiples of (mh, mw)."""
     h, w = plane.shape

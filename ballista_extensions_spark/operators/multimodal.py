@@ -3,11 +3,11 @@ with typed metadata, processed by Arrow-batched pandas iterators.
 
 The Spark-side machinery — schema, partition sizing, mapInPandas batch
 shape, deterministic fakes — is real and tested. Heavyweight media
-codecs (PIL/librosa/ffmpeg) are NOT in this container; the hooks accept
-any (`set_image_decoder()` etc.), and a REAL pure-Python BMP/PPM codec
-ships in ``operators/imagecodec.py`` — its ``install()`` wires decode,
-nearest-neighbor resize, and grid-pooling features, all exercised on
-real encoded bytes by tests and the ``multimodal_decode_real`` query.
+codecs (PIL/librosa/ffmpeg) are NOT in this container; ``decode_images``
+accepts any decoder, and REAL pure-Python codecs ship in
+``operators/imagecodec.py`` (BMP/PPM/PNG), ``jpegcodec.py``,
+``audiocodec.py`` and ``videocodec.py``, exercised on real encoded bytes
+by tests and the ``multimodal_decode_real`` query.
 With no decoder given, ``fake=True`` selects a deterministic fake
 (used by the stub-parity oracle query) and otherwise the ops raise
 NotImplementedError at plan time.
@@ -63,13 +63,6 @@ DECODED_IMAGE_SCHEMA = StructType(
 # Decoder hook: (payload bytes) -> (width, height, channels). Installed by
 # deployments that ship a real codec; None = not available.
 _image_decoder: Callable[[bytes], tuple[int, int, int]] | None = None
-
-
-def set_image_decoder(fn: Callable[[bytes], tuple[int, int, int]]) -> None:
-    """Install a real image decoder, e.g.
-    ``set_image_decoder(lambda b: PIL.Image.open(io.BytesIO(b)).size + (3,))``."""
-    global _image_decoder
-    _image_decoder = fn
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
@@ -669,171 +662,4 @@ def decode_images(
 
     return df.select("media_id", "payload").mapInPandas(
         _decode, schema=DECODED_IMAGE_SCHEMA
-    )
-
-
-def sample_frames(
-    df: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8
-) -> DataFrame:
-    """Frame-sampling plumbing for video payloads: emits up to max_frames
-    (media_id, frame_no, offset) rows per payload. The byte-offset stride
-    stands in for timestamp seeking (STUB: a real build would call an
-    ffmpeg-style keyframe index); the explode/fan-out shape — one input
-    row becoming bounded-many frame rows — is the part that matters for
-    the Spark plan and is real."""
-    return (
-        df.select(
-            "media_id",
-            F.length("payload").cast("long").alias("byte_len"),
-        )
-        .select(
-            "media_id",
-            F.posexplode(
-                F.expr(
-                    f"slice(sequence(0L, byte_len, {every_n_bytes}L), 1, {max_frames})"
-                )
-            ).alias("frame_no", "offset"),
-        )
-    )
-
-
-# Resizer hook: (payload, target_w, target_h) -> resized payload bytes.
-_image_resizer: Callable[[bytes, int, int], bytes] | None = None
-
-# Feature extractor hook: payload -> fixed-dim float vector.
-_feature_extractor: Callable[[bytes], list[float]] | None = None
-
-
-def set_image_resizer(fn: Callable[[bytes, int, int], bytes]) -> None:
-    """Install a real resize codec (e.g. PIL thumbnail -> re-encode)."""
-    global _image_resizer
-    _image_resizer = fn
-
-
-def set_feature_extractor(fn: Callable[[bytes], list[float]]) -> None:
-    """Install a real embedding model (e.g. CLIP image encoder)."""
-    global _feature_extractor
-    _feature_extractor = fn
-
-
-def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Deterministic stand-in: a 16-byte header (dims) + a payload
-    prefix whose length scales with the target area, mimicking the
-    size-reduction a real resize produces. STUB for the absent codec."""
-    area_cap = max(64, (w * h) // 64)
-    return (
-        w.to_bytes(8, "big") + h.to_bytes(8, "big") + payload[:area_cap]
-    )
-
-
-def _fake_features(payload: bytes, dim: int = 16) -> list[float]:
-    """Deterministic fake embedding: chunked byte sums scaled to [0, 1)
-    — stable across runs/engines, shaped like a real encoder output.
-    STUB for the absent model."""
-    out = []
-    n = max(1, len(payload) // dim)
-    for i in range(dim):
-        chunk = payload[i * n : (i + 1) * n]
-        out.append((sum(chunk) % 997) / 997.0)
-    return out
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int = 224,
-    target_h: int = 224,
-    *,
-    fake: bool = False,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize image payloads via mapInPandas (Arrow-batched). Output:
-    (media_id, payload, width, height, byte_len) with the resized bytes.
-
-    Plumbing is real — schema, batching, per-row error isolation; the
-    codec is pluggable (set_image_resizer) and absent in this container:
-    fake=False raises NotImplementedError at plan time.
-
-    Scale: narrow per-row transform; at 100 TB runs as one Python worker
-    per input partition with Arrow transfer, output co-partitioned with
-    the input (no shuffle)."""
-    if resizer is None:
-        resizer = _fake_resize if fake else _image_resizer
-    if resizer is None:
-        raise NotImplementedError(
-            "no image resizer installed; call set_image_resizer(...) "
-            "(operators/imagecodec.py:install ships one) or pass "
-            "fake=True for the deterministic stub"
-        )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {
-                "media_id": [],
-                "payload": [],
-                "width": [],
-                "height": [],
-                "byte_len": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                if payload is None:
-                    out["payload"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["byte_len"].append(None)
-                    continue
-                rb = resizer(bytes(payload), target_w, target_h)
-                out["payload"].append(rb)
-                out["width"].append(target_w)
-                out["height"].append(target_h)
-                out["byte_len"].append(len(rb))
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "payload").mapInPandas(
-        _resize,
-        schema=(
-            "media_id long, payload binary, width int, height int, "
-            "byte_len long"
-        ),
-    )
-
-
-def extract_features(
-    df: DataFrame,
-    dim: int = 16,
-    *,
-    fake: bool = False,
-    extractor: Callable[[bytes], list[float]] | None = None,
-) -> DataFrame:
-    """Embed payloads to fixed-dim float vectors via mapInPandas —
-    the bridge from raw media to the engine's ANN/near-dup operators
-    (output column name/type match the embeddings table, so
-    similarity.brute_force_topk / lsh_topk consume it directly).
-
-    Model is pluggable (set_feature_extractor); fake=False without one
-    raises at plan time. Scale: same narrow Arrow-batched shape as
-    decode_images; model weights load once per worker, not per row."""
-    if extractor is None:
-        extractor = (
-            (lambda b: _fake_features(b, dim)) if fake else _feature_extractor
-        )
-    if extractor is None:
-        raise NotImplementedError(
-            "no feature extractor installed; call "
-            "set_feature_extractor(...) (operators/imagecodec.py:install "
-            "ships one) or pass fake=True"
-        )
-
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                vecs.append(
-                    extractor(bytes(payload)) if payload is not None else None
-                )
-            yield pd.DataFrame({"vec_id": ids, "embedding": vecs})
-
-    return df.select("media_id", "payload").mapInPandas(
-        _embed, schema="vec_id long, embedding array<float>"
     )

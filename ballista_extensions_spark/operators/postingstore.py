@@ -28,7 +28,7 @@ Design for 100 TB:
   (operators/shards.py).
 - **Increments** append postings computed from the new documents
   alone (the stored postings are never scanned — plan-asserted), the
-  same contract as extend_score_store: the pipeline assigns new
+  same append-only contract as the score store: the pipeline assigns new
   doc_ids, so per-(term, doc) tf rows never need merging across
   batches and per-term df is the plain row count.
 

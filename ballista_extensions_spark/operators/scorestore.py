@@ -40,7 +40,6 @@ from ballista_extensions_spark.operators.shards import (
 __all__ = [
     "quality_score_frame",
     "build_score_store",
-    "extend_score_store",
     "curriculum_from_scores",
     "drop_score_store",
 ]
@@ -86,33 +85,6 @@ def build_score_store(
     )
     write_bucketed(scores, table, "doc_id", buckets, sort_by="doc_id")
     return docs.sparkSession.table(table)
-
-
-def extend_score_store(
-    new_docs: DataFrame,
-    table: str,
-    *,
-    buckets: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Ingest a crawl increment: score ONLY the new documents and
-    append to the store table — the stored scores are never scanned
-    (the append plan reads the increment alone; cost ∝ increment,
-    the sigstore ingest contract). Caller contract: increment doc_ids
-    are new (the pipeline assigns monotone ids); the store does not
-    re-check, same as the shard writer's extend."""
-    scores = quality_score_frame(
-        new_docs, text_col=text_col, id_col=id_col
-    )
-    (
-        scores.write.mode("append")
-        .format("parquet")
-        .bucketBy(buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(table)
-    )
-    return new_docs.sparkSession.table(table)
 
 
 def curriculum_from_scores(

@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ballista_extensions_spark.operators.annstore import (
-    AnnIndex,
     Centroids,
     assign_cells,
 )
@@ -185,21 +184,4 @@ def semantic_dedup(
     return semantic_dedup_assigned(
         assigned, tau=tau, id_col=id_col, vec_col=vec_col,
         pair_salt=pair_salt,
-    )
-
-
-def semantic_dedup_index(
-    index: AnnIndex,
-    *,
-    tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup over a persisted ANN store's inverted file: the
-    assignments table already holds (id, vec, cell) partitioned by
-    cell, so the one pairwise equi-join reads cell-pruned files and
-    no re-quantization pass runs at all — dedup the stored corpus
-    without touching the raw embeddings again."""
-    return semantic_dedup_assigned(
-        index.assignments, tau=tau, id_col=id_col, vec_col=vec_col
     )

@@ -89,15 +89,6 @@ def position_weight_sql(rank_expr: str = "rank") -> str:
     return f"((({rank_expr} - 1) % ({SHARD_PRIME} - 1)) + 1)"
 
 
-def polyhash_py(s: str) -> int:
-    """Python mirror of the SQL char fold (seed-constant derivation +
-    tests)."""
-    acc = 0
-    for ch in s:
-        acc = (acc * SHARD_BASE + ord(ch)) % SHARD_PRIME
-    return acc
-
-
 def seed_multiplier(seed: int) -> int:
     """Nonzero ring constant derived from the seed: the shuffle key is
     ``((polyhash(id) + 1) * seed_multiplier(seed)) mod P``. The

@@ -216,33 +216,3 @@ def ingest_against_store(
         F.col("doc_b").alias("doc_new"),
         "jaccard",
     )
-
-
-def compact_into_store(
-    store: SignatureStore,
-    batch_sig: SignatureStore,
-    reject_ids: DataFrame,
-    *,
-    table_prefix: str | None = None,
-    buckets: int = 16,
-) -> SignatureStore:
-    """Merge the increment's ACCEPTED signatures into the store:
-    union bands and sets minus the rejected docs (near-dups of stored
-    content), keep the frozen stop list. With ``table_prefix`` the
-    merged state rewrites the bucketed tables — a per-bucket merge at
-    scale, after which the next increment ingests against the grown
-    store with the identical exchange-free plan shape.
-
-    ``reject_ids`` must expose one column named ``doc``."""
-    keep_bands = batch_sig.bands.join(reject_ids, "doc", "left_anti")
-    keep_sets = batch_sig.sets.join(reject_ids, "doc", "left_anti")
-    merged = SignatureStore(
-        bands=store.bands.unionByName(keep_bands),
-        sets=store.sets.unionByName(keep_sets),
-        stop=store.stop,
-    )
-    if table_prefix is None:
-        return merged
-    return _persist(
-        store.bands.sparkSession, merged, table_prefix, buckets
-    )

@@ -172,68 +172,3 @@ def assert_plan_stable(build_df, times: int = 2) -> None:
     plans = {_norm(optimized_plan(build_df())) for _ in range(times)}
     if len(plans) != 1:
         raise AssertionError("plan text differs across constructions")
-
-
-def execution_metrics(df: DataFrame) -> dict[str, int]:
-    """MEASURED execution metrics for an already-executed DataFrame
-    (run an action first): total shuffle records/bytes written and
-    rows output by scans — read from the executed plan's SQL metric
-    accumulators via the public queryExecution() surface. The runtime
-    complement to the static plan audit: the audit says where shuffles
-    ARE, this says what they actually MOVED ("measure, don't guess").
-    """
-    import re as _re
-
-    jplan = df._jdf.queryExecution().executedPlan()
-    totals = {"shuffle_records_written": 0, "shuffle_bytes_written": 0,
-              "scan_output_rows": 0}
-
-    def walk(node):
-        name = node.nodeName()
-        metrics = node.metrics()
-        it = metrics.iterator()
-        while it.hasNext():
-            kv = it.next()
-            key = kv._1()
-            metric = kv._2()
-            val = metric.value()
-            if "Shuffle" in name or "Exchange" in name:
-                if key == "shuffleRecordsWritten":
-                    totals["shuffle_records_written"] += val
-                elif key == "shuffleBytesWritten":
-                    totals["shuffle_bytes_written"] += val
-            if key == "numOutputRows" and _re.search(
-                r"Scan|FileSourceScan|BatchScan", name
-            ):
-                totals["scan_output_rows"] += val
-        ch = node.children().iterator()
-        while ch.hasNext():
-            walk(ch.next())
-        # adaptive wrappers hide their executed subtree behind accessors:
-        # AdaptiveSparkPlanExec.executedPlan, QueryStageExec.plan,
-        # ShuffleQueryStageExec.shuffle, ReusedExchange/Subquery.child
-        for acc in ("executedPlan", "finalPhysicalPlan", "plan", "shuffle"):
-            try:
-                sub = getattr(node, acc)()
-                if sub is not None:
-                    walk(sub)
-            except Exception:  # noqa: BLE001 — accessor absent on most nodes
-                pass
-
-    seen: set[int] = set()
-    _orig_walk = walk
-
-    def walk(node):  # noqa: F811 — wrap with a revisit guard; py4j hands
-        # out a fresh proxy per accessor call, so dedup by the JVM plan
-        # node id (unique per SparkPlan instance), not Python id()
-        try:
-            key = node.id()
-        except Exception:  # noqa: BLE001
-            key = id(node)
-        if key in seen:
-            return
-        seen.add(key)
-        _orig_walk(node)
-
-    walk(jplan)
-    return totals

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import json
 import urllib.request
-from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -65,18 +64,3 @@ def shuffle_totals(spark: SparkSession) -> tuple[int, int]:
         # (proxy error page, truncation); Type/AttributeError: JSON of
         # an unexpected shape
         return (-1, -1)
-
-
-def measure_shuffle(
-    spark: SparkSession, action: Callable[[], object]
-) -> tuple[int, int]:
-    """Run ``action`` and return the (read, write) shuffle bytes it
-    caused. (-1, -1) when the UI is unavailable."""
-    r0, w0 = shuffle_totals(spark)
-    action()
-    if r0 < 0:
-        return (-1, -1)
-    r1, w1 = shuffle_totals(spark)
-    if r1 < 0:
-        return (-1, -1)
-    return (r1 - r0, w1 - w0)

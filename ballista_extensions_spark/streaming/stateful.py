@@ -19,103 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def running_user_counts(events: DataFrame) -> DataFrame:
-    """Cumulative per-user event counts and value sums, maintained in
-    custom state across micro-batches; emits the updated totals for every
-    user seen in each batch.
-
-    State: (n_events, total_value_micros) — value is stored as integer
-    micro-units so state math is exact across batches.
-    """
-
-    def update(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        n, micros = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            micros += int(round(pdf["value"].sum() * 1_000_000))
-        state.update((n, micros))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [micros / 1_000_000],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, total_value double",
-        stateStructType="n long, micros long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def funnel_stages_stream(events: DataFrame) -> DataFrame:
-    """Incremental conversion-funnel tracking — the streaming twin of the
-    batch ``event_funnel`` query: per-user state holds the earliest
-    view/click/purchase timestamps (integer µs; -1 = not seen) and each
-    micro-batch emits the user's updated funnel stage (0-3, counting
-    stages completed IN ORDER by first occurrence).
-
-    State is three longs per user — bounded, skew-safe (user-keyed), and
-    exactly the aggregation the batch twin computes, so replaying the
-    full history through micro-batches converges to the batch answer
-    (pytest-asserted)."""
-
-    def update(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        v, c, p = state.get if state.exists else (-1, -1, -1)
-        for pdf in pdfs:
-            ts_us = pdf["ts"].astype("int64") // 1000  # ns -> µs
-
-            def first_seen(etype: str, prev: int) -> int:
-                sel = ts_us[pdf["event_type"] == etype]
-                if not len(sel):
-                    return prev
-                m = int(sel.min())
-                return m if prev < 0 else min(prev, m)
-
-            v = first_seen("view", v)
-            c = first_seen("click", c)
-            p = first_seen("purchase", p)
-        state.update((v, c, p))
-        stage = 0
-        if v >= 0:
-            stage = 1
-            if c >= 0 and v < c:
-                stage = 2
-                if p >= 0 and c < p:
-                    stage = 3
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "t_view_us": [v],
-                "t_click_us": [c],
-                "t_buy_us": [p],
-                "stage": [stage],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, t_view_us long, t_click_us long, "
-            "t_buy_us long, stage long"
-        ),
-        stateStructType="v long, c long, p long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_first_occurrence(
     df: DataFrame, key_col: str, id_col: str
 ) -> DataFrame:

@@ -463,12 +463,12 @@ def phash_store_dedup_sink(
             ),
             bands=bands,
         )
-        # the batch's members, materialized once; the probe and the
-        # intra-batch pairs read them as they are, since a second lazy
-        # checkpoint over them would be raced by the write's concurrent
-        # jobs, whose late tasks then report SQL metrics of a plan the
-        # driver has already dropped
-        batch = _members(batch_df, "id", "dhash").localCheckpoint()
+        # the batch's members, materialized once by _members; the probe
+        # and the intra-batch pairs read them as they are, since a
+        # second lazy checkpoint over them would be raced by the
+        # write's concurrent jobs, whose late tasks then report SQL
+        # metrics of a plan the driver has already dropped
+        batch = _members(batch_df, "id", "dhash")
         store_pairs = _probe_members(store, batch, threshold)
         # within-batch duplicates: the earlier id is the survivor and
         # reports as stored_id (stream_first_occurrence's min-id

@@ -1,8 +1,7 @@
 """Persisted ANN index store (operators/annstore.py): cross-run
 persistence round-trip, append-only incremental ingest, the
 partition-pruned probe scan (the inverted-file property), quantizer
-determinism, trained-centroid recall, and the drift-triggered
-re-cluster path."""
+determinism and trained-centroid recall."""
 
 from __future__ import annotations
 
@@ -54,10 +53,10 @@ def test_assign_cells_is_total_and_stable(spark, embeddings):
 
 
 def test_persisted_roundtrip_and_append_only_ingest(spark, embeddings):
-    """build → persist → load_ann_index → incremental append: the
-    reopened index probes identically to the in-memory one, and
-    ingest grows the table by exactly the increment (append, no
-    rewrite)."""
+    """build → persist → incremental append → reopen from the two
+    tables: the reopened index probes identically to the in-memory
+    one, and ingest grows the table by exactly the increment (append,
+    no rewrite)."""
     prefix = "ann_test_store"
     _drop(spark, prefix)
     stored = embeddings.filter(F.col("vec_id") % 4 != 0)
@@ -71,7 +70,12 @@ def test_persisted_roundtrip_and_append_only_ingest(spark, embeddings):
         idx = A.ingest_into_index(idx, batch)
         assert spark.table(f"{prefix}_assign").count() == n0 + batch.count()
 
-        reopened = A.load_ann_index(spark, prefix)
+        rows = spark.table(f"{prefix}_centroids").orderBy("cell").collect()
+        reopened = A.AnnIndex(
+            centroids=tuple(tuple(r["centroid"]) for r in rows),
+            assignments=spark.table(f"{prefix}_assign"),
+            table=f"{prefix}_assign",
+        )
         assert reopened.centroids == cents
 
         mem = A.build_ann_index(stored, cents)
@@ -134,36 +138,6 @@ def test_trained_centroids_recall_floor(spark, embeddings):
     assert recall >= 0.5, f"recall {recall:.2f} below floor"
 
 
-def test_maybe_recluster_trigger_paths(spark, embeddings):
-    """Low drift → plain append under the frozen quantizer; a shifted
-    increment over the threshold → quantizer retrained and index
-    rebuilt over the merged corpus."""
-    stored = embeddings.filter(F.col("vec_id") % 4 != 0)
-    same_dist = embeddings.filter(F.col("vec_id") % 4 == 0)
-    cents = A.lattice_centroids(8, 64)
-    idx = A.build_ann_index(stored, cents)
-
-    idx2, reclustered = A.maybe_recluster(
-        idx, same_dist, drift_threshold=10.0
-    )
-    assert not reclustered
-    assert idx2.centroids == cents
-    assert idx2.assignments.count() == embeddings.count()
-
-    shifted = same_dist.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, x -> CAST(x + 5.0 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    idx3, reclustered = A.maybe_recluster(
-        idx, shifted, drift_threshold=1.0
-    )
-    assert reclustered
-    assert idx3.centroids != cents
-    assert idx3.assignments.count() == stored.count() + shifted.count()
-
-
 def test_probe_matches_bruteforce_when_probing_all_cells(spark, embeddings):
     """With n_probe = n_lists the inverted file is a partitioned
     brute-force: results must equal exact top-k."""
@@ -179,33 +153,3 @@ def test_probe_matches_bruteforce_when_probing_all_cells(spark, embeddings):
         (r["q_id"], r["c_id"], r["rn"], round(r["cosine"], 12))
         for r in want.collect()
     }
-
-
-def test_maybe_recluster_persisted_rebuild(spark, embeddings):
-    """Regression: over-threshold drift on a PERSISTED index rebuilds
-    by overwrite-saving into the same table the merged corpus reads
-    from — the merged frame must be materialized first or Spark
-    rejects the self-overwrite ("cannot overwrite a table that is
-    also being read from")."""
-    prefix = "ann_test_reclust"
-    _drop(spark, prefix)
-    stored = embeddings.filter(F.col("vec_id") % 4 != 0)
-    shifted = embeddings.filter(F.col("vec_id") % 4 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, x -> CAST(x + 5.0 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    cents = A.lattice_centroids(8, 64)
-    try:
-        idx = A.build_ann_index(stored, cents, table_prefix=prefix)
-        idx2, reclustered = A.maybe_recluster(
-            idx, shifted, drift_threshold=1.0
-        )
-        assert reclustered
-        assert idx2.table == f"{prefix}_assign"
-        n_want = stored.count() + shifted.count()
-        assert spark.table(f"{prefix}_assign").count() == n_want
-        assert idx2.assignments.count() == n_want
-    finally:
-        _drop(spark, prefix)

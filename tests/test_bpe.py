@@ -1,5 +1,5 @@
-"""Apply-side BPE (operators/bpe.py): trainer determinism + frozen
-constant reproduction, cross-engine scan-left replace parity on
+"""Apply-side BPE (operators/bpe.py): the word-level trainer kept here,
+its determinism + frozen constant reproduction, cross-engine scan-left replace parity on
 adversarial overlap strings, and the token-count contract."""
 
 from __future__ import annotations
@@ -9,6 +9,48 @@ import pytest
 from pyspark.sql import functions as F
 
 from ballista_extensions_spark.operators import bpe as B
+
+
+def train_bpe_merges(
+    docs, n_merges: int, *, text_col: str = "text", vocab_cap: int = 50_000
+) -> B.Merges:
+    """Greedy word-level BPE training, the trainer ``B.FROZEN_MERGES``
+    was frozen from: one distributed word-count aggregation, the top
+    ``vocab_cap`` words by (count desc, word) collected, then a greedy
+    loop whose pair-count ties break to the smallest pair."""
+    from collections import Counter
+
+    if n_merges < 1:
+        raise ValueError(f"bpe: n_merges must be >= 1, got {n_merges}")
+    norm = B._NORM_SQL.format(col=text_col)
+    wc_rows = (
+        docs.select(F.explode(F.split(F.expr(norm), "#")).alias("w"))
+        .filter(F.length("w") > 0)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.col("c").desc(), F.col("w"))
+        .limit(vocab_cap)
+        .collect()
+    )
+    reps: dict[tuple[str, ...], int] = {}
+    for r in wc_rows:
+        reps[tuple(r["w"])] = reps.get(tuple(r["w"]), 0) + int(r["c"])
+    merges: list[tuple[str, str]] = []
+    for _ in range(n_merges):
+        pairs: Counter[tuple[str, str]] = Counter()
+        for syms, c in reps.items():
+            for i in range(len(syms) - 1):
+                pairs[(syms[i], syms[i + 1])] += c
+        if not pairs:
+            break
+        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+        merges.append(best)
+        new_reps: dict[tuple[str, ...], int] = {}
+        for syms, c in reps.items():
+            m = tuple(B._merge_word(syms, *best))
+            new_reps[m] = new_reps.get(m, 0) + c
+        reps = new_reps
+    return tuple(merges)
 
 
 def _py_apply(text: str, merges) -> list[str]:
@@ -79,7 +121,7 @@ def test_frozen_merges_reproduce(spark):
     from ballista_extensions_spark.io import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    assert B.train_bpe_merges(docs, 32) == B.FROZEN_MERGES
+    assert train_bpe_merges(docs, 32) == B.FROZEN_MERGES
 
 
 def test_trainer_determinism_and_validation(spark):
@@ -87,14 +129,14 @@ def test_trainer_determinism_and_validation(spark):
         [(i, "the cat sat on the mat") for i in range(5)],
         "doc_id long, text string",
     )
-    m1 = B.train_bpe_merges(df, 6)
-    m2 = B.train_bpe_merges(df, 6)
+    m1 = train_bpe_merges(df, 6)
+    m2 = train_bpe_merges(df, 6)
     assert m1 == m2 and len(m1) == 6
     # (a,t) leads at 15 (cat/sat/mat); then (t,h)/(h,e) tie at 10 and
     # the lexicographically smaller (h,e) must win
     assert m1[0] == ("a", "t") and m1[1] == ("h", "e")
     with pytest.raises(ValueError, match="n_merges"):
-        B.train_bpe_merges(df, 0)
+        train_bpe_merges(df, 0)
     with pytest.raises(ValueError, match="illegal"):
         B.bpe_segment_sql("text", (("a", "b c"),))
 
@@ -103,5 +145,5 @@ def test_merge_exhaustion_stops_early(spark):
     """A corpus with fewer distinct adjacent pairs than n_merges must
     return only the realizable merges, not pad or loop."""
     df = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
-    m = B.train_bpe_merges(df, 50)
+    m = train_bpe_merges(df, 50)
     assert m == (("a", "b"),)

@@ -19,6 +19,14 @@ from ballista_extensions_spark.operators import bpe_stream as BS
 from ballista_extensions_spark.operators.bpe import _merge_word
 
 
+def _chain(seg_sql: str, merges) -> str:
+    """The single-expression form the staged chain replaced: one
+    nested ``replace`` per merge around the framed stream."""
+    for x, y in merges:
+        seg_sql = f"replace({seg_sql}, ' {x}  {y} ', ' {x}{y} ')"
+    return seg_sql
+
+
 def _naive_train(chunks_weighted, n_merges):
     """Reference trainer: full pair recount every iteration — the
     bpe.py loop lifted to chunks. The heap trainer must match it."""
@@ -129,7 +137,7 @@ def test_word_internal_bpe_saturates_below_stream_vocab(spark):
     if not os.path.exists("/root/testdata/sf0.01/documents.parquet"):
         pytest.skip("sf0.01 testdata absent")
     from ballista_extensions_spark.io import load_table
-    from ballista_extensions_spark.operators.bpe import train_bpe_merges
+    from test_bpe import train_bpe_merges
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
     word_internal = train_bpe_merges(docs, 384)
@@ -254,7 +262,7 @@ def test_single_expression_chain_depth_failures(spark):
     same text — so they are observed, not asserted (round-13 flake:
     `pytest.raises` failed mid-suite because the expression
     succeeded)."""
-    seg = BS._chain(
+    seg = _chain(
         BS._frame(BS.stream_string_sql("text"), "spark"),
         BS.FROZEN_STREAM_MERGES,
     )
@@ -268,7 +276,7 @@ def test_single_expression_chain_depth_failures(spark):
     # keep the outcome visible in the test log so the claim stays
     # checkable without flaking the suite
     print(f"spark 384-deep single-expression chain: {spark_outcome}")
-    segd = BS._chain(
+    segd = _chain(
         BS._frame(BS.stream_string_sql_duckdb("'a b'"), "duck"),
         BS.FROZEN_STREAM_MERGES,
     )

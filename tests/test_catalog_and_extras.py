@@ -1,5 +1,5 @@
-"""Tests: catalog statistics, delta gating, stratified sampling, HLL
-sketch bounds, fluent DataFrame extension installation."""
+"""Tests: delta reads, stratified sampling, HLL sketch bounds, and the
+public ``sample`` surface: the fluent DataFrame extension."""
 
 from __future__ import annotations
 
@@ -8,36 +8,16 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from ballista_extensions_spark.catalog import (
-    analyze_table,
-    column_stats,
-    register_as_table,
-    table_stats,
-)
 from ballista_extensions_spark.errors import PlanError
 from ballista_extensions_spark.io import load_table
-from ballista_extensions_spark.operators.sample import (
+from ballista_extensions_spark.operators import (
     install_dataframe_extensions,
-    sample_by,
+    sample,
+    sample_op,
 )
-from ballista_extensions_spark.sources.delta import delta_supported, read_delta
-
-
-def test_table_statistics_cycle(spark, sf_dir):
-    """Tier-C statistics surface: ANALYZE gathers row/byte counts and
-    per-column min/max (proto :552-574 equivalents)."""
-    c = load_table(spark, sf_dir, "customer")
-    register_as_table(c, "bx_stats_customer")
-    try:
-        analyze_table(spark, "bx_stats_customer", ["c_custkey", "c_acctbal"])
-        stats = table_stats(spark, "bx_stats_customer")
-        assert stats["row_count"] == c.count()
-        assert stats["size_bytes"] > 0
-        cs = column_stats(spark, "bx_stats_customer", "c_custkey")
-        assert int(cs["distinct_count"]) > 0
-        assert cs["min"] is not None and cs["max"] is not None
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bx_stats_customer")
+from ballista_extensions_spark.operators.sample import sample_by
+from ballista_extensions_spark.sources import read_delta
+from ballista_extensions_spark.sources.delta import delta_supported
 
 
 def _write_delta_commit(log_dir, version, actions):
@@ -338,7 +318,9 @@ def test_sketch_error_bound(spark, sf_dir):
 
 def test_fluent_extension_injection(spark, sf_dir):
     """The reference's DataFrameExt trait pattern as monkey-patched
-    methods (SURVEY.md §2 Tier D)."""
+    methods (SURVEY.md §2 Tier D), imported from the package's public
+    ``operators`` surface: ``df.bx_sample`` and ``df.transform(sample_op)``
+    keep exactly the rows ``sample`` keeps and share its validation."""
     install_dataframe_extensions()
     l = load_table(spark, sf_dir, "lineitem")
     assert l.bx_sample(1.0).count() == l.count()
@@ -346,6 +328,12 @@ def test_fluent_extension_injection(spark, sf_dir):
         l.bx_sample(1.5)
     got = l.bx_sample(0.3, 5).count()
     assert got == l.bx_sample(0.3, 5).count()
+    want = sorted(sample(l, 0.5, 7).collect())
+    assert sorted(l.bx_sample(0.5, 7).collect()) == want
+    assert sorted(l.transform(sample_op(0.5, 7)).collect()) == want
+    assert 0 < len(want) < l.count()
+    with pytest.raises(PlanError, match="greater than 1"):
+        l.bx_sample(fraction=1.5)
 
 
 def test_table_cache_invalidation(spark, sf_dir):

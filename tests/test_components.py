@@ -1,13 +1,10 @@
-"""Connected-components dedup and compaction-writer tests."""
+"""Connected-components dedup tests."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from ballista_extensions_spark.io import load_table, write_compacted
 from ballista_extensions_spark.operators.components import (
     connected_components,
     dedup_by_components,
@@ -53,17 +50,6 @@ def test_dedup_by_components_representatives(spark):
     assert rows[0].is_representative and not rows[3].is_representative
     reps = [r for r in rows.values() if r.is_representative]
     assert sorted(r.doc_id for r in reps) == [0, 1, 2]
-
-
-def test_write_compacted_file_count(spark, sf_dir, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("compact") / "out")
-    o = load_table(spark, sf_dir, "orders")
-    n_files = write_compacted(o, path, target_rows_per_file=500)
-    expect = (o.count() + 499) // 500
-    assert n_files == expect
-    written = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(written) == expect
-    assert spark.read.parquet(path).count() == o.count()
 
 
 def test_pagerank_integer_mass_and_determinism(spark):

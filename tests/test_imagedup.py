@@ -1,5 +1,5 @@
 """Perceptual-hash image near-dup (operators/imagedup.py +
-imagecodec.dhash64/ahash64): hash properties (container independence,
+imagecodec.dhash64): hash properties (container independence,
 exact invariance under integer nearest upscaling), the pigeonhole
 recall guarantee of the banded Hamming join, and the undecodable-row
 contract."""
@@ -15,6 +15,7 @@ from ballista_extensions_spark.operators.imagedup import (
     image_dhash,
     phash_near_dup_pairs,
 )
+from test_multimodal import encode_ppm
 
 
 def _img(seed: int, h: int = 13, w: int = 17) -> np.ndarray:
@@ -28,7 +29,7 @@ def test_dhash_container_independent():
     px = _img(7)
     hs = {
         C.dhash64(C.encode_bmp(px)),
-        C.dhash64(C.encode_ppm(px)),
+        C.dhash64(encode_ppm(px)),
         C.dhash64(C.encode_png(px)),
         C.dhash64(C.encode_png(px, filter_type=4)),
         C.dhash64(C.encode_png(px, filter_type=None)),
@@ -52,13 +53,6 @@ def test_dhash_differs_across_images_and_is_signed_long():
     assert a != b
     for v in (a, b):
         assert -(1 << 63) <= v < (1 << 63)
-
-
-def test_ahash_flat_image_is_zero_and_deterministic():
-    flat = np.full((8, 8, 3), 77, dtype=np.uint8)
-    assert C.ahash64(C.encode_png(flat)) == 0
-    px = _img(3)
-    assert C.ahash64(C.encode_png(px)) == C.ahash64(C.encode_png(px))
 
 
 def test_banded_pairs_equal_bruteforce(spark):
@@ -252,18 +246,15 @@ def test_fused_docs_png_dhash_matches_chain(spark, documents):
 
 
 def test_decode_pass_runs_once_across_concurrent_builds(spark):
-    """The r17 _members hash-repartition pins the expensive decode+hash
-    pass under ONE shuffle map stage. Without it, the pair query's
-    broadcast-build jobs race the lazy localCheckpoint concurrently and
-    each recomputes the full Python pass (job-profiled at sf0.1: three
-    equal 1.6 s x 32-task jobs on audio_near_dup_energy — a lazy
-    checkpoint's block-cache get-or-compute does NOT dedup across
-    concurrent jobs, while the DAGScheduler runs a shuffle map stage
-    exactly once). Two pins: (a) the exchange is structurally present
-    in the members lineage — that shuffle dependency is what makes the
-    dedup guarantee hold at any scale/timing; (b) an
-    accumulator-counting hasher shows exactly one hash per payload for
-    the full pair query (no over-decode at this scale either)."""
+    """_members materializes the expensive decode+hash pass at call
+    time, so the pair query's concurrent broadcast-build jobs only read
+    checkpointed blocks (a lazy checkpoint's block-cache get-or-compute
+    does NOT dedup across concurrent jobs: job-profiled at sf0.1, three
+    equal 1.6 s x 32-task jobs on audio_near_dup_energy). An
+    accumulator-counting hasher shows (a) exactly one hash per payload
+    for the full pair query and (b) that _members alone hashes every
+    payload once before any action runs, and its result's actions hash
+    none again."""
     from ballista_extensions_spark.operators.imagedup import _members
 
     calls = spark.sparkContext.accumulator(0)
@@ -281,9 +272,9 @@ def test_decode_pass_runs_once_across_concurrent_builds(spark):
     pairs = phash_near_dup_pairs(hashes, threshold=6, bands=8)
     pairs.write.format("noop").mode("overwrite").save()
     assert calls.value == len(rows)
-    # (b) the load-bearing exchange sits under the checkpoint: the
-    # members RDD lineage must contain a shuffle (ShuffledRowRDD).
-    # Probed LAST — under AQE, Dataset.rdd materializes query stages,
-    # so this probe runs its own decode pass and would pollute (a).
-    lineage = _members(hashes, "id", "dhash").rdd.toDebugString()
-    assert b"ShuffledRowRDD" in lineage
+    # (b) the decode runs inside the _members call, and only there
+    members = _members(hashes, "id", "dhash")
+    assert calls.value == 2 * len(rows)
+    assert members.count() == len(rows)
+    members.join(members, "h").write.format("noop").mode("overwrite").save()
+    assert calls.value == 2 * len(rows)

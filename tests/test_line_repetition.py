@@ -1,12 +1,74 @@
 """Line/paragraph duplicate fractions (operators/text.py
-line_repetition_stats) — the structural Gopher §A.1.1 signals."""
+line_repetition_stats) — the structural Gopher §A.1.1 signals — and
+their DuckDB twin, kept here as the reference the Spark form matches."""
 
 from __future__ import annotations
 
 from ballista_extensions_spark.operators.text import (
-    line_repetition_sql_duckdb,
+    LINE_SEP_REGEX,
+    PARA_SEP_REGEX,
+    UNIT_TRIM_REGEX,
     line_repetition_stats,
 )
+
+
+def line_repetition_sql_duckdb(
+    text_col: str = "text", id_col: str = "doc_id"
+) -> str:
+    """DuckDB twin of ``line_repetition_stats`` — the SAME plain
+    regex constants (RE2 reads the explicit classes identically to
+    Java), same trim/drop/fold order, same double expression trees,
+    for the r17 oracle. DuckDB string literals do not process
+    backslash escapes, so the plain spellings are used verbatim;
+    DuckDB's regexp_replace needs the explicit 'g' flag to match
+    Spark's replace-all default."""
+    chars = "list_sum(list_transform({a}, x -> length(x)))"
+
+    def frac(whole: str, dedup: str) -> str:
+        return (
+            f"1.0 - CAST(len({dedup}) AS DOUBLE)"
+            f" / CAST(len({whole}) AS DOUBLE)"
+        )
+
+    def char_frac(whole: str, dedup: str) -> str:
+        return (
+            f"1.0 - (CAST({chars.format(a=dedup)} AS DOUBLE)"
+            f" / CAST({chars.format(a=whole)} AS DOUBLE))"
+        )
+
+    units = (
+        "list_filter(list_transform("
+        "regexp_split_to_array({col}, '{sep}'),"
+        " x -> regexp_replace(x, '{trim}', '', 'g')),"
+        " x -> length(x) > 0)"
+    )
+    ls_units = units.format(
+        col=text_col, sep=LINE_SEP_REGEX, trim=UNIT_TRIM_REGEX
+    )
+    ps_units = units.format(
+        col=text_col, sep=PARA_SEP_REGEX, trim=UNIT_TRIM_REGEX
+    )
+    return f"""
+WITH raw AS (
+  SELECT {id_col} AS doc_id,
+         {ls_units} AS ls,
+         {ps_units} AS ps
+  FROM documents
+  WHERE {text_col} IS NOT NULL
+), arr AS (
+  SELECT doc_id, ls, ps,
+         list_distinct(ls) AS ld, list_distinct(ps) AS pd
+  FROM raw WHERE len(ls) > 0
+)
+SELECT doc_id,
+       CAST(len(ls) AS BIGINT) AS n_lines,
+       CAST(len(ps) AS BIGINT) AS n_paragraphs,
+       {frac('ls', 'ld')} AS dup_line_frac,
+       {char_frac('ls', 'ld')} AS dup_line_char_frac,
+       {frac('ps', 'pd')} AS dup_para_frac,
+       {char_frac('ps', 'pd')} AS dup_para_char_frac
+FROM arr
+"""
 
 
 def _one(spark, text):

@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: schema, mapInPandas batch shape, stub
-gating, deterministic fakes, frame-sampling fan-out."""
+gating, deterministic fakes, and the real codecs on encoded bytes."""
 
 from __future__ import annotations
 
@@ -7,6 +7,26 @@ import pytest
 from pyspark.sql import functions as F
 
 from ballista_extensions_spark.operators import multimodal as M
+from ballista_extensions_spark.operators.imagecodec import _ZLIB_STORED_MAX
+
+
+def encode_ppm(pixels) -> bytes:
+    """Fixture encoder: (h, w, 3) uint8 RGB as binary PPM (P6), or
+    (h, w) as PGM (P5)."""
+    h, w = pixels.shape[:2]
+    magic = b"P5" if pixels.ndim == 2 else b"P6"
+    return magic + b"\n%d %d\n255\n" % (w, h) + pixels.tobytes()
+
+
+def png_file_size(width: int, height: int, channels: int = 3) -> int:
+    """Exact size of a filter-0 file from ``imagecodec.encode_png``, the
+    arithmetic the multimodal_decode_png oracle predicts in SQL:
+    raw = height * (1 filter byte + width*channels); file = 8 sig
+    + 25 IHDR + 12 IDAT overhead + (2 zlib hdr + raw + 5 per stored
+    block + 4 adler) + 12 IEND."""
+    raw = height * (1 + width * channels)
+    n_blocks = max(1, (raw + _ZLIB_STORED_MAX - 1) // _ZLIB_STORED_MAX)
+    return 8 + 25 + 12 + (2 + raw + 5 * n_blocks + 4) + 12
 
 
 @pytest.fixture(scope="module")
@@ -47,86 +67,29 @@ def test_decode_handles_null_payload(spark):
 
 
 def test_decode_error_column_not_task_failure(spark):
-    M.set_image_decoder(lambda b: (_ for _ in ()).throw(ValueError("boom")))
-    try:
-        df = spark.createDataFrame(
-            [(1, "image", b"xx", None, None)], schema=M.MEDIA_SCHEMA
-        )
-        row = M.decode_images(df).collect()[0]
-        assert "boom" in row.decode_error
-    finally:
-        M._image_decoder = None  # restore stub state
+    df = spark.createDataFrame(
+        [(1, "image", b"xx", None, None)], schema=M.MEDIA_SCHEMA
+    )
+    row = M.decode_images(
+        df, decoder=lambda b: (_ for _ in ()).throw(ValueError("boom"))
+    ).collect()[0]
+    assert "boom" in row.decode_error
 
 
 def test_installed_decoder_used(spark):
-    M.set_image_decoder(lambda b: (len(b), len(b) * 2, 1))
+    """The module-level decoder serves calls without ``decoder=``;
+    ``fake=True`` still means the fake (oracle queries depend on it)."""
+    M._image_decoder = lambda b: (len(b), len(b) * 2, 1)
     try:
         df = spark.createDataFrame(
             [(7, "image", b"abcd", None, None)], schema=M.MEDIA_SCHEMA
         )
         row = M.decode_images(df).collect()[0]
         assert (row.width, row.height, row.channels) == (4, 8, 1)
+        fake = M.decode_images(df, fake=True).collect()[0]
+        assert (fake.width, fake.height, fake.channels) == M._fake_decode(b"abcd")
     finally:
         M._image_decoder = None
-
-
-def test_frame_sampling_bounded(media):
-    frames = M.sample_frames(media, every_n_bytes=64, max_frames=5)
-    per_media = (
-        frames.groupBy("media_id").count().select(F.max("count")).collect()[0][0]
-    )
-    assert per_media <= 5
-    row = frames.filter(F.col("frame_no") == 1).first()
-    assert row.offset == 64
-
-
-def test_resize_images_plumbing(spark, sf_dir):
-    from ballista_extensions_spark.io import load_table
-    from ballista_extensions_spark.operators.multimodal import (
-        docs_as_media,
-        resize_images,
-    )
-
-    media = docs_as_media(load_table(spark, sf_dir, "documents"))
-    out = resize_images(media, 64, 48, fake=True)
-    rows = out.collect()
-    assert len(rows) == media.count()
-    for r in rows[:20]:
-        assert (r.width, r.height) == (64, 48)
-        assert r.byte_len == len(r.payload)
-        # fake header encodes the dims — deterministic contract
-        assert int.from_bytes(bytes(r.payload[:8]), "big") == 64
-    # gate: without a real resizer, fake=False fails at plan time
-    import pytest as _pt
-
-    with _pt.raises(NotImplementedError):
-        resize_images(media, 64, 48)
-
-
-def test_extract_features_feeds_ann(spark, sf_dir):
-    """Fake-embedded media flows straight into the exact ANN operator
-    (schema-compatible with the embeddings table)."""
-    from pyspark.sql import functions as F
-    from ballista_extensions_spark.io import load_table
-    from ballista_extensions_spark.operators.multimodal import (
-        docs_as_media,
-        extract_features,
-    )
-    from ballista_extensions_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    media = docs_as_media(load_table(spark, sf_dir, "documents"))
-    emb = extract_features(media, dim=16, fake=True)
-    a = {r.vec_id: r.embedding for r in emb.collect()}
-    b = {r.vec_id: r.embedding for r in extract_features(media, dim=16, fake=True).collect()}
-    assert a == b  # deterministic
-    assert all(len(v) == 16 for v in a.values())
-    topk = brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 3), k=5
-    )
-    got = topk.groupBy("q_id").count().collect()
-    assert all(r["count"] == 5 for r in got)
 
 
 # ---- real codec (operators/imagecodec.py) on real encoded bytes ----
@@ -167,7 +130,7 @@ def test_imagecodec_roundtrip_and_errors():
 
     rng = np.random.default_rng(42)
     px = rng.integers(0, 256, size=(13, 7, 3), dtype=np.uint8)
-    for enc in (C.encode_bmp, C.encode_ppm):
+    for enc in (C.encode_bmp, encode_ppm):
         b = enc(px)
         assert C.decode_image(b) == (7, 13, 3)
         assert (C.decode_to_array(b) == px).all()
@@ -175,38 +138,6 @@ def test_imagecodec_roundtrip_and_errors():
     for bad in (b"JFIF....", b"BM\x00", b"P6\n4 4\n255\n" + b"\x00" * 3):
         with _pt.raises(ValueError):
             C.decode_image(bad)
-
-
-def test_imagecodec_real_resize_and_features():
-    """resize_nearest and grid_features operate on DECODED PIXELS:
-    resizing a 2x-upscaled image back down reproduces the original
-    exactly (nearest-neighbor on exact multiples), and grid features
-    equal the per-quadrant means computed independently."""
-    import numpy as np
-
-    from ballista_extensions_spark.operators import imagecodec as C
-
-    rng = np.random.default_rng(7)
-    px = rng.integers(0, 256, size=(8, 6, 3), dtype=np.uint8)
-    up = C.resize_nearest(C.encode_bmp(px), 12, 16)
-    assert C.decode_image(up) == (12, 16, 3)
-    back = C.decode_to_array(C.resize_nearest(up, 6, 8))
-    assert (back == px).all()
-    feats = C.grid_features(C.encode_ppm(px), grid=2)
-    gray = px.astype(np.float64).mean(axis=2)
-    expect = [
-        gray[0:4, 0:3].mean() / 255.0,
-        gray[0:4, 3:6].mean() / 255.0,
-        gray[4:8, 0:3].mean() / 255.0,
-        gray[4:8, 3:6].mean() / 255.0,
-    ]
-    assert feats == _pytest_approx(expect)
-
-
-def _pytest_approx(x):
-    import pytest as _pt
-
-    return _pt.approx(x, rel=1e-12)
 
 
 def test_real_decode_through_spark(spark, documents):
@@ -235,41 +166,6 @@ def test_real_decode_through_spark(spark, documents):
     )
     row = M.decode_images(bad, decoder=C.decode_image).collect()[0]
     assert row.decode_error is not None and row.width is None
-
-
-def test_install_wires_all_hooks(spark):
-    """imagecodec.install() upgrades all three multimodal hooks to the
-    real codec; resize + features then run real pixel math through the
-    Spark ops."""
-    from ballista_extensions_spark.operators import imagecodec as C
-
-    C.install()
-    try:
-        import numpy as np
-
-        px = np.full((10, 10, 3), 128, dtype=np.uint8)
-        df = spark.createDataFrame(
-            [(1, "image", C.encode_bmp(px), "image/bmp", None)],
-            schema=M.MEDIA_SCHEMA,
-        )
-        r = M.decode_images(df).collect()[0]
-        assert (r.width, r.height, r.channels) == (10, 10, 3)
-        rz = M.resize_images(df, 5, 5).collect()[0]
-        assert (rz.width, rz.height) == (5, 5)
-        assert C.decode_image(bytes(rz.payload)) == (5, 5, 3)
-        emb = M.extract_features(df).collect()[0]
-        # array<float> column: float32 rounding, not exact float64
-        import pytest as _pt
-
-        assert emb.embedding == _pt.approx([128.0 / 255.0] * 16, rel=1e-6)
-        # fake=True still means the FAKE even with a real codec installed
-        # (oracle queries depend on it)
-        fk = M.decode_images(df, fake=True).collect()[0]
-        assert fk.width == 16 + C.bmp_file_size(10, 10) * 2654435761 % 1024
-    finally:
-        M._image_decoder = None
-        M._image_resizer = None
-        M._feature_extractor = None
 
 
 def test_png_golden_fixture():
@@ -346,13 +242,13 @@ def test_png_all_filters_roundtrip_and_size():
             b = C.encode_png(px, filter_type=ft)
             assert (C.decode_png_to_array(b) == want).all(), (shape, ft)
         ch = 1 if px.ndim == 2 else shape[2]
-        assert len(C.encode_png(px)) == C.png_file_size(
+        assert len(C.encode_png(px)) == png_file_size(
             shape[1], shape[0], ch
         )
     # multi-block stored stream (raw > 65535 bytes)
     big = rng.integers(0, 256, size=(160, 160, 3), dtype=np.uint8)
     bb = C.encode_png(big)
-    assert len(bb) == C.png_file_size(160, 160, 3)
+    assert len(bb) == png_file_size(160, 160, 3)
     assert (C.decode_png_to_array(bb) == big).all()
 
 
@@ -422,37 +318,8 @@ def test_png_decode_through_spark(spark, documents):
         w, h = 4 + n % 29, 4 + n % 23
         r = got[doc.doc_id]
         assert (r.width, r.height, r.channels) == (w, h, 3)
-        assert r.byte_len == C.png_file_size(w, h, 3)
+        assert r.byte_len == png_file_size(w, h, 3)
         assert r.decode_error is None
-
-
-def test_png_resize_and_features_through_hooks(spark):
-    """install() handles PNG payloads end-to-end: resize keeps the PNG
-    container and real pixel content; grid features see the decoded
-    pixels (solid color -> constant vector)."""
-    import numpy as np
-    import pytest as _pt
-
-    from ballista_extensions_spark.operators import imagecodec as C
-
-    C.install()
-    try:
-        px = np.full((12, 8, 3), 64, dtype=np.uint8)
-        df = spark.createDataFrame(
-            [(1, "image", C.encode_png(px), "image/png", None)],
-            schema=M.MEDIA_SCHEMA,
-        )
-        r = M.decode_images(df).collect()[0]
-        assert (r.width, r.height, r.channels) == (8, 12, 3)
-        rz = M.resize_images(df, 4, 6).collect()[0]
-        assert bytes(rz.payload)[:8] == b"\x89PNG\r\n\x1a\n"
-        assert C.decode_image(bytes(rz.payload)) == (4, 6, 3)
-        emb = M.extract_features(df).collect()[0]
-        assert emb.embedding == _pt.approx([64.0 / 255.0] * 16, rel=1e-6)
-    finally:
-        M._image_decoder = None
-        M._image_resizer = None
-        M._feature_extractor = None
 
 
 def test_detect_media_kind_jvm_side(spark):
@@ -465,7 +332,6 @@ def test_detect_media_kind_jvm_side(spark):
     from ballista_extensions_spark.operators.imagecodec import (
         encode_bmp,
         encode_png,
-        encode_ppm,
     )
     from ballista_extensions_spark.operators.jpegcodec import encode_jpeg
     from ballista_extensions_spark.operators.multimodal import (

@@ -606,6 +606,7 @@ def test_png_roundtrip_property(arrs, channels, filter_type):
     import numpy as np
 
     from ballista_extensions_spark.operators import imagecodec as C
+    from test_multimodal import png_file_size
 
     h = len(arrs)
     w = len(arrs[0])
@@ -618,7 +619,7 @@ def test_png_roundtrip_property(arrs, channels, filter_type):
     b = C.encode_png(px, filter_type=filter_type)
     assert (C.decode_png_to_array(b) == px).all()
     if filter_type == 0:
-        assert len(b) == C.png_file_size(w, h, channels)
+        assert len(b) == png_file_size(w, h, channels)
     gw, gh, gc = C.decode_image(b)
     assert (gw, gh, gc) == (w, h, channels)
 
@@ -852,10 +853,17 @@ def test_polyhash_twin_matches_duckdb_and_python(spark, texts):
     import duckdb
 
     from ballista_extensions_spark.operators.shards import (
-        polyhash_py,
+        SHARD_BASE,
+        SHARD_PRIME,
         polyhash_sql_duckdb,
         polyhash_sql_spark,
     )
+
+    def polyhash_py(s: str) -> int:
+        acc = 0
+        for ch in s:
+            acc = (acc * SHARD_BASE + ord(ch)) % SHARD_PRIME
+        return acc
 
     df = spark.createDataFrame(
         list(enumerate(texts)), "i long, t string"

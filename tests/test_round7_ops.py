@@ -145,61 +145,6 @@ def test_grouped_percentile_disc_single_row_group(spark):
 
 # ------------------------------------------- parquet write-side bloom
 
-def test_parquet_bloom_footer_and_pruning(spark, tmp_path_factory):
-    """VERDICT r6 directive #6: write-side parquet bloom filters
-    (ParquetOptions bloom_filter_on_write twin). Footer must carry a
-    bloom filter for the enabled column only, present keys must always
-    survive the row-group probe (no false negatives), and a sweep of
-    absent keys must show real pruning (most row groups dropped)."""
-    from pyspark.sql import functions as F
-
-    from ballista_extensions_spark.sources.parquet_bloom import (
-        bloom_filter_offsets,
-        row_groups_surviving,
-        write_parquet_bloom,
-    )
-
-    path = str(tmp_path_factory.mktemp("pb") / "t")
-    # high-cardinality key whose row groups all span the full range:
-    # min/max stats can NEVER prune this layout; bloom filters can.
-    df = (
-        spark.range(40_000)
-        .select(
-            (F.xxhash64("id") % 1_000_000).alias("k"),
-            F.col("id").alias("payload"),
-        )
-        .repartition(4)
-    )
-    write_parquet_bloom(df, path, {"k": 20_000})
-
-    from pathlib import Path
-
-    first = sorted(str(p) for p in Path(path).glob("*.parquet"))[0]
-    offs = bloom_filter_offsets(spark, first)
-    assert all(o is not None for o in offs["k"]), offs
-    assert all(o is None for o in offs["payload"]), offs
-
-    # no false negatives: every present key survives in >= 1 row group
-    present = [r["k"] for r in df.select("k").distinct().limit(20).collect()]
-    for v in present:
-        s, t = row_groups_surviving(spark, path, "k", int(v))
-        assert s >= 1, f"present key {v} pruned everywhere"
-
-    # pruning: absent keys (outside the residue range) drop most groups
-    total_surv = total_groups = 0
-    for v in range(2_000_000, 2_000_040):
-        s, t = row_groups_surviving(spark, path, "k", v)
-        total_surv += s
-        total_groups += t
-    assert total_groups >= 40  # at least one row group per probe
-    # <= 5% of (row group, probe) pairs may false-positive at this NDV
-    assert total_surv <= total_groups * 0.05, (total_surv, total_groups)
-
-    # the pruned scan is still a correct scan (false positives only)
-    got = spark.read.parquet(path).filter(F.col("k") == present[0]).count()
-    assert got >= 1
-
-
 # ------------------------------------------------ distributed_cummax
 
 def test_distributed_cummax_matches_window(spark):
@@ -394,46 +339,6 @@ def test_avro_timestamp_micros_roundtrip_exact(spark, tmp_path_factory):
     write_avro(df, path)
     got = read_avro(spark, path).collect()[0]["ts"]
     assert got == ts, got
-
-
-def test_parquet_bloom_int32_column_probe(spark, tmp_path_factory):
-    """The probe must hash the column's ACTUAL physical type: an INT32
-    column probed with the INT64 plain encoding would report every row
-    group 'provably' match-free."""
-    from pyspark.sql import functions as F
-
-    from ballista_extensions_spark.sources.parquet_bloom import (
-        row_groups_surviving,
-        write_parquet_bloom,
-    )
-
-    path = str(tmp_path_factory.mktemp("pb32") / "t")
-    df = spark.range(5000).select(
-        (F.col("id") % 1000).cast("int").alias("k")
-    )
-    # dictionary encoding would make parquet-mr omit the bloom filter
-    # entirely (the dict already answers membership) — force it off so
-    # the typed-probe path is actually exercised
-    write_parquet_bloom(
-        df.repartition(2),
-        path,
-        {"k": 1000},
-        **{"parquet.enable.dictionary": "false"},
-    )
-    from ballista_extensions_spark.sources.parquet_bloom import (
-        bloom_filter_offsets,
-    )
-    from pathlib import Path
-
-    first = sorted(str(p) for p in Path(path).glob("*.parquet"))[0]
-    assert all(o is not None for o in bloom_filter_offsets(spark, first)["k"])
-    s, t = row_groups_surviving(spark, path, "k", 7)  # present value
-    assert s >= 1, "present INT32 key pruned everywhere (wrong encoding)"
-    absent = sum(
-        row_groups_surviving(spark, path, "k", v)[0]
-        for v in range(5_000_000, 5_000_020)
-    )
-    assert absent <= t * 20 * 0.05
 
 
 def test_write_any_parquet_uncompressed(spark, tmp_path_factory):

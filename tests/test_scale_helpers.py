@@ -1,5 +1,5 @@
 """Scale-helper tests: salted joins, bucketed co-located joins, pandas
-UDF parity, stateful streaming counters."""
+UDF parity."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ballista_extensions_spark import plans as P
-from ballista_extensions_spark.functions.skew import key_skew_profile, salted_join
+from ballista_extensions_spark.functions.skew import salted_join
 from ballista_extensions_spark.io import load_table, write_bucketed
 
 
@@ -34,14 +34,6 @@ def test_salted_join_validates(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     with pytest.raises(ValueError, match="salt_buckets"):
         salted_join(o, o, "o_orderkey", salt_buckets=0)
-
-
-def test_skew_profile(spark, sf_dir):
-    prof = key_skew_profile(load_table(spark, sf_dir, "lineitem"), "l_suppkey", top=5)
-    rows = prof.collect()
-    assert len(rows) == 5
-    assert all(0 < r.share < 1 for r in rows)
-    assert rows[0].n_rows >= rows[-1].n_rows
 
 
 def test_bucketed_join_elides_shuffle(spark, sf_dir):
@@ -82,79 +74,3 @@ def test_pandas_udf_parity_with_jvm(spark, documents):
         token_count(F.col("text")).alias("jvm"),
     )
     assert both.filter(F.col("py") != F.col("jvm")).count() == 0
-
-
-def test_stateful_running_counts(spark, sf_dir, tmp_path_factory):
-    """applyInPandasWithState cumulative counters: final per-user totals
-    equal the batch aggregation."""
-    from ballista_extensions_spark.streaming.stateful import running_user_counts
-
-    path = str(tmp_path_factory.mktemp("stateful") / "events")
-    load_table(spark, sf_dir, "events").coalesce(1).write.parquet(path)
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    q = (
-        running_user_counts(stream)
-        .writeStream.format("memory")
-        .queryName("state_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    try:
-        got = {
-            r.user_id: (r.n_events, round(r.total_value, 6))
-            for r in spark.sql(
-                """SELECT user_id, n_events, total_value FROM (
-                     SELECT *, row_number() OVER (PARTITION BY user_id
-                         ORDER BY n_events DESC) AS rn FROM state_sink) WHERE rn = 1"""
-            ).collect()
-        }
-        expect = {
-            r.user_id: (r.n, round(r.v, 6))
-            for r in spark.read.parquet(path)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-            .collect()
-        }
-        assert got == expect
-    finally:
-        q.stop()
-
-
-def test_zorder_narrows_rowgroup_stats(spark, tmp_path_factory):
-    """Z-ordering by (x, y) must make parquet row-group min/max ranges
-    narrow in BOTH dimensions; a plain sort by x leaves y's ranges at
-    full width (no skipping possible on y)."""
-    import pyarrow.parquet as pq
-    from ballista_extensions_spark.functions.zorder import zorder_by
-
-    n, side = 1 << 14, 1 << 7
-    base = spark.range(n).select(
-        (F.col("id") % side).alias("x"),
-        (F.col("id") / side).cast("long").alias("y"),
-    )
-
-    def avg_width(path, col):
-        tot, cnt = 0, 0
-        for piece in __import__("pathlib").Path(path).glob("*.parquet"):
-            md = pq.ParquetFile(str(piece)).metadata
-            idx = md.schema.names.index(col)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                tot += st.max - st.min
-                cnt += 1
-        return tot / cnt
-
-    zpath = str(tmp_path_factory.mktemp("z") / "zorder")
-    spath = str(tmp_path_factory.mktemp("z") / "sorted")
-    zorder_by(base, "x", "y", partitions=8).write.parquet(zpath)
-    base.repartitionByRange(8, "x").sortWithinPartitions("x").write.parquet(
-        spath
-    )
-    # plain x-sort: y spans nearly the full [0, side) range in every file
-    assert avg_width(spath, "y") > side * 0.8
-    # z-order: both dimensions are narrowed well below full width
-    assert avg_width(zpath, "x") < side * 0.6
-    assert avg_width(zpath, "y") < side * 0.6

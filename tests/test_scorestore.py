@@ -1,7 +1,6 @@
 """Persisted classifier-score store (operators/scorestore.py —
 VERDICT r15 directive #5): score-once/join-later equals the inline
-fold, the bucketed join is exchange-free on the store side, and
-increment ingest never scans stored scores."""
+fold and the bucketed join is exchange-free on the store side."""
 
 from __future__ import annotations
 
@@ -42,31 +41,6 @@ def test_store_table_round_trip(spark, documents):
             (r["doc_id"], r["qscore"]) for r in handle.collect()
         }
         assert direct == stored and len(stored) > 0
-    finally:
-        SC.drop_score_store(spark, table)
-
-
-def test_extend_appends_increment_without_scanning_store(
-    spark, documents
-):
-    """Ingest cost ∝ increment: the extend write plan scans the
-    increment only (the store table never appears in it), and the
-    grown store equals scoring the union."""
-    table = "qscore_test_extend"
-    try:
-        base = documents.filter(F.col("doc_id") % 3 != 0)
-        inc = documents.filter(F.col("doc_id") % 3 == 0)
-        SC.build_score_store(base, table, buckets=4)
-        scores = SC.quality_score_frame(inc)
-        plan = scores._jdf.queryExecution().executedPlan().toString()
-        assert table not in plan  # increment-only compute
-        grown = SC.extend_score_store(inc, table, buckets=4)
-        want = {
-            (r["doc_id"], r["qscore"])
-            for r in SC.quality_score_frame(documents).collect()
-        }
-        got = {(r["doc_id"], r["qscore"]) for r in grown.collect()}
-        assert got == want
     finally:
         SC.drop_score_store(spark, table)
 

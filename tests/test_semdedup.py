@@ -1,6 +1,6 @@
 """SemDeDup (operators/semdedup.py): keep-first-by-id within-cell
 pruning vs a numpy brute force, the within-cell-only plan shape (no
-cartesian), the persisted-ANN-store path, and parameter validation."""
+cartesian), and parameter validation."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from ballista_extensions_spark.operators import semdedup as SD
 from ballista_extensions_spark.operators.annstore import (
-    build_ann_index,
     lattice_centroids,
 )
 from ballista_extensions_spark.plans import executed_plan
@@ -82,29 +81,6 @@ def test_within_cell_only_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     # the join key is the cell column, not a trivial always-true key
     assert "cell" in plan
-
-
-def test_persisted_index_path_matches_inmemory(spark):
-    rng = np.random.default_rng(7)
-    rows = _corpus(rng, 50, 8, 8)
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    cents = lattice_centroids(4, 8)
-    try:
-        idx = build_ann_index(df, cents, table_prefix="semdedup_test")
-        got_store = {
-            (r["vec_id"], r["cell"], r["kept"])
-            for r in SD.semantic_dedup_index(idx, tau=0.9).collect()
-        }
-        got_mem = {
-            (r["vec_id"], r["cell"], r["kept"])
-            for r in SD.semantic_dedup(df, cents, tau=0.9).collect()
-        }
-        assert got_store == got_mem
-    finally:
-        for t in ("semdedup_test_assign", "semdedup_test_centroids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_tau_validation(spark):

@@ -22,10 +22,20 @@ from pyspark.sql import functions as F
 
 from ballista_extensions_spark.io import load_table, write_bucketed
 from ballista_extensions_spark.operators.cdc import cdc_merge
-from ballista_extensions_spark.plans.metrics import (
-    measure_shuffle,
-    shuffle_totals,
-)
+from ballista_extensions_spark.plans.metrics import shuffle_totals
+
+
+def measure_shuffle(spark, action) -> tuple[int, int]:
+    """Run ``action`` and return the (read, write) shuffle bytes it
+    caused. (-1, -1) when the UI is unavailable."""
+    r0, w0 = shuffle_totals(spark)
+    action()
+    if r0 < 0:
+        return (-1, -1)
+    r1, w1 = shuffle_totals(spark)
+    if r1 < 0:
+        return (-1, -1)
+    return (r1 - r0, w1 - w0)
 
 
 @pytest.fixture(scope="module")

@@ -1,6 +1,6 @@
 """MinHash signature store (operators/sigstore.py): frozen-cap
-semantics, ingest-vs-direct equivalence, bucketed-table plan shape,
-and compaction contracts."""
+semantics, ingest-vs-direct equivalence and the bucketed-table plan
+shape."""
 
 from __future__ import annotations
 
@@ -139,52 +139,6 @@ def test_bucketed_store_candidate_join_plan(spark, documents):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_compaction_grows_store_and_next_ingest_agrees(spark, documents):
-    """compact_into_store(accepted) produces a store equal to the
-    manual union, and a later increment ingested against the compacted
-    store matches ingestion against the manually merged frames —
-    the cross-run chaining contract."""
-    d = documents.limit(600)
-    stored = d.filter(F.col("doc_id") % 3 == 1)
-    b1 = d.filter(F.col("doc_id") % 3 == 2)
-    b2 = d.filter(F.col("doc_id") % 3 == 0)
-
-    store = SS.build_signature_store(stored, max_df=100)
-    sig1 = SS.batch_signatures(store, b1)
-    pairs1 = SS.ingest_against_store(store, sig1, threshold=0.35)
-    reject = pairs1.select(F.col("doc_new").alias("doc")).distinct()
-
-    merged = SS.compact_into_store(store, sig1, reject)
-    # frame-level contract: merged = store union accepted batch rows
-    n_rej = reject.count()
-    assert merged.sets.count() == store.sets.count() + sig1.sets.count() - (
-        sig1.sets.join(reject, "doc").count()
-    )
-    assert merged.bands.count() == store.bands.count() + (
-        sig1.bands.join(reject, "doc", "left_anti").count()
-    )
-    # rejected docs are truly absent
-    assert merged.sets.join(reject, "doc").count() == 0 or n_rej == 0
-
-    sig2 = SS.batch_signatures(merged, b2)
-    got = _pairs_set(SS.ingest_against_store(merged, sig2, threshold=0.35))
-    # reference: same ingest against explicitly unioned frames
-    manual = SS.SignatureStore(
-        bands=store.bands.unionByName(
-            sig1.bands.join(reject, "doc", "left_anti")
-        ),
-        sets=store.sets.unionByName(
-            sig1.sets.join(reject, "doc", "left_anti")
-        ),
-        stop=store.stop,
-    )
-    want = _pairs_set(
-        SS.ingest_against_store(manual, SS.batch_signatures(manual, b2),
-                                threshold=0.35)
-    )
-    assert got == want
-
-
 def test_batch_signature_param_mismatch_is_callers_burden(spark):
     """Differently-parameterized banding produces incomparable bkeys:
     a self-identical doc is MISSED when bands differ — documented
@@ -196,37 +150,3 @@ def test_batch_signature_param_mismatch_is_callers_burden(spark):
     sig = SS.batch_signatures(store, batch, bands=32, rows_per_band=4)
     # bkeys disagree -> zero candidates -> zero pairs despite jaccard 1
     assert SS.ingest_against_store(store, sig, threshold=0.5).count() == 0
-
-
-def test_persisted_compaction_rewrites_tables(spark, documents):
-    """compact_into_store with a table_prefix REWRITES the bucketed
-    tables it reads from (regression: Spark forbids overwriting a
-    table present in the write's own plan; _persist breaks the cycle
-    by materializing first). The rewritten store serves a subsequent
-    ingest correctly."""
-    d = documents.limit(300)
-    stored = d.filter(F.col("doc_id") % 3 == 1)
-    b1 = d.filter(F.col("doc_id") % 3 == 2)
-    prefix = "sig_test_compact"
-    try:
-        store = SS.build_signature_store(
-            stored, max_df=100, table_prefix=prefix, buckets=4
-        )
-        before_sets = store.sets.count()
-        sig1 = SS.batch_signatures(store, b1)
-        pairs1 = SS.ingest_against_store(store, sig1, threshold=0.35)
-        reject = pairs1.select(F.col("doc_new").alias("doc")).distinct()
-        accepted = sig1.sets.join(reject, "doc", "left_anti").count()
-        # the regression: this OVERWRITES {prefix}_bands/_sets/_stop
-        # while the merged frames read them
-        merged = SS.compact_into_store(
-            store, sig1, reject, table_prefix=prefix, buckets=4
-        )
-        assert merged.sets.count() == before_sets + accepted
-        # compacted table-backed store still ingests correctly
-        b2 = d.filter(F.col("doc_id") % 3 == 0).limit(40)
-        sig2 = SS.batch_signatures(merged, b2)
-        SS.ingest_against_store(merged, sig2, threshold=0.35).count()
-    finally:
-        for t in (f"{prefix}_bands", f"{prefix}_sets", f"{prefix}_stop"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -3,8 +3,6 @@ Arrow IPC, compression codecs; Avro gated on classpath presence."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -291,107 +289,3 @@ def test_json_corrupt_record_modes(spark, tmp_path_factory):
         spark.read.schema(
             T.StructType(schema.fields[:2])
         ).option("mode", "FAILFAST").json(p).collect()
-
-
-def test_python_datasource_synthetic_docs(spark):
-    """Spark 4 Python DataSource API: deterministic synthetic corpus
-    with partitioned reads and doc_id range predicate pushdown reaching
-    the Python reader."""
-    from ballista_extensions_spark.sources.pysource import register
-
-    register(spark)
-    df = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 500)
-        .option("seed", 7)
-        .option("n_partitions", 8)
-        .load()
-    )
-    assert df.count() == 500
-    assert df.rdd.getNumPartitions() == 8
-    # deterministic across reads
-    a = df.orderBy("doc_id").limit(3).collect()
-    b = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 500)
-        .option("seed", 7)
-        .load()
-        .orderBy("doc_id")
-        .limit(3)
-        .collect()
-    )
-    assert a == b
-    # text shape feeds the text operators
-    from ballista_extensions_spark.operators.text import repetition_stats
-
-    assert repetition_stats(df).count() == 500
-    # range filter still correct under pushdown
-    sub = df.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
-    assert sub.count() == 50
-    assert sub.agg(F.min("doc_id"), F.max("doc_id")).first() == (100, 149)
-
-
-def test_python_datasource_writer_roundtrip(spark, sf_dir, tmp_path_factory):
-    """Python DataSourceWriter: per-task part files with a two-phase
-    commit (inprogress -> rename + _SUCCESS), read back equal."""
-    import glob
-    import os
-
-    from ballista_extensions_spark.io import load_table
-    from ballista_extensions_spark.sources.pysource import register
-
-    register(spark)
-    out = str(tmp_path_factory.mktemp("ndjson_parts") / "docs")
-    src = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-    src.repartition(4).write.format("ndjson_parts").option(
-        "path", out
-    ).mode("append").save()
-    parts = glob.glob(os.path.join(out, "part-*.ndjson"))
-    assert len(parts) == 4
-    # temp files are dot-prefixed, which "*" does not match — check by
-    # listing, not glob, so leftovers actually fail
-    assert not [
-        f for f in os.listdir(out) if f.endswith(".inprogress")
-    ]
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    back = spark.read.json(os.path.join(out, "part-*.ndjson"))
-    assert back.count() == src.count()
-    a = {r.doc_id for r in src.collect()}
-    b = {r.doc_id for r in back.collect()}
-    assert a == b
-
-
-def test_python_datasource_writer_overwrite_clears_stale_parts(
-    spark, sf_dir, tmp_path_factory
-):
-    """mode("overwrite") must leave ONLY the new job's parts: a prior
-    write's part files are removed at commit, so a read-back returns the
-    new data alone, not the union (the append-masquerade bug)."""
-    import glob
-    import os
-
-    from ballista_extensions_spark.io import load_table
-    from ballista_extensions_spark.sources.pysource import register
-
-    register(spark)
-    out = str(tmp_path_factory.mktemp("ndjson_overwrite") / "docs")
-    src = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    first = src.filter(F.col("doc_id") < 100)
-    second = src.filter(
-        (F.col("doc_id") >= 100) & (F.col("doc_id") < 150)
-    )
-    first.repartition(4).write.format("ndjson_parts").option(
-        "path", out
-    ).mode("append").save()
-    assert len(glob.glob(os.path.join(out, "part-*.ndjson"))) == 4
-    second.repartition(2).write.format("ndjson_parts").option(
-        "path", out
-    ).mode("overwrite").save()
-    assert len(glob.glob(os.path.join(out, "part-*.ndjson"))) == 2
-    back = spark.read.json(os.path.join(out, "part-*.ndjson"))
-    assert back.count() == 50
-    assert {r.doc_id for r in back.collect()} == {
-        r.doc_id for r in second.collect()
-    }

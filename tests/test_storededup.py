@@ -422,24 +422,15 @@ def test_semdedup_sink_probe_is_cell_equijoin_no_cartesian(
     assert "Join" in plan
 
 
-def test_phash_replay_reports_no_dropped_accumulators(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """No task of the phash-store replay reports SQL metrics of a plan
-    the driver has already dropped. The replay's sink once wrapped its
-    materialized batch in a second lazy checkpoint inside the probe and
-    the intra-batch pairs; the concurrent jobs of one write raced it,
-    and late tasks then updated garbage-collected accumulators. A
-    thread asks the driver JVM for a full GC every 100 ms during the
-    call, so a dropped plan's metrics are collected before such tasks
-    finish; the DAGScheduler's log is read through an in-memory
-    appender."""
+def _dropped_accumulator_lines(spark, run):
+    """``run()``'s result and the DAGScheduler's lines about task
+    results for accumulators the driver has already dropped. A thread
+    asks the driver JVM for a full GC every 100 ms while ``run`` runs,
+    so a dropped plan's metrics are collected before late tasks
+    finish; the log is read through an in-memory appender."""
     import threading
     import time
 
-    from ballista_extensions_spark.queries import registry, streaming_replay
-
-    monkeypatch.setattr(streaming_replay, "_STAGE_ROOT", str(tmp_path))
     jvm = spark._jvm
     log4j = jvm.org.apache.logging.log4j
     text = jvm.java.io.StringWriter()
@@ -469,7 +460,7 @@ def test_phash_replay_reports_no_dropped_accumulators(
     gc_thread = threading.Thread(target=collect_garbage, daemon=True)
     gc_thread.start()
     try:
-        pairs = registry.QUERIES["streaming_phash_store_replay"](spark, sf_dir)
+        result = run()
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     finally:
         done.set()
@@ -477,10 +468,50 @@ def test_phash_replay_reports_no_dropped_accumulators(
         logger.removeAppender(appender)
         appender.stop()
     assert not gc_thread.is_alive()
-    assert pairs.count() > 0
     lines = [
         ln for ln in text.toString().splitlines()
         if "non-existent accumulator" in ln
         or "Failed to update accumulator" in ln
     ]
+    return result, lines
+
+
+def test_phash_replay_reports_no_dropped_accumulators(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """No task of the phash-store replay reports SQL metrics of a plan
+    the driver has already dropped. The replay's sink once wrapped its
+    materialized batch in a second lazy checkpoint inside the probe and
+    the intra-batch pairs; the concurrent jobs of one write raced it,
+    and late tasks then updated garbage-collected accumulators."""
+    from ballista_extensions_spark.queries import registry, streaming_replay
+
+    monkeypatch.setattr(streaming_replay, "_STAGE_ROOT", str(tmp_path))
+    pairs, lines = _dropped_accumulator_lines(
+        spark,
+        lambda: registry.QUERIES["streaming_phash_store_replay"](spark, sf_dir),
+    )
+    assert pairs.count() > 0
+    assert lines == [], lines[:4]
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "image_near_dup_phash",
+        "image_contamination_check",
+        "image_signature_store_incremental",
+    ],
+)
+def test_members_queries_report_no_dropped_accumulators(spark, sf_dir, query):
+    """The batch callers of ``imagedup._members``: its members are
+    materialized before the query's concurrent broadcast-build jobs
+    start, so none of their tasks reports metrics of a dropped plan."""
+    from ballista_extensions_spark.queries import registry
+
+    def run() -> None:
+        df = registry.QUERIES[query](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+
+    _, lines = _dropped_accumulator_lines(spark, run)
     assert lines == [], lines[:4]

@@ -290,102 +290,6 @@ def test_enrich_stream_matches_batch(spark, events_stream, events_dir):
     assert got == want
 
 
-def test_funnel_stages_stream_matches_batch(spark, events_dir):
-    """Streaming funnel state converges to the batch event_funnel
-    aggregation after replaying the full history."""
-    from ballista_extensions_spark.streaming.stateful import (
-        funnel_stages_stream,
-    )
-
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    q = (
-        funnel_stages_stream(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.user_id: r.stage
-        for r in spark.sql(
-            """SELECT user_id, stage FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id
-                     ORDER BY stage DESC) AS rn FROM funnel_sink)
-               WHERE rn = 1"""
-        ).collect()
-    }
-    u = (
-        spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v"),
-            F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("c"),
-            F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("p"),
-        )
-    )
-    expect = {}
-    for r in u.collect():
-        stage = 0
-        if r.v is not None:
-            stage = 1
-            if r.c is not None and r.v < r.c:
-                stage = 2
-                if r.p is not None and r.c < r.p:
-                    stage = 3
-        expect[r.user_id] = stage
-    assert got == expect
-    # funnel counts must be monotone across stages
-    from collections import Counter
-
-    cnt = Counter(got.values())
-    s1 = cnt[1] + cnt[2] + cnt[3]
-    assert s1 >= cnt[2] + cnt[3] >= cnt[3]
-
-
-def test_python_stream_datasource(spark, tmp_path_factory):
-    """Spark 4 Python streaming DataSource: deterministic offset-only
-    micro-batches; a bounded run yields exactly batch_size * n_batches
-    rows with contiguous ids."""
-    from ballista_extensions_spark.sources.pysource import register
-
-    register(spark)
-    stream = (
-        spark.readStream.format("synthetic_docs_stream")
-        .option("seed", 11)
-        .option("batch_size", 50)
-        .load()
-    )
-    ckpt = str(tmp_path_factory.mktemp("pysrc") / "ckpt")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("pysrc_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        import time
-
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            n = spark.sql("SELECT COUNT(*) FROM pysrc_sink").first()[0]
-            if n >= 150:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = spark.sql(
-        "SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx, COUNT(*) AS n, "
-        "COUNT(DISTINCT doc_id) AS nd FROM pysrc_sink"
-    ).first()
-    assert got.mn == 0
-    assert got.n == got.nd == got.mx + 1  # contiguous, no dupes/gaps
-    assert got.n >= 150
-
-
 def test_mg_summary_stream_exact_when_uncompacted(spark, events_stream, events_dir):
     """With counters far above the stream's cardinality nothing compacts:
     the merged shard summaries ARE the exact per-item counts."""
