@@ -74,13 +74,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any scale factor the
-#: TPC-H-ish generator produces (region=5 rows, nation=25 always; supplier/
-#: customer/part grow with sf but stay << fact tables). Operators consult
-#: this to decide broadcast hints.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-
 #: Runtime SQL confs the engine requires regardless of who built the
 #: SparkSession (the driver's correctness harness builds its own, without
 #: our session factory): ns-parquet reads for events, non-ANSI wrapping

@@ -267,7 +267,7 @@ def build_ann_index(
     the assignments persist as ``{prefix}_assign`` partitioned by cell
     (the inverted file) and the quantizer as ``{prefix}_centroids``,
     and the returned handle reads from the tables — the cross-run
-    form (reopen later with ``load_ann_index``)."""
+    form (reopen later as an ``AnnIndex`` over the two tables)."""
     assigned = assign_cells(
         ensure_parallelism(corpus), centroids, id_col=id_col, vec_col=vec_col
     )

@@ -117,7 +117,7 @@ def encode_png(pixels: np.ndarray, *, filter_type: int | None = 0) -> bytes:
     """Encode a uint8 array as an 8-bit non-interlaced PNG: (h, w) ->
     grayscale (color 0), (h, w, 2) -> gray+alpha (4), (h, w, 3) -> RGB
     (2), (h, w, 4) -> RGBA (6). ``filter_type`` selects the per-row
-    filter: 0 (default, size-predictable via png_file_size), 1-4 to
+    filter: 0 (default, stored-block size is pure arithmetic), 1-4 to
     force Sub/Up/Average/Paeth, or None to cycle 0..4 by row — the
     latter two exist so tests can prove every unfilter path against
     the original pixels."""
@@ -222,8 +222,8 @@ def _png_unfilter(raw: bytes, h: int, w: int, ch: int) -> bytes:
     (each row's reconstruction feeds the next); within a row the five
     filter types run as scalar loops over at most w*ch bytes — fine
     for the metadata/feature path where decoded images are thumbnails;
-    a corpus of large images would decode through a native codec via
-    the same set_image_decoder hook."""
+    a corpus of large images would decode through a native codec passed
+    as ``decode_images``' ``decoder``."""
     stride = w * ch
     if len(raw) < h * (1 + stride):
         raise ValueError("truncated PNG pixel data")

@@ -37,18 +37,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: Canonical multimodal row: opaque payload + typed metadata. Matches the
-#: "binary column + metadata struct" pattern for media at scale.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image|audio|video
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("source_uri", StringType(), True),
-    ]
-)
-
 DECODED_IMAGE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -76,9 +64,9 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
 
 
 def docs_as_media(documents: DataFrame) -> DataFrame:
-    """Adapter: expose the driver's documents table in MEDIA_SCHEMA shape
-    (payload = utf-8 bytes) so the multimodal plumbing is exercisable
-    with real driver data."""
+    """Adapter: expose the driver's documents table as media rows
+    (media_id, kind, payload, mime, source_uri; payload = utf-8 bytes)
+    so the multimodal plumbing is exercisable with real driver data."""
     return documents.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
@@ -194,11 +182,11 @@ def docs_as_png_media(
     color-type-2 PNGs (operators/imagecodec.py:encode_png — zlib
     container with stored-block DEFLATE, filter-0 scanlines, CRC'd
     chunks). The stored-block stream keeps the file size pure
-    arithmetic (png_file_size), so a SQL oracle can predict the
-    decoded metadata byte-for-byte while the payload is a spec-correct
-    PNG the real decoder must parse (signature, IHDR, inflate,
-    unfilter). ``carry`` passes ``documents`` columns through the
-    encode pass (:func:`_docs_as_encoded_media`)."""
+    arithmetic, so a SQL oracle can predict the decoded metadata
+    byte-for-byte while the payload is a spec-correct PNG the real
+    decoder must parse (signature, IHDR, inflate, unfilter). ``carry``
+    passes ``documents`` columns through the encode pass
+    (:func:`_docs_as_encoded_media`)."""
     from ballista_extensions_spark.operators.imagecodec import encode_png
 
     return _docs_as_encoded_media(documents, encode_png, carry)
@@ -611,19 +599,20 @@ def decode_images(
     Decoder precedence: the explicit ``decoder`` argument, else the
     deterministic fake when ``fake=True`` (ALWAYS the fake — a
     globally installed codec must not silently change a query that
-    promised fake semantics to its oracle), else the global
-    ``set_image_decoder`` hook. With none of the three this raises
+    promised fake semantics to its oracle), else the module's
+    ``_image_decoder`` hook. With none of the three this raises
     NotImplementedError at *plan* time — fail fast, not per-task.
-    A real pure-Python BMP/PPM codec ships in
-    ``operators/imagecodec.py`` (``install()`` wires all three hooks).
+    A real pure-Python codec ships in ``operators/imagecodec.py``
+    (pass ``decode_image`` as ``decoder=``).
     """
     if decoder is None:
         decoder = _fake_decode if fake else _image_decoder
     if decoder is None:
         raise NotImplementedError(
-            "no image decoder installed in this container; call "
-            "set_image_decoder(...) (operators/imagecodec.py:install "
-            "ships one) or pass fake=True for the deterministic stub"
+            "no image decoder installed in this container; pass "
+            "decoder=... (operators/imagecodec.py:decode_image is one), set "
+            "multimodal._image_decoder, or pass fake=True for the "
+            "deterministic stub"
         )
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -145,7 +145,7 @@ def extend_posting_store(
     contract) — append their postings and one stats row. The stored
     postings are never scanned (cost ∝ increment, plan-asserted in
     tests). Caller contract: increment doc_ids are new (the pipeline
-    assigns monotone ids), same as extend_score_store.
+    assigns monotone ids).
 
     ``check_fresh_ids=True`` verifies that contract loudly instead of
     letting a repeated doc_id silently double-count ``n_docs``/

@@ -266,8 +266,8 @@ def frame_stride_checksums(
     """REAL frame sampling: decode, take every ``stride``-th frame
     (0, stride, 2*stride, …), return [(frame_idx, frame_pixel_sum)].
     The integer per-frame checksum proves each sampled frame's pixels
-    individually — the decode-backed upgrade of the byte-offset
-    sampling stub (operators/multimodal.py:sample_frames)."""
+    individually — decoded frames, not byte offsets into the
+    payload."""
     if stride <= 0:
         raise ValueError(f"stride must be positive, got {stride}")
     frames, _ = decode_avi(payload)

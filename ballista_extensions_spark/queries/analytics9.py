@@ -140,8 +140,7 @@ def video_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL frame sampling — the decode-backed upgrade of the
-    byte-offset stub (operators/multimodal.py:sample_frames): each AVI
+    """REAL frame sampling, decoded rather than byte-offset: each AVI
     is decoded and every 2nd frame is extracted, one output row per
     sampled frame with that frame's integer pixel checksum
     (operators/videocodec.py:frame_stride_checksums). The bounded

@@ -3,15 +3,94 @@
 Spark-side equivalent of the reference's session wiring: the Ballista
 scheduler installs a session builder with extension planner + codecs
 (reference examples/ballista_scheduler.rs:27-56, examples/datafusion.rs:18-25).
-In Spark nothing needs injecting — our operators compose Catalyst built-ins —
-so the factory only pins configs that matter for correctness and scale.
+Our operators compose Catalyst built-ins, so the factory mostly pins
+configs that matter for correctness and scale. It injects one class,
+through Hadoop's own ``fs.file.impl`` hook: ``jvm/NoForkLocalFileSystem``.
+Without libhadoop, Hadoop's local file system forks ``/bin/chmod`` for
+every file and directory Spark writes through ``file:`` (stream
+checkpoints, state-store deltas, sinks, persisted stores); that class
+sets the same modes with a syscall and keeps the ``.crc`` checksums.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+_LOCAL_FS = "ballista_extensions_spark.jvm.NoForkLocalFileSystem"
+_LOCAL_FS_SRC = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NoForkLocalFileSystem.java"
+)
+
+
+def _spark_jars() -> str:
+    """The jars the driver JVM runs with: ``$SPARK_HOME/jars`` when set
+    (PySpark launches from there), else PySpark's own."""
+    return os.path.join(
+        os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__), "jars"
+    )
+
+
+def _local_fs_jar() -> str | None:
+    """The jar holding ``_LOCAL_FS``, compiled once per source, PySpark
+    version and jars directory into the temp dir; None when ``javac`` or
+    the jars are missing or the source does not compile against them."""
+    javac = shutil.which("javac")
+    jars = _spark_jars()
+    if javac is None or not os.path.isdir(jars):
+        return None
+    with open(_LOCAL_FS_SRC, "rb") as f:
+        src = f.read()
+    key = hashlib.sha256(src + f"\0{pyspark.__version__}\0{jars}".encode()).hexdigest()
+    jar = os.path.join(tempfile.gettempdir(), f"bx-nofork-{key[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    with tempfile.TemporaryDirectory() as out:
+        done = subprocess.run(
+            [javac, "--release", "17", "-cp", os.path.join(jars, "*"),
+             "-d", out, _LOCAL_FS_SRC],
+            capture_output=True,
+        )
+        if done.returncode != 0:
+            return None
+        tmp = f"{jar}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for cls in glob.glob(os.path.join(out, "**", "*.class"), recursive=True):
+                zf.write(cls, os.path.relpath(cls, out))
+        os.replace(tmp, jar)
+    return jar
+
+
+def _local_fs_confs(master: str) -> dict[str, str]:
+    """Confs that make ``file:`` resolve to ``_LOCAL_FS``, for masters
+    whose JVMs all run on the driver's machine (where the jar is), and
+    only when the driver JVM is not yet running or already has the jar."""
+    if not master.startswith("local"):
+        return {}
+    jar = _local_fs_jar()
+    if jar is None:
+        return {}
+    if SparkContext._jvm is not None:
+        # SparkSubmit set the launch confs as the JVM's system properties.
+        # (Reading them costs ~1 ms; py4j resolving java.lang.System to
+        # read java.class.path costs ~45 ms.)
+        launched = SparkConf().get("spark.driver.extraClassPath", "")
+        if jar not in launched.split(os.pathsep):
+            return {}
+    return {
+        "spark.driver.extraClassPath": jar,
+        "spark.executor.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": _LOCAL_FS,
+    }
 
 
 def get_session(app_name: str = "ballista_extensions_spark") -> SparkSession:
@@ -23,9 +102,10 @@ def get_session(app_name: str = "ballista_extensions_spark") -> SparkSession:
     the broadcast threshold keeps dimension joins shuffle-free.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
+        .master(master)
         # One shuffle partition per core locally; a real cluster would use
         # 2-3x total cores — AQE coalesces either way.
         .config("spark.sql.shuffle.partitions", cpus)
@@ -50,4 +130,6 @@ def get_session(app_name: str = "ballista_extensions_spark") -> SparkSession:
         # executors and the driver needs far less.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    for k, v in _local_fs_confs(master).items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -5,9 +5,28 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ballista_extensions_spark.operators import multimodal as M
 from ballista_extensions_spark.operators.imagecodec import _ZLIB_STORED_MAX
+
+#: The media row ``docs_as_media`` produces: opaque payload + typed
+#: metadata; also the schema of the hand-built frames below.
+MEDIA_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType(), False),
+        StructField("kind", StringType(), False),  # image|audio|video
+        StructField("payload", BinaryType(), True),
+        StructField("mime", StringType(), True),
+        StructField("source_uri", StringType(), True),
+    ]
+)
 
 
 def encode_ppm(pixels) -> bytes:
@@ -35,7 +54,7 @@ def media(spark, documents):
 
 
 def test_media_schema(media):
-    assert media.schema == M.MEDIA_SCHEMA or set(media.columns) == {
+    assert media.schema == MEDIA_SCHEMA or set(media.columns) == {
         "media_id",
         "kind",
         "payload",
@@ -59,7 +78,7 @@ def test_decode_fake_deterministic(media):
 
 def test_decode_handles_null_payload(spark):
     df = spark.createDataFrame(
-        [(1, "image", None, None, None)], schema=M.MEDIA_SCHEMA
+        [(1, "image", None, None, None)], schema=MEDIA_SCHEMA
     )
     row = M.decode_images(df, fake=True).collect()[0]
     assert row.decode_error == "null payload"
@@ -68,7 +87,7 @@ def test_decode_handles_null_payload(spark):
 
 def test_decode_error_column_not_task_failure(spark):
     df = spark.createDataFrame(
-        [(1, "image", b"xx", None, None)], schema=M.MEDIA_SCHEMA
+        [(1, "image", b"xx", None, None)], schema=MEDIA_SCHEMA
     )
     row = M.decode_images(
         df, decoder=lambda b: (_ for _ in ()).throw(ValueError("boom"))
@@ -82,7 +101,7 @@ def test_installed_decoder_used(spark):
     M._image_decoder = lambda b: (len(b), len(b) * 2, 1)
     try:
         df = spark.createDataFrame(
-            [(7, "image", b"abcd", None, None)], schema=M.MEDIA_SCHEMA
+            [(7, "image", b"abcd", None, None)], schema=MEDIA_SCHEMA
         )
         row = M.decode_images(df).collect()[0]
         assert (row.width, row.height, row.channels) == (4, 8, 1)
@@ -162,7 +181,7 @@ def test_real_decode_through_spark(spark, documents):
         assert r.byte_len == C.bmp_file_size(w, h)
         assert r.decode_error is None
     bad = spark.createDataFrame(
-        [(99, "image", b"JFIF not a bmp", None, None)], schema=M.MEDIA_SCHEMA
+        [(99, "image", b"JFIF not a bmp", None, None)], schema=MEDIA_SCHEMA
     )
     row = M.decode_images(bad, decoder=C.decode_image).collect()[0]
     assert row.decode_error is not None and row.width is None

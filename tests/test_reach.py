@@ -1,8 +1,9 @@
 """The package holds only code something reaches; no SparkSession.
 
-A top-level function or class of ``ballista_extensions_spark`` must be
-in the static closure (``registry.reach``'s walk: module globals,
-``module.attr`` chains, imports) of at least one root:
+A top-level function, class or non-dunder assignment of
+``ballista_extensions_spark`` must be in the static closure
+(``registry.reach``'s walk: module globals, ``module.attr`` chains,
+imports) of at least one root:
 
 - a registered query;
 - a name in a package ``__init__``'s ``__all__``;
@@ -132,14 +133,29 @@ def _closure(roots: list) -> set[tuple[str, str]]:
     return seen
 
 
+def _top_level_names(stmt: ast.stmt) -> list[str]:
+    """The names a top-level definition or non-dunder assignment binds."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return [
+            n.id
+            for t in targets
+            for n in ast.walk(t)
+            if isinstance(n, ast.Name) and not n.id.startswith("__")
+        ]
+    return []
+
+
 def test_every_package_definition_is_reached():
     reached = _closure(_roots())
     unreached = [
-        f"{mod}.{stmt.name}"
+        f"{mod}.{name}"
         for mod in _modules()
         for stmt in registry._module(mod)[0].body
-        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and (mod, stmt.name) not in reached
+        for name in _top_level_names(stmt)
+        if (mod, name) not in reached
     ]
     assert unreached == [], (
         f"{len(unreached)} definitions no query, export, import-time call, "

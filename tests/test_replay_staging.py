@@ -1,9 +1,10 @@
 """The streaming replays' fixed cost (queries/streaming_replay.py): the
 slices are staged by one single-task job over the input, state
-partitions are sized from the staged files' footers, and checkpoint
-renames fork no ``readlink`` (io._REQUIRED_CONFS names the
-FileSystem-based checkpoint manager). A restart from a checkpoint that
-manager wrote reads its state back."""
+partitions are sized from the staged files' footers, checkpoint renames
+fork no ``readlink`` (io._REQUIRED_CONFS names the FileSystem-based
+checkpoint manager) and no written file forks ``chmod`` (the session's
+``file:`` FileSystem). A restart from a checkpoint that manager wrote
+reads its state back."""
 
 from __future__ import annotations
 
@@ -226,11 +227,17 @@ def test_state_parts_from_footers(spark, sf_dir, sf, tmp_path, monkeypatch):
 _FORKS = r"""
 import os, sys
 sys.path.insert(0, sys.argv[1])
+from ballista_extensions_spark.io import ensure_engine_confs
 from ballista_extensions_spark.queries import registry, streaming_replay
 from ballista_extensions_spark.session import get_session
 
 streaming_replay._STAGE_ROOT = sys.argv[3]
 spark = get_session("fork-count")
+# once per session, the driver's and the executor's fetch of the shipped
+# package zip each chmod it a+x (FileUtil.chmod, no FileSystem involved):
+# ship it and run a task before counting
+ensure_engine_confs(spark)
+spark.range(1).count()
 for log in sys.argv[4:]:  # count only the replays' forks
     open(log, "w").close()
 for name in ("streaming_dedup_replay", "streaming_sigstore_replay"):
@@ -241,10 +248,12 @@ print("DONE")
 
 
 def test_replays_fork_no_readlink(sf_dir, tmp_path):
-    """With a logging ``readlink`` first on PATH, two replays (a Spark
-    state store and a persisted store) fork it zero times. ``chmod``
-    forks (RawLocalFileSystem.setPermission without libhadoop) are
-    reported, not gated."""
+    """With logging ``readlink`` and ``chmod`` shims first on PATH, two
+    replays (a Spark state store and a persisted store) fork neither.
+    ``readlink`` stays out through the FileSystem-based checkpoint
+    manager; ``chmod`` (RawLocalFileSystem.setPermission without
+    libhadoop, once per file and directory written) through the session's
+    ``file:`` FileSystem, jvm/NoForkLocalFileSystem.java."""
     from ballista_extensions_spark.queries.registry import REPO_ROOT
 
     shims = tmp_path / "bin"
@@ -271,8 +280,6 @@ def test_replays_fork_no_readlink(sf_dir, tmp_path):
     )
     assert "DONE" in out.stdout, out.stderr[-3000:]
     forks = {t: p.read_text().splitlines() for t, p in logs.items()}
-    assert forks["readlink"] == [], json.dumps(
-        {"readlink": len(forks["readlink"]), "chmod": len(forks["chmod"]),
-         "first": forks["readlink"][:3]}
+    assert forks == {"readlink": [], "chmod": []}, json.dumps(
+        {t: {"forks": len(f), "first": f[:3]} for t, f in forks.items()}
     )
-    print(f"chmod forks across both replays: {len(forks['chmod'])}")
