@@ -129,14 +129,21 @@ def encode_png(pixels: np.ndarray, *, filter_type: int | None = 0) -> bytes:
     color = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
     px = np.ascontiguousarray(pixels, dtype=np.uint8)
     stride = w * ch
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        line = px[y].reshape(stride)
-        ft = (y % 5) if filter_type is None else filter_type
-        raw.append(ft)
-        raw += _png_filter_row(line, prev, ch, ft).tobytes()
-        prev = line
+    if filter_type == 0:
+        # filter 0 leaves each scanline as it is: one filter-type byte
+        # column beside the rows, no per-row pass
+        rows = np.zeros((h, stride + 1), dtype=np.uint8)
+        rows[:, 1:] = px.reshape(h, stride)
+        raw = rows.tobytes()
+    else:
+        raw = bytearray()
+        prev = np.zeros(stride, dtype=np.uint8)
+        for y in range(h):
+            line = px[y].reshape(stride)
+            ft = (y % 5) if filter_type is None else filter_type
+            raw.append(ft)
+            raw += _png_filter_row(line, prev, ch, ft).tobytes()
+            prev = line
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
     return (
         _PNG_SIG

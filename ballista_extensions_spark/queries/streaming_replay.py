@@ -32,8 +32,9 @@ at a live source.
 Fixed cost: a replay should pay for its micro-batches and little else.
 Each one stages its slices in ONE single-task job over its input (rows
 tagged with their slice, ``_write_ordered_slices``: no exchange), sizes
-its state partitions from the staged files' parquet footers rather than
-a ``count()`` job, runs the stream through one helper (``_drain``), and
+any Spark state store's partitions from the staged files' parquet
+footers rather than a ``count()`` job, runs the stream through one
+helper (``_drain``), and
 reads a parquet sink back with a named schema (no footer-inference
 job). The sink writes each batch straight into its own directory
 (``streaming/sinks.py``). Checkpoint files are renamed into place by
@@ -56,7 +57,10 @@ from pyspark.sql.types import IntegerType, StructType
 from ballista_extensions_spark.io import default_parallelism, load_table
 from ballista_extensions_spark.queries.analytics7 import _DHASH_CTE
 from ballista_extensions_spark.queries.registry import register
-from ballista_extensions_spark.streaming.sinks import idempotent_parquet_sink
+from ballista_extensions_spark.streaming.sinks import (
+    first_occurrence_sink,
+    idempotent_parquet_sink,
+)
 
 _STAGE_ROOT = "/tmp/bx_stream_replay"
 
@@ -491,31 +495,31 @@ def streaming_media_dedup_replay(
     documents stream replays in three micro-batches with CROSS-BATCH
     duplicates injected (batch 2 re-ships batch 1's rows, batch 3
     batch 2's — the streaming_dedup_replay protocol), and each batch
-    runs the full multimodal chain INSIDE the stream: PNG encode
-    (multimodal.docs_as_png_media), real codec decode + 64-bit dHash
-    (operators/imagedup.py:image_dhash), then
-    streaming/stateful.py:stream_first_occurrence keyed on the
-    PERCEPTUAL hash — 8 B of state per distinct fingerprint holding the
-    min doc_id seen. Only first occurrences survive; a payload whose
-    fingerprint was seen in an EARLIER micro-batch must be suppressed
-    from state or the sink holds ~2x rows and the hash comparison
-    fails — cross-batch state carry is exactly what the oracle
-    verifies. The oracle recomputes every document's dHash from the
-    PNG fixture arithmetic (the image_dhash_fingerprints CTE) and
-    keeps one survivor per fingerprint in STREAM order — argmin by
-    (doc_id % 3, doc_id), i.e. earliest batch then the operator's
+    runs the full multimodal chain INSIDE the stream: PNG encode, real
+    codec decode and 64-bit dHash in one Python pass
+    (multimodal.docs_png_dhash), then streaming/sinks.py's
+    first_occurrence_sink keyed on the PERCEPTUAL hash: per batch, the
+    min doc_id of every fingerprint, minus the fingerprints earlier
+    batches committed to the sink. A payload whose fingerprint was seen
+    in an EARLIER micro-batch must be suppressed or the sink holds ~2x
+    rows and the hash comparison fails — cross-batch state carry is
+    exactly what the oracle verifies. The state is the sink's own
+    per-batch parquet, not a Spark state store, so a restart or an
+    at-least-once redelivery changes nothing, by construction. The
+    oracle recomputes every document's dHash from the PNG fixture
+    arithmetic (the image_dhash_fingerprints CTE) and keeps one
+    survivor per fingerprint in STREAM order — argmin by
+    (doc_id % 3, doc_id), i.e. earliest batch then the sink's
     within-batch min-id tiebreak — so real perceptual collisions
     (present at sf0.1) resolve identically in both engines and the
     in-stream decode->hash chain is verified bit-for-bit too. Scale:
-    this is dedup-at-ingest for a multimodal crawl — mapInPandas
-    stages are narrow per-batch passes; state is one long per
-    fingerprint; repeats route out of the pipeline at the earliest
-    possible stage instead of costing downstream decode/storage."""
+    this is dedup-at-ingest for a multimodal crawl — the codec pass is
+    a narrow per-batch mapInPandas; the probe is one aggregate and one
+    anti join in the JVM per batch; repeats route out of the pipeline
+    at the earliest possible stage instead of costing downstream
+    decode/storage."""
     from ballista_extensions_spark.operators.multimodal import (
         docs_png_dhash,
-    )
-    from ballista_extensions_spark.streaming.stateful import (
-        stream_first_occurrence,
     )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -523,41 +527,22 @@ def streaming_media_dedup_replay(
     in_dir = os.path.join(stage, "in")
     os.makedirs(in_dir)
     # dupes cross batches: slices [s0, s1 + s0, s2 + s1]
-    rows = _write_ordered_slices(
-        _thirds(d, "doc_id", redeliver=True), 3, in_dir
-    )
-
-    # state keys = distinct fingerprints ∝ batch rows (sized by the
-    # biggest batch); the CODEC pass keeps the session's full
-    # parallelism via an explicit repartition count below — only the
-    # fixed-cost stateful stage shrinks
-    dp = default_parallelism(spark)
-    n_batch = max(rows)
-    parts = _state_parts(spark, n_batch, rows=n_batch)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        # fused PNG encode -> decode -> dHash (r17, guide §4.1): same
-        # chain, one Python pass, payload never re-crosses the boundary.
-        # repartition first: each micro-batch arrives as ONE file = ONE
-        # partition, so without it the whole encode->hash chain runs on
-        # a single task per batch (guide §2: the codec pass is the
-        # batch's compute; spread it over the cluster, then the
-        # stateful op re-shuffles by dhash as before)
-        hashes = docs_png_dhash(stream.repartition(dp, "doc_id")).select(
-            F.col("id").alias("doc_id"), "dhash"
-        )
-        return stream_first_occurrence(hashes, "dhash", "doc_id")
-
-    sink = _replay(
+    _write_ordered_slices(_thirds(d, "doc_id", redeliver=True), 3, in_dir)
+    out_dir = os.path.join(stage, "out")
+    # repartition first: one file per trigger = one partition, so the
+    # codec pass would otherwise run single-task per batch (guide §2)
+    got = _drain(
         spark,
         in_dir,
         "doc_id long, text string",
-        os.path.join(stage, "out"),
-        transform,
-        shuffle_parts=parts,
+        first_occurrence_sink(out_dir, "dhash", "id"),
+        lambda s: docs_png_dhash(s.repartition("doc_id")),
     )
-    return sink.filter(F.col("is_first")).select(
-        F.col("doc_id").alias("media_id"), "dhash"
+    # the named-schema read still appends the discovered __batch_id
+    return (
+        spark.read.schema(got)
+        .parquet(out_dir)
+        .select(F.col("id").alias("media_id"), "dhash")
     )
 
 
@@ -604,9 +589,9 @@ def streaming_phash_store_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """RESTART-SURVIVABLE streaming media dedup, oracle-checked: where
-    streaming_media_dedup_replay keeps its fingerprint state in the
-    Spark state store (dies with the checkpoint), this replay keeps it
-    in the persisted perceptual-hash store
+    streaming_media_dedup_replay keeps exact fingerprints in its own
+    sink output, this replay keeps near-duplicate state in the
+    persisted perceptual-hash store
     (streaming/storededup.py + operators/phashstore.py): the documents
     stream replays in three micro-batches (doc_id % 3 = 0, 1, 2), each
     batch runs PNG encode -> real codec decode -> 64-bit dHash INSIDE
@@ -614,7 +599,7 @@ def streaming_phash_store_replay(
     finds duplicate pairs BOTH against the store (banded pigeonhole
     candidates over DISTINCT hashes + exact Hamming verification,
     threshold 6) AND within the batch itself (earlier id survives —
-    the stream_first_occurrence convention lifted to near-dups), and
+    first_occurrence_sink's convention lifted to near-dups), and
     compacts the surviving items back to disk as that batch's
     append-only increment. No in-memory state crosses micro-batch
     boundaries, so a process restart between any two batches changes

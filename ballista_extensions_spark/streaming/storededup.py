@@ -1,8 +1,8 @@
-"""Store-backed streaming media dedup — the restart-survivable form.
+"""Store-backed streaming near-duplicate dedup, restart-survivable.
 
-``stateful.stream_first_occurrence`` keeps dedup state in the Spark
-state store, which lives and dies with the streaming checkpoint. This
-module instead keeps the state in the persisted perceptual-hash store
+``sinks.first_occurrence_sink`` drops exact repeats of a key against
+its own committed output. This module keeps near-duplicate state in
+the persisted perceptual-hash store
 (:mod:`operators.phashstore` layout, path-backed): every micro-batch
 builds a FRESH store handle purely from disk, finds duplicates both
 AGAINST the store and WITHIN the batch itself, routes every duplicate
@@ -12,7 +12,7 @@ process restart between any two micro-batches changes nothing, which
 is exactly the property VERDICT r10 #8 asked the streaming path to
 gain.
 
-Dedup semantics per batch (the stream_first_occurrence convention
+Dedup semantics per batch (first_occurrence_sink's min-id convention
 lifted to near-dups): an item is REJECTED iff it matches stored
 content (any hamming ≤ threshold pair with the store) or an
 earlier-id item of its own batch; intra-batch pairs report the
@@ -323,7 +323,7 @@ def semdedup_store_sink(
     the store and within the batch — pairwise work is ONE equi-join on
     ``cell``, never a cartesian, the SemDeDup scale contract — routes
     every pair to the sink (earlier item survives:
-    stream_first_occurrence's min-id convention lifted to cosine
+    first_occurrence_sink's min-id convention lifted to cosine
     space), and compacts the accepted members back as that batch's
     append-only increment, partitioned by cell (the inverted-file
     layout, so the NEXT batch's probe prunes to its own cells).
@@ -471,7 +471,7 @@ def phash_store_dedup_sink(
         batch = _members(batch_df, "id", "dhash")
         store_pairs = _probe_members(store, batch, threshold)
         # within-batch duplicates: the earlier id is the survivor and
-        # reports as stored_id (stream_first_occurrence's min-id
+        # reports as stored_id (first_occurrence_sink's min-id
         # convention lifted to near-dups)
         intra_pairs = _member_near_dup_pairs(batch, threshold, bands).select(
             F.col("id_a").alias("stored_id"),

@@ -30,6 +30,8 @@ import sys
 
 import pytest
 
+from ballista_extensions_spark.queries.registry import REPO_ROOT
+
 def _absent(mod: str) -> bool:
     try:
         return importlib.util.find_spec(mod) is None
@@ -41,7 +43,7 @@ _MISSING = [m for m in ("grpc", "google.protobuf", "grpc_status") if _absent(m)]
 
 _SCRIPT = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 # remote("local[4]") starts an in-process Connect SERVER and connects a
@@ -51,7 +53,7 @@ spark = SparkSession.builder.remote("local[4]").getOrCreate()
 out = {"is_connect": "connect" in type(spark).__module__}
 
 import __spark_entry__ as e
-sf = "/root/testdata/sf0.001"
+sf = sys.argv[2]
 out["entry_rows"] = len(e.entry(spark).collect())
 qs = e.queries()
 out["dedup_rows"] = len(qs["dedup_exact"](spark, sf).collect())
@@ -69,10 +71,10 @@ print("RESULT:" + json.dumps(out))
         "install grpcio/grpcio-status to enable this boundary test"
     ),
 )
-def test_queries_survive_connect_plan_boundary():
+def test_queries_survive_connect_plan_boundary(sf_dir):
     env = dict(os.environ)
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, REPO_ROOT, sf_dir],
         capture_output=True,
         text=True,
         timeout=300,

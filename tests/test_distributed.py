@@ -36,16 +36,18 @@ import os
 import subprocess
 import sys
 
+from ballista_extensions_spark.queries.registry import REPO_ROOT
+
 _SCRIPT = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from ballista_extensions_spark.session import get_session
 import __spark_entry__ as e
 
 spark = get_session("distributed-smoke")
 out = {"master": spark.sparkContext.master}
 qs = e.queries()
-sf = "/root/testdata/sf0.001"
+sf = sys.argv[2]
 out["entry_rows"] = len(e.entry(spark).collect())
 out["dedup_rows"] = len(qs["dedup_exact"](spark, sf).collect())
 decoded = qs["multimodal_decode_real"](spark, sf).collect()
@@ -88,11 +90,11 @@ print("RESULT:" + json.dumps(out))
 """
 
 
-def test_queries_survive_scheduler_boundary():
+def test_queries_survive_scheduler_boundary(sf_dir):
     env = dict(os.environ)
     env["SPARK_GRAFT_MASTER"] = "local-cluster[2,2,2048]"
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, REPO_ROOT, sf_dir],
         capture_output=True,
         text=True,
         timeout=300,

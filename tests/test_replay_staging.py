@@ -4,7 +4,8 @@ partitions are sized from the staged files' footers, checkpoint renames
 fork no ``readlink`` (io._REQUIRED_CONFS names the FileSystem-based
 checkpoint manager) and no written file forks ``chmod`` (the session's
 ``file:`` FileSystem). A restart from a checkpoint that manager wrote
-reads its state back."""
+reads its state back, and a restart of the media replay's
+first-occurrence sink reads its own committed output back."""
 
 from __future__ import annotations
 
@@ -21,13 +22,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ballista_extensions_spark.io import load_table
+from ballista_extensions_spark.operators.multimodal import docs_png_dhash
 from ballista_extensions_spark.queries import registry, streaming_replay
 from ballista_extensions_spark.queries.streaming_replay import (
+    _drain,
     _replay,
     _thirds,
     _write_ordered_slices,
 )
 from ballista_extensions_spark.streaming.ops import dedup_stream
+from ballista_extensions_spark.streaming.sinks import first_occurrence_sink
 
 _EVENTS = "event_id long, ts timestamp, user_id long, event_type string"
 
@@ -90,15 +94,14 @@ def test_ordered_slices_reject_split_slice(spark, sf_dir, tmp_path):
         spark.conf.set(key, old)
 
 
-def test_dedup_restart_reads_checkpointed_state(spark, sf_dir, tmp_path):
-    """Stop after slices 0-1, add slice 2, restart from the same
-    checkpoint: the sink equals an uninterrupted run's. Slice 2 re-ships
-    slice 1's rows, so only state deltas written before the restart and
-    read back after it keep those rows out of batch 2."""
-    e = _events(spark, sf_dir)
+def _restart_matches_whole(tmp_path, tagged, replay):
+    """Stage ``tagged``'s three slices; run ``replay(root, in_dir)`` over
+    all of them in one root, and over slices 0-1 then, restarted from
+    the same checkpoint, slice 2 in another. Assert both leave the same
+    rows; return the restarted root and those rows."""
     staged = str(tmp_path / "staged")
     os.makedirs(staged)
-    _write_ordered_slices(_thirds(e, "event_id", redeliver=True), 3, staged)
+    _write_ordered_slices(tagged, 3, staged)
     slices = sorted(os.listdir(staged))
 
     def run(root, names):
@@ -106,21 +109,61 @@ def test_dedup_restart_reads_checkpointed_state(spark, sf_dir, tmp_path):
         os.makedirs(in_dir, exist_ok=True)
         for n in names:  # copy2 keeps the ordered mtimes
             shutil.copy2(os.path.join(staged, n), in_dir)
-        return _replay(
+        return _rows(replay(root, in_dir))
+
+    whole = run(str(tmp_path / "whole"), slices)
+    restarted = str(tmp_path / "restarted")
+    run(restarted, slices[:2])
+    assert run(restarted, slices[2:]) == whole
+    return restarted, whole
+
+
+def test_dedup_restart_reads_checkpointed_state(spark, sf_dir, tmp_path):
+    """Stop after slices 0-1, add slice 2, restart from the same
+    checkpoint: the sink equals an uninterrupted run's. Slice 2 re-ships
+    slice 1's rows, so only state deltas written before the restart and
+    read back after it keep those rows out of batch 2."""
+    restarted, _ = _restart_matches_whole(
+        tmp_path,
+        _thirds(_events(spark, sf_dir), "event_id", redeliver=True),
+        lambda root, in_dir: _replay(
             spark,
             in_dir,
             _EVENTS,
             os.path.join(root, "out"),
             lambda s: dedup_stream(s, watermark="3650 days"),
-        )
-
-    whole = _rows(run(str(tmp_path / "whole"), slices))
-    restarted = str(tmp_path / "restarted")
-    run(restarted, slices[:2])
-    assert _rows(run(restarted, slices[2:])) == whole
+        ),
+    )
     state = os.path.join(restarted, "ckpt", "state")
     deltas = {f for _, _, fs in os.walk(state) for f in fs if f.endswith(".delta")}
     assert {"2.delta", "3.delta"} <= deltas
+
+
+def test_media_restart_reads_committed_output(spark, sf_dir, tmp_path):
+    """The media replay's chain (fingerprints into first_occurrence_sink)
+    stopped after slices 0-1 and restarted from the same checkpoint with
+    slice 2 leaves the sink an uninterrupted run leaves. Slice 2
+    re-ships slice 1's rows, so only the output committed before the
+    restart keeps their fingerprints out of batch 2; no state store is
+    written."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def replay(root, in_dir):
+        out = os.path.join(root, "out")
+        got = _drain(
+            spark,
+            in_dir,
+            "doc_id long, text string",
+            first_occurrence_sink(out, "dhash", "id"),
+            lambda s: docs_png_dhash(s.repartition("doc_id")),
+        )
+        return spark.read.schema(got).parquet(out)
+
+    restarted, whole = _restart_matches_whole(
+        tmp_path, _thirds(docs, "doc_id", redeliver=True), replay
+    )
+    assert {r[2] for r in whole} == {0, 1, 2}
+    assert not os.path.exists(os.path.join(restarted, "ckpt", "state"))
 
 
 class _RunIds(StreamingQueryListener):
@@ -181,21 +224,19 @@ class _Staged(Exception):
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_state_parts_from_footers(spark, sf_dir, sf, tmp_path, monkeypatch):
-    """The dedup, heavy_hitters and media_dedup replays size their state
-    from the staged slices' footer counts; at parallelism 2, 4 and 32
+    """The dedup and heavy_hitters replays size their state from the
+    staged slices' footer counts; at parallelism 2, 4 and 32
     that gives the partition counts the former count()-derived sizing
     gave (its formulas are the reference here)."""
     d = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), sf)
     if not os.path.isdir(d):
         pytest.skip(f"no {sf} test data beside {sf_dir}")
     n_ev = load_table(spark, d, "events").count()
-    n_docs = load_table(spark, d, "documents").count()
-    batch_ev, batch_docs = math.ceil(2 * n_ev / 3), math.ceil(2 * n_docs / 3)
+    batch_ev = math.ceil(2 * n_ev / 3)
     # (keys, rows, python_op) as sized from count() before footer sizing
     reference = {
         "streaming_dedup_replay": (batch_ev, batch_ev, False),
         "streaming_heavy_hitters_replay": (16, math.ceil(n_ev / 3), True),
-        "streaming_media_dedup_replay": (batch_docs, batch_docs, True),
     }
     state_parts = streaming_replay._state_parts
     calls = []

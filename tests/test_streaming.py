@@ -447,113 +447,127 @@ def test_locf_gapfill_stream_matches_batch_twin(spark, events_dir, tmp_path_fact
     assert got == want
 
 
-def test_stream_first_occurrence_cross_batch_state(spark, tmp_path_factory):
-    """Keys seen in an earlier micro-batch must be flagged not-first
-    from STATE; within a batch the min id takes the flag; each input
-    row is emitted exactly once."""
+def _first_occurrences(spark, root, schema, batches, key, id_col):
+    """Stream ``batches`` (lists of rows), one file per micro-batch in
+    order, through ``first_occurrence_sink`` and return the sink's rows
+    as ``{(key, id, batch_id)}`` with its column types."""
     import os
-    import time
 
-    from ballista_extensions_spark.streaming.stateful import (
-        stream_first_occurrence,
+    from ballista_extensions_spark.queries.streaming_replay import (
+        _drain,
+        _write_ordered_slices,
+    )
+    from ballista_extensions_spark.streaming.sinks import (
+        first_occurrence_sink,
     )
 
-    base = tmp_path_factory.mktemp("firstocc")
-    d = str(base / "in")
-    # batch 1: key 10 (ids 3, 1 — min 1 is first), key 20 (id 2)
-    spark.createDataFrame(
-        [(3, 10), (1, 10), (2, 20)], "id long, k long"
-    ).coalesce(1).write.parquet(d)
-    first = [os.path.join(d, f) for f in os.listdir(d)
-             if f.endswith(".parquet")]
-    # batch 2: key 10 again (id 7 — suppressed by state), key 30 (id 5)
-    spark.createDataFrame(
-        [(7, 10), (5, 30)], "id long, k long"
-    ).coalesce(1).write.mode("append").parquet(d)
-    # strictly increasing mtimes pin micro-batch order
-    now = time.time()
-    for f in first:
-        os.utime(f, (now - 100, now - 100))
-    stream = (
-        spark.readStream.schema("id long, k long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    d, out = str(root / "in"), str(root / "out")
+    os.makedirs(d)
+    rows = [(*r, k) for k, batch in enumerate(batches) for r in batch]
+    tagged = spark.createDataFrame(rows, f"{schema}, __k int")
+    _write_ordered_slices(tagged, len(batches), d)
+    _drain(spark, d, schema, first_occurrence_sink(out, key, id_col))
+    got = spark.read.parquet(out)
+    assert got.columns == [key, id_col, "__batch_id"]
+    return {tuple(r) for r in got.collect()}, dict(got.dtypes)
+
+
+def test_first_occurrence_sink_cross_batch(spark, tmp_path_factory):
+    """Within a batch the min id of a key is its first occurrence; a
+    key an earlier micro-batch committed is suppressed in later ones."""
+    got, _ = _first_occurrences(
+        spark,
+        tmp_path_factory.mktemp("firstocc"),
+        "id long, k long",
+        # batch 0: key 10 (ids 3, 1), key 20 (id 2); batch 1: key 10
+        # again (id 7), key 30 (id 5)
+        [[(3, 10), (1, 10), (2, 20)], [(7, 10), (5, 30)]],
+        "k",
+        "id",
     )
-    q = (
-        stream_first_occurrence(stream, "k", "id")
-        .writeStream.format("memory")
-        .queryName("firstocc_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["id"]: (r["k"], r["is_first"])
-        for r in spark.sql("SELECT * FROM firstocc_sink").collect()
-    }
     assert got == {
-        1: (10, True),    # batch-min of key 10
-        3: (10, False),   # same batch, larger id
-        2: (20, True),
-        7: (10, False),   # later batch: suppressed by STATE
-        5: (30, True),
+        (10, 1, 0),  # batch-min of key 10; ids 3 and 7 are repeats
+        (20, 2, 0),
+        (30, 5, 1),
     }
 
 
-def test_stream_first_occurrence_string_key_and_id(spark, tmp_path_factory):
-    """ADVICE r10: the generic signature used to hardcode long for key
-    and id; non-long keys (string URLs, digests) must now propagate
-    their schema types through output and state."""
-    import os
-    import time
-
-    from ballista_extensions_spark.streaming.stateful import (
-        stream_first_occurrence,
-    )
-
-    base = tmp_path_factory.mktemp("firstocc_str")
-    d = str(base / "in")
-    spark.createDataFrame(
-        [("b", "http://x"), ("a", "http://x"), ("c", "http://y")],
+def test_first_occurrence_sink_string_key_and_id(spark, tmp_path_factory):
+    """Non-long keys (string URLs, digests) and ids keep their types
+    through the sink's output and its state read."""
+    got, dtypes = _first_occurrences(
+        spark,
+        tmp_path_factory.mktemp("firstocc_str"),
         "id string, url string",
-    ).coalesce(1).write.parquet(d)
-    first = [os.path.join(d, f) for f in os.listdir(d)
-             if f.endswith(".parquet")]
-    spark.createDataFrame(
-        [("d", "http://x"), ("e", "http://z")], "id string, url string"
-    ).coalesce(1).write.mode("append").parquet(d)
-    now = time.time()
-    for f in first:
-        os.utime(f, (now - 100, now - 100))
-    stream = (
-        spark.readStream.schema("id string, url string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+        [
+            [("b", "http://x"), ("a", "http://x"), ("c", "http://y")],
+            [("d", "http://x"), ("e", "http://z")],
+        ],
+        "url",
+        "id",
     )
-    out = stream_first_occurrence(stream, "url", "id")
-    assert dict(out.dtypes) == {
-        "id": "string", "url": "string", "is_first": "boolean"
-    }
-    q = (
-        out.writeStream.format("memory")
-        .queryName("firstocc_str_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["id"]: (r["url"], r["is_first"])
-        for r in spark.sql("SELECT * FROM firstocc_str_sink").collect()
-    }
+    assert dtypes == {"url": "string", "id": "string", "__batch_id": "int"}
     assert got == {
-        "a": ("http://x", True),   # lexicographic batch-min
-        "b": ("http://x", False),
-        "c": ("http://y", True),
-        "d": ("http://x", False),  # later batch: suppressed by STATE
-        "e": ("http://z", True),
+        ("http://x", "a", 0),  # lexicographic batch-min
+        ("http://y", "c", 0),
+        ("http://z", "e", 1),  # "d" is a later-batch repeat
     }
+
+
+def _sink_rows(spark, out):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in spark.read.parquet(out).collect())
+
+
+def test_first_occurrence_sink_null_key(spark, tmp_path):
+    """NULL is one key, as in a ``PARTITION BY``: it keeps its batch
+    min once, and a later NULL is a repeat."""
+    from ballista_extensions_spark.streaming.sinks import (
+        first_occurrence_sink,
+    )
+
+    out = str(tmp_path / "out")
+    sink = first_occurrence_sink(out, "k", "id")
+    schema = "id long, k long"
+    sink(spark.createDataFrame([(2, None), (1, None), (3, 5)], schema), 0)
+    sink(spark.createDataFrame([(0, None), (6, 5), (7, 8)], schema), 1)
+    assert _sink_rows(spark, out) == {
+        (None, 1, 0): 1,  # batch-min of the NULL key
+        (5, 3, 0): 1,
+        (8, 7, 1): 1,  # ids 0 (NULL) and 6 (key 5) are repeats
+    }
+
+
+def test_first_occurrence_sink_redelivery(spark, tmp_path):
+    """An at-least-once redelivery of batch 1 probes only what batches
+    before it committed and overwrites only its own directory: running
+    it twice leaves identical rows. A state directory that exists but
+    cannot be read raises rather than reading as empty."""
+    import os
+
+    from ballista_extensions_spark.streaming.sinks import (
+        first_occurrence_sink,
+    )
+
+    out = str(tmp_path / "out")
+    sink = first_occurrence_sink(out, "k", "id")
+    schema = "id long, k long"
+    b0 = spark.createDataFrame([(1, 10), (2, 20)], schema)
+    b1 = spark.createDataFrame([(3, 10), (4, 30), (5, 30)], schema)
+    sink(b0, 0)
+    sink(b1, 1)
+    once = _sink_rows(spark, out)
+    assert once == {(10, 1, 0): 1, (20, 2, 0): 1, (30, 4, 1): 1}
+    sink(b1, 1)
+    assert _sink_rows(spark, out) == once
+
+    bad = str(tmp_path / "bad")
+    os.makedirs(os.path.join(bad, "__batch_id=0"))
+    with open(os.path.join(bad, "__batch_id=0", "part-0.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        first_occurrence_sink(bad, "k", "id")(b1, 1)
 
 
 def test_state_parts_sizing(spark):

@@ -12,10 +12,11 @@ store size.
 Usage: python tools/phashstore_scale.py [sf_dir] [factor]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -19,8 +19,11 @@ Exit code 1 if any regression is flagged (gate-friendly).
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load(spec: str) -> dict:
@@ -30,7 +33,7 @@ def _load(spec: str) -> dict:
             capture_output=True,
             text=True,
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         ).stdout
         return json.loads(out)
     with open(spec) as f:
@@ -84,7 +87,7 @@ def main() -> int:
         print(__doc__)
         return 2
     old = _load(args[0])
-    new = _load(args[1] if len(args) > 1 else "/root/repo/BENCH_FULL.json")
+    new = _load(args[1] if len(args) > 1 else os.path.join(ROOT, "BENCH_FULL.json"))
     ratio = _opt("ratio", 1.5)
     min_bytes = _opt("min-bytes", 65536)
 

@@ -8,10 +8,11 @@ no store-side shuffle (plan-asserted in tests); the store-side scan is
 sequential IO, so t_ingest should grow far sublinearly in store size.
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

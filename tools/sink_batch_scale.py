@@ -8,7 +8,7 @@ sinks:
 - sigstore_dedup_sink   (text MinHash store, foreachBatch)
 - phash_store_dedup_sink (media perceptual-hash store, foreachBatch)
 - semdedup_store_sink    (vector SemDeDup store, foreachBatch)
-- stream_first_occurrence (applyInPandasWithState first-occurrence)
+- first_occurrence_sink  (exact first occurrence per key, foreachBatch)
 
 Protocol mirrors the scale_smoke tables: sf0.1 base, min-of-2 per
 size, exponent = ln(t_big/t_small)/ln(size_big/size_small). Batches
@@ -18,9 +18,7 @@ duplicate clusters and measure an adversarial quadratic inside the
 verify stage rather than batch-size scaling. Each foreachBatch fn is
 invoked directly as batch_id=1 against a store seeded by a committed
 batch 0 (the sinks' own redelivery idempotence makes repeat
-invocations of batch 1 valid). The first-occurrence sink runs a
-fresh single-slice availableNow stream per rep (its wall includes
-the fixed stream-startup cost, shared by both sizes).
+invocations of batch 1 valid).
 
 Usage: python tools/sink_batch_scale.py [sf_dir] [sink ...]
 """
@@ -151,47 +149,24 @@ def main() -> None:
         ) + ("v",)
 
     def first_occ():
-        from ballista_extensions_spark.streaming.stateful import (
-            stream_first_occurrence,
+        from ballista_extensions_spark.streaming.sinks import (
+            first_occurrence_sink,
         )
 
-        def one(batch, tag):
-            base = os.path.join(root, f"fo_{tag}")
-            in_dir = os.path.join(base, "in")
-            os.makedirs(in_dir, exist_ok=True)
-            batch.select(
-                "doc_id", F.md5("text").alias("key")
-            ).coalesce(1).write.mode("overwrite").parquet(in_dir)
+        def keyed(d):
+            return d.select("doc_id", F.md5("text").alias("key"))
 
-            def run():
-                out = os.path.join(
-                    base, f"out_{time.monotonic_ns()}"
-                )
-                s = (
-                    spark.readStream.schema("doc_id long, key string")
-                    .parquet(in_dir)
-                )
-                q = (
-                    stream_first_occurrence(s, "key", "doc_id")
-                    .writeStream.format("parquet")
-                    .option("path", os.path.join(out, "sink"))
-                    .option(
-                        "checkpointLocation", os.path.join(out, "ck")
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-
-            return timed(run)
-
-        return one(small_d, "small"), one(big_d, "big"), "d"
+        return run_foreach(
+            "first",
+            lambda p: first_occurrence_sink(p, "key", "doc_id"),
+            keyed(seed_d), keyed(small_d), keyed(big_d),
+        ) + ("d",)
 
     sinks = {
         "sigstore_dedup_sink": sig_sink,
         "phash_store_dedup_sink": phash_sink,
         "semdedup_store_sink": sem_sink,
-        "stream_first_occurrence": first_occ,
+        "first_occurrence_sink": first_occ,
     }
     print("| sink | t_small (s) | t_big (s) | exponent |")
     print("|---|---|---|---|")

@@ -22,9 +22,10 @@ Usage: python tools/train_dsir.py [sf_dir]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ballista_extensions_spark.operators.dsir import (  # noqa: E402
     B_BI,

@@ -21,11 +21,12 @@ literals).
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ballista_extensions_spark.operators.qualityclassifier import (  # noqa: E402
     BASE,
