@@ -143,9 +143,10 @@ def get_oracles() -> dict[str, str]:
 
 @functools.cache
 def code_fingerprint(name: str) -> str:
-    """Hash of the normalized AST (``ast.dump``, so comments and layout
-    do not count) of every package definition the query reaches, of its
-    oracle text and of ``session.py``."""
+    """Hash of the normalized AST (``ast.dump`` without docstrings, so
+    comments, docstrings and layout do not count) of every package
+    definition the query reaches, of its oracle text and of
+    ``session.py``."""
     parts = [f"{key}\n{_definition(*key)[0]}" for key in sorted(reach(QUERIES[name]))]
     parts += [str(ORACLES.get(name)), ast.dump(_module(f"{_PKG}.session")[0])]
     return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
@@ -167,12 +168,17 @@ def reach(fn: QueryFn) -> set[tuple[str, str]]:
 
 @functools.cache
 def _module(mod: str) -> tuple[ast.Module, bool, dict[str, list[ast.stmt]]]:
-    """A package module's AST, whether it is a package, and its
-    top-level statements by the names they bind. Finding the spec
-    imports the parent packages, as an import statement would."""
+    """A package module's AST with every module, class and function
+    docstring dropped, whether it is a package, and its top-level
+    statements by the names they bind. Finding the spec imports the
+    parent packages, as an import statement would."""
     spec = importlib.util.find_spec(mod)
     with open(spec.origin) as f:
         tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if (isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+                and ast.get_docstring(node, clean=False) is not None):
+            del node.body[0]
     bindings: dict[str, list[ast.stmt]] = {}
     for stmt in tree.body:
         if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):

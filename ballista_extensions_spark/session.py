@@ -123,6 +123,11 @@ def get_session(app_name: str = "ballista_extensions_spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # ANSI off: TPC-H-ish doubles; we validate explicitly in operators.
         .config("spark.sql.ansi.enabled", "false")
+        # No Python call-site capture: otherwise every Column/F.col call
+        # sends 10 more py4j commands (origin set/clear, a conf read) that
+        # only decorate error messages. PySpark caches the first value it
+        # reads per process, so it must be set before any DataFrame call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Local mode: the driver JVM is also the executor, so it holds
         # every localCheckpoint block of every concurrently-live frame
         # plus broadcast build memory. 16g of the box's 128 GiB is the

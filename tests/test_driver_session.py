@@ -67,3 +67,25 @@ def test_checkpoint_manager_is_filesystem_based(
     for session in (spark, foreign_session):
         load_table(session, sf_dir, "events")
         assert _checkpoint_manager(session, tmp_path) == _FS_MANAGER
+
+
+def test_session_sends_no_call_site_origins(spark, documents, monkeypatch):
+    """The engine's session turns PySpark's per-call origin capture off:
+    Column and ``F.col`` calls send no ``PySparkCurrentOrigin`` set/clear
+    round-trips. PySpark caches the flag per process on its first read,
+    so the test clears that cache and lets it re-read this session."""
+    import pyspark.errors.utils as origin
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(origin, "_enable_debugging_cache", None)
+    sent: list[str] = []
+    send = ClientServerConnection.send_command
+    monkeypatch.setattr(ClientServerConnection, "send_command",
+                        lambda self, command: sent.append(command) or send(self, command))
+    F.col("x").alias("y")
+    documents.select("doc_id")
+    documents.filter(F.col("doc_id") > 1)
+    assert sent, "no py4j command was counted"
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]
+    assert origin.is_debugging_enabled() is False

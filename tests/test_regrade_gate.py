@@ -113,6 +113,13 @@ def test_comment_only_edit_requeues_nothing(base, tmp_path):
     line = 'AS band_id, xxhash64({cols}) AS band_hash)"\n'
     assert not _requeued(base, tmp_path, "operators/dedup.py", line,
                          line[:-1] + "  # bands\n\n# note\n")
+    # Docstrings of a function and of session.py, which every query hashes.
+    assert not _requeued(base, tmp_path / "fn_doc", "operators/dedup.py",
+                         '"""(doc, band_id, band_hash) rows from',
+                         '"""(doc, band_id, band_hash) rows, one per band, from')
+    assert not _requeued(base, tmp_path / "module_doc", "session.py",
+                         '"""SparkSession factory with pinned configs.',
+                         '"""SparkSession factory with pinned confs.')
 
 
 def test_oracle_edit_requeues_only_its_query(base, tmp_path):

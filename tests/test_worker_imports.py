@@ -1,10 +1,14 @@
-"""The per-task import-cache cost of reused Python workers.
+"""The per-task fixed costs of reused Python workers.
 
 PySpark calls ``importlib.invalidate_caches()`` at the start of every
 task in a reused worker; before CPython 3.13 every zipimporter then
 re-parses its whole archive. ``io._install_zip_stat_check`` (run when
-the package is imported) keeps an unchanged archive's listing. These
-tests count ``zipimport._read_directory`` calls, never time them.
+the package is imported) keeps an unchanged archive's listing. After
+every task PySpark runs a full ``gc.collect()``;
+``io._freeze_worker_heap`` (also run on import) freezes the worker's
+import-time heap so that collection skips it. These tests count
+``zipimport._read_directory`` calls and tracked objects, never time
+them.
 """
 
 from __future__ import annotations
@@ -95,16 +99,46 @@ def test_reused_worker_skips_archive_reread(spark, documents):
         marked = getattr(zipimport.zipimporter.invalidate_caches, "_bx_stat_checked", False)
         yield pd.DataFrame({"pid": [os.getpid()], "marked": [marked], "reads": [len(calls)]})
 
-    df = documents.select("doc_id").coalesce(1).mapInPandas(
-        probe, schema="pid long, marked boolean, reads long"
-    )
+    row = _from_reused_worker(documents, probe, "pid long, marked boolean, reads long")
+    assert row.marked and row.reads == 0, row
+
+
+def test_reused_worker_heap_is_frozen(spark, documents):
+    """A worker that imported the package has frozen its import-time
+    heap, so PySpark's per-task ``gc.collect()`` walks only what was
+    allocated since; the driver, which imported the package at the top
+    of this file, is never frozen."""
+    import gc
+
+    import pandas as pd
+
+    def probe(batches):
+        import gc
+        import os
+
+        import ballista_extensions_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "frozen": [gc.get_freeze_count()],
+                            "unfrozen": [len(gc.get_objects())]})
+
+    row = _from_reused_worker(documents, probe, "pid long, frozen long, unfrozen long")
+    assert row.frozen > 0, row
+    assert row.unfrozen < row.frozen / 10, row
+    assert gc.get_freeze_count() == 0
+
+
+def _from_reused_worker(documents, probe, schema):
+    """The row ``probe`` returns from a Python worker an earlier action
+    of this call already used (a one-partition ``mapInPandas``)."""
+    df = documents.select("doc_id").coalesce(1).mapInPandas(probe, schema=schema)
     # The worker factory hands idle workers out first-in first-out, so
     # a worker this test already used comes back within a few actions.
     seen: set[int] = set()
     for _ in range(12):
         (row,) = df.collect()
         if row.pid in seen:
-            assert row.marked and row.reads == 0, row
-            return
+            return row
         seen.add(row.pid)
     pytest.fail(f"no Python worker was reused across {len(seen)} actions")
