@@ -185,21 +185,13 @@ def compact_into_phash_store(
     table-backed forms — the store is keyed by id and the first
     compaction of an id wins (a later row reusing an id is dropped,
     the same first-wins contract as ``storededup``'s replay path)."""
-    width, mask = _validate_banding(0, store.bands)
     bm = _members(batch_hashes, id_col, hash_col)
     if reject_ids is not None:
         bm = bm.join(reject_ids, "id", "left_anti")
     bm = bm.join(store.members.select("id"), "id", "left_anti")
-    fresh_h = (
-        bm.select("h")
-        .distinct()
-        .join(store.banded.select("h").distinct(), "h", "left_anti")
-    )
     merged = PHashStore(
         members=store.members.unionByName(bm),
-        banded=store.banded.unionByName(
-            _band_slices(fresh_h, width, mask, store.bands)
-        ),
+        banded=store.banded.unionByName(_fresh_banded(store, bm)),
         bands=store.bands,
     )
     if table_prefix is None:
@@ -207,3 +199,16 @@ def compact_into_phash_store(
     return _persist(
         store.members.sparkSession, merged, table_prefix, buckets
     )
+
+
+def _fresh_banded(store: PHashStore, members: DataFrame) -> DataFrame:
+    """(h, band, slice) rows for the hashes of (id, h) ``members`` that
+    ``store`` has never banded: the store bands each distinct hash
+    once, and an increment adds rows only for its new hashes."""
+    width, mask = _validate_banding(0, store.bands)
+    fresh_h = (
+        members.select("h")
+        .distinct()
+        .join(store.banded.select("h").distinct(), "h", "left_anti")
+    )
+    return _band_slices(fresh_h, width, mask, store.bands)

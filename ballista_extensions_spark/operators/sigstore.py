@@ -18,9 +18,9 @@ State model (three frames, optionally persisted as bucketed tables):
   BUILD time). Ingest caps increment postings against this FROZEN
   list: a true incremental system cannot recompute corpus-wide df per
   increment without rescanning the corpus, so the cap is a build-time
-  statistic that drifts slowly and is refreshed on compaction cycles —
-  the documented contract (and exactly what the paired SQL oracle
-  computes: df over the STORED corpus only).
+  statistic, fixed until the store is rebuilt — the documented
+  contract (and exactly what the paired SQL oracle computes: df over
+  the STORED corpus only).
 
 Ingest emits every (stored doc, new doc) pair whose df-capped n-gram
 Jaccard clears the threshold: candidates from the banded equi-join
@@ -28,10 +28,14 @@ Jaccard clears the threshold: candidates from the banded equi-join
 exact — precision 1.0, recall the banding collision probability
 (b=64, r=2 defaults: ≥ 99.98% at s=0.35, measured 100% on the test
 corpora — the same battery ``dedup_probabilistic_audit`` re-proves
-per grading round). Compaction unions an accepted increment's
-signatures into the store and rewrites the bucketed tables — a
-per-bucket merge at scale, after which the next increment joins
-against the grown store with the identical plan shape.
+per grading round).
+
+The module builds the store (``build_signature_store``), signs an
+increment under its frozen stop list (``batch_signatures``) and probes
+the store with it (``ingest_against_store``). The streaming text sink
+(``streaming/storededup.py``) keeps the same three frames in its
+per-batch layout and signs each batch with the same stop-list and
+fused signature steps.
 """
 
 from __future__ import annotations
@@ -79,21 +83,12 @@ def build_signature_store(
     # was a whole extra exchange of the posting payload (r17, guide
     # §2.3/§2.4 — the same restructure the streaming sigstore sink got).
     raw = _word_postings(docs, text_col, id_col, n, distinct=False)
-    stop = (
-        raw.groupBy("s")
-        .agg(F.count_distinct("doc").alias("df_s"))
-        .filter(F.col("df_s") > max_df)
-        .select("s")
-    )
+    stop = _stop_list(raw, max_df)
     capped = raw.join(stop, "s", "left_anti")
     # ONE groupBy produces BOTH the capped sets and the MinHash
     # signatures — the pre-r17 operator aggregated them separately, so
     # the build tokenized and capped the corpus twice (job-profiled as
-    # equal-duration job pairs on signature_store_incremental). Lazy
-    # localCheckpoint: the two consumers (sets in the verification
-    # join, bands in the candidate join) read one materialized frame,
-    # and racers fall back to the groupBy's shuffle output, which the
-    # DAGScheduler dedups across concurrent jobs.
+    # equal-duration job pairs on signature_store_incremental).
     sets, band_rows = _fused_sets_and_bands(capped, bands, rows_per_band)
     store = SignatureStore(bands=band_rows, sets=sets, stop=stop)
     if table_prefix is None:
@@ -101,12 +96,30 @@ def build_signature_store(
     return _persist(docs.sparkSession, store, table_prefix, buckets)
 
 
+def _stop_list(raw: DataFrame, max_df: int) -> DataFrame:
+    """The heavy shingles ``s`` of (doc, s) postings: document
+    frequency > ``max_df``. ``count_distinct`` makes duplicate
+    postings harmless, in one partially-aggregated shuffle."""
+    return (
+        raw.groupBy("s")
+        .agg(F.count_distinct("doc").alias("df_s"))
+        .filter(F.col("df_s") > max_df)
+        .select("s")
+    )
+
+
 def _fused_sets_and_bands(
     capped: DataFrame, bands: int, rows_per_band: int
 ) -> tuple[DataFrame, DataFrame]:
     """(sets, band_rows) off ONE per-doc groupBy over capped postings
-    (collect_set fused with the codegen'd MinHash min lanes — the
-    streaming sink's r17 shape, shared by the batch store)."""
+    (collect_set fused with the codegen'd MinHash min lanes), shared by
+    the batch store and the streaming sink. The grouped frame is
+    materialized by an EAGER localCheckpoint at call time, so both
+    consumers (sets in the verification join, bands in the candidate
+    join) read one materialized frame. A lazy one is raced by the
+    consumers' concurrent jobs, whose late tasks then report SQL
+    metrics of a plan the driver has already dropped (the
+    ``imagedup._members`` finding)."""
     from ballista_extensions_spark.operators.dedup import (
         _band_explode,
         _minhash_sig_aggs,
@@ -119,7 +132,7 @@ def _fused_sets_and_bands(
             F.collect_set("s").alias("shset"),
             *_minhash_sig_aggs(bands * rows_per_band),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     sets = grouped.select("doc", "shset")
     band_rows = _band_explode(grouped, bands, rows_per_band).select(

@@ -52,7 +52,7 @@ from contextlib import contextmanager
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructType
+from pyspark.sql.types import StructType
 
 from ballista_extensions_spark.io import default_parallelism, load_table
 from ballista_extensions_spark.queries.analytics7 import _DHASH_CTE
@@ -60,6 +60,7 @@ from ballista_extensions_spark.queries.registry import register
 from ballista_extensions_spark.streaming.sinks import (
     first_occurrence_sink,
     idempotent_parquet_sink,
+    read_batches,
 )
 
 _STAGE_ROOT = "/tmp/bx_stream_replay"
@@ -253,9 +254,9 @@ def _replay(
     shuffle_parts: int | None = None,
 ) -> DataFrame:
     """``_drain`` into the idempotent parquet sink at ``out_dir`` and
-    read it back. The read names its schema (the stream's plus the
-    int ``__batch_id`` partition column that discovery would infer), so
-    no footer-inference job runs."""
+    read it back with ``read_batches``: the stream's schema plus the
+    int ``__batch_id`` partition column, so no footer-inference job
+    runs."""
     got = _drain(
         spark,
         in_dir,
@@ -265,8 +266,15 @@ def _replay(
         output_mode,
         shuffle_parts,
     )
-    got.add("__batch_id", IntegerType())
-    return spark.read.schema(got).parquet(out_dir)
+    return read_batches(spark, out_dir, got)
+
+
+def _pairs(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
+    """A store sink's duplicate pairs, every batch, read with ``schema``
+    (its ``phase`` column is the batch that found each pair)."""
+    return read_batches(
+        spark, os.path.join(store_dir, "pairs"), schema
+    ).drop("__batch_id")
 
 
 @register(
@@ -538,11 +546,8 @@ def streaming_media_dedup_replay(
         first_occurrence_sink(out_dir, "dhash", "id"),
         lambda s: docs_png_dhash(s.repartition("doc_id")),
     )
-    # the named-schema read still appends the discovered __batch_id
-    return (
-        spark.read.schema(got)
-        .parquet(out_dir)
-        .select(F.col("id").alias("media_id"), "dhash")
+    return read_batches(spark, out_dir, got).select(
+        F.col("id").alias("media_id"), "dhash"
     )
 
 
@@ -634,10 +639,9 @@ def streaming_phash_store_replay(
         phash_store_dedup_sink(store_dir, threshold=6),
         lambda s: docs_png_dhash(s.repartition("doc_id")),
     )
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema("stored_id long, new_id long, hamming long, phase long")
-        .parquet(os.path.join(store_dir, "pairs"))
+    return _pairs(
+        spark, store_dir,
+        "stored_id long, new_id long, hamming long, phase long",
     )
 
 
@@ -706,13 +710,13 @@ def streaming_sigstore_replay(
     sigstore_dedup_sink. Batch 0 bootstraps the store and FREEZES the
     stop list from its own postings (sigstore's build-time contract);
     every batch rebuilds the store handle FROM DISK (partition-pruned
-    to batch < k), finds near-dup pairs against the store AND within
+    to __batch_id < k), finds near-dup pairs against the store AND within
     itself (banded MinHash candidates, EXACT df-capped 3-gram Jaccard
     >= 0.35 verification, earlier id survives), and compacts accepted
     signatures back as its append-only increment. No in-memory state
     crosses micro-batch boundaries, so a process restart between any
     two batches changes nothing — and at-least-once redelivery of a
-    batch overwrites only its own partitions while probing the store
+    batch overwrites only its own directories while probing the store
     as of BEFORE itself (idempotence pytest:
     tests/test_storededup.py). The oracle replays the frozen stop,
     all three intra rounds and both cascaded store-probe rounds with
@@ -737,12 +741,9 @@ def streaming_sigstore_replay(
         "doc_id long, text string",
         sigstore_dedup_sink(store_dir, threshold=0.35),
     )
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(
-            "stored_id long, new_id long, jaccard double, phase long"
-        )
-        .parquet(os.path.join(store_dir, "pairs"))
+    return _pairs(
+        spark, store_dir,
+        "stored_id long, new_id long, jaccard double, phase long",
     )
 
 
@@ -829,22 +830,23 @@ def streaming_semdedup_replay(
     0, 1, 2) through streaming/storededup.py's semdedup_store_sink
     under the FROZEN 16-cell integer-lattice quantizer
     (annstore.lattice_centroids — the oracle regenerates the exact
-    doubles). Every batch rebuilds the cell-partitioned member store
-    FROM DISK (batch < k partition prune), assigns its vectors in one
+    doubles). Every batch rebuilds the member store FROM DISK
+    (__batch_id < k partition prune), assigns its vectors in one
     codegen'd pass, finds semantic-duplicate pairs by EXACT cosine
     (tau 0.4) against the store AND within itself via ONE equi-join on
     cell (never a cartesian — the SemDeDup scale contract,
     plan-asserted in tests/test_storededup.py), and compacts accepted
-    members back as its cell-partitioned append-only increment. No
+    members back as its cell-sorted append-only increment. No
     in-memory state crosses micro-batch boundaries — a process restart
     between any two batches changes nothing, and an at-least-once
-    redelivery of batch k overwrites only its own partitions while
+    redelivery of batch k overwrites only its own directories while
     probing the store as of BEFORE itself (idempotence pytest). The
     oracle replays lattice assignment, all three intra rounds and both
     cascaded store-probe rounds with exact left-fold cosine
     arithmetic, so a hash match proves cell routing, every cosine to
     the last bit AND the cross-restart accept/reject cascade. Scale:
-    probe reads only the batch's cells' files (partition filter);
+    probe reads only the batch's cells' pages (a pushed-down
+    ``cell IN`` filter over cell-sorted files);
     writes ∝ the increment's accepted members."""
     from ballista_extensions_spark.operators.annstore import (
         lattice_centroids,
@@ -877,8 +879,7 @@ def streaming_semdedup_replay(
             store_dir, lattice_centroids(_SEM_LISTS, _SEM_DIM), tau=_SEM_TAU
         ),
     )
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema("stored_id long, new_id long, cosine double, phase long")
-        .parquet(os.path.join(store_dir, "pairs"))
+    return _pairs(
+        spark, store_dir,
+        "stored_id long, new_id long, cosine double, phase long",
     )

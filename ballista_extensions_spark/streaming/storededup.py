@@ -20,106 +20,57 @@ earlier id in the ``stored_id`` column (it is the surviving
 representative). Rejected items are never compacted, but every pair
 they participate in is recorded.
 
-Layout under ``store_dir`` (append-only, one subdir per committed
-batch so foreachBatch's at-least-once delivery is idempotent — a
-re-run of batch k overwrites ONLY ``.../batch=k`` and probes the
-store as of ``batch < k``, never its own prior output):
+Layout under ``store_dir``: one table per directory, each in the
+per-batch layout of :mod:`streaming.sinks` (``write_batch`` /
+``read_batches``), so foreachBatch's at-least-once delivery is
+idempotent — a re-run of batch N overwrites ONLY
+``<table>/__batch_id=N`` and probes the store as of ``__batch_id <
+N``, never its own prior output:
 
-- ``members/batch=k/`` — accepted (id, h) rows of batch k
-- ``banded/batch=k/``  — (h, band, slice) rows of batch k's
+- ``members/`` — accepted (id, h) rows of each batch
+- ``banded/``  — (h, band, slice) rows of each batch's
   never-seen-before hashes (the store's distinct-hash discipline)
-- ``pairs/batch=k/``   — (stored_id, new_id, hamming, phase) findings
+- ``pairs/``   — (stored_id, new_id, hamming, phase) findings
 
 Scale: the probe is the phashstore plan (banded pigeonhole candidates
 over DISTINCT hashes + exact verification) and every per-batch write
 is ∝ the increment — accepted members directly, banded rows only for
 hashes the store's (small) distinct-hash table has never seen. The
 path-backed store trades the bucketed tables' exchange-free store
-side for restart-by-construction — a production deployment points the
-same code at the bucketed-table store and compacts on a cadence
-instead.
+side for restart-by-construction; the bucketed form is the batch
+store (``build_phash_store``/``build_signature_store`` with a
+``table_prefix``), which these sinks neither read nor write.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _read_or_empty(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    before_batch: int | None = None,
-) -> DataFrame:
-    """Parquet read of a ``batch=k`` partition tree; empty frame with
-    the right schema ONLY when the directory does not exist yet
-    (bootstrap — no batch has ever committed). A directory that exists
-    but cannot be read must FAIL, not silently present an empty store:
-    probing an empty store accepts every duplicate and compaction
-    would corrupt the state permanently. ``before_batch`` restricts to
-    partitions ``batch < before_batch`` — the store state as of BEFORE
-    that batch, which is what makes an at-least-once redelivery of
-    batch k exactly idempotent, and is a plain partition-prune at
-    scale."""
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    if not any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(path)
-        for f in files
-    ):
-        # dir exists (a prior run created it) but holds no data files
-        # — walk errors propagate rather than masquerading as empty
-        return spark.createDataFrame([], schema)
-    df = spark.read.parquet(path)  # discovers the `batch` partition col
-    if before_batch is not None:
-        df = df.filter(F.col("batch") < before_batch)
-    return df.drop("batch")
-
-
-def _committed_before(path: str, before_batch: int) -> bool:
-    """True iff some partition ``batch=j`` with ``j < before_batch``
-    holds committed data files. This is the bootstrap sentinel for
-    state that may be LEGITIMATELY EMPTY (a frozen stop list with no
-    heavy shingles): row-count emptiness would conflate 'committed
-    empty' with 'never committed' and re-bootstrap on every batch
-    (code-review r12)."""
-    if not os.path.isdir(path):
-        return False
-    for d in os.listdir(path):
-        if not d.startswith("batch="):
-            continue
-        try:
-            j = int(d.split("=", 1)[1])
-        except ValueError:
-            continue
-        if j < before_batch and any(
-            f.endswith(".parquet") or f == "_SUCCESS"
-            for _, _, files in os.walk(os.path.join(path, d))
-            for f in files
-        ):
-            return True
-    return False
+from ballista_extensions_spark.streaming.sinks import (
+    committed_before,
+    read_batches,
+    write_batch,
+)
 
 
 def _commit_pairs(
     pairs: DataFrame, pairs_dir: str, batch_id: int, id_col: str
 ) -> DataFrame:
     """Write a batch's duplicate pairs, tagged with ``phase``, to
-    ``pairs/batch=k`` FIRST, then derive the batch's rejects (distinct
-    ``new_id`` as ``id_col``) from the committed files: one job instead
-    of localCheckpoint + write (r17), and on an at-least-once
-    redelivery the read-back sees exactly this batch's own (just
-    rewritten) pairs."""
-    path = os.path.join(pairs_dir, f"batch={batch_id}")
+    ``pairs/__batch_id=N`` FIRST, then derive the batch's rejects
+    (distinct ``new_id`` as ``id_col``) from the committed files: one
+    job instead of localCheckpoint + write (r17), and on an
+    at-least-once redelivery the read-back sees exactly this batch's
+    own (just rewritten) pairs."""
     tagged = pairs.withColumn("phase", F.lit(batch_id).cast("long"))
-    tagged.write.mode("overwrite").parquet(path)
+    write_batch(tagged, pairs_dir, batch_id)
     return (
-        pairs.sparkSession.read.schema(tagged.schema)
-        .parquet(path)
+        read_batches(
+            pairs.sparkSession, pairs_dir, tagged.schema, batch_id=batch_id
+        )
         .select(F.col("new_id").alias(id_col))
         .distinct()
     )
@@ -150,20 +101,20 @@ def sigstore_dedup_sink(
     FIRST batch ever committed computes it from its own postings
     (df > max_df) and writes it once; every later batch signs under
     that frozen list (no corpus rescan). Layout under ``store_dir``
-    mirrors the phash sink — ``stop|bands|sets|pairs/batch=k/`` — so
-    an at-least-once redelivery of batch k overwrites only its own
-    partitions and reads the store as of ``batch < k``: idempotent by
-    construction. Scale: candidate cost ∝ batch × bucket collisions
-    (only BATCH band rows drive the join); per-batch writes ∝ the
-    increment's accepted signatures."""
+    mirrors the phash sink — ``stop|bands|sets|pairs/__batch_id=N/``
+    — so an at-least-once redelivery of batch N overwrites only its
+    own directories and reads the store as of ``__batch_id < N``:
+    idempotent by construction. Scale: candidate cost ∝ batch ×
+    bucket collisions (only BATCH band rows drive the join); per-batch
+    writes ∝ the increment's accepted signatures."""
     from ballista_extensions_spark.operators.dedup import (
-        _band_explode,
-        _minhash_sig_aggs,
         _verify_capped_jaccard,
         _word_postings,
     )
     from ballista_extensions_spark.operators.sigstore import (
         SignatureStore,
+        _fused_sets_and_bands,
+        _stop_list,
     )
 
     stop_dir = os.path.join(store_dir, "stop")
@@ -181,63 +132,33 @@ def sigstore_dedup_sink(
         # MinHash min), so the set-semantics distinct would be a whole
         # extra exchange of the posting payload per batch (r17)
         raw = _word_postings(batch, text_col, id_col, n, distinct=False)
-        if not _committed_before(stop_dir, batch_id):
+        if not committed_before(stop_dir, batch_id):
             # bootstrap: freeze the stop list from the first committed
             # batch's own postings (sigstore's build-time contract); a
             # redelivery of this batch recomputes it identically. The
-            # sentinel is PARTITION EXISTENCE, not row count — a
-            # committed stop with zero heavy shingles is a valid
+            # rule is a committed write (``_SUCCESS``), not row count —
+            # a committed stop with zero heavy shingles is a valid
             # frozen state, not a reason to re-bootstrap. The raw
             # postings are checkpointed so the bootstrap batch
             # tokenizes ONCE (stop agg + signature agg both read the
             # materialized postings — r17 job-count optimization).
-            # df = countDistinct(doc) over the non-distinct postings —
-            # exactly the document frequency the distinct+count pair
-            # computed, in one partially-aggregated shuffle.
             raw = raw.localCheckpoint()
-            (
-                raw.groupBy("s")
-                .agg(F.count_distinct("doc").alias("df_s"))
-                .filter(F.col("df_s") > max_df)
-                .select("s")
-                .write.mode("overwrite")
-                .parquet(os.path.join(stop_dir, f"batch={batch_id}"))
-            )
+            write_batch(_stop_list(raw, max_df), stop_dir, batch_id)
         # the frozen stop as of AFTER any bootstrap this batch did —
         # reading it back off disk (instead of carrying the lazy
         # bootstrap plan) keeps the cap join a small parquet scan
-        stop = _read_or_empty(
-            spark, stop_dir, "s string", before_batch=batch_id + 1
-        )
-        capped = raw.join(stop, "s", "left_anti")
-        # ONE shuffle produces BOTH the capped sets and the MinHash
-        # signatures (guide §2.3 "aggregate before you shuffle" /
-        # §2.4 two operations keyed the same way share one exchange):
-        # the pre-r17 sink materialized bands and sets separately, so
-        # every micro-batch tokenized and capped its documents twice.
-        num_hashes = bands * rows_per_band
-        grouped = (
-            capped.select("doc", "s", F.xxhash64("s").alias("h"))
-            .groupBy("doc")
-            .agg(
-                F.collect_set("s").alias("shset"),
-                *_minhash_sig_aggs(num_hashes),
-            )
-            .localCheckpoint()
-        )
-        bsets = grouped.select("doc", "shset")
-        bbands = _band_explode(grouped, bands, rows_per_band).select(
-            "doc", F.xxhash64("band_id", "band_hash").alias("bkey")
+        stop = read_batches(spark, stop_dir, "s string", before=batch_id + 1)
+        bsets, bbands = _fused_sets_and_bands(
+            raw.join(stop, "s", "left_anti"), bands, rows_per_band
         )
         store = SignatureStore(
-            bands=_read_or_empty(
-                spark, bands_dir, "doc long, bkey long",
-                before_batch=batch_id,
+            bands=read_batches(
+                spark, bands_dir, "doc long, bkey long", before=batch_id
             ),
-            sets=_read_or_empty(
+            sets=read_batches(
                 spark, sets_dir, "doc long, shset array<string>",
-                before_batch=batch_id,
-            ),
+                before=batch_id,
+            ).select("doc", "shset"),
             stop=stop,
         )
         # ONE candidate union + ONE distinct + ONE verification join
@@ -280,25 +201,13 @@ def sigstore_dedup_sink(
         # capped set) hold no store state to collide with.
         #
         # Both keep writes read only the grouped checkpoint, the pairs
-        # read-back and store partitions batch < batch_id — the
-        # batch=k overwrite can never delete a file these plans read
-        # (static partition prune), so no checkpoint-before-write is
-        # needed.
-        stored_ids = store.sets.select("doc")
-        keep_bands = (
-            bbands.join(rejects, "doc", "left_anti")
-            .join(stored_ids, "doc", "left_anti")
-        )
-        keep_sets = (
-            bsets.join(rejects, "doc", "left_anti")
-            .join(stored_ids, "doc", "left_anti")
-        )
-        keep_bands.write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"batch={batch_id}")
-        )
-        keep_sets.write.mode("overwrite").parquet(
-            os.path.join(sets_dir, f"batch={batch_id}")
-        )
+        # read-back and store batches before batch_id — the
+        # __batch_id=N overwrite can never delete a file these plans
+        # read (static partition prune), so no checkpoint-before-write
+        # is needed.
+        gone = rejects.unionByName(store.sets.select("doc"))
+        write_batch(bbands.join(gone, "doc", "left_anti"), bands_dir, batch_id)
+        write_batch(bsets.join(gone, "doc", "left_anti"), sets_dir, batch_id)
 
     return fn
 
@@ -316,24 +225,23 @@ def semdedup_store_sink(
     :func:`sigstore_dedup_sink` (text) and :func:`phash_store_dedup_sink`
     (media) over the SemDeDup/ANN-store machinery
     (operators/semdedup.py + annstore.py). Each micro-batch (columns
-    ``vec_id``, ``embedding``) rebuilds the cell-partitioned member
-    store purely from disk (``batch < k`` partition prune), assigns
-    the increment under the FROZEN quantizer (one codegen'd narrow
-    pass), finds semantic-duplicate pairs by exact cosine BOTH against
-    the store and within the batch — pairwise work is ONE equi-join on
-    ``cell``, never a cartesian, the SemDeDup scale contract — routes
-    every pair to the sink (earlier item survives:
-    first_occurrence_sink's min-id convention lifted to cosine
-    space), and compacts the accepted members back as that batch's
-    append-only increment, partitioned by cell (the inverted-file
-    layout, so the NEXT batch's probe prunes to its own cells).
+    ``vec_id``, ``embedding``) rebuilds the member store purely from
+    disk (``__batch_id < N`` partition prune), assigns the increment
+    under the FROZEN quantizer (one codegen'd narrow pass), finds
+    semantic-duplicate pairs by exact cosine BOTH against the store and
+    within the batch — pairwise work is ONE equi-join on ``cell``,
+    never a cartesian, the SemDeDup scale contract — routes every pair
+    to the sink (earlier item survives: first_occurrence_sink's min-id
+    convention lifted to cosine space), and compacts the accepted
+    members back as that batch's append-only increment, its rows
+    sorted by cell so the NEXT batch's pushed-down ``cell IN (...)``
+    filter skips the pages of other cells.
 
     Layout under ``store_dir`` mirrors the siblings —
-    ``members|pairs/batch=k/`` — so an at-least-once redelivery of
-    batch k overwrites only its own partitions and probes the store as
-    of ``batch < k``: idempotent by construction. Scale: probe cost ∝
-    batch x cell occupancy (the store scan reads only the batch's
-    cells' files via partition pruning); writes ∝ the increment's
+    ``members|pairs/__batch_id=N/`` — so an at-least-once redelivery
+    of batch N overwrites only its own directories and probes the
+    store as of ``__batch_id < N``: idempotent by construction. Scale:
+    probe cost ∝ batch x cell occupancy; writes ∝ the increment's
     accepted members; nothing ever rescans or rewrites the store."""
     from ballista_extensions_spark.operators.annstore import assign_cells
     from ballista_extensions_spark.operators.similarity import (
@@ -358,15 +266,15 @@ def semdedup_store_sink(
             vec_col=vec_col,
         ).localCheckpoint()
         # bounded driver state (≤ n_lists ints): the batch's own cells,
-        # pushed into the store scan as a partition filter
+        # pushed into the store scan as a literal filter
         batch_cells = sorted(
             r[0] for r in assigned.select("cell").distinct().collect()
         )
-        store = _read_or_empty(
+        store = read_batches(
             spark,
             members_dir,
             f"{id_col} long, {vec_col} array<double>, cell int",
-            before_batch=batch_id,
+            before=batch_id,
         ).filter(F.col("cell").isin(batch_cells))
         b = assigned.select(
             F.col(id_col).alias("__id_b"),
@@ -401,8 +309,8 @@ def semdedup_store_sink(
             a2.withColumn("__st", F.lit(False))
         )
         # the accepted write reads only the assigned checkpoint, the
-        # just-committed pairs and store partitions batch < batch_id —
-        # the batch=k overwrite can never delete a file its plan reads
+        # just-committed pairs and store batches before batch_id — the
+        # __batch_id=N overwrite can never delete a file its plan reads
         # (static partition prune), so no checkpoint-before-write.
         pairs = (
             probe.join(b, "cell")
@@ -418,8 +326,8 @@ def semdedup_store_sink(
         )
         rejects = _commit_pairs(pairs, pairs_dir, batch_id, id_col)
         accepted = assigned.join(rejects, id_col, "left_anti")
-        accepted.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
+        write_batch(
+            accepted.sortWithinPartitions("cell"), members_dir, batch_id
         )
 
     return fn
@@ -433,33 +341,32 @@ def phash_store_dedup_sink(
     store AND within the batch, then compact the surviving items in.
     Returns the callable for ``writeStream.foreachBatch``."""
     from ballista_extensions_spark.operators.imagedup import (
-        _band_slices,
         _member_near_dup_pairs,
         _members,
         _validate_banding,
     )
     from ballista_extensions_spark.operators.phashstore import (
         PHashStore,
+        _fresh_banded,
         _probe_members,
     )
 
     members_dir = os.path.join(store_dir, "members")
     banded_dir = os.path.join(store_dir, "banded")
     pairs_dir = os.path.join(store_dir, "pairs")
+    _validate_banding(threshold, bands)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        width, mask = _validate_banding(threshold, bands)
         # the whole point: the store handle is rebuilt from DISK every
         # batch — no in-memory state crosses micro-batch boundaries
         store = PHashStore(
-            members=_read_or_empty(
-                spark, members_dir, "id long, h long",
-                before_batch=batch_id,
+            members=read_batches(
+                spark, members_dir, "id long, h long", before=batch_id
             ),
-            banded=_read_or_empty(
+            banded=read_batches(
                 spark, banded_dir, "h long, band int, slice long",
-                before_batch=batch_id,
+                before=batch_id,
             ),
             bands=bands,
         )
@@ -486,24 +393,16 @@ def phash_store_dedup_sink(
         )
         # members first, banded second, both straight to disk: each
         # plan reads only the batch checkpoint, the just-committed
-        # pairs/members files and store partitions batch < batch_id,
-        # so the batch=k overwrites can never delete files the plans
+        # pairs/members files and store batches before batch_id, so
+        # the __batch_id=N overwrites can never delete files the plans
         # still need (static partition prune) — the pre-r17
         # checkpoint-before-write pair of jobs is unnecessary.
-        accepted = batch.join(rejects, "id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
+        write_batch(
+            batch.join(rejects, "id", "left_anti"), members_dir, batch_id
         )
-        accepted_rb = spark.read.schema("id long, h long").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
+        accepted = read_batches(
+            spark, members_dir, "id long, h long", batch_id=batch_id
         )
-        fresh_h = (
-            accepted_rb.select("h")
-            .distinct()
-            .join(store.banded.select("h").distinct(), "h", "left_anti")
-        )
-        _band_slices(fresh_h, width, mask, bands).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(banded_dir, f"batch={batch_id}"))
+        write_batch(_fresh_banded(store, accepted), banded_dir, batch_id)
 
     return fn

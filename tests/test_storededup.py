@@ -11,8 +11,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from ballista_extensions_spark.streaming.sinks import (
+    committed_before,
+    read_batches,
+)
 from ballista_extensions_spark.streaming.storededup import (
-    _read_or_empty,
     phash_store_dedup_sink,
 )
 
@@ -52,7 +55,7 @@ def test_cross_batch_state_comes_from_disk(spark, store_dir):
     # rejected dups are NOT in the store; the fresh item is
     members = {
         r["id"]
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, os.path.join(store_dir, "members"), "id long, h long"
         ).collect()
     }
@@ -76,7 +79,7 @@ def test_rerun_of_a_batch_is_idempotent(spark, store_dir):
     members_path = os.path.join(store_dir, "members")
     members_once = sorted(
         (r["id"], r["h"])
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, members_path, "id long, h long"
         ).collect()
     )
@@ -84,16 +87,27 @@ def test_rerun_of_a_batch_is_idempotent(spark, store_dir):
     assert _pairs(spark, store_dir) == pairs_once == {(1, 10, 0, 1)}
     assert sorted(
         (r["id"], r["h"])
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, members_path, "id long, h long"
         ).collect()
     ) == members_once
     # banded state stays one row per (distinct hash, band)
-    banded = _read_or_empty(
+    banded = read_batches(
         spark, os.path.join(store_dir, "banded"),
         "h long, band int, slice long",
     ).collect()
     assert len(banded) == len({r["h"] for r in banded}) * 8
+
+    # a store table that exists but cannot be read raises rather than
+    # probing as an empty store
+    bad = store_dir + "_bad"
+    os.makedirs(os.path.join(bad, "members", "__batch_id=0"))
+    with open(
+        os.path.join(bad, "members", "__batch_id=0", "part-0.parquet"), "wb"
+    ) as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        phash_store_dedup_sink(bad, threshold=6)(_mk(spark, b1), 1)
 
 
 def test_bootstrap_empty_store(spark, store_dir):
@@ -103,7 +117,7 @@ def test_bootstrap_empty_store(spark, store_dir):
     fn = phash_store_dedup_sink(store_dir, threshold=6)
     fn(_mk(spark, [(1, far_a), (2, far_b)]), 0)
     assert _pairs(spark, store_dir) == set()
-    members = _read_or_empty(
+    members = read_batches(
         spark, os.path.join(store_dir, "members"), "id long, h long"
     ).count()
     assert members == 2
@@ -127,7 +141,7 @@ def test_intra_batch_duplicates_are_found_and_not_compacted(
     assert got == {(1, 2, 0, 0), (1, 3, 2, 0), (2, 3, 2, 0)}
     members = {
         r["id"]
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, os.path.join(store_dir, "members"), "id long, h long"
         ).collect()
     }
@@ -198,7 +212,7 @@ def test_sigstore_redelivery_is_idempotent(spark, store_dir):
     pairs_once = _jpairs(spark, store_dir)
     sets_once = sorted(
         r["doc"]
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, os.path.join(store_dir, "sets"),
             "doc long, shset array<string>",
         ).collect()
@@ -207,7 +221,7 @@ def test_sigstore_redelivery_is_idempotent(spark, store_dir):
     assert _jpairs(spark, store_dir) == pairs_once == {(1, 10, 1.0, 1)}
     assert sorted(
         r["doc"]
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, os.path.join(store_dir, "sets"),
             "doc long, shset array<string>",
         ).collect()
@@ -216,19 +230,49 @@ def test_sigstore_redelivery_is_idempotent(spark, store_dir):
 
 def test_sigstore_intra_batch_and_frozen_stop(spark, store_dir):
     a, b, _ = _sig_corpus()
+    b0 = [(1, a), (2, a), (3, a)]
+    b1 = [(10, a), (11, b), (12, b)]
     fn = sigstore_dedup_sink(store_dir, threshold=0.35, max_df=2)
     # batch 0: intra-batch dup (earlier id survives) + a shingle set
     # heavy enough (df 3 > max_df 2) to enter the FROZEN stop list
-    fn(_mkdocs(spark, [(1, a), (2, a), (3, a)]), 0)
+    fn(_mkdocs(spark, b0), 0)
     got = _jpairs(spark, store_dir)
     # a's shingles are stopped at bootstrap -> the three copies have
     # EMPTY capped sets: no pairs, nothing banded
     assert got == set()
     # batch 1: content 'a' is invisible under the frozen stop (no
     # postings survive), content 'b' is fresh and accepted
-    fn(_mkdocs(spark, [(10, a), (11, b), (12, b)]), 1)
+    fn(_mkdocs(spark, b1), 1)
     got = _jpairs(spark, store_dir)
     assert got == {(11, 12, 1.0, 1)}  # intra pair on the fresh content
+
+    # a bootstrap write that crashed leaves stop/__batch_id=0 holding
+    # only a _temporary tree: not committed, so the redelivered batch 0
+    # bootstraps and the store ends as after the uninterrupted run
+    crashed = store_dir + "_crashed"
+    attempt = os.path.join(
+        crashed, "stop", "__batch_id=0", "_temporary", "0", "task_0"
+    )
+    os.makedirs(attempt)
+    with open(os.path.join(attempt, "part-0.parquet"), "wb") as f:
+        f.write(b"partial")
+    assert not committed_before(os.path.join(crashed, "stop"), 1)
+    fn = sigstore_dedup_sink(crashed, threshold=0.35, max_df=2)
+    fn(_mkdocs(spark, b0), 0)
+    assert committed_before(os.path.join(crashed, "stop"), 1)
+    fn(_mkdocs(spark, b1), 1)
+    assert _jpairs(spark, crashed) == got
+
+    def sets(d):
+        return sorted(
+            (r["doc"], sorted(r["shset"]), r["__batch_id"])
+            for r in read_batches(
+                spark, os.path.join(d, "sets"),
+                "doc long, shset array<string>",
+            ).collect()
+        )
+
+    assert sets(crashed) == sets(store_dir)
 
 
 def test_sigstore_empty_frozen_stop_is_not_rebootstrapped(
@@ -237,7 +281,7 @@ def test_sigstore_empty_frozen_stop_is_not_rebootstrapped(
     """Code-review r12: a committed-but-EMPTY stop list (no heavy
     shingles in the bootstrap batch) is valid frozen state; later
     batches must NOT re-bootstrap and freeze a stop from their own
-    postings — the sentinel is partition existence, not row count."""
+    postings — the rule is a committed stop write, not row count."""
     a, b, _ = _sig_corpus()
     fn = sigstore_dedup_sink(store_dir, threshold=0.35, max_df=2)
     fn(_mkdocs(spark, [(1, a)]), 0)  # stop frozen EMPTY (df 1 <= 2)
@@ -260,7 +304,7 @@ def test_sigstore_reused_id_is_not_compacted_twice(spark, store_dir):
     fn = sigstore_dedup_sink(store_dir, threshold=0.35)
     fn(_mkdocs(spark, [(7, a)]), 0)
     fn(_mkdocs(spark, [(7, b)]), 1)  # id reuse, dissimilar content
-    sets = _read_or_empty(
+    sets = read_batches(
         spark, os.path.join(store_dir, "sets"),
         "doc long, shset array<string>",
     ).collect()
@@ -270,6 +314,40 @@ def test_sigstore_reused_id_is_not_compacted_twice(spark, store_dir):
     got = _jpairs(spark, store_dir)
     assert (7, 20, 1.0, 2) in got
     assert not any(p[:2] == (7, 21) for p in got)
+
+
+def test_reading_store_state_starts_no_job(spark, store_dir):
+    """The store's state as of before batch 2, and a probe plan over
+    it, are built from named-schema reads: no Spark job runs until an
+    action (a read that infers its schema runs one per table)."""
+    from ballista_extensions_spark.operators.phashstore import (
+        PHashStore,
+        _probe_members,
+    )
+
+    fn = phash_store_dedup_sink(store_dir, threshold=6)
+    fn(_mk(spark, [(1, 42)]), 0)
+    fn(_mk(spark, [(2, 1 << 40)]), 1)
+    batch = _mk(spark, [(3, 42)]).select("id", F.col("dhash").alias("h"))
+    sc = spark.sparkContext
+    sc.setJobGroup("store-state-read", "store state read")
+    try:
+        store = PHashStore(
+            members=read_batches(
+                spark, os.path.join(store_dir, "members"),
+                "id long, h long", before=2,
+            ),
+            banded=read_batches(
+                spark, os.path.join(store_dir, "banded"),
+                "h long, band int, slice long", before=2,
+            ),
+            bands=8,
+        )
+        _probe_members(store, batch, 6).schema  # analyzed, not run
+        jobs = sc.statusTracker().getJobIdsForGroup("store-state-read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
 
 
 # ------------------------------------------------------- semdedup sink
@@ -320,7 +398,7 @@ def test_semdedup_sink_cross_batch_state_from_disk(spark, store_dir):
     assert (1, 10, 1) in got
     assert all(p[1] != 11 for p in got)
     # accepted members on disk: 1, 2, 11 (10 rejected)
-    members = _read_or_empty(
+    members = read_batches(
         spark, os.path.join(store_dir, "members"),
         "vec_id long, embedding array<double>, cell int",
     )
@@ -340,7 +418,7 @@ def test_semdedup_sink_redelivery_is_idempotent(spark, store_dir):
     before_pairs = _vpairs(spark, store_dir)
     before_members = {
         (r["vec_id"], r["cell"])
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, os.path.join(store_dir, "members"),
             "vec_id long, embedding array<double>, cell int",
         ).collect()
@@ -349,7 +427,7 @@ def test_semdedup_sink_redelivery_is_idempotent(spark, store_dir):
     assert _vpairs(spark, store_dir) == before_pairs
     after_members = {
         (r["vec_id"], r["cell"])
-        for r in _read_or_empty(
+        for r in read_batches(
             spark, os.path.join(store_dir, "members"),
             "vec_id long, embedding array<double>, cell int",
         ).collect()
@@ -368,7 +446,7 @@ def test_semdedup_sink_intra_batch_keep_first(spark, store_dir):
     fn(_mkv(spark, [(5, a), (6, a3), (7, b)]), 0)
     got = _vpairs(spark, store_dir)
     assert (5, 6, 0) in got          # earlier id survives
-    members = _read_or_empty(
+    members = read_batches(
         spark, os.path.join(store_dir, "members"),
         "vec_id long, embedding array<double>, cell int",
     )
@@ -396,10 +474,10 @@ def test_semdedup_sink_probe_is_cell_equijoin_no_cartesian(
     cents, a, b = _sem_fixture()
     fn = semdedup_store_sink(store_dir, cents, tau=0.9)
     fn(_mkv(spark, [(1, a), (2, b)]), 0)
-    store = _read_or_empty(
+    store = read_batches(
         spark, os.path.join(store_dir, "members"),
         "vec_id long, embedding array<double>, cell int",
-        before_batch=1,
+        before=1,
     )
     batch = assign_cells(_mkv(spark, [(10, a)]), cents)
     s = store.select(

@@ -1,14 +1,15 @@
 """Standalone: semantic-dedup store probe cost vs STORE size with a
 FIXED increment (VERDICT r12 directive #2's exponent evidence).
 
-Builds the cell-partitioned member store (the semdedup_store_sink
-on-disk layout) at 1x and Nx corpus, then times assigning + probing
-the SAME fixed 100-vector increment against each via one batch of the
-sink. The store claim is 'probe cost ∝ batch x cell occupancy, reads
-only the batch's cells via partition pruning' — t_probe should grow
-far sublinearly in store size (occupancy per cell grows, file pruning
-holds; in production one raises n_lists with the corpus so per-cell
-occupancy stays flat, the SemDeDup contract).
+Builds the member store (the semdedup_store_sink on-disk layout: one
+directory per batch, rows sorted by cell) at 1x and Nx corpus, then
+times assigning + probing the SAME fixed 100-vector increment against
+each via one batch of the sink. The store claim is 'probe cost ∝ batch
+x cell occupancy, reads only the batch's cells via the pushed-down
+cell filter' — t_probe should grow far sublinearly in store size
+(occupancy per cell grows, page pruning holds; in production one
+raises n_lists with the corpus so per-cell occupancy stays flat, the
+SemDeDup contract).
 
 Usage: python tools/semdedupstore_scale.py [sf_dir] [factor]
 """

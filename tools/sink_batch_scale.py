@@ -70,9 +70,9 @@ def main() -> None:
     def timed(fn, reset, reps: int = 2) -> float:
         # each rep runs against the SAME store state: the store dir is
         # restored from its post-seed snapshot before every rep, so
-        # rep 2 never re-deletes rep 1's batch=1 partitions or probes a
-        # differently-laid-out tree — min-of-reps measures identical
-        # work (ADVICE r16)
+        # rep 2 never re-deletes rep 1's __batch_id=1 directories or
+        # probes a differently-laid-out tree — min-of-reps measures
+        # identical work (ADVICE r16)
         ts = []
         for _ in range(reps):
             reset()
