@@ -17,7 +17,7 @@ oracle can replay every feature bit-for-bit — the property the whole
 codec family is built around.
 
 Scale: all operators here are per-payload pure functions driven by
-Arrow-batched mapInPandas upstream (operators/multimodal.py shapes);
+the Arrow-batched mapInPandas decode body of operators/multimodal.py;
 no shuffle, no driver state, 8 B of fingerprint state per clip.
 """
 
@@ -198,47 +198,19 @@ def audio_dhash64(payload: bytes) -> int:
 
 def audio_meta_stats(media) -> "object":
     """(media_id, sample_rate, channels, n_frames, duration_ms,
-    peak_abs, sumsq, zero_crossings, decode_error) for every payload —
-    the audio twin of multimodal.decode_pixel_stats: one Arrow-batched
-    mapInPandas pass, per-row error isolation, no shuffle."""
-    import pandas as pd
+    peak_abs, sumsq, zero_crossings, decode_error) for every payload:
+    :func:`wav_meta` through the decode body it shares with
+    videocodec.video_meta_stats and multimodal.decode_pixel_stats
+    (multimodal._decode_media) — one Arrow-batched mapInPandas pass,
+    per-row error isolation, no shuffle."""
+    from ballista_extensions_spark.operators.multimodal import _decode_media
 
-    cols = (
-        "sample_rate", "channels", "n_frames", "duration_ms",
-        "peak_abs", "sumsq", "zero_crossings",
-    )
-
-    def _stats(batches):
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            out["decode_error"] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    m = wav_meta(bytes(payload))
-                    for c in cols:
-                        out[c].append(m[c])
-                    out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — per-row
-                    # isolation: codec internals can raise beyond
-                    # ValueError (struct.error on truncation); one bad
-                    # clip must surface in the column, not kill the job
-                    for c in cols:
-                        out[c].append(None)
-                    out["decode_error"].append(str(e)[:200])
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        _stats,
-        schema=(
-            "media_id long, sample_rate int, channels int, n_frames int, "
-            "duration_ms long, peak_abs long, sumsq long, "
-            "zero_crossings long, decode_error string"
-        ),
+    return _decode_media(
+        media,
+        lambda payload: tuple(wav_meta(payload).values()),
+        "media_id long, sample_rate int, channels int, n_frames int, "
+        "duration_ms long, peak_abs long, sumsq long, "
+        "zero_crossings long, decode_error string",
     )
 
 
@@ -249,45 +221,20 @@ def audio_resample_stats(media, dst_rate: int = 4000) -> "object":
     says (the oracle replays the two floor divisions per output
     sample); decimation like this is the cheap first stage of any
     audio feature pipeline. Undecodable payloads surface as NULL
-    frames/checksum with decode_error set — the same per-row
-    isolation contract as every sibling media operator. Arrow-batched,
-    no shuffle."""
-    import pandas as pd
+    frames/checksum with decode_error set — the per-row isolation of
+    the decode body every sibling media operator shares
+    (multimodal._decode_media). Arrow-batched, no shuffle."""
+    from ballista_extensions_spark.operators.multimodal import _decode_media
 
-    def _rs(batches):
-        for pdf in batches:
-            ids, out_frames, out_sumsq, errs = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    samples, rate = decode_wav(bytes(payload))
-                    r = resample_nearest(
-                        samples, rate, dst_rate
-                    ).astype(np.int64)
-                    out_frames.append(r.shape[0])
-                    out_sumsq.append(int((r * r).sum()))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — quarantine
-                    out_frames.append(None)
-                    out_sumsq.append(None)
-                    errs.append(str(e)[:200])
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "out_frames": out_frames,
-                    "out_sumsq": out_sumsq,
-                    "decode_error": errs,
-                }
-            )
+    def _rs(payload: bytes) -> tuple[int, int]:
+        samples, rate = decode_wav(payload)
+        r = resample_nearest(samples, rate, dst_rate).astype(np.int64)
+        return r.shape[0], int((r * r).sum())
 
-    return media.select("media_id", "payload").mapInPandas(
+    return _decode_media(
+        media,
         _rs,
-        schema=(
-            "media_id long, out_frames int, out_sumsq long, "
-            "decode_error string"
-        ),
+        "media_id long, out_frames int, out_sumsq long, decode_error string",
     )
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -76,43 +77,130 @@ def docs_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def _doc_pixels(text: str):
-    """The shared tiling arithmetic of the media adapters: an
-    (h, w, 3) uint8 image whose dimensions derive from the utf-8 byte
-    length (w = 4 + n%29, h = 4 + n%23) and whose pixels tile the
-    text bytes (zero-padded for empty text — n == 0 must yield a
-    valid 4x4 image, matching the SQL oracles, not a reshape
-    crash)."""
-    import numpy as np
+def _tile(b: bytes, need: int, fill: bytes = b"\x00") -> bytes:
+    """The shared tiling of the media fixtures: the first ``need``
+    bytes of ``b`` repeated, or ``fill`` repeated when ``b`` is empty
+    (n == 0 must yield a valid payload, matching the SQL oracles' n = 0
+    branch, not a reshape crash)."""
+    return (b * (need // len(b) + 1))[:need] if b else fill * need
 
+
+def _pcm(tiled: bytes, channels: int) -> np.ndarray:
+    """(frames, channels) int16 samples from bytes through the fixed
+    affine (byte - 128) * 256 — the exact unsigned→int16 widening the
+    8-bit WAV decode path uses, pure integer arithmetic a SQL oracle
+    replays per sample. A fill of 0x80 maps to sample 0: TRUE silence
+    (0x00 would be -32768 — full-scale DC, not silence)."""
+    flat = np.frombuffer(tiled, dtype=np.uint8).astype(np.int16)
+    return ((flat - 128) << 8).reshape(-1, channels)
+
+
+def _doc_pixels(text: str) -> np.ndarray:
+    """The image fixture's arithmetic: an (h, w, 3) uint8 image whose
+    dimensions derive from the utf-8 byte length (w = 4 + n%29,
+    h = 4 + n%23) and whose pixels tile the text bytes (zero-filled
+    for empty text)."""
     b = text.encode("utf-8")
     n = len(b)
     w, h = 4 + n % 29, 4 + n % 23
-    need = w * h * 3
-    tiled = (b * (need // n + 1))[:need] if n else b"\x00" * need
-    return np.frombuffer(tiled, dtype=np.uint8).reshape(h, w, 3)
+    return np.frombuffer(_tile(b, w * h * 3), dtype=np.uint8).reshape(h, w, 3)
+
+
+def _doc_frames(b: bytes) -> tuple[np.ndarray, int]:
+    """The video fixture's arithmetic: (n_frames, h, w, 3) uint8 frames
+    (w = 4 + n%9, h = 4 + n%7, n_frames = 3 + n%6) tiling the bytes in
+    (frame, y, x, channel) row-major order, and us_per_frame = 40000 +
+    n%3 * 20000."""
+    n = len(b)
+    w, h, nf = 4 + n % 9, 4 + n % 7, 3 + n % 6
+    px = np.frombuffer(_tile(b, nf * h * w * 3), dtype=np.uint8)
+    return px.reshape(nf, h, w, 3), 40000 + (n % 3) * 20000
+
+
+def _png_fixture(text: str) -> bytes:
+    from ballista_extensions_spark.operators.imagecodec import encode_png
+
+    return encode_png(_doc_pixels(text))
+
+
+def _bmp_fixture(text: str) -> bytes:
+    from ballista_extensions_spark.operators.imagecodec import encode_bmp
+
+    return encode_bmp(_doc_pixels(text))
+
+
+def _jpeg_fixture(text: str) -> bytes:
+    """Flat 8×8 blocks, bw = 1 + n%6 by bh = 1 + n%5, block (by, bx)
+    holding text byte (by*bw + bx) mod n, under all-ones quantization
+    tables."""
+    from ballista_extensions_spark.operators.jpegcodec import encode_jpeg
+
+    b = text.encode("utf-8")
+    n = len(b)
+    bw, bh = 1 + n % 6, 1 + n % 5
+    vals = np.frombuffer(_tile(b, bw * bh), dtype=np.uint8).reshape(bh, bw)
+    img = vals.repeat(8, axis=0).repeat(8, axis=1)
+    ones = np.ones((8, 8), dtype=np.int32)
+    return encode_jpeg(img, quant_tables=(ones, ones))
+
+
+def _wav_fixture(text: str) -> bytes:
+    """rate = 8000 + n%5 * 2000, channels = 1 + n%2, frames = 130 +
+    n%391 samples through :func:`_pcm`; empty text is silence."""
+    from ballista_extensions_spark.operators.audiocodec import encode_wav
+
+    b = text.encode("utf-8")
+    n = len(b)
+    channels = 1 + n % 2
+    tiled = _tile(b, (130 + n % 391) * channels, b"\x80")
+    return encode_wav(_pcm(tiled, channels), 8000 + (n % 5) * 2000)
+
+
+def _avi_fixture(text: str) -> bytes:
+    from ballista_extensions_spark.operators.videocodec import encode_avi
+
+    return encode_avi(*_doc_frames(text.encode("utf-8")))
+
+
+def _av_fixture(text: str) -> bytes:
+    """:func:`_doc_frames` video plus an audio track that continues the
+    same tiling after the V = frames*h*w*3 video bytes (ch = 1 + n%2,
+    rate = 8000 + n%5 * 2000, 130 + n%211 samples); empty text is black
+    frames and silence."""
+    from ballista_extensions_spark.operators.videocodec import encode_avi_av
+
+    b = text.encode("utf-8")
+    n = len(b)
+    frames, uspf = _doc_frames(b)
+    ch = 1 + n % 2
+    tiled = _tile(b, frames.size + (130 + n % 211) * ch, b"\x80")
+    audio = _pcm(tiled[frames.size :], ch)
+    return encode_avi_av(frames, uspf, audio, 8000 + (n % 5) * 2000)
+
+
+def _mixed_fixture(text: str) -> bytes:
+    fixtures = (_png_fixture, _jpeg_fixture, _wav_fixture, _avi_fixture)
+    return fixtures[len(text.encode("utf-8")) % 4](text)
 
 
 def _docs_as_encoded_media(
-    documents: DataFrame, encoder, carry: tuple[str, ...] = ()
+    documents: DataFrame,
+    fixture: Callable[[str], bytes],
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Shared mapInPandas body of the BMP/PNG media adapters
-    (:func:`_doc_pixels` tiling). ``encoder`` maps the pixel array to
-    container bytes; encoding runs Arrow-batched and distributed,
-    same shape as the decode side. ``carry`` names ``documents``
-    columns passed through the same Arrow pass and returned after
+    """The one encode body of the media adapters: (media_id, payload)
+    with payload = ``fixture(text)`` per document, one Arrow-batched
+    mapInPandas pass, distributed, same shape as the decode side
+    (:func:`_decode_media`). ``carry`` names ``documents`` columns
+    passed through the same Arrow pass and returned after
     ``(media_id, payload)`` with their input types."""
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                ids.append(mid)
-                payloads.append(encoder(_doc_pixels(text)))
             yield pd.DataFrame(
                 {
-                    "media_id": ids,
-                    "payload": payloads,
+                    "media_id": pdf["doc_id"],
+                    "payload": [fixture(text) for text in pdf["text"]],
                     **{c: pdf[c] for c in carry},
                 }
             )
@@ -129,27 +217,73 @@ def _docs_as_encoded_media(
     )
 
 
+def _decode_media(
+    media: DataFrame,
+    row: Callable[[bytes], tuple],
+    schema: StructType | str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one per-row decode body of the media operators: one
+    Arrow-batched mapInPandas pass over ``(media_id, payload, *carry)``,
+    no shuffle, no driver state. ``schema`` is the output: ``media_id``,
+    ``decode_error``, the ``carry`` columns (passed through unchanged)
+    and the value columns, which take ``row(payload bytes)``'s values
+    in schema order. The quarantine: a NULL payload gives NULL values
+    and ``"null payload"``, and any exception from ``row`` gives NULL
+    values and its message (200 chars) — codec internals raise
+    zlib.error/struct.error/numpy errors on hostile bytes, not only
+    ValueError, and one bad row must surface in the column, never kill
+    the batch. Each value column is an object Series of Python values,
+    so an int column holding a NULL stays exact past 2^53 instead of
+    becoming float64."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    fixed = ("media_id", "decode_error", *carry)
+    values = [c for c in names if c not in fixed]
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols: dict[str, list[Any]] = {c: [] for c in values}
+            errs: list[str | None] = []
+            for payload in pdf["payload"]:
+                try:
+                    if payload is None:
+                        raise ValueError("null payload")
+                    vals, err = row(bytes(payload)), None
+                except Exception as e:  # noqa: BLE001 — per-row quarantine
+                    vals, err = (None,) * len(values), str(e)[:200]
+                for c, v in zip(values, vals):
+                    cols[c].append(v)
+                errs.append(err)
+            out = {c: pd.Series(v, dtype=object) for c, v in cols.items()}
+            out.update({c: pdf[c] for c in ("media_id", *carry)})
+            out["decode_error"] = errs
+            yield pd.DataFrame({c: out[c] for c in names})
+
+    return media.select("media_id", "payload", *carry).mapInPandas(
+        _decode, schema=schema
+    )
+
+
 def docs_png_dhash(documents: DataFrame) -> DataFrame:
     """Fused encode+fingerprint: ``image_dhash(docs_as_png_media(d))``
     in ONE mapInPandas pass — (doc) -> real PNG bytes -> real decode ->
     64-bit dHash, with the encoded payload never crossing the
     JVM↔Python boundary (guide §4.1: the chained form ships every PNG
     back to the JVM and out to a second Python worker purely to hash
-    it). Bit-identical to the chain (same ``_doc_pixels`` tiling, same
-    encode_png, same dhash64 — A/B-verified equal at sf0.1); used by
-    the streaming media replays where the chain runs once per
-    micro-batch. Output schema matches image_dhash: (id, dhash)."""
-    from ballista_extensions_spark.operators.imagecodec import (
-        dhash64,
-        encode_png,
-    )
+    it). Bit-identical to the chain (the same PNG fixture, same
+    dhash64 — A/B-verified equal at sf0.1); used by the streaming media
+    replays where the chain runs once per micro-batch. Output schema
+    matches image_dhash: (id, dhash)."""
+    from ballista_extensions_spark.operators.imagecodec import dhash64
 
     def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hashes = [], []
             for mid, text in zip(pdf["doc_id"], pdf["text"]):
                 try:
-                    hv = dhash64(encode_png(_doc_pixels(text)))
+                    hv = dhash64(_png_fixture(text))
                 except Exception:  # noqa: BLE001 — quarantine, match
                     # image_dhash's corrupt-payload convention
                     hv = None
@@ -165,31 +299,27 @@ def docs_png_dhash(documents: DataFrame) -> DataFrame:
 def docs_as_bmp_media(documents: DataFrame) -> DataFrame:
     """Adapter producing REAL encoded image payloads from driver data:
     each document becomes a 24-bit BMP (operators/imagecodec.py encoder)
-    via the shared arithmetic-dimension tiling body
+    of the :func:`_doc_pixels` tiling through the shared encode body
     (``_docs_as_encoded_media``) — deterministic, so a SQL oracle can
     predict the decoded metadata (byte_len = 54 + rowpad(3w)*h) while
     the payload is a genuine BMP the real decoder must parse."""
-    from ballista_extensions_spark.operators.imagecodec import encode_bmp
-
-    return _docs_as_encoded_media(documents, encode_bmp)
+    return _docs_as_encoded_media(documents, _bmp_fixture)
 
 
 def docs_as_png_media(
     documents: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """Adapter producing REAL PNG payloads from driver data — the PNG
-    sibling of ``docs_as_bmp_media`` (same shared body): genuine 8-bit
-    color-type-2 PNGs (operators/imagecodec.py:encode_png — zlib
-    container with stored-block DEFLATE, filter-0 scanlines, CRC'd
-    chunks). The stored-block stream keeps the file size pure
+    sibling of ``docs_as_bmp_media`` (same tiling, same shared body):
+    genuine 8-bit color-type-2 PNGs (operators/imagecodec.py:encode_png
+    — zlib container with stored-block DEFLATE, filter-0 scanlines,
+    CRC'd chunks). The stored-block stream keeps the file size pure
     arithmetic, so a SQL oracle can predict the decoded metadata
     byte-for-byte while the payload is a spec-correct PNG the real
     decoder must parse (signature, IHDR, inflate, unfilter). ``carry``
     passes ``documents`` columns through the encode pass
     (:func:`_docs_as_encoded_media`)."""
-    from ballista_extensions_spark.operators.imagecodec import encode_png
-
-    return _docs_as_encoded_media(documents, encode_png, carry)
+    return _docs_as_encoded_media(documents, _png_fixture, carry)
 
 
 def docs_as_jpeg_media(documents: DataFrame) -> DataFrame:
@@ -204,30 +334,7 @@ def docs_as_jpeg_media(documents: DataFrame) -> DataFrame:
     while the decoder does the full real work: marker parse, Huffman
     decode, dequantize, IDCT. The lossy general path is
     pytest-bounded instead (tests/test_jpegcodec.py)."""
-    import numpy as np
-
-    from ballista_extensions_spark.operators.jpegcodec import encode_jpeg
-
-    ones = np.ones((8, 8), dtype=np.int32)
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                n = len(b)
-                bw, bh = 1 + n % 6, 1 + n % 5
-                need = bw * bh
-                tiled = (b * (need // n + 1))[:need] if n else b"\x00" * need
-                vals = np.frombuffer(tiled, dtype=np.uint8).reshape(bh, bw)
-                img = vals.repeat(8, axis=0).repeat(8, axis=1)
-                ids.append(mid)
-                payloads.append(encode_jpeg(img, quant_tables=(ones, ones)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return documents.select("doc_id", "text").mapInPandas(
-        _encode, schema="media_id long, payload binary"
-    )
+    return _docs_as_encoded_media(documents, _jpeg_fixture)
 
 
 def docs_as_wav_media(documents: DataFrame) -> DataFrame:
@@ -242,34 +349,7 @@ def docs_as_wav_media(documents: DataFrame) -> DataFrame:
     exact unsigned→int16 widening the 8-bit decode path uses, and
     pure integer arithmetic a SQL oracle replays per sample. Empty
     text yields silence, matching the oracles' n = 0 branch."""
-    import numpy as np
-
-    from ballista_extensions_spark.operators.audiocodec import encode_wav
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                n = len(b)
-                rate = 8000 + (n % 5) * 2000
-                channels = 1 + n % 2
-                frames = 130 + n % 391
-                need = frames * channels
-                # empty text -> byte 0x80, which the (byte-128)*256
-                # affine maps to sample 0: TRUE silence, matching the
-                # oracles' n = 0 branch (0x00 would be -32768 —
-                # full-scale DC, not silence)
-                tiled = (b * (need // n + 1))[:need] if n else b"\x80" * need
-                flat = np.frombuffer(tiled, dtype=np.uint8).astype(np.int16)
-                samples = ((flat - 128) << 8).reshape(frames, channels)
-                ids.append(mid)
-                payloads.append(encode_wav(samples, rate))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return documents.select("doc_id", "text").mapInPandas(
-        _encode, schema="media_id long, payload binary"
-    )
+    return _docs_as_encoded_media(documents, _wav_fixture)
 
 
 def docs_as_avi_media(documents: DataFrame) -> DataFrame:
@@ -283,31 +363,7 @@ def docs_as_avi_media(documents: DataFrame) -> DataFrame:
     channel) row-major order — pure integer arithmetic a SQL oracle
     replays per pixel. Empty text yields black frames, matching the
     oracles' n = 0 branch."""
-    import numpy as np
-
-    from ballista_extensions_spark.operators.videocodec import encode_avi
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                n = len(b)
-                w, h = 4 + n % 9, 4 + n % 7
-                nf = 3 + n % 6
-                uspf = 40000 + (n % 3) * 20000
-                need = nf * h * w * 3
-                tiled = (b * (need // n + 1))[:need] if n else b"\x00" * need
-                frames = np.frombuffer(tiled, dtype=np.uint8).reshape(
-                    nf, h, w, 3
-                )
-                ids.append(mid)
-                payloads.append(encode_avi(frames, uspf))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return documents.select("doc_id", "text").mapInPandas(
-        _encode, schema="media_id long, payload binary"
-    )
+    return _docs_as_encoded_media(documents, _avi_fixture)
 
 
 def docs_as_av_media(documents: DataFrame) -> DataFrame:
@@ -321,45 +377,7 @@ def docs_as_av_media(documents: DataFrame) -> DataFrame:
     n_samples = 130 + n%211) is (byte((V + i) % n) - 128) * 256 with
     V = frames*h*w*3 — so one generate_series oracle replays BOTH
     demuxed tracks. Empty text yields black frames + silence."""
-    import numpy as np
-
-    from ballista_extensions_spark.operators.videocodec import encode_avi_av
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                n = len(b)
-                w, h, nf = 4 + n % 9, 4 + n % 7, 3 + n % 6
-                uspf = 40000 + (n % 3) * 20000
-                ch = 1 + n % 2
-                rate = 8000 + (n % 5) * 2000
-                ns = 130 + n % 211
-                vneed = nf * h * w * 3
-                need = vneed + ns * ch
-                # empty text: black frames (0x00) + TRUE silence (0x80
-                # -> sample 0 under the affine), matching the oracles'
-                # n = 0 branches for each track
-                tiled = (
-                    (b * (need // n + 1))[:need]
-                    if n
-                    else b"\x00" * vneed + b"\x80" * (ns * ch)
-                )
-                frames = np.frombuffer(
-                    tiled[:vneed], dtype=np.uint8
-                ).reshape(nf, h, w, 3)
-                flat = np.frombuffer(
-                    tiled[vneed:], dtype=np.uint8
-                ).astype(np.int16)
-                audio = ((flat - 128) << 8).reshape(ns, ch)
-                ids.append(mid)
-                payloads.append(encode_avi_av(frames, uspf, audio, rate))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return documents.select("doc_id", "text").mapInPandas(
-        _encode, schema="media_id long, payload binary"
-    )
+    return _docs_as_encoded_media(documents, _av_fixture)
 
 
 def docs_as_mixed_media(documents: DataFrame) -> DataFrame:
@@ -367,63 +385,11 @@ def docs_as_mixed_media(documents: DataFrame) -> DataFrame:
     a real 100 TB multimodal table looks like: one binary column whose
     rows are different container formats. Document n%4 picks the
     format — 0 → PNG, 1 → baseline JPEG, 2 → WAV, 3 → AVI — and each
-    row uses EXACTLY its single-format sibling's fixture arithmetic
+    row is EXACTLY its single-format sibling's fixture
     (docs_as_png_media / docs_as_jpeg_media / docs_as_wav_media /
     docs_as_avi_media), so every single-format oracle CTE reapplies
     unchanged under a CASE on n%4."""
-    import numpy as np
-
-    from ballista_extensions_spark.operators.audiocodec import encode_wav
-    from ballista_extensions_spark.operators.imagecodec import encode_png
-    from ballista_extensions_spark.operators.jpegcodec import encode_jpeg
-    from ballista_extensions_spark.operators.videocodec import encode_avi
-
-    ones = np.ones((8, 8), dtype=np.int32)
-
-    def _tile(b: bytes, need: int) -> bytes:
-        n = len(b)
-        return (b * (need // n + 1))[:need] if n else b"\x00" * need
-
-    def _one(b: bytes) -> bytes:
-        n = len(b)
-        k = n % 4
-        if k == 0:
-            w, h = 4 + n % 29, 4 + n % 23
-            px = np.frombuffer(_tile(b, w * h * 3), dtype=np.uint8)
-            return encode_png(px.reshape(h, w, 3))
-        if k == 1:
-            bw, bh = 1 + n % 6, 1 + n % 5
-            vals = np.frombuffer(_tile(b, bw * bh), dtype=np.uint8)
-            img = vals.reshape(bh, bw).repeat(8, axis=0).repeat(8, axis=1)
-            return encode_jpeg(img, quant_tables=(ones, ones))
-        if k == 2:
-            rate = 8000 + (n % 5) * 2000
-            channels = 1 + n % 2
-            frames = 130 + n % 391
-            flat = np.frombuffer(
-                _tile(b, frames * channels), dtype=np.uint8
-            ).astype(np.int16)
-            return encode_wav(
-                ((flat - 128) << 8).reshape(frames, channels), rate
-            )
-        w, h, nf = 4 + n % 9, 4 + n % 7, 3 + n % 6
-        uspf = 40000 + (n % 3) * 20000
-        frames = np.frombuffer(
-            _tile(b, nf * h * w * 3), dtype=np.uint8
-        ).reshape(nf, h, w, 3)
-        return encode_avi(frames, uspf)
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            payloads = [
-                _one(text.encode("utf-8")) for text in pdf["text"]
-            ]
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return documents.select("doc_id", "text").mapInPandas(
-        _encode, schema="media_id long, payload binary"
-    )
+    return _docs_as_encoded_media(documents, _mixed_fixture)
 
 
 def detect_media_kind(payload_col: str = "payload"):
@@ -457,11 +423,10 @@ def mixed_decode_checksum(media: DataFrame) -> DataFrame:
     modality's natural integer content proof (pixel sum for
     png/jpeg/bmp/ppm images and avi video; sum of squared samples for
     wav audio, whose signed samples would cancel in a plain sum). One
-    Arrow-batched mapInPandas pass with per-row error isolation — the
-    decode stage that follows :func:`detect_media_kind` routing in a
-    production pipeline. No shuffle, no driver state."""
-    import numpy as np
-    import pandas as pd
+    Arrow-batched mapInPandas pass with per-row error isolation
+    (:func:`_decode_media`) — the decode stage that follows
+    :func:`detect_media_kind` routing in a production pipeline. No
+    shuffle, no driver state."""
 
     def _one(payload: bytes) -> tuple[str, int]:
         if payload[:4] == b"\x89PNG" or payload[:2] in (b"BM", b"P6"):
@@ -497,40 +462,10 @@ def mixed_decode_checksum(media: DataFrame) -> DataFrame:
             return "avi", int(decode_avi(payload)[0].astype(np.int64).sum())
         raise ValueError("unknown container format")
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, sums, errs = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    kind, cs = _one(bytes(payload))
-                    kinds.append(kind)
-                    sums.append(cs)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — quarantine:
-                    # codec internals raise zlib.error/struct.error on
-                    # corrupt bytes, not only ValueError; the contract
-                    # is per-row isolation, never a dead batch
-                    kinds.append(None)
-                    sums.append(None)
-                    errs.append(str(e)[:200])
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": kinds,
-                    "checksum": sums,
-                    "decode_error": errs,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _decode,
-        schema=(
-            "media_id long, kind string, checksum long, "
-            "decode_error string"
-        ),
+    return _decode_media(
+        media,
+        _one,
+        "media_id long, kind string, checksum long, decode_error string",
     )
 
 
@@ -544,45 +479,19 @@ def decode_pixel_stats(
     proves a decoder reconstructed actual pixels, not just headers
     (the metadata path ``decode_images`` never inflates payloads).
     Arrow-batched mapInPandas, no shuffle; failures surface per-row in
-    the error column, same contract as decode_images."""
+    the error column through the shared decode body
+    (:func:`_decode_media`), same contract as decode_images."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {
-                "media_id": [],
-                "width": [],
-                "height": [],
-                "channels": [],
-                "pixel_sum": [],
-                "decode_error": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                if payload is None:
-                    for k in ("width", "height", "channels", "pixel_sum"):
-                        out[k].append(None)
-                    out["decode_error"].append("null payload")
-                    continue
-                try:
-                    arr = to_array(bytes(payload))
-                    h, w, c = arr.shape
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(c)
-                    out["pixel_sum"].append(int(arr.astype("int64").sum()))
-                    out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — per-row error column
-                    for k in ("width", "height", "channels", "pixel_sum"):
-                        out[k].append(None)
-                    out["decode_error"].append(str(e)[:200])
-            yield pd.DataFrame(out)
+    def _stats(payload: bytes) -> tuple[int, int, int, int]:
+        arr = to_array(payload)
+        h, w, c = arr.shape
+        return w, h, c, int(arr.astype("int64").sum())
 
-    return df.select("media_id", "payload").mapInPandas(
+    return _decode_media(
+        df,
         _stats,
-        schema=(
-            "media_id long, width int, height int, channels int, "
-            "pixel_sum long, decode_error string"
-        ),
+        "media_id long, width int, height int, channels int, "
+        "pixel_sum long, decode_error string",
     )
 
 
@@ -594,7 +503,9 @@ def decode_images(
 ) -> DataFrame:
     """Decode image payloads to (width, height, channels) metadata via
     mapInPandas (Arrow-batched; one python worker per partition, no
-    driver involvement).
+    driver involvement) through the shared decode body
+    (:func:`_decode_media`); ``byte_len`` is the payload's length, set
+    on a failed decode and NULL on a NULL payload.
 
     Decoder precedence: the explicit ``decoder`` argument, else the
     deterministic fake when ``fake=True`` (ALWAYS the fake — a
@@ -614,41 +525,10 @@ def decode_images(
             "multimodal._image_decoder, or pass fake=True for the "
             "deterministic stub"
         )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {
-                "media_id": [],
-                "width": [],
-                "height": [],
-                "channels": [],
-                "byte_len": [],
-                "decode_error": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                if payload is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["byte_len"].append(None)
-                    out["decode_error"].append("null payload")
-                    continue
-                b = bytes(payload)
-                out["byte_len"].append(len(b))
-                try:
-                    w, h, c = decoder(b)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(c)
-                    out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — per-row error column
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["decode_error"].append(str(e)[:200])
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "payload").mapInPandas(
-        _decode, schema=DECODED_IMAGE_SCHEMA
+    byte_len = F.length("payload").cast("long").alias("byte_len")
+    return _decode_media(
+        df.select("media_id", "payload", byte_len),
+        decoder,
+        DECODED_IMAGE_SCHEMA,
+        carry=("byte_len",),
     )

@@ -25,7 +25,7 @@ sums, the keyframe dHash) is INTEGER arithmetic a SQL oracle replays
 bit-for-bit — the property the whole codec family is built around.
 
 Scale: all operators here are per-payload pure functions driven by
-Arrow-batched mapInPandas upstream (operators/multimodal.py shapes);
+the Arrow-batched mapInPandas decode body of operators/multimodal.py;
 no shuffle, no driver state, 8 B of fingerprint state per video.
 """
 
@@ -304,48 +304,18 @@ def video_dhash64(payload: bytes) -> int:
 
 def video_meta_stats(media) -> "object":
     """(media_id, width, height, n_frames, us_per_frame, duration_ms,
-    pixel_sum, decode_error) for every payload — the video twin of
-    audiocodec.audio_meta_stats: one Arrow-batched mapInPandas pass,
+    pixel_sum, decode_error) for every payload: :func:`avi_meta`
+    through the decode body it shares with audiocodec.audio_meta_stats
+    (multimodal._decode_media) — one Arrow-batched mapInPandas pass,
     per-row error isolation, no shuffle."""
-    import pandas as pd
+    from ballista_extensions_spark.operators.multimodal import _decode_media
 
-    cols = (
-        "width", "height", "n_frames", "us_per_frame",
-        "duration_ms", "pixel_sum",
-    )
-
-    def _stats(batches):
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            out["decode_error"] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    m = avi_meta(bytes(payload))
-                    for c in cols:
-                        out[c].append(m[c])
-                    out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — per-row
-                    # quarantine: codec internals raise beyond
-                    # ValueError on hostile headers (struct.error,
-                    # numpy size errors); one bad row must not kill
-                    # the Arrow batch
-                    for c in cols:
-                        out[c].append(None)
-                    out["decode_error"].append(str(e)[:200])
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        _stats,
-        schema=(
-            "media_id long, width int, height int, n_frames int, "
-            "us_per_frame long, duration_ms long, pixel_sum long, "
-            "decode_error string"
-        ),
+    return _decode_media(
+        media,
+        lambda payload: tuple(avi_meta(payload).values()),
+        "media_id long, width int, height int, n_frames int, "
+        "us_per_frame long, duration_ms long, pixel_sum long, "
+        "decode_error string",
     )
 
 
@@ -601,54 +571,23 @@ def av_demux_stats(media) -> "object":
     (media_id, width, height, n_frames, pixel_sum, channels,
     sample_rate, n_samples, audio_sumsq, decode_error) — the demux
     stage of a video ingest pipeline as a single Arrow-batched
-    mapInPandas pass, per-row error isolation, no shuffle."""
-    import pandas as pd
+    mapInPandas pass through the shared decode body
+    (multimodal._decode_media), per-row error isolation, no shuffle."""
+    from ballista_extensions_spark.operators.multimodal import _decode_media
 
-    cols = (
-        "width", "height", "n_frames", "pixel_sum",
-        "channels", "sample_rate", "n_samples", "audio_sumsq",
-    )
+    def _demux(payload: bytes) -> tuple:
+        fr, _, au, rate = decode_avi_av(payload)
+        a64 = au.astype(np.int64)
+        return (
+            fr.shape[2], fr.shape[1], fr.shape[0],
+            int(fr.astype(np.int64).sum()),
+            au.shape[1], rate, au.shape[0], int((a64 * a64).sum()),
+        )
 
-    def _stats(batches):
-        for pdf in batches:
-            out = {"media_id": []}
-            for c in cols:
-                out[c] = []
-            out["decode_error"] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out["media_id"].append(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    fr, _, au, rate = decode_avi_av(bytes(payload))
-                    a64 = au.astype(np.int64)
-                    vals = {
-                        "width": fr.shape[2],
-                        "height": fr.shape[1],
-                        "n_frames": fr.shape[0],
-                        "pixel_sum": int(fr.astype(np.int64).sum()),
-                        "channels": au.shape[1],
-                        "sample_rate": rate,
-                        "n_samples": au.shape[0],
-                        "audio_sumsq": int((a64 * a64).sum()),
-                    }
-                    for c in cols:
-                        out[c].append(vals[c])
-                    out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — per-row
-                    # quarantine: decode_avi_av can raise beyond
-                    # ValueError on hostile headers; one bad row must
-                    # not kill the Arrow batch
-                    for c in cols:
-                        out[c].append(None)
-                    out["decode_error"].append(str(e)[:200])
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        _stats,
-        schema=(
-            "media_id long, width int, height int, n_frames int, "
-            "pixel_sum long, channels int, sample_rate int, "
-            "n_samples int, audio_sumsq long, decode_error string"
-        ),
+    return _decode_media(
+        media,
+        _demux,
+        "media_id long, width int, height int, n_frames int, "
+        "pixel_sum long, channels int, sample_rate int, "
+        "n_samples int, audio_sumsq long, decode_error string",
     )

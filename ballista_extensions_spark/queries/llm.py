@@ -12,6 +12,8 @@ recall tests against the exact variants.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1676,9 +1678,10 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_q.unionByName(overall)
 
 
-@register(
-    "curation_pipeline_summary",
-    oracle=f"""
+#: The end-to-end replay both curation chains share: the LSH
+#: variant's verified edges equal the exact operator's, so one SQL
+#: proves both.
+_CURATION_ORACLE = f"""
     WITH RECURSIVE
     t AS (SELECT doc_id, text, source,
                  string_split_regex(text, '\\s+') AS toks
@@ -1731,17 +1734,18 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n) AS BIGINT) AS total_tokens
     FROM reps GROUP BY source
-    """,
-)
-def curation_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END curation pipeline as one oracle-verified plan:
-    repetition/quality gate -> exact dedup (keep min id per content
-    hash) -> near-dup transitive closure (capped 3-gram Jaccard >= 0.35
-    -> connected components) -> per-source survivor counts and token
-    totals. The DuckDB oracle replays the identical chain (recursive CTE
-    for the closure), so the whole composition — not just each stage —
-    is hash-exact. This is examples/curation_pipeline.py as a verified
-    query."""
+    """
+
+
+def _curation_chain(
+    spark: SparkSession,
+    sf_dir: str,
+    near_dup_pairs: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The curation chain with its near-dup pair stage as a parameter:
+    inline repetition/quality gate -> exact dedup (keep min id per
+    content hash) -> ``near_dup_pairs(exact)`` -> connected components
+    -> per-source survivor counts and token totals."""
     from ballista_extensions_spark.operators.components import (
         dedup_by_components,
     )
@@ -1781,8 +1785,7 @@ def curation_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text", "source", "n_tokens")
         .localCheckpoint()
     )
-    pairs = D.near_dup_pairs_exact(exact, threshold=0.35, probe_mod=1)
-    comp = dedup_by_components(exact, pairs)
+    comp = dedup_by_components(exact, near_dup_pairs(exact))
     reps = exact.join(
         comp.filter(F.col("is_representative")).select("doc_id"), "doc_id"
     )
@@ -1792,63 +1795,24 @@ def curation_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "curation_pipeline_lsh",
-    oracle=f"""
-    WITH RECURSIVE
-    t AS (SELECT doc_id, text, source,
-                 string_split_regex(text, '\\s+') AS toks
-          FROM documents),
-    rep AS (SELECT doc_id, text, source, toks, len(toks) AS n,
-                   list_transform(generate_series(1, len(toks) - 2),
-                       i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])
-                     AS tri
-            FROM t WHERE len(toks) >= 3),
-    gated AS (
-      SELECT doc_id, text, source, toks, n FROM rep
-      WHERE CAST(len(list_distinct(toks)) AS DOUBLE) / n >= 0.2
-        AND 1.0 - CAST(len(list_distinct(tri)) AS DOUBLE) / len(tri) <= 0.5
-        AND CAST(list_max(list_transform(list_distinct(toks),
-                 tk -> len(list_filter(toks, x -> x = tk)))) AS DOUBLE) / n
-            <= 0.5),
-    exact AS (
-      SELECT g.* FROM gated g
-      JOIN (SELECT md5(text) AS h, MIN(doc_id) AS keep FROM gated
-            GROUP BY md5(text)) k
-        ON md5(g.text) = k.h AND g.doc_id = k.keep),
-    sh AS (SELECT doc_id AS doc,
-                  {_dd_shingles_sql("toks")} AS shingles
-           FROM exact),
-    post AS (SELECT doc, unnest(shingles) AS s FROM sh),
-    keptg AS (SELECT s FROM post GROUP BY s HAVING COUNT(*) <= 100),
-    capped AS (SELECT doc, p.s FROM post p JOIN keptg k USING (s)),
-    sizes AS (SELECT doc, COUNT(*) AS sz FROM capped GROUP BY doc),
-    inter AS (
-      SELECT a.doc AS da, b.doc AS db, CAST(COUNT(*) AS DOUBLE) AS i
-      FROM capped a JOIN capped b ON a.s = b.s AND a.doc < b.doc
-      GROUP BY 1, 2),
-    edges AS (
-      SELECT da, db FROM inter
-      JOIN sizes sa ON sa.doc = da
-      JOIN sizes sb ON sb.doc = db
-      WHERE i / (sa.sz + sb.sz - i) >= 0.35),
-    sym AS (SELECT da AS u, db AS v FROM edges
-            UNION SELECT db, da FROM edges),
-    reach(node, label) AS (
-      SELECT doc_id, doc_id FROM exact
-      UNION
-      SELECT s.v, r.label FROM reach r JOIN sym s ON s.u = r.node),
-    comp AS (SELECT node AS doc_id, MIN(label) AS component
-             FROM reach GROUP BY node),
-    reps AS (SELECT e.source, e.n FROM exact e
-             JOIN comp c ON c.doc_id = e.doc_id
-             WHERE c.component = e.doc_id)
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n) AS BIGINT) AS total_tokens
-    FROM reps GROUP BY source
-    """,
-)
+@register("curation_pipeline_summary", oracle=_CURATION_ORACLE)
+def curation_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END curation pipeline as one oracle-verified plan:
+    repetition/quality gate -> exact dedup (keep min id per content
+    hash) -> near-dup transitive closure (capped 3-gram Jaccard >= 0.35
+    -> connected components) -> per-source survivor counts and token
+    totals. The DuckDB oracle replays the identical chain (recursive CTE
+    for the closure), so the whole composition — not just each stage —
+    is hash-exact. This is examples/curation_pipeline.py as a verified
+    query."""
+    return _curation_chain(
+        spark,
+        sf_dir,
+        lambda exact: D.near_dup_pairs_exact(exact, threshold=0.35, probe_mod=1),
+    )
+
+
+@register("curation_pipeline_lsh", oracle=_CURATION_ORACLE)
 def curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation chain on its 100 TB dedup path: identical gate ->
     exact dedup -> closure -> summary as ``curation_pipeline_summary``,
@@ -1859,37 +1823,12 @@ def curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exact operator's (banding recall ~100% at threshold 0.35,
     verification exact — pytest asserts edge-set equality), so this
     variant shares the exact chain's recursive-CTE oracle: the SQL
-    below is the same end-to-end replay, proving the LSH path preserves
+    is the same end-to-end replay, proving the LSH path preserves
     the whole pipeline's semantics, not just the pair stage's."""
-    from ballista_extensions_spark.operators.components import (
-        dedup_by_components,
-    )
-
-    # inline gate + one-shuffle window dedup + pushdown barrier — see
-    # curation_pipeline_summary for the r17 rationale
-    d = ensure_parallelism(
-        load_table(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=False)
-    gated = T.repetition_stats(d, keep=("text", "source")).filter(
-        (F.col("distinct_ratio") >= 0.2)
-        & (F.col("dup_trigram_frac") <= 0.5)
-        & (F.col("top_token_frac") <= 0.5)
-    )
-    w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    exact = (
-        gated.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("doc_id", "text", "source", "n_tokens")
-        .localCheckpoint()
-    )
-    pairs = D.near_dup_pairs_lsh_verified(exact, threshold=0.35)
-    comp = dedup_by_components(exact, pairs)
-    reps = exact.join(
-        comp.filter(F.col("is_representative")).select("doc_id"), "doc_id"
-    )
-    return reps.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
+    return _curation_chain(
+        spark,
+        sf_dir,
+        lambda exact: D.near_dup_pairs_lsh_verified(exact, threshold=0.35),
     )
 
 

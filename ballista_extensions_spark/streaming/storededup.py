@@ -112,7 +112,6 @@ def sigstore_dedup_sink(
         _word_postings,
     )
     from ballista_extensions_spark.operators.sigstore import (
-        SignatureStore,
         _fused_sets_and_bands,
         _stop_list,
     )
@@ -151,16 +150,12 @@ def sigstore_dedup_sink(
         bsets, bbands = _fused_sets_and_bands(
             raw.join(stop, "s", "left_anti"), bands, rows_per_band
         )
-        store = SignatureStore(
-            bands=read_batches(
-                spark, bands_dir, "doc long, bkey long", before=batch_id
-            ),
-            sets=read_batches(
-                spark, sets_dir, "doc long, shset array<string>",
-                before=batch_id,
-            ).select("doc", "shset"),
-            stop=stop,
+        store_bands = read_batches(
+            spark, bands_dir, "doc long, bkey long", before=batch_id
         )
+        store_sets = read_batches(
+            spark, sets_dir, "doc long, shset array<string>", before=batch_id
+        ).select("doc", "shset")
         # ONE candidate union + ONE distinct + ONE verification join
         # (r17, guide §2.4): store-probe candidates (stored doc_a vs
         # batch doc_b — id sets disjoint by the store's first-wins
@@ -173,7 +168,7 @@ def sigstore_dedup_sink(
         # fused with the intra pass; pair values are bit-identical.
         nb = bbands.select(F.col("doc").alias("doc_b"), "bkey")
         store_cands = (
-            store.bands.select(F.col("doc").alias("doc_a"), "bkey")
+            store_bands.select(F.col("doc").alias("doc_a"), "bkey")
             .join(nb, "bkey")
             .select("doc_a", "doc_b")
         )
@@ -184,7 +179,7 @@ def sigstore_dedup_sink(
             .select("doc_a", "doc_b")
         )
         cands = store_cands.unionByName(intra_cands).distinct()
-        all_sets = store.sets.unionByName(bsets)
+        all_sets = store_sets.unionByName(bsets)
         pairs = _verify_capped_jaccard(
             cands, all_sets, threshold, spark
         ).select(
@@ -205,7 +200,7 @@ def sigstore_dedup_sink(
         # __batch_id=N overwrite can never delete a file these plans
         # read (static partition prune), so no checkpoint-before-write
         # is needed.
-        gone = rejects.unionByName(store.sets.select("doc"))
+        gone = rejects.unionByName(store_sets.select("doc"))
         write_batch(bbands.join(gone, "doc", "left_anti"), bands_dir, batch_id)
         write_batch(bsets.join(gone, "doc", "left_anti"), sets_dir, batch_id)
 

@@ -702,3 +702,97 @@ def test_detect_media_kind_equals_hex_form(spark):
     assert {r["media_id"]: r["new"] for r in got}[-1] == "unknown"
     schema = df.select(M.detect_media_kind("payload").alias("k")).schema
     assert schema == df.select(_hex_media_kind("payload").alias("k")).schema
+
+
+def _quarantine_cases():
+    """(operator, good payload, output simpleString, non-null columns)
+    for every decode operator under the per-row quarantine contract."""
+    import numpy as np
+
+    from ballista_extensions_spark.operators import audiocodec as A
+    from ballista_extensions_spark.operators import imagecodec as I
+    from ballista_extensions_spark.operators import videocodec as V
+
+    px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
+    frames = np.stack([px, px + 100, px + 50])
+    samples = ((np.arange(260, dtype=np.int16) % 7) - 3).reshape(130, 2) * 999
+    png = I.encode_png(px)
+    wav = A.encode_wav(samples, 8000)
+    return [
+        (A.audio_meta_stats, wav,
+         "media_id:bigint,sample_rate:int,channels:int,n_frames:int,"
+         "duration_ms:bigint,peak_abs:bigint,sumsq:bigint,"
+         "zero_crossings:bigint,decode_error:string", set()),
+        (A.audio_resample_stats, wav,
+         "media_id:bigint,out_frames:int,out_sumsq:bigint,"
+         "decode_error:string", set()),
+        (V.video_meta_stats, V.encode_avi(frames, 40000),
+         "media_id:bigint,width:int,height:int,n_frames:int,"
+         "us_per_frame:bigint,duration_ms:bigint,pixel_sum:bigint,"
+         "decode_error:string", set()),
+        (V.av_demux_stats, V.encode_avi_av(frames, 40000, samples, 8000),
+         "media_id:bigint,width:int,height:int,n_frames:int,"
+         "pixel_sum:bigint,channels:int,sample_rate:int,n_samples:int,"
+         "audio_sumsq:bigint,decode_error:string", set()),
+        (M.mixed_decode_checksum, png,
+         "media_id:bigint,kind:string,checksum:bigint,decode_error:string",
+         set()),
+        (lambda m: M.decode_pixel_stats(m, I.decode_to_array), png,
+         "media_id:bigint,width:int,height:int,channels:int,"
+         "pixel_sum:bigint,decode_error:string", set()),
+        (lambda m: M.decode_images(m, decoder=I.decode_image), png,
+         "media_id:bigint,width:int,height:int,channels:int,"
+         "byte_len:bigint,decode_error:string", {"media_id"}),
+    ]
+
+
+@pytest.mark.parametrize("case", range(7))
+def test_decode_operators_quarantine_bad_rows(spark, case):
+    """Every decode operator quarantines per row: a NULL payload gives
+    ``"null payload"`` and NULL values, a truncated payload gives NULL
+    values and an error, the good rows beside them in the same Arrow
+    batch decode as they do alone, and the output schema (types and
+    nullability) is fixed. ``decode_images`` keeps ``byte_len`` on a
+    failed decode."""
+    op, good, ddl, non_null = _quarantine_cases()[case]
+    bad = good[:20]
+    frame = spark.createDataFrame(
+        [(1, bytearray(good)), (2, bytearray(bad)), (3, None),
+         (4, bytearray(good))],
+        "media_id long, payload binary",
+    ).coalesce(1)
+    out = op(frame)
+    assert out.schema.simpleString() == f"struct<{ddl}>"
+    assert {f.name for f in out.schema if not f.nullable} == non_null
+    got = {r["media_id"]: r.asDict() for r in out.collect()}
+    alone = op(frame.filter("media_id = 1")).collect()[0].asDict()
+    values = [c for c in out.columns
+              if c not in ("media_id", "decode_error", "byte_len")]
+    assert alone["decode_error"] is None
+    assert all(alone[c] is not None for c in values)
+    assert got[1] == alone and got[4] == {**alone, "media_id": 4}
+    assert got[2]["decode_error"] is not None
+    assert got[3]["decode_error"] == "null payload"
+    for mid in (2, 3):
+        assert all(got[mid][c] is None for c in values), got[mid]
+    if "byte_len" in out.columns:
+        assert got[2]["byte_len"] == len(bad)
+        assert got[3]["byte_len"] is None
+
+
+def test_decode_body_keeps_bigints_exact_beside_null_rows(spark):
+    """A value column that holds a NULL beside an int past 2^53 in the
+    same Arrow batch keeps the int exact; a float64 column would round
+    it."""
+    df = spark.createDataFrame(
+        [(1, bytearray(b"x")), (2, None), (3, bytearray(b"y"))],
+        "media_id long, payload binary",
+    ).coalesce(1)
+    out = M._decode_media(
+        df,
+        lambda b: (2**60 + len(b) if b == b"x" else None,),
+        "media_id long, v long, decode_error string",
+    )
+    got = {r["media_id"]: (r["v"], r["decode_error"]) for r in out.collect()}
+    assert got == {1: (2**60 + 1, None), 2: (None, "null payload"),
+                   3: (None, None)}

@@ -133,7 +133,7 @@ def test_session_edit_requeues_everything(base, tmp_path):
 
 
 _PROFILE = r"""
-import json, os, sys, threading
+import inspect, json, os, sys, threading
 sys.path.insert(0, sys.argv[1])
 from ballista_extensions_spark.queries import registry, streaming_replay
 from ballista_extensions_spark.session import get_session
@@ -143,8 +143,11 @@ pkg_dir = os.path.dirname(os.path.dirname(registry.__file__))
 called = set()
 
 def profile(frame, event, arg):
+    # CO_NEWLOCALS marks function code; module and class bodies that an
+    # import runs lack it and are not calls.
     code = frame.f_code
-    if event == "call" and code.co_filename.startswith(pkg_dir) and code.co_name != "<module>":
+    if (event == "call" and code.co_flags & inspect.CO_NEWLOCALS
+            and code.co_filename.startswith(pkg_dir)):
         called.add((frame.f_globals["__name__"], code.co_qualname.split(".")[0]))
 
 threading.setprofile(profile)  # foreachBatch sinks run on callback threads
