@@ -76,8 +76,14 @@ def image_dhash(
                     hv = None
                 ids.append(mid)
                 hashes.append(hv)
+            # an object Series keeps the int64 hashes exact beside a
+            # NULL; a plain list holding None becomes float64
             yield pd.DataFrame(
-                {"id": ids, "dhash": hashes, **{c: pdf[c] for c in carry}}
+                {
+                    "id": ids,
+                    "dhash": pd.Series(hashes, dtype=object),
+                    **{c: pdf[c] for c in carry},
+                }
             )
 
     schema = StructType(

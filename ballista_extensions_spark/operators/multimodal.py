@@ -289,7 +289,9 @@ def docs_png_dhash(documents: DataFrame) -> DataFrame:
                     hv = None
                 ids.append(mid)
                 hashes.append(hv)
-            yield pd.DataFrame({"id": ids, "dhash": hashes})
+            yield pd.DataFrame(
+                {"id": ids, "dhash": pd.Series(hashes, dtype=object)}
+            )
 
     return documents.select("doc_id", "text").mapInPandas(
         _fused, schema="id long, dhash long"

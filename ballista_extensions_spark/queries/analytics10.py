@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ballista_extensions_spark.io import ensure_parallelism, load_table
 from ballista_extensions_spark.queries.analytics7 import _DHASH_CTE
+from ballista_extensions_spark.queries.audits import check_rows, register_audit
 from ballista_extensions_spark.queries.registry import register
 
 
@@ -253,13 +254,7 @@ _COMPRESSION_AUDIT_CHECKS = [
 ]
 
 
-@register(
-    "compression_contract_audit",
-    oracle="\nUNION ALL\n".join(
-        f"SELECT '{n}' AS check_name, TRUE AS passed"
-        for n in _COMPRESSION_AUDIT_CHECKS
-    ),
-)
+@register_audit("compression_contract_audit", _COMPRESSION_AUDIT_CHECKS)
 def compression_contract_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -287,17 +282,20 @@ def compression_contract_audit(
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     cs = compression_stats(d).localCheckpoint()
 
-    bad_null = cs.filter(
-        ((F.col("n_bytes") == 0) & F.col("compression_ratio").isNotNull())
-        | ((F.col("n_bytes") > 0) & F.col("compression_ratio").isNull())
-    ).count()
-    bad_bounds = cs.filter(
-        (F.col("n_bytes") >= 64)
-        & (
-            (F.col("compression_ratio") <= 0)
-            | (F.col("compression_ratio") > 1.1)
-        )
-    ).count()
+    # both per-row invariants in one aggregate over the checkpoint
+    bad = cs.agg(
+        F.count_if(
+            ((F.col("n_bytes") == 0) & F.col("compression_ratio").isNotNull())
+            | ((F.col("n_bytes") > 0) & F.col("compression_ratio").isNull())
+        ).alias("null"),
+        F.count_if(
+            (F.col("n_bytes") >= 64)
+            & (
+                (F.col("compression_ratio") <= 0)
+                | (F.col("compression_ratio") > 1.1)
+            )
+        ).alias("bounds"),
+    ).first()
 
     rep_text = "spark " * 400
     rnd_text = " ".join(
@@ -332,15 +330,15 @@ def compression_contract_audit(
         .count()
     )
 
-    return spark.createDataFrame(
-        [
-            ("ratio_null_iff_empty", bad_null == 0),
-            ("ratio_in_bounds_for_real_docs", bad_bounds == 0),
-            ("repetitive_below_random", bool(separation)),
-            ("matches_python_zlib", bool(matches_zlib)),
-            ("deterministic_recompute", mismatches == 0),
-        ],
-        schema="check_name string, passed boolean",
+    return check_rows(
+        spark,
+        {
+            "ratio_null_iff_empty": bad["null"] == 0,
+            "ratio_in_bounds_for_real_docs": bad["bounds"] == 0,
+            "repetitive_below_random": separation,
+            "matches_python_zlib": matches_zlib,
+            "deterministic_recompute": mismatches == 0,
+        },
     )
 
 

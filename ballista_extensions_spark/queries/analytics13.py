@@ -26,6 +26,7 @@ from ballista_extensions_spark.operators.dsir import (
     n_feats_sql_duckdb,
     words_sql_duckdb,
 )
+from ballista_extensions_spark.queries.audits import check_rows, register_audit
 from ballista_extensions_spark.queries.registry import register
 
 # every oracle materializes the token array ONCE in a CTE and folds
@@ -371,14 +372,7 @@ _GUMBEL_AUDIT_CHECKS = [
 ]
 
 
-def _gumbel_const_true_oracle() -> str:
-    return "\nUNION ALL\n".join(
-        f"SELECT '{n}' AS check_name, TRUE AS passed"
-        for n in _GUMBEL_AUDIT_CHECKS
-    )
-
-
-@register("dsir_gumbel_audit", oracle=_gumbel_const_true_oracle())
+@register_audit("dsir_gumbel_audit", _GUMBEL_AUDIT_CHECKS)
 def dsir_gumbel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gumbel resampler's contract as driver-hash-checkable rows
     (the sample_contract_audit pattern — rows-only ops get their
@@ -407,20 +401,20 @@ def dsir_gumbel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_select,
         gumbel_key_col,
     )
-    from ballista_extensions_spark.queries.audits import _lit_checks
 
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     k = _K_SELECT
     sel = dsir_gumbel_select(d, k, seed=42).select(
         "doc_id", "gumbel_key"
     ).localCheckpoint()
-    n_sel = sel.count()
+    sel_row = sel.agg(
+        F.count(F.lit(1)).alias("n"), F.min("gumbel_key").alias("lo")
+    ).first()
 
     perturbed = dsir_logweights(d).withColumn(
         "gumbel_key", gumbel_key_col("doc_id", 42)
     )
     unsel = perturbed.join(sel.select("doc_id"), "doc_id", "left_anti")
-    lo_sel = sel.agg(F.min("gumbel_key").alias("m")).collect()[0]["m"]
     hi_unsel = unsel.agg(F.max("gumbel_key").alias("m")).collect()[0]["m"]
 
     # determinism: every id must appear exactly twice across two
@@ -456,28 +450,26 @@ def dsir_gumbel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sampler reproduces argmax, overlap ~= 1 — require <= 0.95.
     # Fixture margins: sf0.01/0.001 observe 0.64-0.65 vs lo 0.4;
     # sf0.1 observes 0.28-0.30 vs lo 0.04.
-    n_corpus = perturbed.count()
-    overlap_lo = min(0.5, 2.0 * k / max(n_corpus, 1))
+    corpus = perturbed.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.avg(F.col("gumbel_key") - F.col("logweight")).alias("noise_mean"),
+    ).first()
+    overlap_lo = min(0.5, 2.0 * k / max(corpus["n"], 1))
 
-    noise_mean = (
-        perturbed.agg(
-            F.avg(F.col("gumbel_key") - F.col("logweight")).alias("m")
-        ).collect()[0]["m"]
-    )
-
-    return _lit_checks(
+    return check_rows(
         spark,
-        [
-            ("exact_k", n_sel == k),
+        {
+            "exact_k": sel_row["n"] == k,
             # vacuously true when the corpus has <= k docs (unsel is
             # empty and agg(max) returns None)
-            ("top_k_by_perturbed_key", hi_unsel is None or lo_sel >= hi_unsel),
-            ("same_seed_deterministic", asym == 0),
-            ("different_seeds_differ", n_diff > 0),
-            ("argmax_overlap_band", overlap_lo <= n_overlap / k <= 0.95),
-            (
-                "gumbel_noise_mean_band",
-                abs(noise_mean - 0.5772156649) <= 0.25,
-            ),
-        ],
+            "top_k_by_perturbed_key": hi_unsel is None
+            or sel_row["lo"] >= hi_unsel,
+            "same_seed_deterministic": asym == 0,
+            "different_seeds_differ": n_diff > 0,
+            "argmax_overlap_band": overlap_lo <= n_overlap / k <= 0.95,
+            "gumbel_noise_mean_band": abs(
+                corpus["noise_mean"] - 0.5772156649
+            )
+            <= 0.25,
+        },
     )

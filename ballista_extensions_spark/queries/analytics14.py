@@ -14,6 +14,7 @@ from ballista_extensions_spark.operators.shards import (
     manifest_oracle_sql,
     training_shard_manifest,
 )
+from ballista_extensions_spark.queries.audits import check_rows, register_audit
 from ballista_extensions_spark.queries.registry import register
 
 #: fixed shard parameters for the graded query — capacity small enough
@@ -418,13 +419,7 @@ _SHARD_AUDIT_CHECKS = [
 ]
 
 
-def _shard_audit_oracle() -> str:
-    from ballista_extensions_spark.queries.audits import _const_true_oracle
-
-    return _const_true_oracle(_SHARD_AUDIT_CHECKS)
-
-
-@register("shard_contract_audit", oracle=_shard_audit_oracle())
+@register_audit("shard_contract_audit", _SHARD_AUDIT_CHECKS)
 def shard_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shard writer's contract as driver-hash-checkable rows (the
     sample_contract_audit pattern — claims the manifest oracle cannot
@@ -456,8 +451,6 @@ def shard_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_training_shards,
         training_shard_manifest,
     )
-    from ballista_extensions_spark.queries.audits import _lit_checks
-
     from ballista_extensions_spark.operators.shards import manifest_agg
 
     cap, seed = 1536, 11
@@ -500,16 +493,16 @@ def shard_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_tokens = sum(r["n_tokens"] for r in man_a)
     conserved = total_docs == n and total_tokens == cum
 
-    return _lit_checks(
+    return check_rows(
         spark,
-        [
-            ("same_seed_byte_identical", same),
-            ("different_seed_reshuffles", differs),
-            ("rank_is_permutation", perm),
-            ("greedy_assignment_exact", greedy),
-            ("capacity_overflow_bounded", overflow_ok),
-            ("token_totals_conserved", conserved),
-        ],
+        {
+            "same_seed_byte_identical": same,
+            "different_seed_reshuffles": differs,
+            "rank_is_permutation": perm,
+            "greedy_assignment_exact": greedy,
+            "capacity_overflow_bounded": overflow_ok,
+            "token_totals_conserved": conserved,
+        },
     )
 
 

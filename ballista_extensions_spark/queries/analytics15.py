@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ballista_extensions_spark.io import ensure_parallelism, load_table
+from ballista_extensions_spark.queries.audits import check_rows, register_audit
 from ballista_extensions_spark.queries.registry import register
 
 #: packing parameters for the graded query — context length small
@@ -102,13 +103,7 @@ _REPLAY_CHECKS = [
 ]
 
 
-def _replay_audit_oracle() -> str:
-    from ballista_extensions_spark.queries.audits import _const_true_oracle
-
-    return _const_true_oracle(_REPLAY_CHECKS)
-
-
-@register("shard_replay_audit", oracle=_replay_audit_oracle())
+@register_audit("shard_replay_audit", _REPLAY_CHECKS)
 def shard_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shard READ-side / epoch-replay contract (VERDICT r14
     directive #3) — the write path round-trips in pytest; this audit
@@ -150,7 +145,6 @@ def shard_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_agg,
         write_training_shards,
     )
-    from ballista_extensions_spark.queries.audits import _lit_checks
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -271,17 +265,17 @@ def shard_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_differs = ra["o"] != rb["o"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
-    return _lit_checks(
+    return check_rows(
         spark,
-        [
-            ("read_back_matches_manifest", read_back),
-            ("rank_sequential_within_shard", contiguous),
-            ("shards_tile_global_ranks", tiles),
-            ("resume_is_partition_pruned", pruned),
-            ("resume_replays_manifest_tail", tail_ok),
-            ("epoch_content_set_equal", set_equal),
-            ("epoch_order_differs", order_differs),
-        ],
+        {
+            "read_back_matches_manifest": read_back,
+            "rank_sequential_within_shard": contiguous,
+            "shards_tile_global_ranks": tiles,
+            "resume_is_partition_pruned": pruned,
+            "resume_replays_manifest_tail": tail_ok,
+            "epoch_content_set_equal": set_equal,
+            "epoch_order_differs": order_differs,
+        },
     )
 
 
@@ -498,13 +492,7 @@ _PACK_AUDIT_CHECKS = [
 ]
 
 
-def _pack_audit_oracle() -> str:
-    from ballista_extensions_spark.queries.audits import _const_true_oracle
-
-    return _const_true_oracle(_PACK_AUDIT_CHECKS)
-
-
-@register("packing_contract_audit", oracle=_pack_audit_oracle())
+@register_audit("packing_contract_audit", _PACK_AUDIT_CHECKS)
 def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The emitted token-ID sequences against the graded packing
     manifest — proves `emit_packed_sequences` hands the trainer
@@ -541,7 +529,6 @@ def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         position_weight_sql,
         ranked_stream,
     )
-    from ballista_extensions_spark.queries.audits import _lit_checks
 
     L, seed = _PACK_LEN, _PACK_SEED
     eos_id = len(token_vocab(FROZEN_STREAM_MERGES))
@@ -565,17 +552,14 @@ def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     man = pack_sequences_manifest(
         joined, L, seed, cost_col="n_ids"
-    ).select("seq_id", "n_tokens", "padding")
-    mism = (
-        seqs.select("seq_id", "n_tokens", "padding")
-        .join(man, ["seq_id", "n_tokens", "padding"], "full_outer")
-        .count()
-    )
-    n_seq = seqs.count()
-    lengths_ok = mism == n_seq == man.count()
+    ).select("seq_id", "n_tokens", "padding", F.lit(1).alias("m"))
 
-    doc_tot = ids.agg(F.sum("n_ids").alias("t")).collect()[0]["t"]
+    # one aggregate per evidence frame: the emitted sequences, the
+    # per-document ids, the sequences-vs-manifest join and the ranked
+    # document stream
+    w_seq = position_weight_sql(f"(seq_id * {L} + i + 1)")
     srow = seqs.agg(
+        F.count(F.lit(1)).alias("n"),
         F.sum(F.size("ids")).alias("t"),
         F.min(F.expr("array_min(ids)")).alias("lo"),
         F.max(F.expr("array_max(ids)")).alias("hi"),
@@ -589,22 +573,38 @@ def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "npad"
         ),
         F.max("seq_id").alias("maxseq"),
-    ).collect()[0]
-    conserved = int(srow["t"]) == int(doc_tot)
+        (
+            F.sum(
+                F.expr(
+                    f"aggregate(transform(ids, (x, i) -> "
+                    f"((CAST(x AS BIGINT) + 1) * {w_seq}) % {P}), "
+                    f"0L, (a, b) -> (a + b) % {P})"
+                )
+            )
+            % P
+        ).alias("h"),
+    ).first()
+    # the applier emits one row per document: its row count is the
+    # document count
+    drow = ids.agg(
+        F.sum("n_ids").alias("t"), F.count(F.lit(1)).alias("n")
+    ).first()
+    # seq_id is a grouping key on both sides, so each manifest row
+    # appears once in the full-outer join and count("m") is its count
+    jrow = (
+        seqs.select("seq_id", "n_tokens", "padding")
+        .join(man, ["seq_id", "n_tokens", "padding"], "full_outer")
+        .agg(F.count(F.lit(1)).alias("rows"), F.count("m").alias("n_man"))
+        .first()
+    )
+    lengths_ok = jrow["rows"] == srow["n"] == jrow["n_man"]
+    conserved = int(srow["t"]) == int(drow["t"])
     id_range = srow["lo"] >= 0 and srow["hi"] == eos_id
-    eos_count = int(srow["eos"]) == d.count()
+    eos_count = int(srow["eos"]) == drow["n"]
     pad_tail = int(srow["npad"] or 0) <= 1 and (
         srow["npad"] == 0 or srow["padseq"] == srow["maxseq"]
     )
 
-    w_seq = position_weight_sql(f"(seq_id * {L} + i + 1)")
-    h_seq = seqs.select(
-        F.expr(
-            f"aggregate(transform(ids, (x, i) -> "
-            f"((CAST(x AS BIGINT) + 1) * {w_seq}) % {P}), "
-            f"0L, (a, b) -> (a + b) % {P})"
-        ).alias("h")
-    ).agg((F.sum("h") % P).alias("h")).collect()[0]["h"]
     w_doc = position_weight_sql("(cum - n_tokens + i + 1)")
     h_doc = ranked.select(
         F.expr(
@@ -613,16 +613,16 @@ def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"0L, (a, b) -> (a + b) % {P})"
         ).alias("h")
     ).agg((F.sum("h") % P).alias("h")).collect()[0]["h"]
-    stream_ok = h_seq == h_doc and h_seq is not None
+    stream_ok = srow["h"] == h_doc and srow["h"] is not None
 
-    return _lit_checks(
+    return check_rows(
         spark,
-        [
-            ("lengths_match_manifest", lengths_ok),
-            ("token_conservation", conserved),
-            ("id_range_valid", id_range),
-            ("eos_per_document", eos_count),
-            ("stream_hash_equal", stream_ok),
-            ("padding_tail_only", pad_tail),
-        ],
+        {
+            "lengths_match_manifest": lengths_ok,
+            "token_conservation": conserved,
+            "id_range_valid": id_range,
+            "eos_per_document": eos_count,
+            "stream_hash_equal": stream_ok,
+            "padding_tail_only": pad_tail,
+        },
     )

@@ -6,17 +6,29 @@ The sample family and the sketch family register rows-only queries (a
 Bernoulli sample has no ANSI oracle; a sketch estimate is not a SQL
 expression), so their strong contracts — determinism, Chernoff bands,
 validation matrix, error bounds — lived only in pytest. Each audit
-query here RETURNS those contracts as (check_name, passed) rows whose
+query RETURNS those contracts as (check_name, passed) rows whose
 oracle is a constant table of TRUE — the driver's hash gate then
 re-proves the contracts on its own data every time the query is graded.
 
-Construction is lazy: the validation-matrix and plan-shape checks are
-plan-time booleans (no jobs), everything statistical is a one-row
-aggregate unioned into the result, so the driver's single collect runs
-the whole audit.
+Every audit has one form: :func:`register_audit` registers it with its
+declared check names (and derives the constant oracle from them), and
+the audit ends in :func:`check_rows`, which maps each check name to a
+driver-side bool or a one-row frame with a ``passed`` column.
+
+Construction differs by audit. The four here (sample, sketch, ann,
+dedup_probabilistic) build lazily: the validation-matrix and
+plan-shape checks are plan-time booleans (no jobs), everything
+statistical is a one-row aggregate unioned into the result, so the
+driver's single collect runs the whole audit. The other five
+(compression, shard, dsir_gumbel, shard_replay, packing) run their
+Spark actions while they are built — checkpoints, one aggregate per
+evidence frame collected to the driver, a shard write — and return
+the booleans as literal rows.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,23 +37,45 @@ from ballista_extensions_spark.errors import PlanError
 from ballista_extensions_spark.io import load_table
 from ballista_extensions_spark.queries.registry import register
 
+#: audit name -> its declared check names; every constant-TRUE audit
+#: registers here through :func:`register_audit`
+AUDITS: dict[str, list[str]] = {}
 
-def _lit_checks(spark: SparkSession, checks: list[tuple[str, bool]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(n, bool(p)) for n, p in checks],
-        schema="check_name string, passed boolean",
+
+def _const_true_oracle(names: list[str]) -> str:
+    return "\nUNION ALL\n".join(
+        f"SELECT '{n}' AS check_name, TRUE AS passed" for n in names
     )
 
 
-def _agg_check(name: str, df_passed: DataFrame) -> DataFrame:
-    """Wrap a one-row frame with a boolean ``passed`` column."""
-    return df_passed.select(
-        F.lit(name).alias("check_name"), F.col("passed").cast("boolean")
-    )
+def register_audit(name: str, checks: list[str]):
+    """Decorator: register a contract audit under ``name`` with its
+    declared ``checks``; the oracle is the constant all-TRUE table
+    over them."""
+    AUDITS[name] = checks
+    return register(name, oracle=_const_true_oracle(checks))
+
+
+def check_rows(
+    spark: SparkSession, checks: dict[str, bool | DataFrame]
+) -> DataFrame:
+    """An audit's result: one (check_name, passed) row per entry of
+    ``checks``. A value is a driver-side bool or a one-row frame with a
+    ``passed`` column (evaluated by the caller's collect)."""
+    bools = [
+        (n, bool(p)) for n, p in checks.items() if not isinstance(p, DataFrame)
+    ]
+    schema = "check_name string, passed boolean"
+    frames = [spark.createDataFrame(bools, schema=schema)] if bools else []
+    frames += [
+        p.select(F.lit(n).alias("check_name"), F.col("passed").cast("boolean"))
+        for n, p in checks.items()
+        if isinstance(p, DataFrame)
+    ]
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def _frames_match_check(
-    name: str,
     a: DataFrame,
     b: DataFrame,
     pairs: list[tuple[str, str]],
@@ -67,11 +101,8 @@ def _frames_match_check(
     # vacuous — coalesce to TRUE so the audit tolerates degenerate
     # corpora instead of failing on a NULL boolean (same class as the
     # empty-exact-baseline guard in the ANN recall checks).
-    return _agg_check(
-        name,
-        a.join(b, cond, "full_outer").agg(
-            F.coalesce(passed, F.lit(True)).alias("passed")
-        ),
+    return a.join(b, cond, "full_outer").agg(
+        F.coalesce(passed, F.lit(True)).alias("passed")
     )
 
 
@@ -89,15 +120,7 @@ _SAMPLE_AUDIT_CHECKS = [
 ]
 
 
-def _const_true_oracle(names: list[str]) -> str:
-    return "\nUNION ALL\n".join(
-        f"SELECT '{n}' AS check_name, TRUE AS passed" for n in names
-    )
-
-
-@register(
-    "sample_contract_audit", oracle=_const_true_oracle(_SAMPLE_AUDIT_CHECKS)
-)
+@register_audit("sample_contract_audit", _SAMPLE_AUDIT_CHECKS)
 def sample_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sample operator's full contract as driver-checkable rows —
     the reference's e2e matrix (tests/e2e.rs:20-51) plus the statistical
@@ -128,35 +151,12 @@ def sample_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         except PlanError:
             return True
 
-    lit_part = _lit_checks(
-        spark,
-        [
-            ("fraction_zero_rejected", _rejected(lambda: sample(li, 0.0))),
-            ("fraction_above_one_rejected", _rejected(lambda: sample(li, 1.5))),
-            ("negative_seed_rejected", _rejected(lambda: sample(li, 0.5, -1))),
-            ("fraction_one_accepted", sample(li, 1.0, 0) is not None),
-            ("schema_preserved", sample(li, 0.3, 7).schema == li.schema),
-            (
-                "plan_no_exchange",
-                P.shuffle_exchanges(sample(li, 0.3, 7))
-                == P.shuffle_exchanges(li),
-            ),
-        ],
-    )
-
     key = (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("long")
     s1 = sample(li, 0.3, 123).select(key.alias("k1"))
     s2 = sample(li, 0.3, 123).select(key.alias("k2"))
     s3 = sample(li, 0.3, 321).select(key.alias("k3"))
 
-    same = _frames_match_check(
-        "same_seed_deterministic", s1, s2, [("k1", "k2")]
-    )
-    differ = _frames_match_check(
-        "different_seeds_differ", s1, s3, [("k1", "k3")], expect_match=False
-    )
-    chernoff = _agg_check(
-        "chernoff_band_6sigma",
+    chernoff = (
         li.agg(F.count(F.lit(1)).cast("double").alias("n"))
         .crossJoin(
             s1.agg(F.count(F.lit(1)).cast("double").alias("kept"))
@@ -166,7 +166,7 @@ def sample_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.abs(F.col("kept") - 0.3 * F.col("n"))
                 < F.lit(6.0) * F.sqrt(F.col("n") * 0.3 * 0.7)
             ).alias("passed")
-        ),
+        )
     )
 
     fractions = {"AUTOMOBILE": 0.4, "BUILDING": 0.3, "MACHINERY": 0.2}
@@ -201,20 +201,33 @@ def sample_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("within")
         )
     )
-    strat_check = _agg_check(
-        "stratified_bands_6sigma",
-        # MIN over zero groups (empty customer table) is NULL — an
-        # empty stratification is vacuously within its bands
-        per_key.agg(
-            F.coalesce(F.min("within"), F.lit(True)).alias("passed")
-        ),
-    )
-
-    return (
-        lit_part.unionByName(same)
-        .unionByName(differ)
-        .unionByName(chernoff)
-        .unionByName(strat_check)
+    return check_rows(
+        spark,
+        {
+            "fraction_zero_rejected": _rejected(lambda: sample(li, 0.0)),
+            "fraction_above_one_rejected": _rejected(
+                lambda: sample(li, 1.5)
+            ),
+            "negative_seed_rejected": _rejected(
+                lambda: sample(li, 0.5, -1)
+            ),
+            "fraction_one_accepted": sample(li, 1.0, 0) is not None,
+            "schema_preserved": sample(li, 0.3, 7).schema == li.schema,
+            "plan_no_exchange": P.shuffle_exchanges(sample(li, 0.3, 7))
+            == P.shuffle_exchanges(li),
+            "same_seed_deterministic": _frames_match_check(
+                s1, s2, [("k1", "k2")]
+            ),
+            "different_seeds_differ": _frames_match_check(
+                s1, s3, [("k1", "k3")], expect_match=False
+            ),
+            "chernoff_band_6sigma": chernoff,
+            # MIN over zero groups (empty customer table) is NULL — an
+            # empty stratification is vacuously within its bands
+            "stratified_bands_6sigma": per_key.agg(
+                F.coalesce(F.min("within"), F.lit(True)).alias("passed")
+            ),
+        },
     )
 
 
@@ -226,9 +239,7 @@ _SKETCH_AUDIT_CHECKS = [
 ]
 
 
-@register(
-    "sketch_contract_audit", oracle=_const_true_oracle(_SKETCH_AUDIT_CHECKS)
-)
+@register_audit("sketch_contract_audit", _SKETCH_AUDIT_CHECKS)
 def sketch_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mergeable-sketch error bounds as driver-checkable rows
     (VERDICT r7 stretch item): every estimate is compared against the
@@ -256,14 +267,11 @@ def sketch_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double").alias("est"),
         F.countDistinct("o_custkey").cast("double").alias("exact"),
     )
-    hll_err = _agg_check(
-        "hll_error_within_3rse",
-        est.select(
-            (
-                F.abs(F.col("est") - F.col("exact"))
-                <= F.lit(0.049) * F.col("exact")
-            ).alias("passed")
-        ),
+    hll_err = est.select(
+        (
+            F.abs(F.col("est") - F.col("exact"))
+            <= F.lit(0.049) * F.col("exact")
+        ).alias("passed")
     )
 
     per = o.groupBy("o_orderpriority").agg(
@@ -277,13 +285,10 @@ def sketch_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("o_custkey", F.lit(12))
         ).cast("double").alias("d")
     )
-    hll_union = _agg_check(
-        "hll_union_consistent",
-        union_est.crossJoin(direct_est).select(
-            (
-                F.abs(F.col("u") - F.col("d")) <= F.lit(0.05) * F.col("d")
-            ).alias("passed")
-        ),
+    hll_union = union_est.crossJoin(direct_est).select(
+        (F.abs(F.col("u") - F.col("d")) <= F.lit(0.05) * F.col("d")).alias(
+            "passed"
+        )
     )
 
     q = o.agg(
@@ -292,8 +297,7 @@ def sketch_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.5),
         ).alias("q")
     )
-    kll_rank = _agg_check(
-        "kll_median_rank_error_within_2x",
+    kll_rank = (
         o.select(F.col("o_totalprice").cast("double").alias("v"))
         .crossJoin(F.broadcast(q))
         .agg(
@@ -309,7 +313,7 @@ def sketch_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= F.lit(2 * 0.0165),
                 F.lit(True),
             ).alias("passed")
-        ),
+        )
     )
 
     halves = o.select(
@@ -331,20 +335,21 @@ def sketch_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("double").alias("est_i")
         )
     )
-    theta_check = _agg_check(
-        "theta_intersection_error_within_5pct",
-        theta_est.crossJoin(exact_i).select(
-            (
-                F.abs(F.col("est_i") - F.col("exact_i"))
-                <= F.lit(0.05) * F.col("exact_i") + F.lit(1.0)
-            ).alias("passed")
-        ),
+    theta_check = theta_est.crossJoin(exact_i).select(
+        (
+            F.abs(F.col("est_i") - F.col("exact_i"))
+            <= F.lit(0.05) * F.col("exact_i") + F.lit(1.0)
+        ).alias("passed")
     )
 
-    return (
-        hll_err.unionByName(hll_union)
-        .unionByName(kll_rank)
-        .unionByName(theta_check)
+    return check_rows(
+        spark,
+        {
+            "hll_error_within_3rse": hll_err,
+            "hll_union_consistent": hll_union,
+            "kll_median_rank_error_within_2x": kll_rank,
+            "theta_intersection_error_within_5pct": theta_check,
+        },
     )
 
 
@@ -357,9 +362,7 @@ _ANN_AUDIT_CHECKS = [
 ]
 
 
-@register(
-    "ann_contract_audit", oracle=_const_true_oracle(_ANN_AUDIT_CHECKS)
-)
+@register_audit("ann_contract_audit", _ANN_AUDIT_CHECKS)
 def ann_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN family's statistical contracts as driver-checkable rows —
     the audit complement of the rows-only ann_lsh_topk / ann_ivf_topk /
@@ -405,8 +408,7 @@ def ann_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle on exactly the degenerate inputs an audit must tolerate.
     corpus_n = e.agg(F.count(F.lit(1)).alias("m"))
     kexp = F.least(F.lit(10), F.col("m") - 1)
-    well_formed = _agg_check(
-        "exact_topk_well_formed",
+    well_formed = (
         exact.agg(
             F.count(F.lit(1)).alias("cnt"),
             F.countDistinct("q_id").alias("nq"),
@@ -423,10 +425,10 @@ def ann_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     & (F.col("max_rn") == kexp)
                 )
             ).alias("passed")
-        ),
+        )
     )
 
-    def _recall_check(name: str, approx: DataFrame, floor: float) -> DataFrame:
+    def _recall_check(approx: DataFrame, floor: float) -> DataFrame:
         a = approx.select(
             F.col("q_id").alias("a_q"), F.col("c_id").alias("a_id")
         )
@@ -435,17 +437,14 @@ def ann_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (exact["q_id"] == a["a_q"]) & (exact["e_id"] == a["a_id"]),
         ).agg(F.count(F.lit(1)).cast("double").alias("n_hit"))
         base = exact.agg(F.count(F.lit(1)).cast("double").alias("n_exact"))
-        return _agg_check(
-            name,
-            hit.crossJoin(base).select(
-                (
-                    # vacuously true on an empty baseline (a corpus with
-                    # <2 vectors has no exact top-k rows) — the 0/0
-                    # division would otherwise yield a NULL boolean
-                    (F.col("n_exact") == 0)
-                    | (F.col("n_hit") / F.col("n_exact") >= F.lit(floor))
-                ).alias("passed")
-            ),
+        return hit.crossJoin(base).select(
+            (
+                # vacuously true on an empty baseline (a corpus with
+                # <2 vectors has no exact top-k rows) — the 0/0
+                # division would otherwise yield a NULL boolean
+                (F.col("n_exact") == 0)
+                | (F.col("n_hit") / F.col("n_exact") >= F.lit(floor))
+            ).alias("passed")
         )
 
     # ONE construction of each approximate path feeds BOTH its recall
@@ -459,10 +458,8 @@ def ann_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = S.ivf_topk(
         e, probes, k=10, n_lists=16, n_probe=8
     ).localCheckpoint(eager=False)
-    lsh_recall = _recall_check("lsh_recall_floor", lsh, 0.08)
-    ivf_recall = _recall_check("ivf_recall_floor", ivf, 0.5)
 
-    def _determinism_check(name: str, a_df: DataFrame, mk) -> DataFrame:
+    def _determinism_check(a_df: DataFrame, mk) -> DataFrame:
         a = a_df.select(
             F.col("q_id").alias("a_q"),
             F.col("c_id").alias("a_c"),
@@ -474,25 +471,22 @@ def ann_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rn").alias("b_rn"),
         )
         return _frames_match_check(
-            name, a, b, [("a_q", "b_q"), ("a_c", "b_c"), ("a_rn", "b_rn")]
+            a, b, [("a_q", "b_q"), ("a_c", "b_c"), ("a_rn", "b_rn")]
         )
 
-    lsh_det = _determinism_check(
-        "lsh_deterministic",
-        lsh,
-        lambda: S.lsh_topk(e, probes, dim=64, k=10, n_planes=3),
-    )
-    ivf_det = _determinism_check(
-        "ivf_deterministic",
-        ivf,
-        lambda: S.ivf_topk(e, probes, k=10, n_lists=16, n_probe=8),
-    )
-
-    return (
-        well_formed.unionByName(lsh_recall)
-        .unionByName(ivf_recall)
-        .unionByName(lsh_det)
-        .unionByName(ivf_det)
+    return check_rows(
+        spark,
+        {
+            "exact_topk_well_formed": well_formed,
+            "lsh_recall_floor": _recall_check(lsh, 0.08),
+            "ivf_recall_floor": _recall_check(ivf, 0.5),
+            "lsh_deterministic": _determinism_check(
+                lsh, lambda: S.lsh_topk(e, probes, dim=64, k=10, n_planes=3)
+            ),
+            "ivf_deterministic": _determinism_check(
+                ivf, lambda: S.ivf_topk(e, probes, k=10, n_lists=16, n_probe=8)
+            ),
+        },
     )
 
 
@@ -504,10 +498,7 @@ _DEDUP_AUDIT_CHECKS = [
 ]
 
 
-@register(
-    "dedup_probabilistic_audit",
-    oracle=_const_true_oracle(_DEDUP_AUDIT_CHECKS),
-)
+@register_audit("dedup_probabilistic_audit", _DEDUP_AUDIT_CHECKS)
 def dedup_probabilistic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The probabilistic-dedup contracts as driver-checkable rows — the
     audit complement of the rows-only dedup_near_minhash / dedup_simhash
@@ -563,14 +554,11 @@ def dedup_probabilistic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hit = exact.join(
         mh, (exact["e_a"] == mh["m_a"]) & (exact["e_b"] == mh["m_b"])
     ).agg(F.count(F.lit(1)).cast("double").alias("n_hit"))
-    minhash_recall = _agg_check(
-        "minhash_recall_floor",
-        n_hit.crossJoin(n_exact).select(
-            (
-                (F.col("n_exact") == 0)
-                | (F.col("n_hit") / F.col("n_exact") >= 0.5)
-            ).alias("passed")
-        ),
+    minhash_recall = n_hit.crossJoin(n_exact).select(
+        (
+            (F.col("n_exact") == 0)
+            | (F.col("n_hit") / F.col("n_exact") >= 0.5)
+        ).alias("passed")
     )
 
     lv = D.near_dup_pairs_lsh_verified(
@@ -581,7 +569,6 @@ def dedup_probabilistic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("jaccard").alias("l_j"),
     )
     lsh_exact = _frames_match_check(
-        "lsh_verified_matches_exact",
         exact,
         lv,
         [("e_a", "l_a"), ("e_b", "l_b"), ("e_j", "l_j")],
@@ -601,11 +588,8 @@ def dedup_probabilistic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("c") > 1)
     )
-    identical_agree = _agg_check(
-        "simhash_identical_docs_agree",
-        fams.agg(
-            F.coalesce(F.max("nsig") <= 1, F.lit(True)).alias("passed")
-        ),
+    identical_agree = fams.agg(
+        F.coalesce(F.max("nsig") <= 1, F.lit(True)).alias("passed")
     )
 
     s2 = D.simhash64(docs).select(
@@ -615,14 +599,15 @@ def dedup_probabilistic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # surface as two unmatched rows — same helper as every other
     # set-equality audit
     det = _frames_match_check(
-        "simhash_deterministic",
-        sig,
-        s2,
-        [("doc", "doc2"), ("simhash", "sim2")],
+        sig, s2, [("doc", "doc2"), ("simhash", "sim2")]
     )
 
-    return (
-        minhash_recall.unionByName(lsh_exact)
-        .unionByName(identical_agree)
-        .unionByName(det)
+    return check_rows(
+        spark,
+        {
+            "minhash_recall_floor": minhash_recall,
+            "lsh_verified_matches_exact": lsh_exact,
+            "simhash_identical_docs_agree": identical_agree,
+            "simhash_deterministic": det,
+        },
     )

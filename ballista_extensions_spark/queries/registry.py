@@ -34,34 +34,21 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__fi
 #: name -> code fingerprint at its last green grade, under a root dir
 RECORDED = os.path.join("tools", "graded_fingerprints.json")
 
-# Bench cost-tier classification (VERDICT r12 directive #6): these
-# queries pay a FIXED multi-job evidence cost by construction — the
-# streaming replays re-run 3 micro-batches with a store rebuild each
-# (restart survivability IS the cost), and the contract audits
-# recompute multi-branch evidence — so their wall time barely moves
-# with row count and masks per-row movement in the sweep total.
-# bench.py tags every BENCH_FULL.json query with its tier and reports
-# per-tier subtotals so per-row regressions stay visible. Everything
-# not listed here is tier "per_row". tests/test_regrade_gate.py
-# asserts every listed name is registered.
-FIXED_EVIDENCE: frozenset[str] = frozenset({
-    "streaming_dedup_replay", "streaming_gapfill_replay",
-    "streaming_heavy_hitters_replay", "streaming_media_dedup_replay",
-    "streaming_phash_store_replay", "streaming_sigstore_replay",
-    "streaming_semdedup_replay",
-    "sample_contract_audit", "sketch_contract_audit",
-    "ann_contract_audit", "dedup_probabilistic_audit",
-    "compression_contract_audit", "bpe_contract_audit",
-    "shard_contract_audit", "shard_replay_audit",
-    "packing_contract_audit",
-})
-
 
 def query_tier(name: str) -> str:
-    """Cost tier of a registered query: ``fixed_evidence`` (multi-job
-    replay/audit scaffolding dominates; flat in row count) or
-    ``per_row`` (wall time tracks data volume)."""
-    return "fixed_evidence" if name in FIXED_EVIDENCE else "per_row"
+    """Bench cost tier of a registered query (VERDICT r12 directive
+    #6): ``fixed_evidence`` for the contract audits registered through
+    ``audits.register_audit`` and the queries of
+    ``queries/streaming_replay.py``, ``per_row`` for the rest. The
+    replays re-run micro-batches with a store rebuild each (restart
+    survivability IS the cost) and the audits recompute multi-branch
+    evidence, so their wall time barely moves with row count; bench.py
+    reports per-tier subtotals so per-row regressions stay visible."""
+    from ballista_extensions_spark.queries.audits import AUDITS
+
+    replay = QUERIES[name].__module__ == f"{_PKG}.queries.streaming_replay"
+    fixed = name in AUDITS or replay
+    return "fixed_evidence" if fixed else "per_row"
 
 
 def register(name: str, oracle: str | None = None):

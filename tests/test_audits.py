@@ -4,35 +4,20 @@ driver's constant-oracle hash check at its sf."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from ballista_extensions_spark.queries import QUERIES
+from ballista_extensions_spark.queries.audits import AUDITS
 
-def _all_pass(df):
-    rows = df.collect()
+
+@pytest.mark.parametrize("name", list(AUDITS))
+def test_audit_all_pass(spark, sf_dir, name):
+    """Every row TRUE, and exactly the declared check names."""
+    rows = QUERIES[name](spark, sf_dir).collect()
     failed = [r["check_name"] for r in rows if not r["passed"]]
-    return rows, failed
-
-
-def test_sample_contract_audit_all_pass(spark, sf_dir):
-    from ballista_extensions_spark.queries.audits import (
-        _SAMPLE_AUDIT_CHECKS,
-        sample_contract_audit,
-    )
-
-    rows, failed = _all_pass(sample_contract_audit(spark, sf_dir))
     assert not failed, f"failed checks: {failed}"
-    assert {r["check_name"] for r in rows} == set(_SAMPLE_AUDIT_CHECKS)
-
-
-def test_sketch_contract_audit_all_pass(spark, sf_dir):
-    from ballista_extensions_spark.queries.audits import (
-        _SKETCH_AUDIT_CHECKS,
-        sketch_contract_audit,
-    )
-
-    rows, failed = _all_pass(sketch_contract_audit(spark, sf_dir))
-    assert not failed, f"failed checks: {failed}"
-    assert {r["check_name"] for r in rows} == set(_SKETCH_AUDIT_CHECKS)
+    assert sorted(r["check_name"] for r in rows) == sorted(AUDITS[name])
 
 
 def test_sketch_measured_errors(spark, orders):
@@ -58,25 +43,3 @@ def test_sketch_measured_errors(spark, orders):
     below = orders.filter(F.col("o_totalprice").cast("double") <= q).count()
     kll_rank_err = abs(below / n - 0.5)
     assert kll_rank_err <= 2 * 0.0165
-
-
-def test_ann_contract_audit_all_pass(spark, sf_dir):
-    from ballista_extensions_spark.queries.audits import (
-        _ANN_AUDIT_CHECKS,
-        ann_contract_audit,
-    )
-
-    rows, failed = _all_pass(ann_contract_audit(spark, sf_dir))
-    assert not failed, f"failed checks: {failed}"
-    assert {r["check_name"] for r in rows} == set(_ANN_AUDIT_CHECKS)
-
-
-def test_dedup_probabilistic_audit_all_pass(spark, sf_dir):
-    from ballista_extensions_spark.queries.audits import (
-        _DEDUP_AUDIT_CHECKS,
-        dedup_probabilistic_audit,
-    )
-
-    rows, failed = _all_pass(dedup_probabilistic_audit(spark, sf_dir))
-    assert not failed, f"failed checks: {failed}"
-    assert {r["check_name"] for r in rows} == set(_DEDUP_AUDIT_CHECKS)

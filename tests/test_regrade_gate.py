@@ -182,14 +182,21 @@ def test_static_reach_covers_driver_calls(tmp_path, sf_dir):
 
 
 def test_fixed_evidence_tier_names_are_registered():
-    """Every name in the bench cost-tier classification must be a
-    registered query — a renamed replay/audit must not silently fall
-    back to the per_row tier."""
-    unknown = registry.FIXED_EVIDENCE - set(registry.QUERIES)
-    assert not unknown, f"FIXED_EVIDENCE names not registered: {sorted(unknown)}"
-    # the classifier is total over the registry
-    for name in registry.QUERIES:
-        assert registry.query_tier(name) in ("fixed_evidence", "per_row")
-    # spot-check both tiers
-    assert registry.query_tier("streaming_sigstore_replay") == "fixed_evidence"
+    """The bench cost tier is derived, not hand-kept: ``fixed_evidence``
+    is exactly the audits registered through ``register_audit`` plus
+    the queries of ``queries/streaming_replay.py``."""
+    from ballista_extensions_spark.queries.audits import AUDITS
+
+    assert len(AUDITS) == 9 and set(AUDITS) <= set(registry.QUERIES)
+    replays = {n for n, fn in registry.QUERIES.items()
+               if fn.__module__.endswith(".queries.streaming_replay")}
+    assert len(replays) == 7
+    fixed = {n for n in registry.QUERIES
+             if registry.query_tier(n) == "fixed_evidence"}
+    assert fixed == set(AUDITS) | replays
+    assert {registry.query_tier(n) for n in registry.QUERIES} == {
+        "fixed_evidence", "per_row"}
+    assert registry.query_tier("dsir_gumbel_audit") == "fixed_evidence"
+    # a real-oracle audit is priced like any per-row query
+    assert registry.query_tier("bpe_contract_audit") == "per_row"
     assert registry.query_tier("q1_pricing_summary") == "per_row"
