@@ -584,11 +584,7 @@ def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             % P
         ).alias("h"),
     ).first()
-    # the applier emits one row per document: its row count is the
-    # document count
-    drow = ids.agg(
-        F.sum("n_ids").alias("t"), F.count(F.lit(1)).alias("n")
-    ).first()
+    doc_tot = ids.agg(F.sum("n_ids").alias("t")).first()["t"]
     # seq_id is a grouping key on both sides, so each manifest row
     # appears once in the full-outer join and count("m") is its count
     jrow = (
@@ -598,9 +594,11 @@ def packing_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()
     )
     lengths_ok = jrow["rows"] == srow["n"] == jrow["n_man"]
-    conserved = int(srow["t"]) == int(drow["t"])
+    conserved = int(srow["t"]) == int(doc_tot)
     id_range = srow["lo"] >= 0 and srow["hi"] == eos_id
-    eos_count = int(srow["eos"]) == drow["n"]
+    # the document count is taken over the input, not the applier's
+    # output, so an applier that drops or duplicates a document fails
+    eos_count = int(srow["eos"]) == d.count()
     pad_tail = int(srow["npad"] or 0) <= 1 and (
         srow["npad"] == 0 or srow["padseq"] == srow["maxseq"]
     )

@@ -20,6 +20,29 @@ def test_audit_all_pass(spark, sf_dir, name):
     assert sorted(r["check_name"] for r in rows) == sorted(AUDITS[name])
 
 
+def test_packing_audit_counts_documents_independently(
+    spark, sf_dir, monkeypatch
+):
+    """eos_per_document compares against the input's document count, so
+    an applier that drops a document fails it even though every other
+    check reads the applier's own (consistent) output."""
+    from ballista_extensions_spark.operators import bpe_stream
+
+    applier = bpe_stream.bpe_stream_token_ids
+
+    def drops_first_doc(docs, merges, **kw):
+        id_col = kw.get("id_col", "doc_id")
+        first = docs.agg(F.min(id_col)).first()[0]
+        return applier(docs, merges, **kw).filter(F.col(id_col) != first)
+
+    monkeypatch.setattr(bpe_stream, "bpe_stream_token_ids", drops_first_doc)
+    rows = dict(
+        (r["check_name"], r["passed"])
+        for r in QUERIES["packing_contract_audit"](spark, sf_dir).collect()
+    )
+    assert rows["eos_per_document"] is False
+
+
 def test_sketch_measured_errors(spark, orders):
     """The raw relative errors behind sketch_contract_audit's booleans —
     measured, not asserted-from-docs (BASELINE.md records the sf0.1
